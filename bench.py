@@ -61,48 +61,53 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _release_query_state(spark) -> None:
+def _release_query_state(spark) -> list[str]:
     """Drop leftovers a query pins in executor/driver memory (operator
     caches, streaming memory-sink tables) so each measurement is
     hermetic — without this, accumulated state inflates later queries'
-    GC time by multiples."""
-    spark.catalog.clearCache()
-    for t in spark.catalog.listTables():
-        if t.name.startswith("mem_"):
+    GC time by multiples. Every step runs even if an earlier one
+    fails; the failed ones come back as "step: error" lines for the
+    sidecar, never as an exception that would fail the bench."""
+    steps = [
+        ("clear_cache", lambda: spark.catalog.clearCache()),
+        ("drop_memory_views", lambda: [
             spark.catalog.dropTempView(t.name)
-    # localCheckpoint blocks (e.g. the final labels snapshot a
-    # connected-components result hands back) outlive the query's
-    # result; between measurements they are dead weight in the block
-    # manager, so drop every persisted RDD outright.
-    try:
-        # py4j auto-converts the java Map to a dict view — iterate it
-        # directly (a .toArray() here raises and silently skipped the
-        # whole release until round 5)
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            for t in spark.catalog.listTables() if t.name.startswith("mem_")
+        ]),
+        # localCheckpoint blocks (e.g. the final labels snapshot a
+        # connected-components result hands back) outlive the query's
+        # result; between measurements they are dead weight in the
+        # block manager, so drop every persisted RDD outright. py4j
+        # auto-converts the java Map to a dict view.
+        ("unpersist_rdds", lambda: [
             rdd.unpersist(False)
-    except Exception:
-        pass  # internal API; timing hygiene only
-    # Unload streaming state-store providers: each drained stream leaves
-    # its providers loaded, and the shared maintenance task then scans
-    # every provider ever created — measured 3-5× inflation on later
-    # streaming queries in a long-lived benchmark JVM. (A real cluster
-    # unloads providers when a query's executors go away; a single
-    # benchmark JVM never does, hence the explicit stop.)
-    try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass  # internal API; timing hygiene only — never fail the bench
-    # Collect the previous query's garbage OUTSIDE the next timed
-    # window: in one long-lived 64 GiB-heap JVM, G1 otherwise defers
-    # mixed collections until they land mid-measurement (observed: a
-    # 4 s streaming drain ballooning to 12 s with 3.4 s of GC inside
-    # it; with this, six repeats hold 3.6-4.9 s). Real deployments
-    # don't run 160 unrelated queries sequentially in one JVM — this
-    # makes each measurement hermetic, same as the cache/state drops.
-    try:
-        spark._jvm.System.gc()
-    except Exception:
-        pass
+            for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values())
+        ]),
+        # Unload streaming state-store providers: each drained stream
+        # leaves its providers loaded, and the shared maintenance task
+        # then scans every provider ever created — measured 3-5×
+        # inflation on later streaming queries in a long-lived
+        # benchmark JVM. (A real cluster unloads providers when a
+        # query's executors go away; a single benchmark JVM never does,
+        # hence the explicit stop.)
+        ("stop_state_stores", lambda: (
+            spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+        )),
+        # Collect the previous query's garbage OUTSIDE the next timed
+        # window: in one long-lived 64 GiB-heap JVM, G1 otherwise defers
+        # mixed collections until they land mid-measurement (observed:
+        # a 4 s streaming drain ballooning to 12 s with 3.4 s of GC
+        # inside it; with this, six repeats hold 3.6-4.9 s).
+        ("gc", lambda: spark._jvm.System.gc()),
+    ]
+    failed = []
+    for name, step in steps:
+        try:
+            step()
+        except Exception as e:  # noqa: BLE001 - reported, never swallowed
+            first = (str(e).splitlines() or [""])[0][:120]
+            failed.append(f"{name}: {type(e).__name__}: {first}")
+    return failed
 
 
 def _host_contention() -> dict[str, float]:
@@ -173,23 +178,27 @@ def _local_artifact_path() -> str:
     return os.path.join(root, name)
 
 
-def _run_chunk(names: list[str], sf_dir: str) -> dict[str, float]:
+def _run_chunk(
+    names: list[str], sf_dir: str
+) -> tuple[dict[str, float], float, list[str]]:
     """One chunk's measurement, inside a FRESH process/JVM: warm up
     the chunk's queries at sf0.001, then two measured passes with
     per-query MIN (round-9 verdict item #3 — BASELINE.md rows are
     min-of-N estimates, so a single-run bench carries a systematic
     ~1.3x scheduler-noise bias that makes per-query ratios
-    uninterpretable near the 2x gate)."""
+    uninterpretable near the 2x gate). Returns the timings, the
+    chunk's scheduling probe and the failed hygiene steps."""
     from realtime0523_spark.core.session import get_spark
 
     spark = get_spark("bench")
     specs = [(n, REGISTRY[n]) for n in names]
+    hygiene: list[str] = []
     for name, spec in specs:
         try:
             _force(spec.fn(spark, "/root/testdata/sf0.001"))
         except Exception:
             pass
-        _release_query_state(spark)
+        hygiene += [f"after warm-up {name}: {h}" for h in _release_query_state(spark)]
     timings: dict[str, float] = {}
     for _pass in range(2):
         for name, spec in specs:
@@ -198,7 +207,7 @@ def _run_chunk(names: list[str], sf_dir: str) -> dict[str, float]:
             dt = round(time.time() - t0, 3)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
-            _release_query_state(spark)
+            hygiene += [f"after {name}: {h}" for h in _release_query_state(spark)]
     # Per-chunk scheduling micro-probe (round-14, VERDICT r13 item
     # #4): the run-level before/after probes cannot see MID-RUN
     # regime drift (round-13 evidence: docs_minhash_lsh 2.0 -> 10.0 s
@@ -212,16 +221,20 @@ def _run_chunk(names: list[str], sf_dir: str) -> dict[str, float]:
     for _ in range(10):
         spark.range(0, 32, 1, 32).count()
     chunk_sched_s = round(time.time() - t0, 3)
-    return timings, chunk_sched_s
+    return timings, chunk_sched_s, hygiene
 
 
 def _chunk_child(names_file: str, out_file: str, sf_dir: str) -> None:
     """Subprocess entrypoint (`bench.py --chunk ...`)."""
     with open(names_file) as fh:
         names = [ln.strip() for ln in fh if ln.strip()]
-    timings, chunk_sched_s = _run_chunk(names, sf_dir)
+    timings, chunk_sched_s, hygiene = _run_chunk(names, sf_dir)
     with open(out_file, "w") as fh:
-        json.dump({"timings": timings, "chunk_sched_s": chunk_sched_s}, fh)
+        json.dump(
+            {"timings": timings, "chunk_sched_s": chunk_sched_s,
+             "hygiene_failures": hygiene},
+            fh,
+        )
 
 
 def _probe_child(out_file: str) -> None:
@@ -333,6 +346,7 @@ def main() -> None:
     in_process_chunks = 0
     in_process_queries: list[str] = []
     chunk_probes: list[dict] = []
+    hygiene: list[str] = []
     with tempfile.TemporaryDirectory(prefix="bench_chunks_") as tdir:
         for ci, names in enumerate(chunks):
             names_file = os.path.join(tdir, f"names_{ci}.txt")
@@ -341,6 +355,7 @@ def main() -> None:
                 fh.write("\n".join(names))
             got: dict[str, float] | None = None
             chunk_sched: float | None = None
+            chunk_hygiene: list[str] = []
             for _attempt in range(2):
                 try:
                     subprocess.run(
@@ -360,6 +375,7 @@ def main() -> None:
                         child = json.load(fh)
                     got = child["timings"]
                     chunk_sched = child.get("chunk_sched_s")
+                    chunk_hygiene = child.get("hygiene_failures", [])
                     break
                 except (subprocess.CalledProcessError, OSError, ValueError, KeyError):
                     continue
@@ -373,7 +389,7 @@ def main() -> None:
                 # session — exactly the long-session drift regime the
                 # fresh-JVM design avoids (round-12 ADVICE).
                 try:
-                    got, chunk_sched = _run_chunk(names, sf_dir)
+                    got, chunk_sched, chunk_hygiene = _run_chunk(names, sf_dir)
                 finally:
                     from realtime0523_spark.core.session import stop_spark
 
@@ -381,6 +397,7 @@ def main() -> None:
                 in_process_chunks += 1
                 in_process_queries.extend(names)
             timings.update(got)
+            hygiene += [f"chunk {ci} {h}" for h in chunk_hygiene]
             chunk_probes.append(
                 {"chunk": ci, "queries": names, "sched_s": chunk_sched}
             )
@@ -409,6 +426,9 @@ def main() -> None:
             # run-level probes cannot see (tools/perf_normalize.py
             # reads these relative to the run's best chunk)
             "chunk_probes": chunk_probes,
+            # between-query release steps that raised ("chunk N after
+            # QUERY: step: error"); empty when every release ran clean
+            "hygiene_failures": hygiene,
             # this run's host regime vs the BASELINE quiet-host probe
             # reference (1.0 ≈ the regime the table was recorded in)
             "probe_ref": PROBE_REF,

@@ -109,25 +109,31 @@ def streaming_brand_amount(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if guard_ts_col is not None:
-            guard(batch_df.select("l_orderkey", guard_ts_col), batch_id)
-        else:
-            guard(batch_df.select("l_orderkey").distinct(), batch_id)
-        alloc = allocate_order_amount(
-            batch_df,
-            order_key="l_orderkey",
-            detail_order_by=order_by,
-            weight="l_extendedprice",
-            order_total="o_totalprice",
-        )
-        partial = (
-            alloc.join(brand_dim, "l_partkey", "left")
-            .groupBy("p_brand")
-            .agg(F.sum("final_detail_amount").alias("partial_amount"))
-        )
-        commit(partial, batch_id)
+        # the emptiness check, the guard and the commit share one
+        # evaluation of the upstream join instead of re-running it each
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            if guard_ts_col is not None:
+                guard(batch_df.select("l_orderkey", guard_ts_col), batch_id)
+            else:
+                guard(batch_df.select("l_orderkey").distinct(), batch_id)
+            alloc = allocate_order_amount(
+                batch_df,
+                order_key="l_orderkey",
+                detail_order_by=order_by,
+                weight="l_extendedprice",
+                order_total="o_totalprice",
+            )
+            partial = (
+                alloc.join(brand_dim, "l_partkey", "left")
+                .groupBy("p_brand")
+                .agg(F.sum("final_detail_amount").alias("partial_amount"))
+            )
+            commit(partial, batch_id)
+        finally:
+            batch_df.unpersist()
         maybe_compact(spark, out_dir, base_dir, fold_brand_partials, compact_every)
 
     run_foreach_batch(

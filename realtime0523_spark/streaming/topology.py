@@ -14,20 +14,26 @@ Streaming queries in one session, directories standing in for the
 inter-stage Kafka topics, each stage independently stoppable and
 restartable from its checkpoint mid-run.
 
-Inter-stage bus (`topic_append_writer` / `topic_stream`): each
-micro-batch's parquet part files are written at natural parallelism,
-then ONE manifest file listing them is atomically renamed into place;
-downstream stages stream the MANIFESTS and expand them to rows on the
-executors — so a reader can never observe half a batch (the
+Inter-stage bus (`topic_append_writer`, read by `topic_batch` or
+`topic_stream`): each micro-batch's parquet part files are written at
+natural parallelism, then ONE manifest file listing them is atomically
+renamed into place, so a reader can never observe half a batch (the
 visibility guarantee a Kafka transaction gives the reference) and no
-stage funnels its output through a single partition (the round-10
-`coalesce(1)` stand-in is gone). Replayed batches (restart recovery)
-are no-ops by manifest, the K5 idempotence contract. On a cluster the
-bus is Kafka (streaming/sinks.kafka_sink — same per-record fan-out)
-or a transactional table format, whose snapshot commit is exactly
-this manifest shape; everything in this module (stage shapes,
-watermarked join, per-batch dim snapshot, idempotent commits,
-manifest visibility) is the 100 TB design.
+stage funnels its output through a single partition. Every consumer
+streams the MANIFESTS (`spark.readStream.text` over the topic), so
+each query's checkpoint logs which manifests each batch read, and a
+replayed batch is a no-op by manifest (the K5 idempotence contract).
+The foreachBatch stages (DIM, DWD, default-mode ADS) then read the
+listed files with Spark's own parquet reader (`topic_batch`): the
+batch is a plain JVM scan, as the reference reads its topic as JSON
+records. The DWS join and split-arrival ADS feed a stateful streaming
+operator, which needs a streaming input, so they keep `topic_stream`,
+which expands the manifest lines to rows in a Python kernel on the
+executors. On a cluster the bus is Kafka (streaming/sinks.kafka_sink
+— same per-record fan-out) or a transactional table format, whose
+snapshot commit is exactly this manifest shape; everything in this
+module (stage shapes, watermarked join, per-batch dim snapshot,
+idempotent commits, manifest visibility) is the 100 TB design.
 
 Dim store (`versioned_dim_upsert`): the K2 SCD-1 upsert re-done for
 CONCURRENT readers. `sinks.upsert_parquet_dim`'s rmtree+rename swap has
@@ -146,31 +152,38 @@ _DETAIL_ORDER = [
 
 def topic_append_writer(out_dir: str):
     """foreachBatch writer emulating a transactional Kafka topic on a
-    directory — MANIFEST COMMIT (round-11, replaces the single-file
-    `coalesce(1)` stand-in): the batch's parquet part files are
+    directory — MANIFEST COMMIT: the batch's parquet part files are
     written under `_data/batch_<id>/` at the plan's NATURAL write
     parallelism, then ONE manifest file listing them is atomically
-    renamed into place. Readers (`topic_stream`) consume manifests,
-    never directory listings of data files — a batch is either fully
-    visible (its manifest committed) or not at all, the visibility
-    guarantee a Kafka transaction gives the reference
-    (scala/…/utils/KafkaStreamSink.scala:25), with no single-output-
-    partition bottleneck. Replayed batches are no-ops by manifest
-    (K5); a crash between the data write and the manifest rename is
-    healed on replay (the data write is mode=overwrite, the rename IS
-    the commit). Underscore-prefixed names keep the data dir and
-    scratch invisible to Spark's file listing, so the manifest stream
-    over `out_dir` sees only committed manifests."""
+    renamed into place. Readers (`topic_batch`, `topic_stream`)
+    consume manifests, never directory listings of data files — a
+    batch is either fully visible (its manifest committed) or not at
+    all, the visibility guarantee a Kafka transaction gives the
+    reference (scala/…/utils/KafkaStreamSink.scala:25), with no
+    single-output-partition bottleneck. Replayed batches are no-ops by
+    manifest (K5); a crash between the data write and the manifest
+    rename is healed on replay (the data write is mode=overwrite, the
+    rename IS the commit). Underscore-prefixed names keep the data dir
+    and scratch invisible to Spark's file listing, so the manifest
+    stream over `out_dir` sees only committed manifests.
+
+    The batch is evaluated once: it stays persisted across the
+    emptiness check and the write, so an upstream stateful join or
+    Python kernel runs once per batch, not once per action."""
     os.makedirs(out_dir, exist_ok=True)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         manifest = os.path.join(out_dir, f"manifest_{batch_id:09d}.txt")
         if os.path.exists(manifest):  # replayed batch → already committed
             return
-        if batch_df.isEmpty():
-            return
         data_dir = os.path.join(out_dir, "_data", f"batch_{batch_id:09d}")
-        batch_df.write.mode("overwrite").parquet(data_dir)
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            batch_df.write.mode("overwrite").parquet(data_dir)
+        finally:
+            batch_df.unpersist()
         parts = sorted(
             os.path.join(data_dir, f)
             for f in os.listdir(data_dir)
@@ -189,22 +202,42 @@ def topic_append_writer(out_dir: str):
     return write
 
 
+def topic_batch(
+    spark: SparkSession, manifests: DataFrame, schema: str
+) -> DataFrame | None:
+    """Per-batch reader for a manifest-committed topic, for
+    foreachBatch stages: `manifests` is one micro-batch of
+    `spark.readStream.text(topic_dir)`, whose rows are the part-file
+    paths of the manifests committed since the last batch. The paths
+    are collected to the driver and exactly those files are read with
+    Spark's parquet reader — a JVM scan with no Python crossing and no
+    shuffle, re-run cheaply by each action of the stage. Returns None
+    when the batch lists no files, so an empty batch runs no further
+    job."""
+    paths = [r.value for r in manifests.collect() if r.value]
+    if not paths:
+        return None
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def topic_stream(
     spark: SparkSession,
     out_dir: str,
     schema: str,
     parallelism: int | None = None,
 ) -> DataFrame:
-    """Streaming reader for a manifest-committed topic: a text file
-    stream over the manifest files (each atomically published, so a
-    batch is never half-visible), expanded to typed data rows by
-    reading the listed parquet files inside an Arrow-batched kernel on
-    the executors. Only manifest LINES shuffle — `parallelism`
-    (default: the session's shuffle-partition setting) spreads the
-    file reads across tasks, because a manifest is a tiny text file
-    that would otherwise land in a single input split however large
-    the data behind it. Globs work (the DWD stage reads
-    `ods_order_{info,detail}` as one stream).
+    """Streaming reader for a manifest-committed topic, for stages that
+    feed a stateful streaming operator (the DWS join, split-arrival
+    ADS) and so need a streaming DataFrame of rows rather than a
+    per-batch read (`topic_batch`): a text file stream over the
+    manifest files (each atomically published, so a batch is never
+    half-visible), expanded to typed data rows by reading the listed
+    parquet files inside an Arrow-batched kernel on the executors.
+    Only manifest LINES shuffle — `parallelism` (default: the
+    session's shuffle-partition setting) spreads the file reads across
+    tasks, because a manifest is a tiny text file that would otherwise
+    land in a single input split however large the data behind it.
+    Globs work.
 
     Timestamp columns are tz-localized to UTC inside the kernel:
     Spark-written parquet holds UTC instants (INT96/micros), and a
@@ -403,15 +436,14 @@ class FiveLayerTopology:
     def _start_dim(self):
         """DIM upsert (K2; dim/SkuInfoApp.scala): sku CDC → versioned
         SCD-1 store, latest envelope ts wins per key."""
-        src = topic_stream(
-            self.spark, self.ods_dirs["sku_info"], ODS_RECORD_SCHEMA
-        )
+        src = self.spark.readStream.text(self.ods_dirs["sku_info"])
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
+            rows = topic_batch(self.spark, batch_df, ODS_RECORD_SCHEMA)
+            if rows is None:
                 return
             parsed = _parse_payload(
-                batch_df,
+                rows,
                 {"p_partkey": "long", "p_brand": "string", "p_name": "string"},
             )
             versioned_dim_upsert(
@@ -426,60 +458,56 @@ class FiveLayerTopology:
         dwd/OrderDetailApp.scala as one fan-out): parse both fact
         topics, stamp the shared CDC create-time as the event-time
         column, emit typed header/detail topics."""
-        src = topic_stream(
-            self.spark,
-            os.path.join(self.root, "ods", "ods_order_{info,detail}"),
-            ODS_RECORD_SCHEMA,
+        src = self.spark.readStream.text(
+            os.path.join(self.root, "ods", "ods_order_{info,detail}")
         )
         info_w = topic_append_writer(self.dwd_info_dir)
         detail_w = topic_append_writer(self.dwd_detail_dir)
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.persist()
-            try:
-                info_casts = {
-                    "o_orderkey": "long",
-                    "o_custkey": "long",
-                    "o_totalprice": "double",
+            rows = topic_batch(self.spark, batch_df, ODS_RECORD_SCHEMA)
+            if rows is None:
+                return
+            info_casts = {
+                "o_orderkey": "long",
+                "o_custkey": "long",
+                "o_totalprice": "double",
+            }
+            split_cols = []
+            if self.split_arrival:
+                # original_total_amount analog: order_info carries the
+                # detail-weight total + count at creation
+                info_casts |= {
+                    "o_weight_total": "double",
+                    "o_detail_count": "int",
                 }
-                split_cols = []
-                if self.split_arrival:
-                    # original_total_amount analog: order_info carries
-                    # the detail-weight total + count at creation
-                    info_casts |= {
-                        "o_weight_total": "double",
-                        "o_detail_count": "int",
-                    }
-                    split_cols = ["o_weight_total", "o_detail_count"]
-                info = _parse_payload(
-                    batch_df.filter(F.col("table") == "order_info"),
-                    info_casts,
-                ).select(
-                    "o_orderkey", "o_custkey", "o_totalprice",
-                    F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
-                     .alias("order_dt"),
-                    F.timestamp_millis(F.col("ts")).alias("o_commit_ts"),
-                    *split_cols,
-                )
-                detail = _parse_payload(
-                    batch_df.filter(F.col("table") == "order_detail"),
-                    {
-                        "l_orderkey": "long",
-                        "l_linenumber": "int",
-                        "l_partkey": "long",
-                        "l_suppkey": "long",
-                        "l_quantity": "double",
-                        "l_extendedprice": "double",
-                    },
-                ).select(
-                    "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-                    "l_quantity", "l_extendedprice",
-                    F.timestamp_millis(F.col("ts")).alias("l_commit_ts"),
-                )
-                info_w(info, batch_id)
-                detail_w(detail, batch_id)
-            finally:
-                batch_df.unpersist()
+                split_cols = ["o_weight_total", "o_detail_count"]
+            info = _parse_payload(
+                rows.filter(F.col("table") == "order_info"), info_casts
+            ).select(
+                "o_orderkey", "o_custkey", "o_totalprice",
+                F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
+                 .alias("order_dt"),
+                F.timestamp_millis(F.col("ts")).alias("o_commit_ts"),
+                *split_cols,
+            )
+            detail = _parse_payload(
+                rows.filter(F.col("table") == "order_detail"),
+                {
+                    "l_orderkey": "long",
+                    "l_linenumber": "int",
+                    "l_partkey": "long",
+                    "l_suppkey": "long",
+                    "l_quantity": "double",
+                    "l_extendedprice": "double",
+                },
+            ).select(
+                "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
+                "l_quantity", "l_extendedprice",
+                F.timestamp_millis(F.col("ts")).alias("l_commit_ts"),
+            )
+            info_w(info, batch_id)
+            detail_w(detail, batch_id)
 
         return self._foreach_batch_query("dwd", src, process)
 
@@ -602,15 +630,21 @@ class FiveLayerTopology:
             )
 
             def process_split(batch_df: DataFrame, batch_id: int) -> None:
-                if batch_df.isEmpty():
-                    return
-                self._commit_brand_partial(batch_df, batch_id, commit)
+                # one evaluation of the stateful allocation per batch,
+                # shared by the emptiness check and the commit
+                batch_df.persist()
+                try:
+                    if batch_df.isEmpty():
+                        return
+                    self._commit_brand_partial(batch_df, batch_id, commit)
+                finally:
+                    batch_df.unpersist()
 
             return self._foreach_batch_query(
                 "ads", alloc_stream, process_split, output_mode="update"
             )
 
-        src = topic_stream(self.spark, self.dws_dir, DWS_WIDE_SCHEMA)
+        src = self.spark.readStream.text(self.dws_dir)
         # CO-ARRIVAL GUARD (round-9 advice): the per-batch allocation
         # silently double-counts a split order, so a reappearing order
         # key is a loud contract failure (shared helper — the
@@ -632,12 +666,12 @@ class FiveLayerTopology:
         )
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
+            rows = topic_batch(self.spark, batch_df, DWS_WIDE_SCHEMA)
+            if rows is None:
                 return
-            keys = batch_df.select("l_orderkey", "l_commit_ts")
-            guard(keys, batch_id)
+            guard(rows.select("l_orderkey", "l_commit_ts"), batch_id)
             alloc = allocate_order_amount(
-                batch_df,
+                rows,
                 order_key="l_orderkey",
                 detail_order_by=_DETAIL_ORDER,
                 weight="l_extendedprice",

@@ -227,3 +227,23 @@ def test_bench_host_factor_normalization_contract():
         "arrow_s": 1.0
     }
     assert bench._host_factor({"arrow_s": 0.0}) is None
+
+
+def test_bench_release_reports_failed_hygiene_steps(spark):
+    """bench.py's between-query release runs every step and returns
+    the ones that raised (for the sidecar) instead of swallowing them:
+    clean on a live session, one line per step on a broken one."""
+    import bench
+
+    assert bench._release_query_state(spark) == []
+
+    class Broken:
+        def __getattr__(self, name):
+            raise RuntimeError(f"no {name}\nsecond line")
+
+    failed = bench._release_query_state(Broken())
+    assert [f.split(":")[0] for f in failed] == [
+        "clear_cache", "drop_memory_views", "unpersist_rdds",
+        "stop_state_stores", "gc",
+    ]
+    assert failed[0] == "clear_cache: RuntimeError: no catalog"

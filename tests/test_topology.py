@@ -395,65 +395,122 @@ def test_topology_default_mode_guard_refuses_split_feed(spark, tmp_path):
             pass  # the guard failure is the asserted behavior
 
 
+def _exact(frame):
+    """(k, instant in epoch microseconds) rows, sorted — independent of
+    the session and the Python process time zones."""
+    return sorted(map(tuple, frame.selectExpr("k", "unix_micros(ts)").collect()))
+
+
+def _topic_reader(spark, topic_dir: str, schema: str, via: str):
+    """Start a reader of a manifest topic through one of the two bus
+    readers and return (query, a callable giving the rows read so
+    far): `topic_stream` expands the manifests inside the streaming
+    plan; `topic_batch` reads each micro-batch's listed files in a
+    foreachBatch body, the way the DIM, DWD and ADS stages do."""
+    from realtime0523_spark.streaming.topology import topic_batch, topic_stream
+
+    if via == "topic_stream":
+        q = (
+            topic_stream(spark, topic_dir, schema)
+            .writeStream.format("memory")
+            .queryName("topic_rt")
+            .outputMode("append")
+            .start()
+        )
+        return q, lambda: _exact(spark.table("topic_rt"))
+    seen = []
+
+    def process(batch_df, batch_id):
+        rows = topic_batch(spark, batch_df, schema)
+        if rows is not None:
+            seen.extend(_exact(rows))
+
+    q = spark.readStream.text(topic_dir).writeStream.foreachBatch(process).start()
+    return q, lambda: sorted(seen)
+
+
 def test_topic_manifest_commit_multifile_roundtrip(spark, tmp_path):
-    """Round-11 manifest commit: a multi-partition batch commits as
-    SEVERAL part files published by ONE atomically-renamed manifest
-    (no coalesce(1) single-writer bottleneck); the manifest stream
-    delivers exactly the committed rows — timestamps preserved under
-    a non-UTC session TZ (the kernel localizes parquet's UTC instants)
-    — replays are no-ops, an unpublished data dir (crash before the
+    """Manifest commit: a multi-partition batch commits as SEVERAL part
+    files published by ONE atomically-renamed manifest (no coalesce(1)
+    single-writer bottleneck); BOTH bus readers (`topic_stream` and
+    the per-batch `topic_batch`) deliver exactly the committed rows —
+    microsecond timestamps preserved under a non-UTC session TZ —
+    replays are no-ops, an unpublished data dir (crash before the
     manifest rename) is invisible, and a reader running CONCURRENTLY
     with the writer picks up each batch only once its manifest lands."""
     from realtime0523_spark.streaming.runner import _stream_shuffle
-    from realtime0523_spark.streaming.topology import (
-        topic_append_writer,
-        topic_stream,
-    )
+    from realtime0523_spark.streaming.topology import topic_append_writer
 
-    out = str(tmp_path / "topic")
-    w = topic_append_writer(out)
+    # sub-millisecond instants: any unit or zone slip shows
     df = spark.range(0, 100, 1, 8).selectExpr(
-        "id AS k", "timestamp_millis(1750000000000 + id * 1000) AS ts"
+        "id AS k", "timestamp_micros(1750000000000000 + id * 1000003) AS ts"
     )
+    df2 = df.selectExpr("k + 1000 AS k", "ts")
+    want1, want2 = _exact(df), _exact(df.union(df2))
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        w(df, 0)
-        manifest = os.path.join(out, "manifest_000000000.txt")
-        listed = [ln for ln in open(manifest).read().splitlines() if ln]
-        assert len(listed) == 8  # natural parallelism, not coalesce(1)
-        assert all(os.path.exists(p) for p in listed)
-        first_stat = os.stat(manifest).st_mtime_ns
-        w(df, 0)  # replay → no-op by manifest
-        assert os.stat(manifest).st_mtime_ns == first_stat
-        # crash shape: data written but manifest never published → the
-        # batch is invisible to readers
-        df.limit(3).write.mode("overwrite").parquet(
-            os.path.join(out, "_data", "batch_000000007")
-        )
-        with _stream_shuffle(spark, no_data_batches=True):
-            q = (
-                topic_stream(spark, out, "k long, ts timestamp")
-                .writeStream.format("memory")
-                .queryName("topic_rt")
-                .outputMode("append")
-                .start()
+        for via in ("topic_stream", "topic_batch"):
+            out = str(tmp_path / via)
+            w = topic_append_writer(out)
+            w(df, 0)
+            manifest = os.path.join(out, "manifest_000000000.txt")
+            listed = [ln for ln in open(manifest).read().splitlines() if ln]
+            assert len(listed) == 8  # natural parallelism, not coalesce(1)
+            assert all(os.path.exists(p) for p in listed)
+            first_stat = os.stat(manifest).st_mtime_ns
+            w(df, 0)  # replay → no-op by manifest
+            assert os.stat(manifest).st_mtime_ns == first_stat
+            # crash shape: data written but manifest never published →
+            # the batch is invisible to readers
+            df.limit(3).write.mode("overwrite").parquet(
+                os.path.join(out, "_data", "batch_000000007")
             )
-            try:
-                q.processAllAvailable()
-                assert spark.table("topic_rt").count() == 100
-                # concurrent append: a second batch committed while the
-                # reader runs becomes visible at its manifest, atomically
-                w(df.selectExpr("k + 1000 AS k", "ts"), 1)
-                q.processAllAvailable()
-                got = spark.table("topic_rt")
-                assert got.count() == 200
-                want = sorted(
-                    map(tuple, df.union(
-                        df.selectExpr("k + 1000 AS k", "ts")).collect())
-                )
-                assert sorted(map(tuple, got.collect())) == want
-            finally:
-                q.stop()
+            with _stream_shuffle(spark, no_data_batches=True):
+                q, got = _topic_reader(spark, out, "k long, ts timestamp", via)
+                try:
+                    q.processAllAvailable()
+                    assert got() == want1, via
+                    # concurrent append: a second batch committed while
+                    # the reader runs becomes visible at its manifest,
+                    # atomically
+                    w(df2, 1)
+                    q.processAllAvailable()
+                    assert got() == want2, via
+                finally:
+                    q.stop()
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+def test_topic_append_writer_evaluates_batch_once(spark, tmp_path):
+    """The writer's emptiness check and its write share ONE evaluation
+    of the batch: an upstream Python kernel (or a stateful join) runs
+    once per batch, not once per action. Each evaluation of the kernel
+    leaves a marker file, which survives even when an action stops
+    reading early."""
+    from realtime0523_spark.streaming.topology import topic_append_writer
+
+    marks = tmp_path / "evals"
+    marks.mkdir()
+
+    def kernel(pdfs):
+        import uuid
+
+        (marks / uuid.uuid4().hex).touch()
+        yield from pdfs
+
+    w = topic_append_writer(str(tmp_path / "topic"))
+    # batch 1 is empty only after the kernel has run
+    for batch_id, keep in enumerate((10, 0, 5)):
+        batch = (
+            spark.range(0, 10, 1, 1)
+            .mapInPandas(kernel, "id long")
+            .filter(F.col("id") < keep)
+        )
+        w(batch, batch_id)
+        assert len(os.listdir(marks)) == batch_id + 1
+    committed = sorted(
+        f for f in os.listdir(tmp_path / "topic") if f.startswith("manifest_")
+    )
+    assert committed == ["manifest_000000000.txt", "manifest_000000002.txt"]
