@@ -54,8 +54,11 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _spaced(col):
     """'low' → ' l o w ': one symbol per character, space-delimited
-    with boundary sentinels."""
-    return F.concat(F.lit(" "), F.trim(F.regexp_replace(col, "(.)", "$1 ")), F.lit(" "))
+    with boundary sentinels. DOTALL, so the line separators a token can
+    hold (U+0085, U+2028, U+2029) are symbols too, as in `list(w)`."""
+    return F.concat(
+        F.lit(" "), F.trim(F.regexp_replace(col, "(?s)(.)", "$1 ")), F.lit(" ")
+    )
 
 
 def _apply_merge(syms, left: str, right: str):
@@ -176,9 +179,10 @@ def _train_merges_driver(
     - pair counts are freq-weighted adjacent-position counts
       (overlapping occurrences count, words of one symbol emit none)
       == pair_counts;
-    - the WordPiece score n/(nl·nr) is the same IEEE double division
-      of exact integer counts (symbol counts include single-symbol
-      words, == wordpiece.symbol_counts);
+    - the WordPiece score n/(nl·nr) is the same IEEE double division,
+      both operands rounded to double first as Spark's
+      `cast(n as double) / (nl * nr)` does (symbol counts include
+      single-symbol words, == wordpiece.symbol_counts);
     - argmax tie-breaks lexicographically on (left, right) — Python
       str comparison is code-point order, which equals Spark's
       binary UTF-8 string order (UTF-8 preserves code-point order);
@@ -204,7 +208,7 @@ def _train_merges_driver(
             best = min(
                 pc.items(),
                 key=lambda kv: (
-                    -(kv[1] / (sc[kv[0][0]] * sc[kv[0][1]])),
+                    -(float(kv[1]) / float(sc[kv[0][0]] * sc[kv[0][1]])),
                     kv[0][0],
                     kv[0][1],
                 ),

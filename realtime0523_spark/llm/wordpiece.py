@@ -23,8 +23,10 @@ the |pairs| aggregate to the |symbols| aggregate twice (both
 metadata-sized) and collects ONE row. The corpus is touched exactly
 once, total.
 
-Determinism: the score is a single IEEE double division of exact
-integer counts — bit-identical in any engine — and ties break
+Determinism: the score is one IEEE double division of the integer
+pair count by the integer product of the symbol counts, each rounded
+to double first (Spark's `cast(n as double) / (nl * nr)`; the driver
+trainer rounds the same way), and ties break
 lexicographically on (left, right) like the BPE trainer. The '##'
 continuation-prefix surface convention of BERT vocabularies is
 presentation-level (applied when EXPORTING a vocab, not during merge
@@ -69,7 +71,14 @@ def train_wordpiece(
     driver-side over one Arrow collect with the identical score,
     tie-break and greedy fold (bit-identical merges, parity-tested);
     above it, distributed rounds over the |vocab| table."""
-    words, pinned = _collect_vocab(word_counts(docs, text_col))
+    return train_wordpiece_vocab(word_counts(docs, text_col), n_merges)
+
+
+def train_wordpiece_vocab(
+    vocab_wf: DataFrame, n_merges: int
+) -> list[tuple[str, str]]:
+    """`train_wordpiece` over a (w, freq) vocabulary table."""
+    words, pinned = _collect_vocab(vocab_wf)
     if words is not None:
         return _train_merges_driver(words, n_merges, wordpiece=True)
     vocab = pinned.select(_spaced(F.col("w")).alias("syms"), "freq")

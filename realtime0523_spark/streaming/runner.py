@@ -15,6 +15,17 @@ it afterwards. On a real cluster this knob must instead be sized to
 state volume / executor count — the state partition count is fixed at
 the first run of a checkpoint, which is why it is explicit here rather
 than left to the batch default.
+
+Checkpoint manager: the runners also select Spark's FileSystem-based
+checkpoint file manager. The default, FileContext-based one renames
+each offset, commit and source-log entry, each state-store delta and
+each checksum file through `FileContext.rename`, whose existence check
+(`getFileLinkStatus`) starts a `readlink` child process on a local
+filesystem without the native Hadoop library: thousands of forks in
+a catch-up of a few seconds. On a local filesystem both managers do
+the same thing, check that the target is absent and then `rename(2)`,
+so the commit semantics are unchanged. Every caller checkpoints to a
+local directory (the topology's bus is itself built on `os.replace`).
 """
 
 from __future__ import annotations
@@ -35,39 +46,42 @@ from pyspark.sql import DataFrame, SparkSession
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 @contextmanager
 def _stream_shuffle(spark: SparkSession, no_data_batches: bool = True):
-    parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_ndb = spark.conf.get(ndb_key)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    # the watermark-drop audit reads recentProgress after the drain;
-    # the default retention (100) would silently hide drops in longer
-    # drains (e.g. maxFilesPerTrigger=1 over many files)
-    recent_key = "spark.sql.streaming.numRecentProgressUpdates"
-    prev_recent = spark.conf.get(recent_key, None)
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    spark.conf.set(ndb_key, str(no_data_batches).lower())
-    spark.conf.set(recent_key, "100000")
+    overrides = {
+        "spark.sql.shuffle.partitions": os.environ.get(
+            "SPARK_GRAFT_STREAM_SHUFFLE", "8"
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(
+            no_data_batches
+        ).lower(),
+        # the watermark-drop audit reads recentProgress after the drain;
+        # the default retention (100) would silently hide drops in longer
+        # drains (e.g. maxFilesPerTrigger=1 over many files)
+        "spark.sql.streaming.numRecentProgressUpdates": "100000",
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_MANAGER,
+    }
     if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        spark.conf.set(provider_key, _ROCKSDB_PROVIDER)
+        overrides["spark.sql.streaming.stateStore.providerClass"] = (
+            _ROCKSDB_PROVIDER
+        )
+    prev = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(ndb_key, prev_ndb)
-        if prev_recent is not None:
-            spark.conf.set(recent_key, prev_recent)
-        else:
-            spark.conf.unset(recent_key)
-        if prev_provider is not None:
-            spark.conf.set(provider_key, prev_provider)
-        else:
-            spark.conf.unset(provider_key)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def watermark_drops(q) -> int:

@@ -15,25 +15,30 @@ inter-stage Kafka topics, each stage independently stoppable and
 restartable from its checkpoint mid-run.
 
 Inter-stage bus (`topic_append_writer`, read by `topic_batch` or
-`topic_stream`): each micro-batch's parquet part files are written at
-natural parallelism, then ONE manifest file listing them is atomically
-renamed into place, so a reader can never observe half a batch (the
-visibility guarantee a Kafka transaction gives the reference) and no
-stage funnels its output through a single partition. Every consumer
-streams the MANIFESTS (`spark.readStream.text` over the topic), so
-each query's checkpoint logs which manifests each batch read, and a
-replayed batch is a no-op by manifest (the K5 idempotence contract).
-The foreachBatch stages (DIM, DWD, default-mode ADS) then read the
-listed files with Spark's own parquet reader (`topic_batch`): the
-batch is a plain JVM scan, as the reference reads its topic as JSON
-records. The DWS join and split-arrival ADS feed a stateful streaming
-operator, which needs a streaming input, so they keep `topic_stream`,
-which expands the manifest lines to rows in a Python kernel on the
-executors. On a cluster the bus is Kafka (streaming/sinks.kafka_sink
-— same per-record fan-out) or a transactional table format, whose
-snapshot commit is exactly this manifest shape; everything in this
-module (stage shapes, watermarked join, per-batch dim snapshot,
-idempotent commits, manifest visibility) is the 100 TB design.
+`topic_stream`): each stage batch is committed once. Its parquet part
+files are written at natural parallelism (ODS writes its three topics
+in one write partitioned by topic, DWD writes both of its topics),
+and only then is ONE manifest file per topic, listing that topic's
+files, atomically renamed into place, all of the batch's manifests
+back to back. A reader can never observe half a batch (the visibility
+guarantee a Kafka transaction gives the reference), no stage funnels
+its output through a single partition, and a downstream trigger sees
+the whole batch's manifests together. Every consumer streams the
+MANIFESTS (`spark.readStream.text` over the topic), so each query's
+checkpoint logs which manifests each batch read, and a replayed batch
+publishes only the manifests it had not yet published (the K5
+idempotence contract). The foreachBatch stages (DIM, DWD,
+default-mode ADS) then read the listed files with Spark's own parquet
+reader (`topic_batch`): the batch is a plain JVM scan, as the
+reference reads its topic as JSON records. The DWS join and
+split-arrival ADS feed a stateful streaming operator, which needs a
+streaming input, so they keep `topic_stream`, which expands the
+manifest lines to rows in a Python kernel on the executors. On a
+cluster the bus is Kafka (streaming/sinks.kafka_sink — same
+per-record fan-out) or a transactional table format, whose snapshot
+commit is exactly this manifest shape; everything in this module
+(stage shapes, watermarked join, per-batch dim snapshot, idempotent
+commits, manifest visibility) is the 100 TB design.
 
 Dim store (`versioned_dim_upsert`): the K2 SCD-1 upsert re-done for
 CONCURRENT readers. `sinks.upsert_parquet_dim`'s rmtree+rename swap has
@@ -96,6 +101,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from realtime0523_spark.core.session import state_buckets
 from realtime0523_spark.functions.scalar import round2
 from realtime0523_spark.operators.allocation import allocate_order_amount
 from realtime0523_spark.streaming.compaction import (
@@ -150,54 +156,96 @@ _DETAIL_ORDER = [
 ]
 
 
-def topic_append_writer(out_dir: str):
-    """foreachBatch writer emulating a transactional Kafka topic on a
-    directory — MANIFEST COMMIT: the batch's parquet part files are
-    written under `_data/batch_<id>/` at the plan's NATURAL write
-    parallelism, then ONE manifest file listing them is atomically
-    renamed into place. Readers (`topic_batch`, `topic_stream`)
-    consume manifests, never directory listings of data files — a
-    batch is either fully visible (its manifest committed) or not at
-    all, the visibility guarantee a Kafka transaction gives the
-    reference (scala/…/utils/KafkaStreamSink.scala:25), with no
-    single-output-partition bottleneck. Replayed batches are no-ops by
-    manifest (K5); a crash between the data write and the manifest
-    rename is healed on replay (the data write is mode=overwrite, the
-    rename IS the commit). Underscore-prefixed names keep the data dir
-    and scratch invisible to Spark's file listing, so the manifest
-    stream over `out_dir` sees only committed manifests.
+def _row_parts(data_dir: str) -> list[str]:
+    """A finished data write's part files that hold rows, sorted. Spark
+    writes one row-less part file when every partition of a write is
+    empty, so an empty batch leaves nothing to publish. A parquet file
+    is its magic, its row groups, then its footer, the footer's length
+    and the magic again: it holds rows iff any bytes sit between the
+    leading magic and the footer."""
+    if not os.path.isdir(data_dir):
+        return []
+    out = []
+    for f in sorted(os.listdir(data_dir)):
+        if not f.endswith(".parquet"):
+            continue
+        path = os.path.join(data_dir, f)
+        with open(path, "rb") as fh:
+            size = fh.seek(-8, os.SEEK_END) + 8
+            footer = int.from_bytes(fh.read(4), "little")
+        if size > 4 + footer + 8:
+            out.append(path)
+    return out
 
-    The batch is evaluated once: it stays persisted across the
-    emptiness check and the write, so an upstream stateful join or
-    Python kernel runs once per batch, not once per action."""
-    os.makedirs(out_dir, exist_ok=True)
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        manifest = os.path.join(out_dir, f"manifest_{batch_id:09d}.txt")
-        if os.path.exists(manifest):  # replayed batch → already committed
+def topic_append_writer(topics: str | dict[str, str]):
+    """foreachBatch writer emulating transactional Kafka topics on
+    directories — MANIFEST COMMIT: a stage batch's parquet part files
+    are written at the plan's NATURAL write parallelism, then ONE
+    manifest file per topic listing them is atomically renamed into
+    place. Readers (`topic_batch`, `topic_stream`) consume manifests,
+    never directory listings of data files — a batch is either fully
+    visible (its manifest committed) or not at all, the visibility
+    guarantee a Kafka transaction gives the reference
+    (scala/…/utils/KafkaStreamSink.scala:25), with no
+    single-output-partition bottleneck. Underscore-prefixed names keep
+    the data dirs and scratch invisible to Spark's file listing, so the
+    manifest stream over a topic dir sees only committed manifests.
+
+    One call commits every topic of a stage batch. `topics` is one
+    topic directory (the batch is a DataFrame, written under
+    `<dir>/_data/batch_<id>/`) or a map name → directory; then the
+    batch is a map name → DataFrame, each written under its own
+    topic's `_data/batch_<id>/`, or ONE DataFrame whose `topic` column
+    names each row's topic, written by a single `partitionBy("topic")`
+    write under `<common parent>/_data/batch_<id>/topic=<name>/`. All
+    data is written before any manifest is published, and the
+    manifests are published back to back. The batch is evaluated by
+    its write alone (no persist, no emptiness job): a topic whose part
+    files hold no rows publishes no manifest.
+
+    Replay (K5): a published manifest proves the batch's data write
+    finished, so when any manifest of the batch exists the data is
+    left alone and only the missing manifests are published; when none
+    exists the data is overwritten, which heals a crash between the
+    data write and the first manifest rename (the rename IS the
+    commit)."""
+    dirs = {None: topics} if isinstance(topics, str) else dict(topics)
+    for d in dirs.values():
+        os.makedirs(d, exist_ok=True)
+    shared = os.path.join(os.path.commonpath(list(dirs.values())), "_data")
+
+    def write(batch, batch_id: int) -> None:
+        tag = f"{batch_id:09d}"
+        manifests = {
+            t: os.path.join(d, f"manifest_{tag}.txt") for t, d in dirs.items()
+        }
+        missing = [t for t, m in manifests.items() if not os.path.exists(m)]
+        if not missing:  # replayed batch → already committed
             return
-        data_dir = os.path.join(out_dir, "_data", f"batch_{batch_id:09d}")
-        batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            batch_df.write.mode("overwrite").parquet(data_dir)
-        finally:
-            batch_df.unpersist()
-        parts = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        if not parts:
-            raise RuntimeError(
-                f"topic_append_writer: non-empty batch {batch_id} "
-                f"produced no part files under {data_dir}"
-            )
-        tmp = os.path.join(out_dir, f"_tmp_manifest_{batch_id:09d}")
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(parts) + "\n")
-        os.replace(tmp, manifest)
+        one_write = isinstance(batch, DataFrame) and not isinstance(topics, str)
+        root = os.path.join(shared, f"batch_{tag}")
+        data = {
+            t: os.path.join(root, f"topic={t}")
+            if one_write
+            else os.path.join(d, "_data", f"batch_{tag}")
+            for t, d in dirs.items()
+        }
+        if len(missing) == len(dirs):  # nothing published: (re)write it all
+            if one_write:
+                batch.write.mode("overwrite").partitionBy("topic").parquet(root)
+            else:
+                frames = batch if isinstance(batch, dict) else {None: batch}
+                for t, df in frames.items():
+                    df.write.mode("overwrite").parquet(data[t])
+        for t in missing:
+            parts = _row_parts(data[t])
+            if not parts:
+                continue
+            tmp = os.path.join(dirs[t], f"_tmp_manifest_{tag}")
+            with open(tmp, "w") as fh:
+                fh.write("\n".join(parts) + "\n")
+            os.replace(tmp, manifests[t])
 
     return write
 
@@ -412,22 +460,22 @@ class FiveLayerTopology:
 
     def _start_ods(self):
         """ODS router: CDC envelope in, per-table topic fan-out (P9/P10;
-        KafkaToODS_M.scala:45-71). One persist, three filtered commits
-        (T8 — each topic write reuses the cached routed batch)."""
-        writers = {t: topic_append_writer(d) for t, d in self.ods_dirs.items()}
+        KafkaToODS_M.scala:45-71). One commit per batch: the routed
+        rows of the three topics go out in ONE write partitioned by
+        topic, then the three manifests are published back to back (T8
+        — the reference sends every record to its topic in one pass)."""
+        topics = {f"ods_{t}": d for t, d in self.ods_dirs.items()}
+        commit = topic_append_writer(topics)
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            routed = route_cdc(batch_df).select(
-                "topic", "table", "type",
-                F.to_json(F.col("data")).alias("value"), "ts",
+            routed = route_cdc(batch_df).filter(F.col("topic").isin(*topics))
+            commit(
+                routed.select(
+                    "topic", "table", "type",
+                    F.to_json(F.col("data")).alias("value"), "ts",
+                ),
+                batch_id,
             )
-            routed.persist()
-            try:
-                for t, w in writers.items():
-                    w(routed.filter(F.col("topic") == f"ods_{t}")
-                           .drop("topic"), batch_id)
-            finally:
-                routed.unpersist()
 
         return self._foreach_batch_query(
             "ods", cdc_json_stream(self.spark, self.in_dir), process
@@ -457,12 +505,14 @@ class FiveLayerTopology:
         """DWD typed enrich (P1-P4; dwd/Ods_to_DWD_order_info.scala +
         dwd/OrderDetailApp.scala as one fan-out): parse both fact
         topics, stamp the shared CDC create-time as the event-time
-        column, emit typed header/detail topics."""
+        column, emit typed header/detail topics — both written before
+        either manifest is published."""
         src = self.spark.readStream.text(
             os.path.join(self.root, "ods", "ods_order_{info,detail}")
         )
-        info_w = topic_append_writer(self.dwd_info_dir)
-        detail_w = topic_append_writer(self.dwd_detail_dir)
+        commit = topic_append_writer(
+            {"info": self.dwd_info_dir, "detail": self.dwd_detail_dir}
+        )
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
             rows = topic_batch(self.spark, batch_df, ODS_RECORD_SCHEMA)
@@ -506,8 +556,7 @@ class FiveLayerTopology:
                 "l_quantity", "l_extendedprice",
                 F.timestamp_millis(F.col("ts")).alias("l_commit_ts"),
             )
-            info_w(info, batch_id)
-            detail_w(detail, batch_id)
+            commit({"info": info, "detail": detail}, batch_id)
 
         return self._foreach_batch_query("dwd", src, process)
 
@@ -625,8 +674,13 @@ class FiveLayerTopology:
             src = topic_stream(
                 self.spark, self.dws_dir, DWS_WIDE_SCHEMA_SPLIT
             )
+            # sized to the cores, as the inventory does; the buckets key
+            # the state, so a restart must derive the same count
             alloc_stream = streaming_allocation_split(
-                src, _DETAIL_ORDER, ts_col="l_commit_ts", n_buckets=32
+                src,
+                _DETAIL_ORDER,
+                ts_col="l_commit_ts",
+                n_buckets=state_buckets(self.spark),
             )
 
             def process_split(batch_df: DataFrame, batch_id: int) -> None:

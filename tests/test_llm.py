@@ -3494,6 +3494,9 @@ def test_tokenizer_trainer_driver_matches_distributed(spark, monkeypatch):
             (1, "low lower lowest low low"),
             (2, "aaaaa aaa to to to tok"),
             (3, "newest widest low tok tok"),
+            # a line separator is not whitespace to the tokenizer, so it
+            # stays inside a word and must be a symbol on both paths
+            (4, "lo\u2028w lo\u2028w lo\u2028wer"),
         ],
         "doc_id long, text string",
     )
@@ -3514,3 +3517,24 @@ def test_tokenizer_trainer_driver_matches_distributed(spark, monkeypatch):
     assert bpe_drv == bpe_dst
     assert wp_drv == wp_dst
     assert seg_drv == seg_dst
+
+
+def test_wordpiece_driver_score_rounds_like_spark(spark, monkeypatch):
+    """The driver WordPiece score rounds both operands to double before
+    dividing, as Spark's `cast(n as double) / (nl * nr)` does. With a
+    symbol count of 2^53 + 1, (a, b) has nl·nr = 2^55 + 4, which rounds
+    to 2^55: divided exactly, its score is one ulp below that of
+    (c, d) (nl·nr = 2^55); in doubles the two tie and the
+    lexicographic tie-break picks (a, b)."""
+    from realtime0523_spark.llm.wordpiece import train_wordpiece_vocab
+
+    vocab = spark.createDataFrame(
+        [("ab", 1), ("a", 3), ("b", 2**53),
+         ("cd", 1), ("c", 2**28 - 1), ("d", 2**27 - 1)],
+        "w string, freq long",
+    )
+    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "1000000")
+    drv = train_wordpiece_vocab(vocab, 2)
+    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "0")
+    dst = train_wordpiece_vocab(vocab, 2)
+    assert drv == dst == [("a", "b"), ("c", "d")]

@@ -547,6 +547,40 @@ def test_state_buckets_derivation(spark, monkeypatch):
     assert state_buckets(spark) == 17
 
 
+def test_stream_confs_select_filesystem_checkpoint_manager(spark):
+    """Inside the runners' conf block, every checkpoint file manager
+    Spark creates from the session is the FileSystem-based one (no
+    `readlink` fork per rename on a local filesystem); after the block
+    the previous value is restored, or the key unset when none was
+    set."""
+    from realtime0523_spark.streaming.runner import (
+        _CHECKPOINT_MANAGER,
+        _stream_shuffle,
+    )
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    jvm = spark._jvm
+
+    def created() -> str:
+        path = jvm.org.apache.hadoop.fs.Path("file:///tmp/ckpt_probe")
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        return cfm.CheckpointFileManager.create(path, conf).getClass().getName()
+
+    assert spark.conf.get(key, None) is None
+    with _stream_shuffle(spark):
+        assert created() == _CHECKPOINT_MANAGER
+    assert spark.conf.get(key, None) is None
+    assert created() != _CHECKPOINT_MANAGER
+    spark.conf.set(key, "custom.Manager")
+    try:
+        with _stream_shuffle(spark):
+            assert spark.conf.get(key) == _CHECKPOINT_MANAGER
+        assert spark.conf.get(key) == "custom.Manager"
+    finally:
+        spark.conf.unset(key)
+
+
 def test_idempotent_batch_writer_commits_once(spark, tmp_path):
     out = str(tmp_path / "ads")
     os.makedirs(out)

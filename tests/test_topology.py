@@ -429,15 +429,26 @@ def _topic_reader(spark, topic_dir: str, schema: str, via: str):
     return q, lambda: sorted(seen)
 
 
+def _listed(manifest: str) -> list[str]:
+    with open(manifest) as fh:
+        return [ln for ln in fh.read().splitlines() if ln]
+
+
 def test_topic_manifest_commit_multifile_roundtrip(spark, tmp_path):
     """Manifest commit: a multi-partition batch commits as SEVERAL part
-    files published by ONE atomically-renamed manifest (no coalesce(1)
-    single-writer bottleneck); BOTH bus readers (`topic_stream` and
-    the per-batch `topic_batch`) deliver exactly the committed rows —
-    microsecond timestamps preserved under a non-UTC session TZ —
-    replays are no-ops, an unpublished data dir (crash before the
-    manifest rename) is invisible, and a reader running CONCURRENTLY
-    with the writer picks up each batch only once its manifest lands."""
+    files published by ONE atomically-renamed manifest per topic (no
+    coalesce(1) single-writer bottleneck), in both multi-topic shapes
+    (ODS: one DataFrame written once, partitioned by its `topic`
+    column; DWD: one DataFrame per topic). BOTH bus readers
+    (`topic_stream` and the per-batch `topic_batch`) deliver exactly
+    the committed rows — microsecond timestamps preserved under a
+    non-UTC session TZ. A full replay is a no-op; a replay after a
+    partial publication (crash between two manifest renames) publishes
+    only the missing manifest, listing the files already written, and
+    rewrites no listed file; a topic without rows publishes no
+    manifest; an unpublished data dir (crash before the first manifest
+    rename) is invisible; and a reader running CONCURRENTLY with the
+    writer picks up each batch only once its manifest lands."""
     from realtime0523_spark.streaming.runner import _stream_shuffle
     from realtime0523_spark.streaming.topology import topic_append_writer
 
@@ -447,20 +458,41 @@ def test_topic_manifest_commit_multifile_roundtrip(spark, tmp_path):
     )
     df2 = df.selectExpr("k + 1000 AS k", "ts")
     want1, want2 = _exact(df), _exact(df.union(df2))
+
+    def batch(shape, rows, side_rows):
+        if shape == "frames":
+            return {"k": rows, "side": side_rows}
+        return rows.withColumn("topic", F.lit("k")).unionByName(
+            side_rows.withColumn("topic", F.lit("side"))
+        )
+
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        for via in ("topic_stream", "topic_batch"):
-            out = str(tmp_path / via)
-            w = topic_append_writer(out)
-            w(df, 0)
+        for via, shape in (("topic_stream", "partitioned"),
+                           ("topic_batch", "frames")):
+            out = str(tmp_path / via / "k")
+            side = str(tmp_path / via / "side")
+            w = topic_append_writer({"k": out, "side": side})
+            w(batch(shape, df, df.limit(5)), 0)
             manifest = os.path.join(out, "manifest_000000000.txt")
-            listed = [ln for ln in open(manifest).read().splitlines() if ln]
+            side_manifest = os.path.join(side, "manifest_000000000.txt")
+            listed = _listed(manifest)
             assert len(listed) == 8  # natural parallelism, not coalesce(1)
             assert all(os.path.exists(p) for p in listed)
+            side_listed = _listed(side_manifest)
             first_stat = os.stat(manifest).st_mtime_ns
-            w(df, 0)  # replay → no-op by manifest
+            w(batch(shape, df, df.limit(5)), 0)  # replay → no-op by manifest
             assert os.stat(manifest).st_mtime_ns == first_stat
+            # crash between the two manifest renames: the replay (with
+            # other content) publishes only the missing manifest, over
+            # the data already written, and touches no listed file
+            files = {p: os.stat(p).st_mtime_ns for p in listed + side_listed}
+            os.remove(side_manifest)
+            w(batch(shape, df2, df2), 0)
+            assert _listed(side_manifest) == side_listed, shape
+            assert os.stat(manifest).st_mtime_ns == first_stat
+            assert {p: os.stat(p).st_mtime_ns for p in files} == files
             # crash shape: data written but manifest never published →
             # the batch is invisible to readers
             df.limit(3).write.mode("overwrite").parquet(
@@ -473,20 +505,65 @@ def test_topic_manifest_commit_multifile_roundtrip(spark, tmp_path):
                     assert got() == want1, via
                     # concurrent append: a second batch committed while
                     # the reader runs becomes visible at its manifest,
-                    # atomically
-                    w(df2, 1)
+                    # atomically; its row-less side topic publishes none
+                    w(batch(shape, df2, df2.limit(0)), 1)
                     q.processAllAvailable()
                     assert got() == want2, via
                 finally:
                     q.stop()
+            assert not os.path.exists(
+                os.path.join(side, "manifest_000000001.txt")
+            )
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
+def test_ods_commits_its_topics_with_one_write_job(spark, tmp_path):
+    """The ODS stage commits a batch's three topics with ONE Spark job
+    — a single write partitioned by topic, no persist and no per-topic
+    emptiness job — and publishes all three manifests over that one
+    data directory; routed rows of other topics are not written."""
+    from realtime0523_spark.streaming.runner import _stream_shuffle
+
+    topo = FiveLayerTopology(spark, str(tmp_path / "topo"), trigger_seconds=0.5)
+    total, details = WAVE1[101]
+    _write_wave(
+        topo.in_dir,
+        "wave0",
+        _dim_wave()
+        + _order_lines(101, total, details, TS0)
+        + [_env("user_info", "insert", {"id": 1}, TS0)],  # routed, unused
+    )
+    with _stream_shuffle(spark):
+        topo.start_stage("ods")
+        try:
+            topo.drain()
+            (q,) = [q for q in spark.streams.active if q.name == "topology_ods"]
+            jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+                str(q.runId)
+            )
+        finally:
+            topo.stop_stage("ods")
+    assert len(jobs) == 1
+    data_dirs = set()
+    for t, d in topo.ods_dirs.items():
+        listed = _listed(os.path.join(d, "manifest_000000000.txt"))
+        assert listed
+        data_dirs |= {os.path.dirname(os.path.dirname(p)) for p in listed}
+        assert {os.path.basename(os.path.dirname(p)) for p in listed} == {
+            f"topic=ods_{t}"
+        }
+    (data_dir,) = data_dirs
+    assert {f for f in os.listdir(data_dir) if f.startswith("topic=")} == {
+        f"topic=ods_{t}" for t in topo.ods_dirs
+    }
+
+
 def test_topic_append_writer_evaluates_batch_once(spark, tmp_path):
-    """The writer's emptiness check and its write share ONE evaluation
-    of the batch: an upstream Python kernel (or a stateful join) runs
-    once per batch, not once per action. Each evaluation of the kernel
+    """The writer evaluates the batch ONCE — its write is the only
+    action, with no separate emptiness check: an upstream Python kernel
+    (or a stateful join) runs once per batch, and a batch that turns
+    out empty publishes no manifest. Each evaluation of the kernel
     leaves a marker file, which survives even when an action stops
     reading early."""
     from realtime0523_spark.streaming.topology import topic_append_writer
