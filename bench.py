@@ -50,8 +50,8 @@ def _force(df) -> None:
     EVERY column of every row and discards the result. Round-14
     (VERDICT r13 item #9): the previous count() forcing let the
     optimizer prune columns whose values don't affect the row count,
-    under-timing projection/window-shaped queries (measured with
-    tools/noop_vs_count.py: running_total 0.13 s under count() vs
+    under-timing projection/window-shaped queries (measured per query
+    under both actions: running_total 0.13 s under count() vs
     0.68 s under noop, allocation 0.75→1.69, order_wide 0.41→0.96 —
     while aggregation-shaped and expensive rows sit at ~1.0×). The
     BASELINE.md results table was re-recorded in the same session

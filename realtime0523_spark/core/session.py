@@ -58,17 +58,14 @@ def get_spark(
 
 
 def state_buckets(spark: SparkSession) -> int:
-    """Bucket count for the bucketed map-state streaming operators
-    (streaming/first_seen.py, streaming/allocation.py — round-13
-    ADVICE: derive from the cluster's shape instead of hardcoding).
-    One bucket is one task and one state row per batch, so the
-    operators' documented sizing rule is "size to the cluster's
-    CORES, never to the key cardinality": 2× defaultParallelism keeps
-    every core busy through a straggling bucket while holding each
-    bucket's fixed Arrow/state crossing cost at ~2 per core per
-    batch — on local[32] that derives exactly the 64 the round-13
-    A/B measured. Env override SPARK_GRAFT_STATE_BUCKETS for cluster
-    tuning (the GRAPH_* gate pattern)."""
+    """Bucket count for the bucketed keyed state
+    (streaming/bucketed_state.py). One bucket is one task and one
+    state row per batch, so the count follows the cluster's CORES,
+    never the key cardinality: 2× defaultParallelism keeps every core
+    busy through a straggling bucket while holding each bucket's fixed
+    Arrow/state crossing cost at ~2 per core per batch. Env override
+    SPARK_GRAFT_STATE_BUCKETS; the count keys the state, so a restart
+    from a checkpoint must run the count it was written under."""
     env = os.environ.get("SPARK_GRAFT_STATE_BUCKETS")
     if env:
         return int(env)

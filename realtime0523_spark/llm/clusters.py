@@ -45,22 +45,22 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Driver-side union-find gate for `algorithm="auto"` (round-13
-# optimization, guide §8: decide with small rows). The pair graph is
-# duplicate-density-sized — hundreds of rows at fixture scale, and at
-# 100 TB still orders of magnitude below the corpus — so when a
-# MEASURED edge count fits comfortably in driver memory the component
-# labels are computed with one collect + an O(E α(E)) union-find
-# instead of 40+ distributed jobs of iterative label propagation
-# (each round = 2 shuffles + a convergence aggregate; on a graph this
-# size every one of those jobs is pure scheduling fixed cost). Same
-# memory stance as a broadcast join's build side (guide §3.1): the
-# gate bounds what the driver holds, and above it the distributed
-# propagation/star paths run unchanged. 1M undirected edges ≈ two
-# int64 columns ≈ 16 MB collected, ≤ 2M-entry parent dict.
-CC_DRIVER_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(1_000_000))
-)
+def _cc_driver_edges() -> int:
+    """Driver-side union-find gate for `algorithm="auto"` (guide §8:
+    decide with small rows). The pair graph is duplicate-density-sized
+    — hundreds of rows at fixture scale, and at 100 TB still orders of
+    magnitude below the corpus — so when a MEASURED edge count fits
+    comfortably in driver memory the component labels are computed
+    with one collect + an O(E α(E)) union-find instead of 40+
+    distributed jobs of iterative label propagation (each round = 2
+    shuffles + a convergence aggregate; on a graph this size every one
+    of those jobs is pure scheduling fixed cost). Same memory stance as
+    a broadcast join's build side (guide §3.1): the gate bounds what
+    the driver holds, and above it the distributed propagation/star
+    paths run unchanged. 1M undirected edges ≈ two int64 columns ≈ 16
+    MB collected, ≤ 2M-entry parent dict. Env override
+    SPARK_GRAFT_CC_DRIVER_EDGES, read at call time."""
+    return int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "1000000"))
 
 
 # When set to a list, every frame passed through a _ckpt_tools ckpt()
@@ -281,7 +281,7 @@ def connected_components(
 
     `algorithm`: "auto" (driver-side union-find when the MEASURED
     undirected edge count is within `driver_max_edges` — default
-    CC_DRIVER_EDGES, env SPARK_GRAFT_CC_DRIVER_EDGES — else min-label
+    from env SPARK_GRAFT_CC_DRIVER_EDGES, 1M if unset — else min-label
     propagation, switching to large-star/small-star contraction if the
     diameter exceeds `max_iter` rounds), "propagation" (distributed
     always; raise instead of switching — the loud variant for
@@ -314,7 +314,7 @@ def connected_components(
             F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
         )
     if driver_max_edges is None:
-        driver_max_edges = CC_DRIVER_EDGES
+        driver_max_edges = _cc_driver_edges()
     if algorithm == "auto" and n_directed // 2 <= driver_max_edges:
         out = _driver_union_find(edges)
         release(edge_ids)

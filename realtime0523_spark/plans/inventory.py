@@ -549,13 +549,13 @@ def q_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     _allocation_oracle(),
     "F1 allocation under SPLIT ARRIVAL — the reference's Redis "
     "running-sum accumulator design (scala/…/dws/OrderWiderApp.scala:"
-    "157-199, TTL 100 s at :189,191) as applyInPandasWithState keyed "
-    "by order: every order's detail rows are DELIBERATELY split "
+    "157-199, TTL 100 s at :189,191) as bucketed keyed state: every "
+    "order's detail rows are DELIBERATELY split "
     "across three feed files (→ three micro-batches), each arriving "
-    "row is allocated as it arrives from (n_seen, Σweight, Σallocated) "
+    "row is allocated as it arrives from (n_seen, Σallocated) "
     "state, the last row takes the exact remainder, and completed "
-    "orders persist as TTL-bounded tombstones so a duplicate detail "
-    "raises the over-delivery error (round-11). Drained output equals "
+    "orders persist as TTL-bounded done-set entries so a duplicate "
+    "detail raises the over-delivery error. Drained output equals "
     "the batch allocation oracle row for row — the co-arrival contract "
     "the per-batch path requires is NOT needed here.",
 )
@@ -644,17 +644,8 @@ def q_stream_allocation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(feed)
     )
-    # bucketed map-state keying: one python/state crossing per order
-    # BUCKET per batch instead of per order — the scale shape (the
-    # per-order keying is parity-tested in tests/test_streaming.py).
-    # Bucket count derived from the cluster's cores (round-13 ADVICE).
-    from realtime0523_spark.core.session import state_buckets
-
     out = run_to_memory(
-        streaming_allocation_split(
-            src, _DETAIL_ORDER, n_buckets=state_buckets(spark)
-        ),
-        output_mode="update",
+        streaming_allocation_split(src, _DETAIL_ORDER), output_mode="update"
     )
     return detach_and_cleanup(out, work)
 
@@ -1109,7 +1100,7 @@ def q_stream_order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM orders)
     WHERE rn = 1
     """,
-    "Streaming D3 first-seen: applyInPandasWithState keyed state "
+    "Streaming D3 first-seen: bucketed keyed state "
     "tracking each user's earliest order (reference user_status0523 "
     "flow scala/…/dwd/Ods_to_DWD_order_info.scala:83-104,219-225). "
     "Event-time min semantics → replay-stable, batch-oracle-checkable.",
@@ -1119,21 +1110,12 @@ def q_stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime0523_spark.streaming.runner import run_to_memory
     from realtime0523_spark.streaming.sources import stream_table
 
-    # bucketed map-state keying (round-13): one python/state crossing
-    # per key BUCKET per batch instead of per customer — the same
-    # scale shape as stream_allocation_split (the per-key keying is
-    # parity-tested in tests/test_streaming.py). Bucket count derived
-    # from the cluster's cores (round-13 ADVICE), env-overridable —
-    # on local[32] this derives the 64 the round-13 A/B measured.
-    from realtime0523_spark.core.session import state_buckets
-
     return run_to_memory(
         streaming_first_seen(
             stream_table(spark, sf_dir, "orders"),
             "o_custkey",
             "o_orderdate",
             "o_orderkey",
-            n_buckets=state_buckets(spark),
         ),
         output_mode="update",
     )

@@ -13,52 +13,34 @@ allocated correctly — the shape the engine's per-batch allocation
 (operators/allocation.allocate_order_amount) and the topology's
 co-arrival contract deliberately refuse.
 
-Ours: `applyInPandasWithState` with `EventTimeTimeout` (the Redis
-`expire` analog driven by EVENT time instead of wall clock, so replays
-are deterministic — the same argument as streaming/dau.py; a
-ProcessingTimeTimeout additionally schedules timer-evaluation batches
-forever, which never lets a drain-and-stop harness converge). Two
-keyings, same per-row arithmetic:
+Ours: bucketed keyed state (streaming/bucketed_state.py) with
+`EventTimeTimeout` — the Redis `expire` analog driven by EVENT time
+instead of wall clock, so replays are deterministic (the same argument
+as streaming/dau.py; a ProcessingTimeTimeout additionally schedules
+timer-evaluation batches forever, which never lets a drain-and-stop
+harness converge). A bucket's state is its IN-FLIGHT orders as
+key-sorted columns (key, n_seen, Σ allocated, expiry) PLUS a compact
+done-set (key, expiry) of completed orders. Only the reference's
+`:split` sum (Σ allocated) survives as state: its `:ori` weight sum
+exists only to serve the float-equality last-row test, which the count
+detection below replaces. Python cost is one pass linear in the
+batch's rows, never in the order count, and state rows are
+min(buckets, in-flight).
 
-- PER-ORDER state (``n_buckets=None``): key = l_orderkey, state =
-  (n_seen, Σ allocated). The rendering of the reference's Redis keys —
-  its `:ori` weight sum exists only to serve the float-equality
-  last-row test, which the count detection below replaces, so only
-  `:split` (Σ allocated) survives as state. Right when the number of in-flight orders
-  per micro-batch is bounded (the streaming reality: a 5 s batch
-  carries thousands of orders). Its scale ceiling is the per-GROUP
-  python crossing of the Arrow state protocol (~0.5 ms/order/batch):
-  correct at any size, but a replay that pushes millions of orders
-  through one batch pays per-order overhead.
-- BUCKETED map state (``n_buckets=N``): key = hash(l_orderkey) % N,
-  state = parallel arrays over that bucket's IN-FLIGHT orders
-  (key, n_seen, Σ allocated, expiry) PLUS a compact done-set
-  (key, expiry) of completed orders. One python crossing per BUCKET
-  per batch and a single O(rows) pass inside — the 100 TB shape
-  (state rows = min(N, in-flight), python cost linear in batch rows,
-  never in order count). Completed orders move to the done-set until
-  their TTL (round-10 advice): a duplicate detail arriving after
-  completion must raise the over-delivery error, not silently restart
-  the running sums at n_seen=1 — so the per-bucket payload is
-  TTL-bounded orders TOUCHED, not merely in-flight. The done-set is
-  presence-with-expiry ONLY (a tombstone exists solely to raise, so
-  its n_seen/Σalloc payload is dead weight — round-11 verdict), kept
-  as numpy int64 arrays with vectorized membership/eviction, so the
-  per-batch state rewrite is two C-speed int columns, never
-  per-order Python objects. Past the TTL both keyings share the
-  reference's own accepted failure mode: a post-TTL duplicate is
-  indistinguishable from a fresh order.
+Completed orders move to the done-set until their TTL: a duplicate
+detail arriving after completion must raise the over-delivery error,
+not silently restart the running sums at n_seen=1. A done-set entry
+is presence-with-expiry only — it exists solely to raise, so running
+sums would be dead weight, and keeping it apart from the live columns
+keeps the hot lookups O(in-flight). Past the TTL the operator shares
+the reference's own accepted failure mode: a post-TTL duplicate is
+indistinguishable from a fresh order.
 
-SIZING ``n_buckets`` (constant-batch-count probe, SCALING.md
-§stream_allocation_split): the bucketed pass is linear in batch rows
-at constant batch count, and each bucket pays one fixed Arrow/state
-crossing per batch — so size n_buckets to the cluster's CORES (one
-state partition per core, e.g. 32-64 on local[32]), never to the key
-cardinality. More buckets than cores buys no parallelism and
-multiplies the fixed crossing cost; fewer leaves cores idle during
-the state pass. Skew is absorbed inside the pass: a hot order makes
-its bucket's O(rows) loop longer but never grows state beyond that
-order's single live entry (skew-stress-tested).
+Skew is absorbed inside the pass: a hot order makes its bucket's
+O(rows) pass longer but never grows state beyond that order's single
+live entry (skew-stress-tested). Checkpoints written before the shared
+bucketed encoding (the `live binary, done binary` state) do not
+reload; replay from the source.
 
 Last-row detection: the reference tests float equality of the running
 weight sum against `original_total_amount` (OrderWiderApp.scala:181) —
@@ -84,13 +66,13 @@ only the batch's rows.
 
 from __future__ import annotations
 
-import math
-from typing import Any, Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from realtime0523_spark.streaming.bucketed_state import apply_bucketed
 
 # The reference's Redis TTL on the :ori/:split accumulators
 # (scala/…/dws/OrderWiderApp.scala:189,191).
@@ -100,32 +82,10 @@ _OUT_SCHEMA = (
     "l_orderkey long, l_linenumber int, l_partkey long, "
     "final_detail_amount double"
 )
-_STATE_SCHEMA = "n_seen long, allocated double"
-# live IN-FLIGHT orders (ks/ns/als/exp — running sums still needed) are
-# kept SEPARATE from the completed-order done-set (dks/dexp — presence
-# with expiry only): a tombstone exists solely to RAISE on a
-# post-completion duplicate, so its n_seen/Σallocated payload is dead
-# weight, and splitting it out keeps the hot path's dict O(in-flight)
-# instead of O(all orders in the TTL horizon) (round-11 verdict).
-#
-# STATE ENCODING v2 (round-14): the two sets persist as BINARY blobs
-# of concatenated fixed-width numpy columns instead of 6 array<long>/
-# array<double> cells. The state value crosses the Python/JVM boundary
-# pickled through the state schema (pyspark's
-# ApplyInPandasWithStateSerializer), so array state paid a
-# per-element list<->numpy conversion on EVERY load and persist
-# (`tolist()` out, `np.asarray(list)` in — measured ~2.4 s of the
-# sf0.1 drain, the single largest kernel-side cost); a bytes cell is
-# one memcpy each way (`tobytes()` out, zero-copy `frombuffer` in).
-# Same contents, same semantics, bit-identical emissions (all
-# allocation-family parity tests and the oracle row unchanged).
-# Layout: live = 4 8-byte columns [ks int64 | ns int64 | cents
-# float64 | exp int64] each of length L = len(blob)//32; done = 2
-# int64 columns [dks | dexp] of length len(blob)//16. NOTE: v1 array
-# checkpoints do NOT reload under v2 (the schema changed) — a
-# restart from an old checkpoint must replay; within-run checkpoints
-# are unaffected.
-_BUCKET_STATE_SCHEMA = "live binary, done binary"
+# live in-flight orders, key-sorted: key, n_seen, Σ allocated in
+# integer-valued CENTS (float64, exact below 2^53), expiry ms; then the
+# done-set: key, expiry ms
+STATE_DTYPES = (np.int64, np.int64, np.float64, np.int64, np.int64, np.int64)
 
 _PASS_COLS = [
     "l_orderkey",
@@ -138,159 +98,16 @@ _PASS_COLS = [
 ]
 
 
-def _round2(x: float) -> float:
-    """floor(x*100 + 0.5)/100 in IEEE doubles — bit-compatible with
-    functions.scalar.round2 (Java Math.round parity)."""
-    return math.floor(x * 100.0 + 0.5) / 100.0
+def allocation_kernel(detail_order_by: list[str], ts_col: str, ttl_ms: int):
+    """The bucket kernel (streaming/bucketed_state.state_fn contract)
+    allocating each arriving detail against its order's running sums."""
+    empty_f = np.empty(0, dtype=np.float64)
 
-
-def _alloc_row(
-    n_seen: int,
-    allocated: float,
-    w: float,
-    total: float,
-    w_total: float,
-    n_details: int,
-) -> float:
-    """The single-arrival share rule BOTH keyings and the batch
-    operator share: proportional for every row except the order's
-    last, which takes the exact remainder. Raises on over-delivery —
-    a duplicate detail must be loud, never silently over-allocated."""
-    if n_seen > n_details:
-        raise ValueError(
-            f"allocation: order received {n_seen} detail rows but "
-            f"o_detail_count={n_details} — duplicate delivery would "
-            f"silently over-allocate; the append contract is each "
-            f"detail exactly once"
-        )
-    if n_seen == n_details:
-        return _round2(total - allocated)
-    return _round2(total * w / w_total)
-
-
-def fold_allocation_group(
-    pdf: pd.DataFrame,
-    state: tuple[int, float] | None,
-    detail_order_by: list[str],
-) -> tuple[pd.DataFrame, tuple[int, float] | None]:
-    """The pure per-(order, batch) fold — factored out of the state
-    functions so the exact-sum invariant is property-testable without
-    a streaming query (tests/test_properties.py).
-
-    `pdf` columns: l_orderkey, l_linenumber, l_partkey,
-    l_extendedprice, o_totalprice, o_weight_total, o_detail_count
-    (+ detail_order_by). Returns (emitted shares, new state or None
-    when the order completed)."""
-    n_seen, allocated = state if state is not None else (0, 0.0)
-    ordered = (
-        pdf
-        if len(pdf) <= 1
-        else pdf.sort_values(detail_order_by, kind="mergesort")
-    )
-    total = float(ordered["o_totalprice"].iat[0])
-    w_total = float(ordered["o_weight_total"].iat[0])
-    n_details = int(ordered["o_detail_count"].iat[0])
-    shares: list[float] = []
-    for w in ordered["l_extendedprice"].tolist():
-        n_seen += 1
-        share = _alloc_row(n_seen, allocated, w, total, w_total, n_details)
-        allocated += share
-        shares.append(share)
-    out = pd.DataFrame(
-        {
-            "l_orderkey": ordered["l_orderkey"],
-            "l_linenumber": ordered["l_linenumber"],
-            "l_partkey": ordered["l_partkey"],
-            "final_detail_amount": shares,
-        }
-    )
-    if n_seen == n_details:
-        return out, None
-    return out, (n_seen, allocated)
-
-
-def _per_order_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # the Redis `expire`: an incomplete order's running sums
-            # are dropped; a straggler would restart from zero (the
-            # reference's own accepted failure mode past the TTL).
-            state.remove()
-            return
-        chunks = list(pdfs)
-        batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        prior = tuple(state.get) if state.exists else None
-        out, new_state = fold_allocation_group(batch, prior, detail_order_by)
-        if new_state is None:
-            # completed: keep a TOMBSTONE (n_seen = n_details) until the
-            # TTL instead of removing — a duplicate detail arriving in a
-            # later batch then drives n_seen past o_detail_count and
-            # _alloc_row raises the over-delivery error instead of
-            # silently restarting the running sums (round-10 advice).
-            # The allocated field of a tombstone is never read: the
-            # raise fires before any share arithmetic.
-            new_state = (int(batch["o_detail_count"].iat[0]), 0.0)
-        state.update(new_state)
-        max_ts_ms = int(pd.Timestamp(batch[ts_col].max()).value // 1_000_000)
-        # clamp like the bucketed path's _shrink_or_remove: a timeout at
-        # or below the current watermark is rejected by the state API
-        state.setTimeoutTimestamp(
-            max(max_ts_ms + ttl_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield out
-
-    return fn
-
-
-def _decode_bucket_state(live: bytes, done: bytes):
-    """(lks, lns, lacs, lexp, dks, dexp) numpy views over the v2
-    binary state blobs (see _BUCKET_STATE_SCHEMA). Zero-copy
-    read-only views — every kernel mutation below builds new arrays
-    (fancy indexing / concatenate), never writes in place."""
-    import numpy as np
-
-    empty_i = np.empty(0, dtype=np.int64)
-    lks = lns = lexp = dks = dexp = empty_i
-    lacs = np.empty(0, dtype=np.float64)
-    if live:
-        n = len(live) // 32
-        lks = np.frombuffer(live, np.int64, n, 0)
-        lns = np.frombuffer(live, np.int64, n, 8 * n)
-        lacs = np.frombuffer(live, np.float64, n, 16 * n)
-        lexp = np.frombuffer(live, np.int64, n, 24 * n)
-    if done:
-        n = len(done) // 16
-        dks = np.frombuffer(done, np.int64, n, 0)
-        dexp = np.frombuffer(done, np.int64, n, 8 * n)
-    return lks, lns, lacs, lexp, dks, dexp
-
-
-def _bucketed_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
-    import numpy as np
-
-    _EMPTY_I = np.empty(0, dtype=np.int64)
-    _EMPTY_F = np.empty(0, dtype=np.float64)
-
-    def _persist(
-        state: GroupState,
-        lks: "np.ndarray",
-        lns: "np.ndarray",
-        lacs: "np.ndarray",
-        lexp: "np.ndarray",
-        dks: "np.ndarray",
-        dexp: "np.ndarray",
-        wm: int,
-    ) -> None:
+    def _prune(state: GroupState, lks, lns, lacs, lexp, dks, dexp, wm):
         """Prune expired entries (event-time TTL) from the live
-        in-flight arrays and the done-set arrays, persist the
-        survivors, and keep one pending timeout at the earliest
-        remaining expiry. BOTH sets stay in numpy end-to-end — the
-        per-batch state rewrite is two C-speed memcpys (v2 binary
-        encoding, see _BUCKET_STATE_SCHEMA), never per-order Python
-        objects. `lacs` carries Σ allocated in integer-valued CENTS
-        float64 (exact below 2^53) — persisted as-is under v2."""
+        in-flight columns and the done-set, and keep one pending
+        timeout at the earliest remaining expiry. Returns the surviving
+        columns, or None when nothing survives."""
         if lks.size:
             keep = lexp > wm
             if not keep.all():
@@ -300,57 +117,28 @@ def _bucketed_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
             if not keep.all():
                 dks, dexp = dks[keep], dexp[keep]
         if not lks.size and not dks.size:
-            if state.exists:
-                state.remove()
-            return
+            return None
         min_exp = int(lexp.min()) if lks.size else None
         if dks.size:
             dmin = int(dexp.min())
             min_exp = dmin if min_exp is None else min(min_exp, dmin)
-        live = b"".join(
-            np.ascontiguousarray(a).tobytes()
-            for a in (
-                lks,
-                lns,
-                lacs.astype(np.float64, copy=False),
-                lexp,
-            )
-        )
-        done = b"".join(np.ascontiguousarray(a).tobytes() for a in (dks, dexp))
-        state.update((live, done))
         state.setTimeoutTimestamp(max(min_exp, wm + 1))
+        return lks, lns, lacs, lexp, dks, dexp
 
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # Live in-flight orders as parallel numpy columns (key-sorted
-        # for searchsorted lookups); Σ allocated is tracked in integer
-        # CENTS, which makes the within-batch accumulation below an
-        # exact vectorized cumsum. Emitted shares are floor-rounded
-        # cents either way, so cents-tracking emits bit-identical
-        # values to the per-row float accumulation it replaces: the
-        # two Σs differ by ≤ a few ulp, and round2's floor(x*100+0.5)
-        # would need a half-cent perturbation to flip (guide §4.2 —
-        # vectorize the hot per-row Python loop).
-        lks, lns, lexp = _EMPTY_I, _EMPTY_I, _EMPTY_I
-        lacs = _EMPTY_F
-        dks, dexp = _EMPTY_I, _EMPTY_I
-        if state.exists:
-            live_blob, done_blob = state.get
-            lks, lns, lacs, lexp, dks, dexp = _decode_bucket_state(
-                live_blob, done_blob
-            )
-            if lks.size > 1:
-                order = np.argsort(lks, kind="stable")
-                lks, lns, lacs, lexp = (
-                    lks[order], lns[order], lacs[order], lexp[order]
-                )
+    def kernel(
+        cols: tuple, batch: pd.DataFrame | None, state: GroupState
+    ) -> tuple[tuple | None, pd.DataFrame | None]:
+        # Σ allocated is tracked in integer CENTS, which makes the
+        # within-batch accumulation below an exact vectorized cumsum.
+        # Emitted shares are floor-rounded cents either way, so
+        # cents-tracking emits bit-identical values to a per-row float
+        # accumulation: the two Σs differ by ≤ a few ulp, and round2's
+        # floor(x*100+0.5) would need a half-cent perturbation to flip
+        # (guide §4.2 — vectorize the hot per-row Python loop).
+        lks, lns, lacs, lexp, dks, dexp = cols
         wm = state.getCurrentWatermarkMs()
         if state.hasTimedOut:
-            _persist(state, lks, lns, lacs, lexp, dks, dexp, wm)
-            return
-        chunks = list(pdfs)
-        batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+            return _prune(state, lks, lns, lacs, lexp, dks, dexp, wm), None
         if len(batch) > 1:
             batch = batch.sort_values(
                 ["l_orderkey", *detail_order_by], kind="mergesort"
@@ -358,16 +146,15 @@ def _bucketed_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
         oks = batch["l_orderkey"].to_numpy(dtype=np.int64, copy=False)
         m = oks.size
         if m == 0:
-            _persist(state, lks, lns, lacs, lexp, dks, dexp, wm)
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     "l_orderkey": batch["l_orderkey"],
                     "l_linenumber": batch["l_linenumber"],
                     "l_partkey": batch["l_partkey"],
-                    "final_detail_amount": _EMPTY_F,
+                    "final_detail_amount": empty_f,
                 }
             )
-            return
+            return _prune(state, lks, lns, lacs, lexp, dks, dexp, wm), out
         # cross-batch over-delivery check, vectorized: any arriving key
         # already in the done-set completed in an earlier batch — a
         # duplicate delivery that must be loud, never re-allocated
@@ -436,7 +223,8 @@ def _bucketed_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
             )
         # proportional shares in exact integer cents (float64-valued:
         # cumsums of integer-valued float64 are exact below 2^53), same
-        # IEEE expression as _round2(total * w / w_total) * 100
+        # IEEE expression as round2(total * w / w_total) * 100
+        # (functions.scalar.round2, Java Math.round parity)
         prop_cents = np.floor(tot * wgt / wtt * 100.0 + 0.5)
         excl = np.cumsum(prop_cents) - prop_cents  # exclusive prefix
         ac_before = prior_ac[seg_id] + (excl - excl[starts][seg_id])
@@ -444,7 +232,7 @@ def _bucketed_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
         cmpl = n_seen == nds
         if cmpl.any():
             # the order's LAST row takes the exact remainder — same
-            # expression as _round2(total - allocated); nothing follows
+            # expression as round2(total - allocated); nothing follows
             # a completing row within its run (checked above), so no
             # later share depends on this substitution
             lastv = np.floor((tot - ac_before / 100.0) * 100.0 + 0.5) / 100.0
@@ -470,8 +258,7 @@ def _bucketed_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
         if seg_done.any():
             dks = np.concatenate([dks, seg_keys[seg_done]])
             dexp = np.concatenate([dexp, seg_exp[seg_done]])
-        _persist(state, lks, lns, lacs, lexp, dks, dexp, wm)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "l_orderkey": batch["l_orderkey"],
                 "l_linenumber": batch["l_linenumber"],
@@ -479,8 +266,9 @@ def _bucketed_fn(detail_order_by: list[str], ts_col: str, ttl_ms: int):
                 "final_detail_amount": shares,
             }
         )
+        return _prune(state, lks, lns, lacs, lexp, dks, dexp, wm), out
 
-    return fn
+    return kernel
 
 
 def streaming_allocation_split(
@@ -488,7 +276,6 @@ def streaming_allocation_split(
     detail_order_by: list[str],
     ts_col: str = "l_commit_ts",
     ttl_ms: int = STATE_TTL_MS,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """F1 allocation over a detail STREAM whose orders may split
     across micro-batches.
@@ -503,18 +290,11 @@ def streaming_allocation_split(
     l_linenumber, l_partkey, final_detail_amount) row per arriving
     detail, update mode.
 
-    `n_buckets=None` keys state per order (the reference's literal
-    Redis-key shape); an integer keys it per order-hash bucket with
-    the bucket's in-flight orders as array state — one python
-    crossing per bucket per batch instead of per order (see module
-    docstring for when each wins). Identical emissions either way.
-
     State per IN-FLIGHT order is (n_seen, Σ allocated) — the weight
     running sum the reference also keeps (`:ori`) exists only for its
     float-equality last-row test, which the detail-count detection
     replaces. Completed orders persist until the TTL as
-    presence-with-expiry records (the bucketed keying's compact
-    done-set; the per-order keying's tombstone tuple) so a
+    presence-with-expiry records (the compact done-set) so a
     post-completion duplicate raises the over-delivery error (it
     would otherwise silently restart at n_seen=1 and over-allocate the
     order total). TTL semantics: an order's state times out once
@@ -539,29 +319,19 @@ def streaming_allocation_split(
         )
     carry = list(dict.fromkeys(_PASS_COLS + [ts_col] + detail_order_by))
     # the delay is expressed in MILLISECONDS so it equals the TTL
-    # exactly for any value (round-11 review: "{ttl_ms // 1000}
-    # seconds" silently truncated fractional-second TTLs, dropping
-    # in-TTL stragglers as late)
+    # exactly for any value ("{ttl_ms // 1000} seconds" would silently
+    # truncate a fractional-second TTL, dropping in-TTL stragglers as
+    # late)
     watermarked = details.select(*carry).withWatermark(
         ts_col, f"{ttl_ms} milliseconds"
     )
-    if n_buckets is None:
-        return watermarked.groupBy("l_orderkey").applyInPandasWithState(
-            _per_order_fn(detail_order_by, ts_col, ttl_ms),
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    bucketed = watermarked.withColumn(
-        "__bucket", F.pmod(F.xxhash64("l_orderkey"), F.lit(n_buckets))
-    )
-    return bucketed.groupBy("__bucket").applyInPandasWithState(
-        _bucketed_fn(detail_order_by, ts_col, ttl_ms),
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_BUCKET_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return apply_bucketed(
+        watermarked,
+        "l_orderkey",
+        allocation_kernel(detail_order_by, ts_col, ttl_ms),
+        STATE_DTYPES,
+        _OUT_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -590,15 +360,15 @@ def co_arrival_guard(
     the ANN partials: fold everything into one `(key, max batch_id)`
     base, marker-committed, stragglers excluded by watermark) — an
     always-on stage would otherwise re-read every batch's key file on
-    every batch, O(batches²) I/O over the run (round-10 review).
+    every batch, O(batches²) I/O over the run.
 
-    GROWTH (round-10 advice; closed round-12): with no horizon the base
+    GROWTH: with no horizon the base
     retains every distinct key for the run's lifetime, so the per-batch
     semi-join grows O(total distinct orders) — exact forever, but NOT
     synopsis-sized on an unbounded run. Two pruning modes:
 
     - EVENT-TIME horizon (`horizon_ms=H`, requires `ts_col` — the
-      preferred mode, round-11 verdict item #3): each committed key
+      preferred mode): each committed key
       carries its batch's max event time; at compaction, keys whose
       last-seen event time is more than H ms behind the log's newest
       event time are pruned. Sound when H ≥ the upstream join
@@ -613,7 +383,7 @@ def co_arrival_guard(
       H × trigger-cadence exceeds tolerance + TTL — kept for feeds
       without a usable event-time column.
 
-    RUN SCOPING (round-10 advice): the log is keyed by batch_id, and
+    RUN SCOPING: the log is keyed by batch_id, and
     batch ids RESTART at 0 with a fresh checkpoint — so reusing an
     out_dir-derived keys_dir across runs would falsely flag new keys
     against a prior run's higher-numbered batches. Pass the query's
@@ -669,8 +439,8 @@ def co_arrival_guard(
         # live-checkpoint restart KEEPS the log — but a legacy log
         # written by a run without an event-time horizon has no
         # __ts_ms column, and the first check()'s unionByName would
-        # then fail as an opaque AnalysisException mid-stream
-        # (round-12 ADVICE). Detect it at construction and raise a
+        # then fail as an opaque AnalysisException mid-stream.
+        # Detect it at construction and raise a
         # named config error instead: the guard cannot backfill
         # last-seen event times it never recorded.
         wm0 = base_watermark(base_dir)
@@ -718,8 +488,8 @@ def co_arrival_guard(
                     # claim is "H ≥ tolerance + TTL", and Spark keeps
                     # rows exactly at the watermark — so the boundary
                     # key is the last one the upstream join could
-                    # still legally emit a detail for (round-13,
-                    # pinned by the boundary test).
+                    # still legally emit a detail for (pinned by the
+                    # boundary test).
                     out = out.filter(
                         F.col("__ts_ms") >= newest - horizon_ms
                     )

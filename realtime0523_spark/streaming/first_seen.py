@@ -5,81 +5,51 @@ table; each batch does a batched IN-lookup, flags `if_first_order`,
 and writes new first-timers back
 (scala/…/dwd/Ods_to_DWD_order_info.scala:83-104, 219-225).
 
-Ours: `applyInPandasWithState` — keyed user state inside the engine's
-checkpointed state store. No external KV service; restart-safe. The
-kept record per key is the event-time minimum seen so far (not
-arrival order), so results are deterministic and replay-stable.
+Ours: bucketed keyed state inside the engine's checkpointed state
+store (streaming/bucketed_state.py). No external KV service;
+restart-safe. The kept record per key is the event-time minimum seen
+so far (not arrival order), so results are deterministic and
+replay-stable. A bucket's state is its keys' (key, seen_ts, seen_id)
+rows as key-sorted int64 columns; the batch-local minimum and the
+state merge are vectorized numpy passes (searchsorted lookups, lexsort
+runs — guide §4.2). Each batch emits one row per key present in it,
+carrying the post-merge minimum.
 
-Two state keyings (the streaming_allocation_split precedent):
-
-- PER-KEY state (``n_buckets=None``): key = the tracked key, state =
-  (seen_ts, seen_id). The literal design; one Python crossing and one
-  state-store round-trip PER KEY PER BATCH — measured ~70 µs each, so
-  a 100k-key batch spends ~7 s in pure per-group overhead.
-- BUCKETED map state (``n_buckets=N``): key = hash(key) % N, state =
-  the bucket's (key, seen_ts, seen_id) rows as key-sorted parallel
-  array columns. One Python crossing per BUCKET per batch; the
-  batch-local min and the state merge are vectorized numpy passes
-  (searchsorted lookups, lexsort runs — guide §4.2). Emitted rows are
-  IDENTICAL to the per-key keying (parity-tested): one row per key
-  present in the batch carrying the post-merge minimum.
-
-SIZING ``n_buckets``: one bucket is one task and one state row, so
-size to the cluster's cores (the allocation operator's rule). State
-per bucket is |keys|/N rows rewritten per batch — for an ever-growing
-key set prefer larger N (or the per-key keying with RocksDB) once
-buckets stop fitting an Arrow batch comfortably.
+State per bucket is |keys|/n rows rewritten per batch, so an
+ever-growing key set wants more buckets (SPARK_GRAFT_STATE_BUCKETS)
+once a bucket stops fitting an Arrow batch comfortably. Keys must be
+non-null: xxhash64 buckets a NULL like a value, but an int64 state
+column cannot hold one, so a null key raises by name. A checkpoint
+written before the shared bucketed encoding (`array<long>` state)
+does not reload; replay from the source.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState
+
+from realtime0523_spark.streaming.bucketed_state import apply_bucketed
+
+# key-sorted keys, their earliest ts (epoch µs) and the id at that ts
+STATE_DTYPES = (np.int64, np.int64, np.int64)
 
 
-def _first_seen_fn(
-    key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Emit one row per key per batch: the earliest (ts, id) ever seen
-    for this key, folded across batches through the state store."""
-    batch = pd.concat(list(pdfs), ignore_index=True)
-    idx = batch.sort_values(["ts", "id"]).index[0]
-    cand = (int(batch.loc[idx, "ts"]), int(batch.loc[idx, "id"]))
-    if not state.exists or cand < tuple(state.get):
-        state.update(cand)
-    seen_ts, seen_id = state.get
-    yield pd.DataFrame(
-        {"key": [key[0]], "first_ts": [seen_ts], "first_id": [seen_id]}
-    )
-
-
-def _bucketed_first_seen_fn(
-    key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """The bucketed twin of _first_seen_fn: fold a whole bucket's
-    batch rows into the bucket's key-sorted state arrays with numpy
-    passes, and emit the per-key rows the per-key keying would have —
-    same keys (those present in the batch), same post-merge minima,
-    so the two keyings are output-identical (parity-tested)."""
-    import numpy as np
-
-    batch = pd.concat(list(pdfs), ignore_index=True)
+def first_seen_kernel(
+    cols: tuple, batch: pd.DataFrame, state: GroupState
+) -> tuple[tuple, pd.DataFrame]:
+    """Fold one bucket's batch rows into its key-sorted state columns
+    and emit, for every key in the batch, the earliest (ts, id) ever
+    seen for it."""
     if batch["key"].isna().any():
-        # round-13 ADVICE: xxhash64(NULL) is non-null, so a null key
-        # would reach this kernel and die in the int64 conversion
-        # below with an opaque worker error. The bucketed keying's
-        # contract is non-null keys (the per-key keying treats a null
-        # key as its own group) — raise the contract by name instead.
         raise ValueError(
-            "streaming_first_seen(n_buckets=N): null key in batch — "
-            "the bucketed map-state keying requires non-null keys "
-            "(xxhash64 buckets a NULL like a value, but int64 state "
-            "arrays cannot hold one). Filter null keys upstream or "
-            "use the per-key keying (n_buckets=None), which treats "
-            "a null key as its own group."
+            "streaming_first_seen: null key in batch — the bucketed "
+            "state requires non-null keys (xxhash64 buckets a NULL like "
+            "a value, but int64 state columns cannot hold one). Filter "
+            "null keys upstream."
         )
     k = batch["key"].to_numpy(dtype=np.int64)
     ts = batch["ts"].to_numpy(dtype=np.int64)
@@ -90,14 +60,7 @@ def _bucketed_first_seen_fn(
     ks, tss, idss = k[order], ts[order], ids[order]
     first = np.concatenate([[True], ks[1:] != ks[:-1]])
     bk, bts, bid = ks[first], tss[first], idss[first]
-    if state.exists:
-        sk, sts, sid = (
-            np.asarray(c, dtype=np.int64) for c in state.get
-        )
-    else:
-        sk = np.empty(0, dtype=np.int64)
-        sts = sk
-        sid = sk
+    sk, sts, sid = cols
     pos = np.searchsorted(sk, bk)
     in_state = np.zeros(bk.size, dtype=bool)
     valid = pos < sk.size
@@ -117,9 +80,9 @@ def _bucketed_first_seen_fn(
         sk = np.insert(sk, ins, bk[new])
         sts = np.insert(sts, ins, bts[new])
         sid = np.insert(sid, ins, bid[new])
-    state.update((sk.tolist(), sts.tolist(), sid.tolist()))
     at = np.searchsorted(sk, bk)  # every batch key is in state now
-    yield pd.DataFrame({"key": bk, "first_ts": sts[at], "first_id": sid[at]})
+    out = pd.DataFrame({"key": bk, "first_ts": sts[at], "first_id": sid[at]})
+    return (sk, sts, sid), out
 
 
 def streaming_first_seen(
@@ -127,39 +90,23 @@ def streaming_first_seen(
     key_col: str,
     ts_col: str,
     id_col: str,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Per-key earliest-record tracking over a stream.
 
     Output: one row per key per micro-batch with the current
     first-seen (ts, id). With all data in one batch this equals the
     batch `min(struct(ts, id)) GROUP BY key` — the oracle-checkable
-    contract. `n_buckets=N` switches to bucketed map state (module
-    docstring): identical rows, one Python/state crossing per bucket
-    per batch instead of per key.
+    contract.
     """
-    from pyspark.sql import functions as F
-
     prepared = stream.select(
         F.col(key_col).alias("key"),
         F.unix_micros(F.col(ts_col)).alias("ts"),
         F.col(id_col).alias("id"),
     )
-    if n_buckets is None:
-        return prepared.groupBy("key").applyInPandasWithState(
-            _first_seen_fn,
-            outputStructType="key long, first_ts long, first_id long",
-            stateStructType="seen_ts long, seen_id long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    bucketed = prepared.withColumn(
-        "__bucket", F.pmod(F.xxhash64("key"), F.lit(n_buckets))
-    )
-    return bucketed.groupBy("__bucket").applyInPandasWithState(
-        _bucketed_first_seen_fn,
-        outputStructType="key long, first_ts long, first_id long",
-        stateStructType="ks array<long>, tss array<long>, ids array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_bucketed(
+        prepared,
+        "key",
+        first_seen_kernel,
+        STATE_DTYPES,
+        "key long, first_ts long, first_id long",
     )

@@ -101,7 +101,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from realtime0523_spark.core.session import state_buckets
 from realtime0523_spark.functions.scalar import round2
 from realtime0523_spark.operators.allocation import allocate_order_amount
 from realtime0523_spark.streaming.compaction import (
@@ -661,7 +660,7 @@ class FiveLayerTopology:
           per-batch allocation would absorb the full o_totalprice in
           EACH fragment (silent double-count);
         - split_arrival: the reference's cross-batch running-sum
-          state (streaming/allocation.py, bucketed keying) allocates
+          state (streaming/allocation.py, bucketed keyed state) allocates
           each detail as it arrives — split feeds are CORRECT, no
           co-arrival needed."""
         commit = idempotent_batch_writer(self.ads_dir)
@@ -674,13 +673,11 @@ class FiveLayerTopology:
             src = topic_stream(
                 self.spark, self.dws_dir, DWS_WIDE_SCHEMA_SPLIT
             )
-            # sized to the cores, as the inventory does; the buckets key
-            # the state, so a restart must derive the same count
+            # the state is keyed by bucket: a restart under another
+            # bucket count raises BucketStateMismatch instead of
+            # re-keying in-flight orders
             alloc_stream = streaming_allocation_split(
-                src,
-                _DETAIL_ORDER,
-                ts_col="l_commit_ts",
-                n_buckets=state_buckets(self.spark),
+                src, _DETAIL_ORDER, ts_col="l_commit_ts"
             )
 
             def process_split(batch_df: DataFrame, batch_id: int) -> None:

@@ -15,11 +15,7 @@ def con():
     return duckdb_con(SF_SMOKE)
 
 
-@pytest.mark.slow  # the driver's own oracle sweep at sf0.01 covers
-# this parametrization; at 217 queries it dominates the suite's wall
-# time and made the driver's pytest gate time out (rounds 12-13)
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(spark, con, name):
+def _assert_matches_oracle(spark, con, name):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, SF_SMOKE).toPandas()
     if spec.oracle is None:
@@ -28,6 +24,23 @@ def test_query_matches_oracle(spark, con, name):
     odf = con.execute(spec.oracle).df()
     issues = compare(sdf, odf)
     assert not issues, issues
+
+
+@pytest.mark.slow  # the driver's own oracle sweep at sf0.01 covers
+# this parametrization; at 217 queries it dominates the suite's wall
+# time and made the driver's pytest gate time out
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_query_matches_oracle(spark, con, name):
+    _assert_matches_oracle(spark, con, name)
+
+
+# the fast tier's oracle smoke: the streaming keyed-state queries and
+# the batch allocation they must agree with
+@pytest.mark.parametrize(
+    "name", ["allocation", "stream_allocation_split", "stream_first_seen"]
+)
+def test_query_matches_oracle_smoke(spark, con, name):
+    _assert_matches_oracle(spark, con, name)
 
 
 @pytest.mark.parametrize(

@@ -1569,6 +1569,46 @@ def test_graph_driver_paths_match_distributed(spark):
     assert (999, 0) in bd
 
 
+def test_graph_gates_read_env_at_call_time(spark, monkeypatch):
+    """The graph and connected-components gates read their env vars
+    when the operator runs, not at import: setting them to 0 after the
+    modules are imported switches the driver paths (and the graph
+    broadcast) off."""
+    from realtime0523_spark.llm import clusters
+    from realtime0523_spark.operators import graph
+
+    calls: list = []
+
+    def spy(module, name, record):
+        fn = getattr(module, name)
+
+        def wrapped(*args, **kwargs):
+            calls.append(record(*args))
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapped)
+
+    spy(graph, "_driver_pagerank", lambda *a: "pagerank-driver")
+    spy(clusters, "_driver_union_find", lambda *a: "cc-driver")
+    spy(graph, "_bcast", lambda df, small: f"broadcast={small}")
+    tri = [(1, 2), (2, 3), (3, 1)]
+    e = spark.createDataFrame(
+        tri + [(b, a) for a, b in tri], "src long, dst long"
+    )
+    pairs = spark.createDataFrame(tri, "doc_a long, doc_b long")
+    want_pr = {r.node: r.rank_fp for r in graph.pagerank_fixed_point(e).collect()}
+    want_cc = sorted(map(tuple, clusters.connected_components(pairs).collect()))
+    assert calls == ["pagerank-driver", "cc-driver"]
+    calls.clear()
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BROADCAST_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "0")
+    got_pr = {r.node: r.rank_fp for r in graph.pagerank_fixed_point(e).collect()}
+    got_cc = sorted(map(tuple, clusters.connected_components(pairs).collect()))
+    assert got_pr == want_pr and got_cc == want_cc
+    assert calls and set(calls) == {"broadcast=False"}
+
+
 def test_rfm_driver_scorer_matches_distributed(spark, monkeypatch):
     """Round-14 (VERDICT r13 item #3): the gated driver-side numpy RFM
     scorer is bit-identical to the distributed prefix_sums scorer —

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from realtime0523_spark.operators.aggregates import salted_agg
@@ -637,42 +637,78 @@ def split_order(draw):
     return weights, total, batches
 
 
-@given(split_order())
-@settings(**PROP_SETTINGS)
-def test_split_allocation_exact_sum_any_split(case):
-    """Pure-pandas fold (no Spark): whatever the split and arrival
-    order, shares sum EXACTLY to round2(total), non-last rows carry
-    the proportional share, and the state completes to None."""
+def _split_detail_frame(
+    idxs: list[int], weights: list[float], total: float, extra: int = 0
+) -> "pd.DataFrame":
+    """One arrival batch of order 1's detail rows, in the columns the
+    streaming allocation kernel reads."""
     import pandas as pd
 
-    from realtime0523_spark.streaming.allocation import fold_allocation_group
+    w_total = sum(weights)
+    m = len(idxs)
+    return pd.DataFrame(
+        {
+            "l_orderkey": [1] * m,
+            "l_linenumber": [i + 1 for i in idxs],
+            "l_partkey": [10 + i for i in idxs],
+            "l_extendedprice": [weights[i] for i in idxs],
+            "o_totalprice": [total] * m,
+            "o_weight_total": [w_total] * m,
+            "o_detail_count": [len(weights) - extra] * m,
+            "l_commit_ts": [pd.Timestamp("2025-06-15")] * m,
+        }
+    )
+
+
+def _split_allocation_fn():
+    """The streaming allocation kernel over one bucket, as the state
+    store would call it."""
+    from realtime0523_spark.streaming.allocation import (
+        STATE_DTYPES,
+        allocation_kernel,
+    )
+    from realtime0523_spark.streaming.bucketed_state import state_fn
+
+    kernel = allocation_kernel(["l_linenumber"], "l_commit_ts", 100_000)
+    return state_fn(kernel, STATE_DTYPES, 1)
+
+
+@given(split_order())
+# three equal weights over 1.00: proportional shares are 0.33 each, so
+# only the remainder rule on the last arrival makes the sum exact
+@example(([1.0, 1.0, 1.0], 1.0, [[0], [1], [2]]))
+@settings(**PROP_SETTINGS)
+def test_split_allocation_exact_sum_any_split(case):
+    """The bucketed kernel on a fake state (no Spark): whatever the
+    split and arrival order, shares sum EXACTLY to round2(total),
+    non-last rows carry the proportional share, and the order moves
+    from the live columns to the done-set at its last detail."""
+    import pandas as pd
+
+    from realtime0523_spark.streaming.allocation import STATE_DTYPES
+    from realtime0523_spark.streaming.bucketed_state import decode_state
+    from tests.fake_state import FakeState
 
     weights, total, batches = case
     w_total = sum(weights)
     n = len(weights)
-    state = None
+    fn = _split_allocation_fn()
+    state = FakeState()
     emitted: list[tuple[int, float]] = []
     arrivals = 0
     for batch_idxs in batches:
-        pdf = pd.DataFrame(
-            {
-                "l_orderkey": [1] * len(batch_idxs),
-                "l_linenumber": [i + 1 for i in batch_idxs],
-                "l_partkey": [10 + i for i in batch_idxs],
-                "l_extendedprice": [weights[i] for i in batch_idxs],
-                "o_totalprice": [total] * len(batch_idxs),
-                "o_weight_total": [w_total] * len(batch_idxs),
-                "o_detail_count": [n] * len(batch_idxs),
-            }
-        )
-        out, state = fold_allocation_group(pdf, state, ["l_linenumber"])
+        pdf = _split_detail_frame(batch_idxs, weights, total)
+        out = pd.concat(list(fn((0,), iter([pdf]), state)))
         arrivals += len(batch_idxs)
         emitted += list(
             zip(out["l_linenumber"].tolist(), out["final_detail_amount"].tolist())
         )
+        lks, lns, _, _, dks, _ = decode_state(state.get[0], 1, STATE_DTYPES)
         if arrivals < n:
-            assert state is not None and state[0] == arrivals
-    assert state is None  # completed exactly at the last detail
+            assert lks.tolist() == [1] and lns.tolist() == [arrivals]
+            assert dks.size == 0
+    # completed exactly at the last detail: no live entry, one done-set key
+    assert lks.size == 0 and dks.tolist() == [1]
     assert len(emitted) == n
     # Σ shares == round2(total) EXACTLY — in integer cents, no epsilon
     assert round(sum(int(round(s * 100)) for _, s in emitted)) == int(
@@ -690,23 +726,62 @@ def test_split_allocation_exact_sum_any_split(case):
 def test_split_allocation_over_delivery_raises(case):
     """A duplicate detail beyond o_detail_count must raise, never
     silently over-allocate (the loud-contract discipline)."""
-    import pandas as pd
     import pytest as _pytest
 
-    from realtime0523_spark.streaming.allocation import fold_allocation_group
+    from tests.fake_state import FakeState
 
-    weights, total, batches = case
+    weights, total, _ = case
     n = len(weights)
-    pdf = pd.DataFrame(
-        {
-            "l_orderkey": [1] * (n + 1),
-            "l_linenumber": list(range(1, n + 2)),
-            "l_partkey": [10] * (n + 1),
-            "l_extendedprice": weights + [weights[0]],
-            "o_totalprice": [total] * (n + 1),
-            "o_weight_total": [sum(weights)] * (n + 1),
-            "o_detail_count": [n] * (n + 1),
-        }
+    pdf = _split_detail_frame(
+        list(range(n)) + [0], weights + [weights[0]], total, extra=1
     )
     with _pytest.raises(ValueError, match="duplicate delivery"):
-        fold_allocation_group(pdf, None, ["l_linenumber"])
+        list(_split_allocation_fn()((0,), iter([pdf]), FakeState()))
+
+
+@st.composite
+def first_seen_batches(draw):
+    """(key, ts, id) rows over a few keys and timestamps, so keys and
+    (key, ts) pairs collide, cut into 1-5 contiguous arrival batches."""
+    rows = draw(
+        st.lists(
+            st.tuples(
+                st.integers(-2, 2), st.integers(0, 3), st.integers(0, 20)
+            ),
+            min_size=1,
+            max_size=30,
+        )
+    )
+    cuts = draw(st.lists(st.integers(1, len(rows)), max_size=4))
+    bounds = [0, *sorted(set(cuts)), len(rows)]
+    return [rows[lo:hi] for lo, hi in zip(bounds, bounds[1:]) if hi > lo]
+
+
+@given(first_seen_batches())
+# a later batch ties the stored ts with a smaller id (the tiebreak)
+# and inserts a key between two stored ones
+@example([[(1, 5, 9), (3, 0, 1)], [(1, 5, 3), (2, 7, 4)]])
+@settings(**PROP_SETTINGS)
+def test_first_seen_emits_running_minimum_any_split(batches):
+    """The bucketed first-seen kernel on a fake state (no Spark): for
+    any split of the rows into batches, each batch emits, for every
+    key it contains, the minimum (ts, id) over all rows seen so far."""
+    import pandas as pd
+
+    from realtime0523_spark.streaming.bucketed_state import state_fn
+    from realtime0523_spark.streaming.first_seen import (
+        STATE_DTYPES,
+        first_seen_kernel,
+    )
+    from tests.fake_state import FakeState
+
+    fn = state_fn(first_seen_kernel, STATE_DTYPES, 1)
+    state = FakeState()
+    best: dict[int, tuple[int, int]] = {}
+    for rows in batches:
+        for k, ts, i in rows:
+            best[k] = min(best.get(k, (ts, i)), (ts, i))
+        pdf = pd.DataFrame(rows, columns=["key", "ts", "id"])
+        out = pd.concat(list(fn((0,), iter([pdf]), state)))
+        got = sorted(map(tuple, out[["key", "first_ts", "first_id"]].values.tolist()))
+        assert got == sorted((k, *best[k]) for k in {r[0] for r in rows})

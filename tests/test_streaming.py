@@ -35,6 +35,13 @@ def state_provider(request, monkeypatch):
     return request.param
 
 
+@pytest.fixture(params=["4"], ids=["bucketed"])
+def bucketed(request, monkeypatch):
+    """Run the bucketed keyed-state operators at a fixed bucket count
+    (SPARK_GRAFT_STATE_BUCKETS), independent of the session's cores."""
+    monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", request.param)
+
+
 def test_stream_dau_equals_batch_dau(spark, state_provider):
     got = run_to_memory(
         streaming_dau(stream_table(spark, SF_SMOKE, "events")), output_mode="complete"
@@ -454,69 +461,57 @@ def test_first_seen_state_equals_batch_min(spark, state_provider):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_first_seen_bucketed_matches_per_key(spark, tmp_path, state_provider):
-    """Round-13: the bucketed map-state keying emits EXACTLY the
-    per-key keying's rows, batch for batch — exercising a later batch
-    carrying an earlier event time (the state-update path), an equal
-    ts with a smaller id (the tiebreak), a pure re-sighting that must
-    re-emit the old minimum, and brand-new keys (the insert path)."""
+def test_first_seen_bucketed_matches_per_key(
+    spark, tmp_path, state_provider, monkeypatch
+):
+    """Each batch emits, for every key it carries, the key's earliest
+    (ts, id) so far: a later batch carrying an earlier event time (the
+    state-update path), an equal ts with a smaller id (the tiebreak), a
+    pure re-sighting that re-emits the old minimum, and new keys
+    appended after and inserted between the state's keys. One bucket,
+    so every key shares one state cell and the mid-array insert runs."""
+    monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", "1")
     base = 1_700_000_000
+    d = str(tmp_path / "feed")
 
-    def feed(sub):
-        d = str(tmp_path / sub)
+    def write(rows):
+        spark.createDataFrame(rows, "k long, ts_s long, oid long").withColumn(
+            "ts", F.timestamp_seconds("ts_s")
+        ).drop("ts_s").coalesce(1).write.mode("append").parquet(d)
 
-        def write(rows):
-            spark.createDataFrame(rows, "k long, ts_s long, oid long").withColumn(
-                "ts", F.timestamp_seconds("ts_s")
-            ).drop("ts_s").coalesce(1).write.mode("append").parquet(d)
-
-        write([(1, base + 500, 11), (2, base + 300, 12), (1, base + 400, 13)])
-        time.sleep(1.1)
-        write([(1, base + 200, 14), (2, base + 300, 10), (4, base + 700, 16)])
-        time.sleep(1.1)
-        write([(2, base + 900, 17), (3, base + 100, 15)])
-        return (
-            spark.readStream.schema("k long, oid long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-
-    per_key = sorted(
-        map(
-            tuple,
-            run_to_memory(
-                streaming_first_seen(feed("a"), "k", "ts", "oid"),
-                output_mode="update",
-            ).collect(),
-        )
+    write([(1, base + 500, 11), (2, base + 300, 12), (1, base + 400, 13)])
+    time.sleep(1.1)
+    write([(1, base + 200, 14), (2, base + 300, 10), (4, base + 700, 16)])
+    time.sleep(1.1)
+    write([(2, base + 900, 17), (3, base + 100, 15)])
+    src = (
+        spark.readStream.schema("k long, oid long, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d)
     )
-    bucketed = sorted(
-        map(
-            tuple,
-            run_to_memory(
-                streaming_first_seen(feed("b"), "k", "ts", "oid", n_buckets=3),
-                output_mode="update",
-            ).collect(),
-        )
-    )
-    assert bucketed == per_key
-    # and the fold is right on its own terms: per-key emissions are
-    # monotonically nonincreasing, so each key's minimum emission is
-    # its final state — key 1 ends at the batch-2 (ts=200, id=14) row,
-    # key 2 at the id-10 tiebreak
-    final: dict = {}
-    for k, t, i in per_key:  # sorted → first tuple per key is the min
-        final.setdefault(k, (t, i))
-    assert final[1] == ((base + 200) * 1_000_000, 14)
-    assert final[2] == ((base + 300) * 1_000_000, 10)
-    assert set(final) == {1, 2, 3, 4}
+    batches: dict = {}
+
+    def collect(batch_df, batch_id):
+        rows = sorted(map(tuple, batch_df.collect()))
+        if rows:
+            batches[batch_id] = rows
+
+    run_foreach_batch(streaming_first_seen(src, "k", "ts", "oid"), collect)
+
+    def us(s):
+        return (base + s) * 1_000_000
+
+    assert [batches[b] for b in sorted(batches)] == [
+        [(1, us(400), 13), (2, us(300), 12)],
+        [(1, us(200), 14), (2, us(300), 10), (4, us(700), 16)],
+        [(2, us(300), 10), (3, us(100), 15)],
+    ]
 
 
 def test_first_seen_bucketed_null_key_contract(spark, tmp_path):
-    """Round-13 ADVICE: xxhash64(NULL) buckets a null key like a
-    value, so a null key reaches the bucketed kernel — it must raise
-    the non-null-key contract by name, not an opaque int64-conversion
-    worker error."""
+    """xxhash64(NULL) buckets a null key like a value, so a null key
+    reaches the kernel — it must raise the non-null-key contract by
+    name, not an opaque int64-conversion worker error."""
     d = str(tmp_path / "nulls")
     spark.createDataFrame(
         [(None, 1_700_000_000, 1), (2, 1_700_000_000, 2)],
@@ -531,14 +526,14 @@ def test_first_seen_bucketed_null_key_contract(spark, tmp_path):
     )
     with pytest.raises(Exception, match="non-null keys"):
         run_to_memory(
-            streaming_first_seen(src, "k", "ts", "oid", n_buckets=3),
+            streaming_first_seen(src, "k", "ts", "oid"),
             output_mode="update",
         )
 
 
 def test_state_buckets_derivation(spark, monkeypatch):
-    """Round-13 ADVICE: the bucketed-keying bucket count derives from
-    the cluster's cores (2× defaultParallelism), env-overridable."""
+    """The bucket count derives from the cluster's cores (2×
+    defaultParallelism), env-overridable."""
     from realtime0523_spark.core.session import state_buckets
 
     monkeypatch.delenv("SPARK_GRAFT_STATE_BUCKETS", raising=False)
@@ -1873,14 +1868,13 @@ def _split_by_rank(orders, ts, n_chunks):
     return waves
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4], ids=["per-order", "bucketed"])
 def test_stream_allocation_split_equals_batch(
-    spark, state_provider, tmp_path, n_buckets
+    spark, state_provider, tmp_path, bucketed
 ):
-    """Both keyings (per-order state and bucketed map state) must
-    reproduce the batch allocation operator exactly when an order's
-    details are split across micro-batches in detail order — the
-    semantics the per-batch path refuses (co-arrival contract)."""
+    """The operator must reproduce the batch allocation operator
+    exactly when an order's details are split across micro-batches in
+    detail order — the semantics the per-batch path refuses
+    (co-arrival contract)."""
     import datetime
 
     from realtime0523_spark.operators.allocation import allocate_order_amount
@@ -1888,7 +1882,7 @@ def test_stream_allocation_split_equals_batch(
 
     orders = _alloc_orders()
     ts = datetime.datetime(2025, 6, 15)
-    feed = str(tmp_path / f"feed_{n_buckets}")
+    feed = str(tmp_path / "feed")
     _write_split_feed(spark, feed, _split_by_rank(orders, ts, 3))
     src = (
         spark.readStream.schema(_ALLOC_SCHEMA)
@@ -1896,7 +1890,7 @@ def test_stream_allocation_split_equals_batch(
         .parquet(feed)
     )
     got = run_to_memory(
-        streaming_allocation_split(src, _ALLOC_ORDER, n_buckets=n_buckets),
+        streaming_allocation_split(src, _ALLOC_ORDER),
         output_mode="update",
     )
     batch = spark.createDataFrame(_alloc_rows(orders, ts), _ALLOC_SCHEMA)
@@ -1918,9 +1912,8 @@ def test_stream_allocation_split_equals_batch(
         assert sums[ok] == round(total, 2)
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4], ids=["per-order", "bucketed"])
 def test_stream_allocation_ttl_evicts_incomplete_orders(
-    spark, tmp_path, n_buckets
+    spark, tmp_path, bucketed
 ):
     """Event-time TTL = the reference's Redis expire: an incomplete
     order whose state aged past the TTL horizon restarts its running
@@ -1949,7 +1942,7 @@ def test_stream_allocation_ttl_evicts_incomplete_orders(
     w2b = [(3, 1, 12, 103, 1.0, 25.0, 25.0, 25.0, 1,
             t0 + datetime.timedelta(seconds=310))]
     w3 = [(1, 3, 12, 103, 1.0, 30.0, 100.0, 90.0, 3, late)]
-    feed = str(tmp_path / f"ttlfeed_{n_buckets}")
+    feed = str(tmp_path / "ttlfeed")
     _write_split_feed(spark, feed, [w1, w2, w2b, w3])
     src = (
         spark.readStream.schema(_ALLOC_SCHEMA)
@@ -1957,7 +1950,7 @@ def test_stream_allocation_ttl_evicts_incomplete_orders(
         .parquet(feed)
     )
     got = run_to_memory(
-        streaming_allocation_split(src, _ALLOC_ORDER, n_buckets=n_buckets),
+        streaming_allocation_split(src, _ALLOC_ORDER),
         output_mode="update",
     )
     by_line = {
@@ -2061,16 +2054,15 @@ def test_streamed_ivf_long_horizon_flat_fold_and_unique_ids(spark, tmp_path):
         idx.assert_unique_ids()
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4], ids=["per-order", "bucketed"])
 def test_stream_allocation_split_restart_resumes_state(
-    spark, state_provider, tmp_path, n_buckets
+    spark, state_provider, tmp_path, bucketed
 ):
     """T6 for the running-sum allocation state: the query is STOPPED
     between an order's chunks; the second incarnation must resume the
     (n_seen, Σweight, Σallocated) state from the checkpoint — the
     straggler chunks then complete each order with the exact remainder,
     and the union of both incarnations' idempotent commits equals the
-    batch operator. Both keyings, both state-store providers."""
+    batch operator. Both state-store providers."""
     import datetime
 
     from realtime0523_spark.operators.allocation import allocate_order_amount
@@ -2091,7 +2083,7 @@ def test_stream_allocation_split_restart_resumes_state(
             .parquet(feed)
         )
         run_foreach_batch(
-            streaming_allocation_split(src, _ALLOC_ORDER, n_buckets=n_buckets),
+            streaming_allocation_split(src, _ALLOC_ORDER),
             idempotent_batch_writer(out),
             checkpoint_dir=ckpt,
             output_mode="update",
@@ -2277,22 +2269,63 @@ def test_streaming_dau_state_evicts_at_ttl(spark, tmp_path):
     assert dedup_state["numRowsTotal"] == 1
 
 
+def test_stream_allocation_restart_under_other_bucket_count_raises(
+    spark, tmp_path, monkeypatch
+):
+    """The bucket count keys the state: a query stopped with orders in
+    flight and restarted under another SPARK_GRAFT_STATE_BUCKETS must
+    raise BucketStateMismatch, naming the recorded count, instead of
+    silently re-keying the in-flight orders."""
+    import datetime
+
+    from realtime0523_spark.streaming.allocation import streaming_allocation_split
+
+    waves = _split_by_rank(_alloc_orders(), datetime.datetime(2025, 6, 15), 3)
+    feed = str(tmp_path / "feed")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    _write_split_feed(spark, feed, waves[:2])
+
+    def run_incarnation():
+        src = (
+            spark.readStream.schema(_ALLOC_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(feed)
+        )
+        run_foreach_batch(
+            streaming_allocation_split(src, _ALLOC_ORDER),
+            idempotent_batch_writer(out),
+            checkpoint_dir=ckpt,
+            output_mode="update",
+        )
+
+    monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", "2")
+    run_incarnation()  # chunks 0-1 drain; multi-detail orders in flight
+    tmp = str(tmp_path / "_w2")
+    spark.createDataFrame(waves[2], _ALLOC_SCHEMA).coalesce(1).write.parquet(tmp)
+    part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+    dst = os.path.join(feed, "wave_2.parquet")
+    os.replace(os.path.join(tmp, part), dst)
+    os.utime(dst, (time.time() + 60, time.time() + 60))
+    monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", "1")
+    with pytest.raises(Exception, match="BucketStateMismatch") as err:
+        run_incarnation()
+    assert "SPARK_GRAFT_STATE_BUCKETS=2" in str(err.value)
+
+
 # ----------------------------------------------------------------------
 # Round-11: allocation tombstones, TTL validation, guard scoping/horizon,
 # cells compaction long-horizon
 # ----------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4], ids=["per-order", "bucketed"])
 def test_stream_allocation_post_completion_duplicate_raises(
-    spark, tmp_path, n_buckets
+    spark, tmp_path, bucketed
 ):
-    """Over-delivery must be LOUD in both keyings (round-10 advice,
-    medium): after an order completes, its state persists as a
-    tombstone until the TTL, so a duplicate detail arriving in a LATER
-    batch drives n_seen past o_detail_count and raises — it must never
-    silently restart the running sums at n_seen=1 and emit another
-    proportional share (over-allocating the order total)."""
+    """Over-delivery must be LOUD: after an order completes, its state
+    persists as a done-set entry until the TTL, so a duplicate detail
+    arriving in a LATER batch raises — it must never silently restart
+    the running sums at n_seen=1 and emit another proportional share
+    (over-allocating the order total)."""
     import datetime
 
     from realtime0523_spark.streaming.allocation import streaming_allocation_split
@@ -2305,7 +2338,7 @@ def test_stream_allocation_post_completion_duplicate_raises(
     # the duplicate arrives 5 s later — far inside the 100 s TTL
     w2 = [(1, 2, 11, 102, 1.0, 50.0, 100.0, 80.0, 2,
            ts + datetime.timedelta(seconds=5))]
-    feed = str(tmp_path / f"dupfeed_{n_buckets}")
+    feed = str(tmp_path / "dupfeed")
     _write_split_feed(spark, feed, [w1, w2])
     src = (
         spark.readStream.schema(_ALLOC_SCHEMA)
@@ -2314,7 +2347,7 @@ def test_stream_allocation_post_completion_duplicate_raises(
     )
     with pytest.raises(Exception, match="over-allocate"):
         run_to_memory(
-            streaming_allocation_split(src, _ALLOC_ORDER, n_buckets=n_buckets),
+            streaming_allocation_split(src, _ALLOC_ORDER),
             output_mode="update",
         )
 
@@ -2322,11 +2355,9 @@ def test_stream_allocation_post_completion_duplicate_raises(
 def test_stream_allocation_bucketed_same_batch_duplicate_raises(
     spark, tmp_path
 ):
-    """The bucketed keying's single O(rows) pass must keep the same
-    within-batch over-delivery contract as the per-order group fold:
-    completion + duplicate inside ONE batch raises (the round-10
-    advice scenario — the pop-on-completion shape silently re-emitted
-    here)."""
+    """The kernel's single O(rows) pass must keep the within-batch
+    over-delivery contract: completion + duplicate inside ONE batch
+    raises (a pop-on-completion shape would silently re-emit here)."""
     import datetime
 
     from realtime0523_spark.streaming.allocation import streaming_allocation_split
@@ -2346,7 +2377,7 @@ def test_stream_allocation_bucketed_same_batch_duplicate_raises(
     )
     with pytest.raises(Exception, match="over-allocate"):
         run_to_memory(
-            streaming_allocation_split(src, _ALLOC_ORDER, n_buckets=4),
+            streaming_allocation_split(src, _ALLOC_ORDER),
             output_mode="update",
         )
 
@@ -2595,11 +2626,10 @@ def test_stream_order_wide_skewed_key_completes_with_bounded_state(
 
 
 def test_stream_allocation_skewed_order_completes_with_bounded_state(
-    spark, state_provider, tmp_path
+    spark, state_provider, tmp_path, monkeypatch
 ):
-    """Round-11 verdict item #7: the BUCKETED allocation under a
-    deliberately SKEWED order key — one order owns ~50% of each
-    batch's detail rows, so one bucket's O(rows) pass dwarfs the
+    """The allocation under a deliberately SKEWED order key — one
+    order owns ~50% of each batch's detail rows, so one bucket's O(rows) pass dwarfs the
     others. Under both state-store providers the operator must
     (a) COMPLETE: every detail allocated exactly once, the hot
     order's shares summing exactly to its total; and (b) keep state
@@ -2616,7 +2646,7 @@ def test_stream_allocation_skewed_order_completes_with_bounded_state(
 
     t0 = datetime.datetime(2025, 6, 15)
     hot, n_hot, total_hot = 7, 300, 12345.67
-    n_buckets = 4
+    monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", "4")
     # wave 1: first half of the hot order's details + 6 small orders
     # (5 details each, all completing in-wave) — hot is ~50% of rows
     hot_rows = [
@@ -2643,7 +2673,7 @@ def test_stream_allocation_skewed_order_completes_with_bounded_state(
         .option("maxFilesPerTrigger", "1")
         .parquet(feed)
     )
-    out = streaming_allocation_split(src, _ALLOC_ORDER, n_buckets=n_buckets)
+    out = streaming_allocation_split(src, _ALLOC_ORDER)
     with _stream_shuffle(spark, no_data_batches=True):
         q = (
             out.writeStream.format("memory")
@@ -2669,58 +2699,37 @@ def test_stream_allocation_skewed_order_completes_with_bounded_state(
     for k in range(100, 106):
         s = sum(r.final_detail_amount for r in got if r.l_orderkey == k)
         assert round(s, 2) == 50.0
-    # bounded state: keys are BUCKETS (≤ n_buckets at peak, by schema),
+    # bounded state: keys are BUCKETS (≤ 4 at peak, by schema),
     # and the TTL-advancing wave evicted every earlier entry — only the
     # late order's bucket survives the drain
     assert state_rows <= 1, state_rows
 
 
-def test_stream_allocation_done_set_is_compact(spark):
-    """Round-11 verdict item #1: a completed order's record in the
-    bucketed state must be presence-with-expiry ONLY (dks/dexp), with
-    the live arrays holding in-flight orders exclusively — the
+def test_stream_allocation_done_set_is_compact():
+    """A completed order's record in the bucket state must be
+    presence-with-expiry ONLY (the done-set's key and expiry columns),
+    with the live columns holding in-flight orders exclusively — the
     tombstone shape that re-serialized full [n_seen, Σalloc, expiry]
     entries per batch is the thing this guards against regressing."""
     import pandas as pd
 
     from realtime0523_spark.streaming.allocation import (
-        _BUCKET_STATE_SCHEMA,
-        _bucketed_fn,
-        _decode_bucket_state,
+        STATE_DTYPES,
+        allocation_kernel,
     )
+    from realtime0523_spark.streaming.bucketed_state import (
+        STATE_SCHEMA,
+        decode_state,
+        state_fn,
+    )
+    from tests.fake_state import FakeState
 
-    # v2 encoding (round-14): live and done sets persist as two
-    # binary blobs (memcpy-in/out) — still structurally separate
-    assert _BUCKET_STATE_SCHEMA == "live binary, done binary"
-
-    class _FakeState:
-        """Minimal GroupState stand-in for the pure state-fn contract."""
-
-        def __init__(self):
-            self.exists = False
-            self.hasTimedOut = False
-            self._v = None
-            self._timeout = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def remove(self):
-            self._v = None
-            self.exists = False
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def setTimeoutTimestamp(self, ts):
-            self._timeout = ts
-
-    fn = _bucketed_fn(_ALLOC_ORDER, "l_commit_ts", 100_000)
+    # one binary cell per bucket; live and done sets stay separate
+    # columns inside it
+    assert STATE_SCHEMA == "state binary"
+    fn = state_fn(
+        allocation_kernel(_ALLOC_ORDER, "l_commit_ts", 100_000), STATE_DTYPES, 1
+    )
     ts = pd.Timestamp("2025-06-15")
     batch = pd.DataFrame(
         {
@@ -2736,16 +2745,44 @@ def test_stream_allocation_done_set_is_compact(spark):
             "l_commit_ts": [ts, ts, ts],
         }
     )
-    state = _FakeState()
+    state = FakeState()
     out = pd.concat(list(fn((0,), iter([batch]), state)))
     assert sorted(out["final_detail_amount"].tolist()) == [20.0, 37.5, 62.5]
-    ks, ns, als, exp, dks, dexp = _decode_bucket_state(*state.get)
+    ks, ns, als, exp, dks, dexp = decode_state(state.get[0], 1, STATE_DTYPES)
     # order 1 completed -> compact done-set record, no live entry;
     # order 2 in flight -> live entry with running sums (cents)
     assert list(dks) == [1]
     assert list(ks) == [2] and list(ns) == [1] and list(als) == [2000.0]
     exp_ms = int(ts.value // 1_000_000) + 100_000
     assert list(dexp) == [exp_ms] and list(exp) == [exp_ms]
+    assert state.timeout_ms == exp_ms
+
+
+def test_bucketed_state_codec_refuses_other_version_and_bucket_count():
+    """Every cell records the format version and the bucket count; a
+    cell with another version byte, or decoded under another bucket
+    count, raises BucketStateMismatch by name instead of being read."""
+    import numpy as np
+
+    from realtime0523_spark.streaming.bucketed_state import (
+        BucketStateMismatch,
+        decode_state,
+        encode_state,
+    )
+
+    dtypes = (np.int64, np.float64)
+    blob = encode_state(
+        4, (np.array([3, 1]), np.array([0.5])), dtypes
+    )
+    ks, vs = decode_state(blob, 4, dtypes)
+    assert ks.tolist() == [3, 1] and vs.tolist() == [0.5]
+    assert blob[0] == 1
+    with pytest.raises(BucketStateMismatch, match="format version 2"):
+        decode_state(bytes([2]) + blob[1:], 4, dtypes)
+    with pytest.raises(
+        BucketStateMismatch, match="SPARK_GRAFT_STATE_BUCKETS=4"
+    ):
+        decode_state(blob, 8, dtypes)
 
 
 def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):

@@ -276,8 +276,11 @@ def alloc_constant_batch_section(spark) -> list[str]:
         ("10x buckets", 10_000, 640),
     ]
     results = []
+    prior_buckets = os.environ.get("SPARK_GRAFT_STATE_BUCKETS")
     for label, n_orders, buckets in points:
         work = tempfile.mkdtemp(prefix="alloc_probe_")
+        # the operator reads its bucket count when the plan is built
+        os.environ["SPARK_GRAFT_STATE_BUCKETS"] = str(buckets)
         try:
             feed = _write_alloc_feed(spark, work, n_orders)
             best = float("inf")
@@ -289,9 +292,7 @@ def alloc_constant_batch_section(spark) -> list[str]:
                 )
                 t0 = time.time()
                 out = run_to_memory(
-                    streaming_allocation_split(
-                        src, _ALLOC_ORDER, n_buckets=buckets
-                    ),
+                    streaming_allocation_split(src, _ALLOC_ORDER),
                     output_mode="update",
                 )
                 n = out.count()
@@ -302,6 +303,10 @@ def alloc_constant_batch_section(spark) -> list[str]:
                   f"{buckets} buckets)")
         finally:
             shutil.rmtree(work, ignore_errors=True)
+            if prior_buckets is None:
+                os.environ.pop("SPARK_GRAFT_STATE_BUCKETS", None)
+            else:
+                os.environ["SPARK_GRAFT_STATE_BUCKETS"] = prior_buckets
     base = results[0][3]
     rows_ratio = results[1][3] / base
     bucket_ratio = results[2][3] / base
@@ -328,8 +333,8 @@ def alloc_constant_batch_section(spark) -> list[str]:
         f"overhead, not a super-linear state pass. 10x buckets at",
         f"constant rows costs {bucket_ratio:.1f}x — bucket count buys",
         "shuffle-partition parallelism at a per-bucket Arrow-crossing",
-        "cost, so size n_buckets to the cluster's cores, not the key",
-        "cardinality.",
+        "cost, so size SPARK_GRAFT_STATE_BUCKETS to the cluster's cores,",
+        "not the key cardinality.",
     ]
 
 
