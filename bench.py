@@ -3,30 +3,16 @@
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is forced with the noop sink (`df.write.format("noop")` —
-guide §1.4: computes every column of every row, discards the result;
-no driver collect, so we measure engine execution, not Arrow
-transfer). Round-14 switched this from count() forcing, which let the
-optimizer prune work on projection/window-shaped queries (see _force);
-BASELINE.md was re-recorded under the noop action in the same session.
-A warm-up pass on sf0.001 triggers JVM/codegen warm-up so the
-measured numbers reflect steady-state execution.
+Each query is forced with the noop sink (see _force). A warm-up pass
+on sf0.001 triggers JVM/codegen warm-up first, so the measured numbers
+reflect steady-state execution.
 
-SESSION CHUNKING (round-12): the inventory runs in fixed-size chunks,
-each in a FRESH subprocess (its own JVM). Round 11 established that
-sustained single-JVM sessions on this host drift into a ~1.4× "host
-mode" that scales with session length (~1.0× at 5 queries, ~1.3× at
-40, ~1.4-1.5× at 213 — BASELINE.md's variance characterization), which
-made full-run totals incomparable across rounds. Per-chunk fresh JVMs
-keep every measurement in the short-session regime the BASELINE rows
-were recorded in. Chunk size via $SPARK_GRAFT_BENCH_CHUNK (default 16
-→ 16 warm-ups + 32 measured runs per session). CAVEAT (round-12
-evidence): 16-query chunks hold JVM-heavy queries at ~1.0× of their
-single-query-session minima, but Arrow/Python-worker-heavy queries
-still measured 2-5× above same-round min-of-9 single-query baselines
-— chunking bounds the long-session drift, it does not equalize the
-two protocols. Round 13 therefore re-recorded BASELINE.md under THIS
-pipeline (one protocol on both sides of the 2× gate).
+The inventory runs in chunks of $SPARK_GRAFT_BENCH_CHUNK queries
+(default 16), each in a FRESH subprocess with its own JVM: a long
+single-JVM session drifts slower as it ages, so per-chunk JVMs keep
+every measurement in the short-session regime BASELINE.md was recorded
+in. The complete per-query record, including each query's size-gate
+decisions, goes to a sidecar JSON file.
 """
 
 from __future__ import annotations
@@ -46,18 +32,11 @@ CHUNK_SIZE = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "16"))
 
 
 def _force(df) -> None:
-    """The timed action: the noop sink (guide §1.4) — eagerly computes
-    EVERY column of every row and discards the result. Round-14
-    (VERDICT r13 item #9): the previous count() forcing let the
-    optimizer prune columns whose values don't affect the row count,
-    under-timing projection/window-shaped queries (measured per query
-    under both actions: running_total 0.13 s under count() vs
-    0.68 s under noop, allocation 0.75→1.69, order_wide 0.41→0.96 —
-    while aggregation-shaped and expensive rows sit at ~1.0×). The
-    BASELINE.md results table was re-recorded in the same session
-    under this timed action (one commit, one protocol — the §1.1
-    discipline); pre-switch per-query history survives in
-    BENCH_LOCAL_r{05..13}.json."""
+    """The timed action: the noop sink (guide §1.4) eagerly computes
+    EVERY column of every row and discards the result. Unlike count(),
+    it gives the optimizer no room to prune columns that do not affect
+    the row count, and unlike collect() it moves no rows to the
+    driver."""
     df.write.format("noop").mode("overwrite").save()
 
 
@@ -180,14 +159,13 @@ def _local_artifact_path() -> str:
 
 def _run_chunk(
     names: list[str], sf_dir: str
-) -> tuple[dict[str, float], float, list[str]]:
+) -> tuple[dict[str, float], float, list[str], dict[str, list[dict]]]:
     """One chunk's measurement, inside a FRESH process/JVM: warm up
-    the chunk's queries at sf0.001, then two measured passes with
-    per-query MIN (round-9 verdict item #3 — BASELINE.md rows are
-    min-of-N estimates, so a single-run bench carries a systematic
-    ~1.3x scheduler-noise bias that makes per-query ratios
-    uninterpretable near the 2x gate). Returns the timings, the
-    chunk's scheduling probe and the failed hygiene steps."""
+    the chunk's queries at sf0.001, then two measured passes keeping
+    each query's minimum (BASELINE.md rows are min-of-N estimates).
+    Returns the timings, the chunk's scheduling probe, the failed
+    hygiene steps and each query's size-gate decisions."""
+    from realtime0523_spark.core import gates
     from realtime0523_spark.core.session import get_spark
 
     spark = get_spark("bench")
@@ -199,7 +177,9 @@ def _run_chunk(
         except Exception:
             pass
         hygiene += [f"after warm-up {name}: {h}" for h in _release_query_state(spark)]
+    gates.drain()  # the warm-up's decisions are at sf0.001
     timings: dict[str, float] = {}
+    gate_log: dict[str, list[dict]] = {}
     for _pass in range(2):
         for name, spec in specs:
             t0 = time.time()
@@ -207,32 +187,34 @@ def _run_chunk(
             dt = round(time.time() - t0, 3)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
+            decisions = gates.drain()
+            if decisions:
+                gate_log[name] = [
+                    dict(zip(("gate", "measured", "threshold", "path"), d))
+                    for d in decisions
+                ]
             hygiene += [f"after {name}: {h}" for h in _release_query_state(spark)]
-    # Per-chunk scheduling micro-probe (round-14, VERDICT r13 item
-    # #4): the run-level before/after probes cannot see MID-RUN
-    # regime drift (round-13 evidence: docs_minhash_lsh 2.0 -> 10.0 s
-    # with unchanged code inside one run), so each chunk stamps 10
-    # trivial 32-task jobs taken right after its measurements — a
-    # per-chunk sched_s that localizes WHICH chunks ran degraded
-    # (consumed by tools/perf_normalize.py, relative to the run's
-    # best chunk). Runs AFTER both measured passes: nothing here can
-    # touch a measurement.
+    # Per-chunk scheduling probe, taken after both measured passes so
+    # it cannot touch a measurement: 10 trivial 32-task jobs whose time
+    # localizes which chunks ran in a degraded host regime
+    # (tools/perf_normalize.py reads it relative to the run's best
+    # chunk).
     t0 = time.time()
     for _ in range(10):
         spark.range(0, 32, 1, 32).count()
     chunk_sched_s = round(time.time() - t0, 3)
-    return timings, chunk_sched_s, hygiene
+    return timings, chunk_sched_s, hygiene, gate_log
 
 
 def _chunk_child(names_file: str, out_file: str, sf_dir: str) -> None:
     """Subprocess entrypoint (`bench.py --chunk ...`)."""
     with open(names_file) as fh:
         names = [ln.strip() for ln in fh if ln.strip()]
-    timings, chunk_sched_s, hygiene = _run_chunk(names, sf_dir)
+    timings, chunk_sched_s, hygiene, gate_log = _run_chunk(names, sf_dir)
     with open(out_file, "w") as fh:
         json.dump(
             {"timings": timings, "chunk_sched_s": chunk_sched_s,
-             "hygiene_failures": hygiene},
+             "hygiene_failures": hygiene, "gates": gate_log},
             fh,
         )
 
@@ -347,6 +329,7 @@ def main() -> None:
     in_process_queries: list[str] = []
     chunk_probes: list[dict] = []
     hygiene: list[str] = []
+    gate_log: dict[str, list[dict]] = {}
     with tempfile.TemporaryDirectory(prefix="bench_chunks_") as tdir:
         for ci, names in enumerate(chunks):
             names_file = os.path.join(tdir, f"names_{ci}.txt")
@@ -356,6 +339,7 @@ def main() -> None:
             got: dict[str, float] | None = None
             chunk_sched: float | None = None
             chunk_hygiene: list[str] = []
+            chunk_gates: dict[str, list[dict]] = {}
             for _attempt in range(2):
                 try:
                     subprocess.run(
@@ -376,6 +360,7 @@ def main() -> None:
                     got = child["timings"]
                     chunk_sched = child.get("chunk_sched_s")
                     chunk_hygiene = child.get("hygiene_failures", [])
+                    chunk_gates = child.get("gates", {})
                     break
                 except (subprocess.CalledProcessError, OSError, ValueError, KeyError):
                     continue
@@ -389,7 +374,9 @@ def main() -> None:
                 # session — exactly the long-session drift regime the
                 # fresh-JVM design avoids (round-12 ADVICE).
                 try:
-                    got, chunk_sched, chunk_hygiene = _run_chunk(names, sf_dir)
+                    got, chunk_sched, chunk_hygiene, chunk_gates = _run_chunk(
+                        names, sf_dir
+                    )
                 finally:
                     from realtime0523_spark.core.session import stop_spark
 
@@ -398,6 +385,7 @@ def main() -> None:
                 in_process_queries.extend(names)
             timings.update(got)
             hygiene += [f"chunk {ci} {h}" for h in chunk_hygiene]
+            gate_log.update(chunk_gates)
             chunk_probes.append(
                 {"chunk": ci, "queries": names, "sched_s": chunk_sched}
             )
@@ -429,6 +417,9 @@ def main() -> None:
             # between-query release steps that raised ("chunk N after
             # QUERY: step: error"); empty when every release ran clean
             "hygiene_failures": hygiene,
+            # per query, the size-gate decisions of its last measured
+            # pass (core/gates.py); queries with no gate are absent
+            "gates": gate_log,
             # this run's host regime vs the BASELINE quiet-host probe
             # reference (1.0 ≈ the regime the table was recorded in)
             "probe_ref": PROBE_REF,

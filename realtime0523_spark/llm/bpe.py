@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from realtime0523_spark.core import gates
 from realtime0523_spark.llm.text import tokens
 
 
@@ -137,22 +138,6 @@ def pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
-def _vocab_driver_gate() -> int:
-    """Measured-count gate for the driver-side trainer/segmenter
-    (round-14 — the CC/RFM §8 precedent): a (word, freq) vocabulary
-    under this many rows collects once (Arrow) and the merge rounds
-    run in Python, replacing n_merges × (groupBy + argmax collect +
-    fold projection + checkpoint) Spark jobs over the |vocab| table.
-    Above it the distributed rounds run unchanged. Env override
-    SPARK_GRAFT_VOCAB_DRIVER_ROWS (default 2M words — a bounded
-    broadcast-build-side-sized driver hold; a 100 TB corpus's raw
-    word vocabulary can exceed it, and then the distributed path is
-    the right shape)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "2000000"))
-
-
 def _greedy_merge(syms: list, a: str, b: str) -> list:
     """One greedy left-to-right merge pass (segment_word's inner
     loop — the exact _apply_merge fold semantics, odd self-pair runs
@@ -239,7 +224,7 @@ def _collect_vocab(
     pass in round 1's checkpoint)."""
     pinned = vocab_wf.localCheckpoint()
     n = pinned.count()
-    if not (0 < n <= _vocab_driver_gate()):
+    if not (0 < n and gates.small("vocab_driver", n)):
         return None, pinned
     pdf = pinned.toPandas()
     return list(zip(pdf["w"].tolist(), pdf["freq"].tolist())), pinned
@@ -249,10 +234,10 @@ def train_bpe(
     docs: DataFrame, n_merges: int, text_col: str = "text"
 ) -> list[tuple[str, str]]:
     """Learn `n_merges` BPE merges; returns [(left, right), …] in
-    learned order. Stops early if no pair remains. Below the measured
-    vocabulary gate (_vocab_driver_gate) the rounds run driver-side
-    over one Arrow collect (bit-identical merges, parity-tested);
-    above it, distributed rounds over the |vocab| table."""
+    learned order. Stops early if no pair remains. Under the measured
+    `vocab_driver` gate the rounds run driver-side over one Arrow
+    collect (bit-identical merges, parity-tested); above it,
+    distributed rounds over the |vocab| table."""
     words, pinned = _collect_vocab(word_counts(docs, text_col))
     if words is not None:
         return _train_merges_driver(words, n_merges, wordpiece=False)

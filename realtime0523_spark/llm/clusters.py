@@ -40,27 +40,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-def _cc_driver_edges() -> int:
-    """Driver-side union-find gate for `algorithm="auto"` (guide §8:
-    decide with small rows). The pair graph is duplicate-density-sized
-    — hundreds of rows at fixture scale, and at 100 TB still orders of
-    magnitude below the corpus — so when a MEASURED edge count fits
-    comfortably in driver memory the component labels are computed
-    with one collect + an O(E α(E)) union-find instead of 40+
-    distributed jobs of iterative label propagation (each round = 2
-    shuffles + a convergence aggregate; on a graph this size every one
-    of those jobs is pure scheduling fixed cost). Same memory stance as
-    a broadcast join's build side (guide §3.1): the gate bounds what
-    the driver holds, and above it the distributed propagation/star
-    paths run unchanged. 1M undirected edges ≈ two int64 columns ≈ 16
-    MB collected, ≤ 2M-entry parent dict. Env override
-    SPARK_GRAFT_CC_DRIVER_EDGES, read at call time."""
-    return int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "1000000"))
+from realtime0523_spark.core import gates
 
 
 # When set to a list, every frame passed through a _ckpt_tools ckpt()
@@ -270,7 +253,6 @@ def connected_components(
     dst: str = "doc_b",
     max_iter: int = 25,
     algorithm: str = "auto",
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every doc that appears in `pairs`,
     where cluster_id is the minimum doc_id of the doc's connected
@@ -280,8 +262,7 @@ def connected_components(
     the corpus.
 
     `algorithm`: "auto" (driver-side union-find when the MEASURED
-    undirected edge count is within `driver_max_edges` — default
-    from env SPARK_GRAFT_CC_DRIVER_EDGES, 1M if unset — else min-label
+    undirected edge count passes the `cc_driver` gate, else min-label
     propagation, switching to large-star/small-star contraction if the
     diameter exceeds `max_iter` rounds), "propagation" (distributed
     always; raise instead of switching — the loud variant for
@@ -313,9 +294,7 @@ def connected_components(
         return edges.select(
             F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
         )
-    if driver_max_edges is None:
-        driver_max_edges = _cc_driver_edges()
-    if algorithm == "auto" and n_directed // 2 <= driver_max_edges:
+    if algorithm == "auto" and gates.small("cc_driver", n_directed // 2):
         out = _driver_union_find(edges)
         release(edge_ids)
         return out

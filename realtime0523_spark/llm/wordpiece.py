@@ -66,11 +66,11 @@ def train_wordpiece(
     docs: DataFrame, n_merges: int, text_col: str = "text"
 ) -> list[tuple[str, str]]:
     """Learn `n_merges` WordPiece merges; returns [(left, right), …]
-    in learned order. Stops early if no pair remains. Below the
-    measured vocabulary gate (bpe._vocab_driver_gate) the rounds run
-    driver-side over one Arrow collect with the identical score,
-    tie-break and greedy fold (bit-identical merges, parity-tested);
-    above it, distributed rounds over the |vocab| table."""
+    in learned order. Stops early if no pair remains. Under the
+    measured `vocab_driver` gate the rounds run driver-side over one
+    Arrow collect with the identical score, tie-break and greedy fold
+    (bit-identical merges, parity-tested); above it, distributed
+    rounds over the |vocab| table."""
     return train_wordpiece_vocab(word_counts(docs, text_col), n_merges)
 
 

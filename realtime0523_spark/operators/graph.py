@@ -33,61 +33,22 @@ operator asserts the envelope from the node count.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from realtime0523_spark.core import gates
 from realtime0523_spark.llm.clusters import _ckpt_tools
 
 PAGERANK_SCALE = 10**12
 PAGERANK_DAMPING_PCT = 85
 PAGERANK_ITERS = 5
 
-def _graph_broadcast_rows() -> int:
-    """Broadcast gate for node-sized state (ranks/degrees) and oriented
-    edge tables in the iterative operators (guide §3.1: pick the
-    strategy deliberately, broadcast the side that fits). A broadcast
-    hash relation costs ~64 B/row, so the 2M default is ~128 MB on the
-    driver and each executor — comfortable on cluster-sized executors,
-    far under the 8 GB / 512M-row broadcast cap. Above the gate the
-    joins fall back to the shuffle path unchanged, so the choice is
-    scale-adaptive, not tuned to local[32]; results are identical
-    either way (same join semantics, integer aggregation is
-    order-independent). Env override SPARK_GRAFT_GRAPH_BROADCAST_ROWS,
-    read at call time."""
-    return int(os.environ.get("SPARK_GRAFT_GRAPH_BROADCAST_ROWS", "2000000"))
-
-
-def _graph_driver_edges() -> int:
-    """Driver-side iteration gate for the fixed-round graph operators
-    (guide §8: decide with small rows — the clusters.py union-find
-    precedent generalized). When a MEASURED edge count fits under this
-    bound, the whole integer-exact iteration runs as numpy array passes
-    on one collected edge list instead of N rounds × (join + aggregate
-    + checkpoint) Spark jobs — on a small graph every one of those jobs
-    is scheduling fixed cost, and on a cluster every round is a
-    barrier. The default is set by MEASUREMENT, not memory: collect +
-    index-prep costs ~2 s per million edges, so against ~5 s of
-    per-query round fixed costs the break-even is ~1M edges — 500k
-    keeps the driver path safely on the winning side (memory is never
-    the binding constraint: 500k int64 edge rows ≈ 8 MB, far under a
-    broadcast build side). The bench-scale co-purchase graph (2.39M
-    directed edges at sf0.1) deliberately stays on the distributed
-    rounds, which its measurements show are faster there; oracle-scale
-    and test graphs take the driver path. Above the gate the
-    distributed rounds run unchanged; the arithmetic is integer fixed
-    point / integer degrees either way, so both paths produce the
-    IDENTICAL table (test-pinned). Env override
-    SPARK_GRAFT_GRAPH_DRIVER_EDGES, read at call time."""
-    return int(os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "500000"))
-
-
 def _bcast(df: DataFrame, small: bool) -> DataFrame:
     """Broadcast hint gated on a measured row count (never an estimate
     — size estimates through checkpoints/UDF boundaries are unknown,
     which is exactly when the planner silently falls back to
-    SortMergeJoin on a 20k-row side)."""
+    SortMergeJoin on a 20k-row side). `small` comes from the
+    `graph_broadcast` gate; results are identical either way."""
     return F.broadcast(df) if small else df
 
 
@@ -198,7 +159,6 @@ def pagerank_fixed_point(
     damping_pct: int = PAGERANK_DAMPING_PCT,
     scale: int | None = None,
     seeds: DataFrame | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over an (src, dst) edge table in
     exact integer fixed point (see module docstring). Returns
@@ -218,22 +178,19 @@ def pagerank_fixed_point(
     than silently leaking their mass.
 
     When the MEASURED directed edge count (Σ out_deg, free from the
-    guard aggregate) fits under `driver_max_edges` (default
-    SPARK_GRAFT_GRAPH_DRIVER_EDGES), the identical fixed-point
-    recurrence runs on the driver as numpy passes over one collected edge list
-    (_driver_pagerank) — N rounds of join+agg+checkpoint jobs become
-    two collects, with the same BIGINT results (test-pinned against
-    the distributed path).
+    guard aggregate) passes the `graph_driver` gate, the identical
+    fixed-point recurrence runs on the driver as numpy passes over one
+    collected edge list (_driver_pagerank) — N rounds of
+    join+agg+checkpoint jobs become two collects, with the same BIGINT
+    results (test-pinned against the distributed path).
 
-    Scale shape per round (round-13 optimization): the node state
-    carries (rank_fp, out_deg, seed flag) in ONE table, so a round is
-    a single edges⋈state equi-join (state BROADCAST under the
-    SPARK_GRAFT_GRAPH_BROADCAST_ROWS gate — the edge table then never
-    shuffles)
-    feeding ONE partial-agg'd groupBy on dst that the state rows ride
-    as zero-contribution carriers — the whole round is one exchange,
-    no second join. Above the gate the edges join falls back to the
-    shuffle path, keyed as before. Rounds
+    Scale shape per round: the node state carries (rank_fp, out_deg,
+    seed flag) in ONE table, so a round is a single edges⋈state
+    equi-join (state BROADCAST under the `graph_broadcast` gate — the
+    edge table then never shuffles) feeding ONE partial-agg'd groupBy
+    on dst that the state rows ride as zero-contribution carriers —
+    the whole round is one exchange, no second join. Above the gate
+    the edges join falls back to the shuffle path. Rounds
     localCheckpoint alternately with eager release of the superseded
     snapshot (the clusters.py discipline), so plan depth and executor
     memory stay O(1) in n_iter. The seed flag and out-degree ride the
@@ -313,16 +270,14 @@ def pagerank_fixed_point(
         release(graph_ids)
         raise
     base = ((100 - damping_pct) * scale) // 100
-    if driver_max_edges is None:
-        driver_max_edges = _graph_driver_edges()
-    if (n_edges or 0) <= driver_max_edges:
+    if gates.small("graph_driver", n_edges or 0):
         try:
             return _driver_pagerank(
                 edges, state, n_iter, damping_pct, scale, base
             )
         finally:
             release(graph_ids)
-    small = n_nodes <= _graph_broadcast_rows()
+    small = gates.small("graph_broadcast", n_nodes)
     base_col = F.when(F.col("__seed"), F.lit(base)).otherwise(F.lit(0))
     cur = state.withColumn(
         "rank_fp",
@@ -447,7 +402,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """k-CORE decomposition by iterative peeling (Seidman, "Network
     structure and minimum degree", Social Networks 1983; the
@@ -495,10 +449,8 @@ def kcore(
     )
     # the canonical table is a materialized checkpoint, so this count
     # is one cheap scan; under the gate the whole peel runs on the
-    # driver (_graph_driver_edges — undirected canonical rows here)
-    if driver_max_edges is None:
-        driver_max_edges = _graph_driver_edges()
-    if cur.count() <= driver_max_edges:
+    # driver (undirected canonical rows here)
+    if gates.small("graph_driver", cur.count()):
         try:
             return _driver_kcore(cur, k, rounds)
         finally:
@@ -528,7 +480,7 @@ def kcore(
             if n_bad == 0:
                 release(b_ids)
                 break
-            small = n_bad <= _graph_broadcast_rows()
+            small = gates.small("graph_broadcast", n_bad)
             nxt = (
                 cur.join(
                     _bcast(bad.withColumnRenamed("node", "lo"), small),
@@ -622,7 +574,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # so one count gates both the node-sized (deg, per_node) and the
     # edge-sized (oriented table) broadcast sides
     n_canon = canon.count()
-    small = n_canon <= _graph_broadcast_rows()
+    small = gates.small("graph_broadcast", n_canon)
     # orient: direct each canonical edge from its (deg, id)-smaller
     # endpoint — lo wins ties by id, so lo leads iff deg_lo <= deg_hi.
     # deg is node-sized: broadcast under the gate, so the canonical
@@ -770,7 +722,6 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Multi-source breadth-first hop distances over an undirected
     graph — "how many co-purchase hops from the seed set is every
@@ -796,7 +747,7 @@ def bfs_hops(
     FRONTIER (nodes first discovered last round) against the edges —
     per-round cost is |frontier|-proportional, the textbook BFS
     bound, not |reached| — with the frontier BROADCAST under the
-    SPARK_GRAFT_GRAPH_BROADCAST_ROWS gate (its count is a cheap scan of the
+    `graph_broadcast` gate (its count is a cheap scan of the
     checkpointed distance table), so the edge table is never
     re-shuffled per round. One equi-join + one partial-agg'd min
     groupBy per round, checkpointed with eager release of the
@@ -822,11 +773,9 @@ def bfs_hops(
         )
     )
     # materialized checkpoint → one cheap count; under the gate the
-    # whole expansion runs on the driver (_graph_driver_edges —
-    # directed rows here, 2× the undirected edge count)
-    if driver_max_edges is None:
-        driver_max_edges = _graph_driver_edges()
-    if e.count() <= driver_max_edges:
+    # whole expansion runs on the driver (directed rows here, 2× the
+    # undirected edge count)
+    if gates.small("graph_driver", e.count()):
         try:
             return _driver_bfs(e, seeds, rounds)
         finally:
@@ -850,7 +799,7 @@ def bfs_hops(
             if n_frontier == 0:
                 break
             reached = _bcast(
-                frontier, n_frontier <= _graph_broadcast_rows()
+                frontier, gates.small("graph_broadcast", n_frontier)
             ).join(e, frontier["node"] == e["src"]).select(
                 F.col("dst").alias("node"), F.lit(r).cast("long").alias("hop")
             )

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from realtime0523_spark.core import gates
+
 HISTOGRAM_BUCKETS = 16
 
 
@@ -132,12 +134,10 @@ def equidepth_histogram(
     per non-empty bucket: bucket (int), lo, hi, n_rows, n_distinct.
     Bucket of a value = (rows_before_it * k) div total — pure integer
     arithmetic on exact cumulative counts. When the measured |NDV|
-    fits under SPARK_GRAFT_HIST_DRIVER_ROWS (default 2M, the CC/RFM
-    gate stance) the finisher runs driver-side over one Arrow collect
-    (bit-identical buckets, pinned by the parity test); above it the
-    sampled-range prefix-sum machinery runs unchanged."""
-    import os
-
+    passes the `hist_driver` gate the finisher runs driver-side over
+    one Arrow collect (bit-identical buckets, pinned by the parity
+    test); above it the sampled-range prefix-sum machinery runs
+    unchanged."""
     vc = df.select(value.alias("v")).groupBy("v").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -145,9 +145,8 @@ def equidepth_histogram(
     # partitioner SAMPLES its child, so an unmaterialized vc would run
     # the corpus-sized groupBy twice (once for bounds, once for real)
     vc = vc.localCheckpoint()
-    gate = int(os.environ.get("SPARK_GRAFT_HIST_DRIVER_ROWS", "2000000"))
     ndv = vc.count()
-    if 0 < ndv <= gate:
+    if 0 < ndv and gates.small("hist_driver", ndv):
         out = _equidepth_driver(vc, k)
         if out is not None:
             return out

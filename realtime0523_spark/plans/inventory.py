@@ -4893,20 +4893,16 @@ def _rfm_scores_from_metrics(cust: DataFrame) -> DataFrame:
     anchor is the snapshot max last_day (1-row exact collect, which
     now also measures |customers| for the driver-path gate); the rest
     is the exact rank-bucket quintile machinery — as numpy over one
-    Arrow collect when the measured count fits under
-    SPARK_GRAFT_RFM_DRIVER_ROWS (default 2M — a bounded
-    broadcast-build-side-sized driver hold, the CC gate stance),
-    distributed sampled-range prefix sums above it."""
-    import os
-
+    Arrow collect when the measured count passes the `rfm_driver`
+    gate, distributed sampled-range prefix sums above it."""
+    from realtime0523_spark.core import gates
     from realtime0523_spark.operators.histogram import prefix_sums
 
     head = cust.agg(
         F.max("last_day").alias("a"), F.count(F.lit(1)).alias("n")
     ).first()
     anchor, n = head["a"], int(head["n"])
-    gate = int(os.environ.get("SPARK_GRAFT_RFM_DRIVER_ROWS", "2000000"))
-    if 0 < n <= gate:
+    if 0 < n and gates.small("rfm_driver", n):
         return _rfm_scores_driver(cust, anchor, n)
     cust = cust.select(
         "ck",

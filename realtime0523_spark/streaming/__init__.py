@@ -4,7 +4,7 @@ from realtime0523_spark.streaming.router import route_cdc, run_router_to_parquet
 from realtime0523_spark.streaming.dau import streaming_dau
 from realtime0523_spark.streaming.order_wide import streaming_order_wide
 from realtime0523_spark.streaming.first_seen import streaming_first_seen
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer, upsert_parquet_dim
+from realtime0523_spark.streaming.sinks import idempotent_batch_writer
 
 __all__ = [
     "stream_table",
@@ -17,5 +17,4 @@ __all__ = [
     "streaming_order_wide",
     "streaming_first_seen",
     "idempotent_batch_writer",
-    "upsert_parquet_dim",
 ]

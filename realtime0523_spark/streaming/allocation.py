@@ -341,7 +341,6 @@ def co_arrival_guard(
     key_col: str = "l_orderkey",
     compact_every: int = 32,
     checkpoint_dir: str | None = None,
-    horizon_batches: int | None = None,
     horizon_ms: int | None = None,
     ts_col: str | None = None,
 ):
@@ -365,23 +364,17 @@ def co_arrival_guard(
     GROWTH: with no horizon the base
     retains every distinct key for the run's lifetime, so the per-batch
     semi-join grows O(total distinct orders) — exact forever, but NOT
-    synopsis-sized on an unbounded run. Two pruning modes:
-
-    - EVENT-TIME horizon (`horizon_ms=H`, requires `ts_col` — the
-      preferred mode): each committed key
-      carries its batch's max event time; at compaction, keys whose
-      last-seen event time is more than H ms behind the log's newest
-      event time are pruned. Sound when H ≥ the upstream join
-      tolerance + state TTL: a detail for an order last seen that far
-      back in EVENT time can no longer traverse the watermarked DWS
-      join (it would be dropped and FAIL the loud watermark-drop check
-      there), so the guard can never legally be asked about it again.
-      Pruning compares event time to event time, so it is immune to
-      trigger-cadence drift and replay wall-clock skew.
-    - BATCH-COUNT horizon (`horizon_batches=H`): prune keys whose
-      newest batch_id is more than H batches old. Sound only when
-      H × trigger-cadence exceeds tolerance + TTL — kept for feeds
-      without a usable event-time column.
+    synopsis-sized on an unbounded run. The EVENT-TIME horizon
+    (`horizon_ms=H`, requires `ts_col`) bounds it: each committed key
+    carries its batch's max event time; at compaction, keys whose
+    last-seen event time is more than H ms behind the log's newest
+    event time are pruned. Sound when H ≥ the upstream join tolerance
+    + state TTL: a detail for an order last seen that far back in
+    EVENT time can no longer traverse the watermarked DWS join (it
+    would be dropped and FAIL the loud watermark-drop check there), so
+    the guard can never legally be asked about it again. Pruning
+    compares event time to event time, so it is immune to
+    trigger-cadence drift and replay wall-clock skew.
 
     RUN SCOPING: the log is keyed by batch_id, and
     batch ids RESTART at 0 with a fresh checkpoint — so reusing an
@@ -462,40 +455,31 @@ def co_arrival_guard(
                 f"event times from this run forward."
             )
 
-    def _fold_at(new_wm: int):
-        def _fold(df: "DataFrame") -> "DataFrame":
-            # per-key MAX batch_id: replays of a compacted-away batch
-            # stay exempt because the check below still sees their
-            # batch_id
-            aggs = [F.max("batch_id").alias("batch_id")]
-            if horizon_ms is not None:
-                aggs.append(F.max("__ts_ms").alias("__ts_ms"))
-            out = df.groupBy(key_col).agg(*aggs)
-            if horizon_batches is not None:
-                out = out.filter(
-                    F.col("batch_id") > new_wm - horizon_batches
-                )
-            if horizon_ms is not None:
-                # the log's newest event time: one scalar reduce over
-                # the relation being folded (compaction cadence only,
-                # never per batch). Pruning against it is conservative
-                # under non-monotonic event time — a stale max prunes
-                # LESS, never a key that could still legally reappear.
-                newest = df.agg(F.max("__ts_ms")).collect()[0][0]
-                if newest is not None:
-                    # >= : a key EXACTLY horizon_ms behind the newest
-                    # event time survives the prune. The soundness
-                    # claim is "H ≥ tolerance + TTL", and Spark keeps
-                    # rows exactly at the watermark — so the boundary
-                    # key is the last one the upstream join could
-                    # still legally emit a detail for (pinned by the
-                    # boundary test).
-                    out = out.filter(
-                        F.col("__ts_ms") >= newest - horizon_ms
-                    )
-            return out
-
-        return _fold
+    def _fold(df: "DataFrame") -> "DataFrame":
+        # per-key MAX batch_id: replays of a compacted-away batch
+        # stay exempt because the check below still sees their
+        # batch_id
+        aggs = [F.max("batch_id").alias("batch_id")]
+        if horizon_ms is not None:
+            aggs.append(F.max("__ts_ms").alias("__ts_ms"))
+        out = df.groupBy(key_col).agg(*aggs)
+        if horizon_ms is not None:
+            # the log's newest event time: one scalar reduce over
+            # the relation being folded (compaction cadence only,
+            # never per batch). Pruning against it is conservative
+            # under non-monotonic event time — a stale max prunes
+            # LESS, never a key that could still legally reappear.
+            newest = df.agg(F.max("__ts_ms")).collect()[0][0]
+            if newest is not None:
+                # >= : a key EXACTLY horizon_ms behind the newest
+                # event time survives the prune. The soundness
+                # claim is "H ≥ tolerance + TTL", and Spark keeps
+                # rows exactly at the watermark — so the boundary
+                # key is the last one the upstream join could
+                # still legally emit a detail for (pinned by the
+                # boundary test).
+                out = out.filter(F.col("__ts_ms") >= newest - horizon_ms)
+        return out
 
     def check(keys: "DataFrame", batch_id: int) -> None:
         os.makedirs(keys_dir, exist_ok=True)
@@ -530,9 +514,6 @@ def co_arrival_guard(
         wm = base_watermark(base_dir)
         fresh = [i for i in partial_ids(keys_dir) if i > wm]
         if len(fresh) >= compact_every:
-            compact_to_base(
-                spark, keys_dir, base_dir, _fold_at(max(fresh)),
-                keep_batch_id=True,
-            )
+            compact_to_base(spark, keys_dir, base_dir, _fold, keep_batch_id=True)
 
     return check

@@ -10,7 +10,8 @@ Phoenix (first-timer write-back), Kafka (dwd topic), and a daily ES
 index keyed by order id.
 
 Ours, per micro-batch in `foreachBatch`:
-  1. membership lookup against the user-status parquet dim: the
+  1. membership lookup against the latest committed snapshot of the
+     user-status dim (`sinks.versioned_dim_upsert` store): the
      batch's (small) key set is broadcast against the status scan —
      the J4 batched-IN shape; the matched subset is then broadcast
      back onto the batch. The status store scan is partition-prunable
@@ -25,7 +26,9 @@ Ours, per micro-batch in `foreachBatch`:
   4. T8 fan-out on the persisted batch: the daily-index K3 sink (dt
      partition, order-id doc id) standing in for Kafka+ES, and the K2
      status write-back — which is what makes a user's second-ever
-     order in a LATER batch arrive flagged 0.
+     order in a LATER batch arrive flagged 0. The write-back commits
+     a new dim version per batch, so a failure mid-merge leaves the
+     previous snapshot readable and the replayed batch re-merges.
 
 Flag semantics across batches are arrival-order (a user is "new" until
 a batch containing them commits), exactly the reference's contract;
@@ -45,7 +48,8 @@ from realtime0523_spark.streaming.runner import run_foreach_batch
 from realtime0523_spark.streaming.sinks import (
     daily_partitioned_idempotent_sink,
     fanout_sinks,
-    upsert_parquet_dim,
+    latest_dim_version,
+    versioned_dim_upsert,
 )
 
 
@@ -105,8 +109,9 @@ def streaming_dwd_order(
         )
         if firsts.isEmpty():
             return
-        upsert_parquet_dim(
-            spark, firsts, status_dir, key_cols=["user_id"], version_col="version"
+        versioned_dim_upsert(
+            spark, firsts, status_dir, key_cols=["user_id"],
+            version_col="version", commit_id=batch_id,
         )
 
     fan_out = fanout_sinks(index_write, write_back)
@@ -115,11 +120,11 @@ def streaming_dwd_order(
         if batch_df.isEmpty():
             return
         # 1. membership lookup (J4 batched-IN shape)
-        if os.path.exists(status_dir):
+        status = latest_dim_version(spark, status_dir)
+        if status is not None:
             keys = batch_df.select(F.col(user_key).alias("user_id")).distinct()
             known = (
-                spark.read.parquet(status_dir)
-                .join(F.broadcast(keys), "user_id", "left_semi")
+                status.join(F.broadcast(keys), "user_id", "left_semi")
                 .select(F.col("user_id").alias(user_key), F.lit(1).alias("__known"))
             )
             flagged_in = batch_df.join(F.broadcast(known), user_key, "left")

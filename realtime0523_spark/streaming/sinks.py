@@ -22,6 +22,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from realtime0523_spark.streaming.compaction import base_watermark
+
 
 def idempotent_batch_writer(out_dir: str):
     """foreachBatch writer with the K5 exactly-once contract: one
@@ -53,34 +55,72 @@ def detach_and_cleanup(df: DataFrame, *dirs: str) -> DataFrame:
     return out
 
 
-def upsert_parquet_dim(
+def versioned_dim_upsert(
     spark: SparkSession,
     batch_df: DataFrame,
-    dim_dir: str,
+    store_dir: str,
     key_cols: list[str],
     version_col: str,
+    commit_id: int,
 ) -> None:
     """K2 Phoenix-upsert equivalent: SCD-1 merge into a parquet dim —
-    last write (highest version_col) wins per key. Without Delta in
-    the container, merge = union + window-dedup + atomic swap; on a
-    cluster this is a Delta/Iceberg MERGE INTO (one-line swap).
-    """
-    if os.path.exists(dim_dir):
-        existing = spark.read.parquet(dim_dir)
-        merged = existing.unionByName(batch_df, allowMissingColumns=True)
-    else:
-        merged = batch_df
-    w = W.partitionBy(*key_cols).orderBy(F.desc(version_col))
+    latest `version_col` wins per key. Each merge commits a NEW
+    immutable `v_<commit_id>` directory + marker, so readers
+    (`latest_dim_version`) always see a fully-committed snapshot and a
+    failed merge leaves the previous one intact. Pass the batchId as
+    `commit_id`: a replayed batch is a no-op. On a cluster this is a
+    Delta/Iceberg MERGE INTO."""
+    final = os.path.join(store_dir, f"v_{commit_id:09d}")
+    marker = os.path.join(store_dir, f"_ready_{commit_id:09d}")
+    if os.path.exists(marker):  # replayed batch → already committed
+        return
+    if os.path.exists(final):
+        # crashed between os.replace and the marker write: the atomic
+        # rename IS the commit (same rule as idempotent_batch_writer);
+        # re-running the merge would hit ENOTEMPTY on the existing
+        # directory and crash-loop the stage on every restart. Heal
+        # the marker and treat the batch as committed.
+        open(marker, "w").close()
+        return
+    existing = latest_dim_version(spark, store_dir)
+    # deterministic tiebreakers: an update whose version EQUALS the
+    # stored row's must win consistently — prefer the incoming batch
+    # side; and two same-key same-version updates INSIDE one batch
+    # resolve by a content hash (arbitrary but run-stable — never
+    # partition-order roulette)
+    incoming = batch_df.withColumn("__src", F.lit(1))
+    merged = (
+        existing.withColumn("__src", F.lit(0)).unionByName(
+            incoming, allowMissingColumns=True
+        )
+        if existing is not None
+        else incoming
+    )
+    payload_cols = [
+        c for c in merged.columns if c not in (*key_cols, version_col, "__src")
+    ]
+    order_cols = [F.desc(version_col), F.desc("__src")]
+    if payload_cols:  # xxhash64() with zero children fails analysis; a
+        # payload-less dim's ties are identical rows anyway
+        order_cols.append(F.desc(F.xxhash64(*payload_cols)))
+    w = W.partitionBy(*key_cols).orderBy(*order_cols)
     latest = (
         merged.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        .drop("__rn", "__src")
     )
-    tmp = dim_dir.rstrip("/") + "__tmp"
+    tmp = os.path.join(store_dir, f"_tmp_{commit_id:09d}")
     latest.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(dim_dir):
-        shutil.rmtree(dim_dir)
-    os.replace(tmp, dim_dir)
+    os.replace(tmp, final)
+    open(marker, "w").close()
+
+
+def latest_dim_version(spark: SparkSession, store_dir: str) -> DataFrame | None:
+    """Highest committed snapshot of a versioned dim store, or None."""
+    wm = base_watermark(store_dir)
+    if wm < 0:
+        return None
+    return spark.read.parquet(os.path.join(store_dir, f"v_{wm:09d}"))
 
 
 def daily_partitioned_idempotent_sink(out_dir: str, dt_col: str, id_cols: list[str]):

@@ -40,14 +40,10 @@ commit is exactly this manifest shape; everything in this module
 (stage shapes, watermarked join, per-batch dim snapshot, idempotent
 commits, manifest visibility) is the 100 TB design.
 
-Dim store (`versioned_dim_upsert`): the K2 SCD-1 upsert re-done for
-CONCURRENT readers. `sinks.upsert_parquet_dim`'s rmtree+rename swap has
-a window where the directory is absent — fine for single-threaded
-stage tests, fatal in a live topology where the ADS stage snapshots the
-dim mid-upsert. Here every merge commits a NEW immutable version
-directory plus a marker; readers pick the highest committed version
-(the reference's Phoenix gives the same read-your-committed-writes
-behavior; a Delta/Iceberg MERGE is the cluster equivalent).
+Dim store (`sinks.versioned_dim_upsert`): the K2 SCD-1 upsert, safe
+for CONCURRENT readers — the ADS stage snapshots the dim while DIM
+upserts it. Every merge commits a NEW immutable version directory plus
+a marker; readers pick the highest committed version.
 
 Event-time contract: the CDC envelope `ts` (epoch ms) is the
 create_time both sides of a header/detail pair share in the
@@ -98,7 +94,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime0523_spark.functions.scalar import round2
@@ -109,7 +105,11 @@ from realtime0523_spark.streaming.compaction import (
 )
 from realtime0523_spark.streaming.router import route_cdc
 from realtime0523_spark.streaming.runner import _stream_shuffle, watermark_drops
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+from realtime0523_spark.streaming.sinks import (
+    idempotent_batch_writer,
+    latest_dim_version,
+    versioned_dim_upsert,
+)
 from realtime0523_spark.streaming.sources import cdc_json_stream
 
 TRIGGER_SECONDS = 5.0  # the reference cadence (Seconds(5) in every app)
@@ -316,77 +316,6 @@ def topic_stream(
                 yield out
 
     return paths.mapInPandas(expand, schema=schema)
-
-
-def versioned_dim_upsert(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    store_dir: str,
-    key_cols: list[str],
-    version_col: str,
-    commit_id: int,
-) -> None:
-    """Concurrent-reader-safe SCD-1 merge (K2): latest `version_col`
-    wins per key; each merge commits a NEW immutable `v_<commit_id>`
-    directory + marker. Readers (`latest_dim_version`) always see a
-    fully-committed snapshot — no absent-directory window."""
-    final = os.path.join(store_dir, f"v_{commit_id:09d}")
-    marker = os.path.join(store_dir, f"_ready_{commit_id:09d}")
-    if os.path.exists(marker):  # replayed batch → already committed
-        return
-    if os.path.exists(final):
-        # crashed between os.replace and the marker write: the atomic
-        # rename IS the commit (same rule as idempotent_batch_writer);
-        # re-running the merge would hit ENOTEMPTY on the existing
-        # directory and crash-loop the stage on every restart. Heal
-        # the marker and treat the batch as committed.
-        open(marker, "w").close()
-        return
-    existing = latest_dim_version(spark, store_dir)
-    # deterministic tiebreakers (round-9 advice): an update whose
-    # envelope ts EQUALS the stored row's ts must win consistently —
-    # prefer the incoming batch side; and two same-key same-ts updates
-    # INSIDE one batch resolve by a content hash (arbitrary but
-    # run-stable — never partition-order roulette)
-    incoming = batch_df.withColumn("__src", F.lit(1))
-    merged = (
-        existing.withColumn("__src", F.lit(0)).unionByName(
-            incoming, allowMissingColumns=True
-        )
-        if existing is not None
-        else incoming
-    )
-    payload_cols = [
-        c for c in merged.columns if c not in (*key_cols, version_col, "__src")
-    ]
-    order_cols = [F.desc(version_col), F.desc("__src")]
-    if payload_cols:  # xxhash64() with zero children fails analysis; a
-        # payload-less dim's ties are identical rows anyway
-        order_cols.append(F.desc(F.xxhash64(*payload_cols)))
-    w = W.partitionBy(*key_cols).orderBy(*order_cols)
-    latest = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
-    tmp = os.path.join(store_dir, f"_tmp_{commit_id:09d}")
-    latest.write.mode("overwrite").parquet(tmp)
-    os.replace(tmp, final)
-    open(marker, "w").close()
-
-
-def latest_dim_version(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    """Highest committed snapshot of a versioned dim store, or None."""
-    if not os.path.isdir(store_dir):
-        return None
-    ready = sorted(
-        f.removeprefix("_ready_")
-        for f in os.listdir(store_dir)
-        if f.startswith("_ready_")
-    )
-    if not ready:
-        return None
-    return spark.read.parquet(os.path.join(store_dir, f"v_{ready[-1]}"))
 
 
 def _parse_payload(df: DataFrame, casts: dict[str, str]) -> DataFrame:

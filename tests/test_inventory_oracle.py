@@ -43,6 +43,24 @@ def test_query_matches_oracle_smoke(spark, con, name):
     _assert_matches_oracle(spark, con, name)
 
 
+# at fixture scale every size gate takes its small-input path; with
+# the switch off, one query per gate runs its large-input (100 TB) path
+@pytest.mark.parametrize(
+    "name",
+    [
+        "parts_kcore",  # graph_driver
+        "parts_triangle_stats",  # graph_broadcast
+        "customers_rfm",  # rfm_driver
+        "lineitem_equidepth_hist",  # hist_driver
+        "docs_wordpiece_merges",  # vocab_driver
+        "docs_dedup_clusters",  # cc_driver
+    ],
+)
+def test_query_matches_oracle_gates_off(spark, con, name, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
+    _assert_matches_oracle(spark, con, name)
+
+
 @pytest.mark.parametrize(
     "name",
     [

@@ -507,17 +507,19 @@ def test_connected_components_star_matches_union_find(spark, edges):
     auto = {r.doc_id: r.cluster_id
             for r in connected_components(pairs).collect()}
     assert auto == want
-    # ...and auto forced PAST the gate (driver_max_edges=0) must still
-    # agree — the distributed fallback is reachable and identical
-    dist = {r.doc_id: r.cluster_id
-            for r in connected_components(pairs, max_iter=80,
-                                          driver_max_edges=0).collect()}
+    # ...and auto forced PAST the gate (SPARK_GRAFT_DRIVER_GATES=off)
+    # must still agree — the distributed fallback is reachable and
+    # identical
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
+        dist = {r.doc_id: r.cluster_id
+                for r in connected_components(pairs, max_iter=80).collect()}
     assert dist == want
 
 
-def test_connected_components_driver_gate_respected(spark):
-    """The auto driver path honors driver_max_edges: at 0 every auto
-    call runs distributed (observable via the propagation raise
+def test_connected_components_driver_gate_respected(spark, monkeypatch):
+    """The auto driver path honors SPARK_GRAFT_DRIVER_GATES: off makes
+    every auto call run distributed (observable via the propagation raise
     becoming a star fallback on an under-iterated chain), while the
     default gate takes the driver path and returns exact labels with
     far fewer Spark jobs."""
@@ -539,9 +541,10 @@ def test_connected_components_driver_gate_respected(spark):
     got = {r.doc_id: r.cluster_id for r in connected_components(chain).collect()}
     driver_jobs = last_job() - j0
     assert got == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     j0 = last_job()
     got = {r.doc_id: r.cluster_id
-           for r in connected_components(chain, driver_max_edges=0).collect()}
+           for r in connected_components(chain).collect()}
     dist_jobs = last_job() - j0
     assert got == want
     # the point of the gate: the driver path is a fraction of the jobs
@@ -3500,14 +3503,14 @@ def test_tokenizer_trainer_driver_matches_distributed(spark, monkeypatch):
         ],
         "doc_id long, text string",
     )
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "1000000")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "on")
     bpe_drv = train_bpe(docs, 6)
     wp_drv = train_wordpiece(docs, 4)
     seg_drv = sorted(
         (r.w, tuple(r.units))
         for r in segmented_vocab(docs, bpe_drv).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     bpe_dst = train_bpe(docs, 6)
     wp_dst = train_wordpiece(docs, 4)
     seg_dst = sorted(
@@ -3533,8 +3536,8 @@ def test_wordpiece_driver_score_rounds_like_spark(spark, monkeypatch):
          ("cd", 1), ("c", 2**28 - 1), ("d", 2**27 - 1)],
         "w string, freq long",
     )
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "1000000")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "on")
     drv = train_wordpiece_vocab(vocab, 2)
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     dst = train_wordpiece_vocab(vocab, 2)
     assert drv == dst == [("a", "b"), ("c", "d")]

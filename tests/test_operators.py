@@ -1506,12 +1506,12 @@ def test_rfm_migration_matrix_is_consistent(spark):
     assert ((shares - 1.0).abs() < 1e-6).all()
 
 
-def test_graph_driver_paths_match_distributed(spark):
+def test_graph_driver_paths_match_distributed(spark, monkeypatch):
     """Round-13: the gated driver-side iteration paths of pagerank
     (uniform + personalized), kcore and bfs_hops return tables
     identical to the distributed rounds (forced past the gate with
-    driver_max_edges=0), and the default gate takes the driver path
-    with far fewer Spark jobs — the point of the gate."""
+    SPARK_GRAFT_DRIVER_GATES=off), and the default gate takes the
+    driver path with far fewer Spark jobs — the point of the gate."""
     import random
 
     from realtime0523_spark.operators.graph import (
@@ -1534,46 +1534,49 @@ def test_graph_driver_paths_match_distributed(spark):
         ids = sc.statusTracker().getJobIdsForGroup(None)
         return max(ids) if ids else -1
 
-    j0 = last_job()
-    pr_drv = {r.node: r.rank_fp for r in pagerank_fixed_point(e).collect()}
-    drv_jobs = last_job() - j0
-    j0 = last_job()
-    pr_dst = {r.node: r.rank_fp
-              for r in pagerank_fixed_point(e, driver_max_edges=0).collect()}
-    dst_jobs = last_job() - j0
+    def both_paths(run):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "on")
+        j0 = last_job()
+        drv = run()
+        drv_jobs = last_job() - j0
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
+        j0 = last_job()
+        dst = run()
+        return drv, dst, drv_jobs, last_job() - j0
+
+    pr_drv, pr_dst, drv_jobs, dst_jobs = both_paths(
+        lambda: {r.node: r.rank_fp for r in pagerank_fixed_point(e).collect()})
     assert pr_drv == pr_dst and len(pr_drv) == 60
     assert drv_jobs < dst_jobs
 
-    pp_drv = {r.node: r.rank_fp
-              for r in pagerank_fixed_point(e, seeds=seeds).collect()}
-    pp_dst = {r.node: r.rank_fp
-              for r in pagerank_fixed_point(e, seeds=seeds,
-                                            driver_max_edges=0).collect()}
+    pp_drv, pp_dst, _, _ = both_paths(
+        lambda: {r.node: r.rank_fp
+                 for r in pagerank_fixed_point(e, seeds=seeds).collect()})
     assert pp_drv == pp_dst
 
     for k in (2, 3):
         for rounds in (None, 0, 1, 3):
-            kd = sorted(map(tuple, kcore(e, k, rounds=rounds).collect()))
-            kx = sorted(map(tuple,
-                            kcore(e, k, rounds=rounds,
-                                  driver_max_edges=0).collect()))
+            kd, kx, _, _ = both_paths(
+                lambda: sorted(map(tuple, kcore(e, k, rounds=rounds).collect())))
             assert kd == kx, (k, rounds)
 
     for rounds in (0, 1, 2, 5):
-        bd = sorted(map(tuple, bfs_hops(e, seeds, rounds).collect()))
-        bx = sorted(map(tuple,
-                        bfs_hops(e, seeds, rounds,
-                                 driver_max_edges=0).collect()))
+        bd, bx, _, _ = both_paths(
+            lambda: sorted(map(tuple, bfs_hops(e, seeds, rounds).collect())))
         assert bd == bx, rounds
     # the isolated seed appears at hop 0 on both paths
     assert (999, 0) in bd
 
 
-def test_graph_gates_read_env_at_call_time(spark, monkeypatch):
-    """The graph and connected-components gates read their env vars
-    when the operator runs, not at import: setting them to 0 after the
-    modules are imported switches the driver paths (and the graph
-    broadcast) off."""
+def test_driver_gates_switch_read_at_call_time(spark, monkeypatch):
+    """SPARK_GRAFT_DRIVER_GATES is read when the operator runs, not at
+    import: setting it to off after the modules are imported sends
+    every gate, the graph broadcast hint included, to its large-input
+    path with the same result, and each decision is recorded with its
+    measured count and threshold."""
+    import pytest
+
+    from realtime0523_spark.core import gates
     from realtime0523_spark.llm import clusters
     from realtime0523_spark.operators import graph
 
@@ -1596,17 +1599,29 @@ def test_graph_gates_read_env_at_call_time(spark, monkeypatch):
         tri + [(b, a) for a, b in tri], "src long, dst long"
     )
     pairs = spark.createDataFrame(tri, "doc_a long, doc_b long")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATES", raising=False)
+    gates.drain()
     want_pr = {r.node: r.rank_fp for r in graph.pagerank_fixed_point(e).collect()}
     want_cc = sorted(map(tuple, clusters.connected_components(pairs).collect()))
     assert calls == ["pagerank-driver", "cc-driver"]
+    assert gates.drain() == [
+        ("graph_driver", 6, 500_000, "driver"),
+        ("cc_driver", 3, 1_000_000, "driver"),
+    ]
     calls.clear()
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BROADCAST_ROWS", "0")
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     got_pr = {r.node: r.rank_fp for r in graph.pagerank_fixed_point(e).collect()}
     got_cc = sorted(map(tuple, clusters.connected_components(pairs).collect()))
     assert got_pr == want_pr and got_cc == want_cc
     assert calls and set(calls) == {"broadcast=False"}
+    assert gates.drain() == [
+        ("graph_driver", 6, 500_000, "distributed"),
+        ("graph_broadcast", 3, 2_000_000, "shuffle"),
+        ("cc_driver", 3, 1_000_000, "distributed"),
+    ]
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "no")
+    with pytest.raises(ValueError, match="on|off"):
+        gates.small("cc_driver", 1)
 
 
 def test_rfm_driver_scorer_matches_distributed(spark, monkeypatch):
@@ -1634,9 +1649,9 @@ def test_rfm_driver_scorer_matches_distributed(spark, monkeypatch):
     cust = spark.createDataFrame(
         rows, "ck long, last_day date, freq long, mon long"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RFM_DRIVER_ROWS", "1000000")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "on")
     drv = sorted(map(tuple, _rfm_scores_from_metrics(cust).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_RFM_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     dst = sorted(map(tuple, _rfm_scores_from_metrics(cust).collect()))
     assert drv == dst
     assert len(drv) == 23
@@ -1653,16 +1668,16 @@ def test_equidepth_driver_matches_distributed(spark, monkeypatch):
 
     rows = [(float(i % 13),) for i in range(997)] + [(99.5,)] * 450
     df = spark.createDataFrame(rows, "x double")
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "1000000")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "on")
     drv = sorted(map(tuple, equidepth_histogram(df, F.col("x"), 7).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     dst = sorted(map(tuple, equidepth_histogram(df, F.col("x"), 7).collect()))
     assert drv == dst
     assert sum(r[3] for r in drv) == len(rows)
     # null values must take the distributed path (ordering semantics)
     dfn = spark.createDataFrame([(1.0,), (None,), (2.0,)], "x double")
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "1000000")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "on")
     drv_n = sorted(map(tuple, equidepth_histogram(dfn, F.col("x")).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     dst_n = sorted(map(tuple, equidepth_histogram(dfn, F.col("x")).collect()))
     assert drv_n == dst_n

@@ -486,7 +486,7 @@ def test_rfm_never_plans_ntile_or_single_partition(spark, monkeypatch):
     so this asserts the DISTRIBUTED scorer (the 100 TB path); below
     the gate the scorer is a driver-computed local relation, asserted
     separately."""
-    monkeypatch.setenv("SPARK_GRAFT_RFM_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "off")
     plan = formatted_plan(REGISTRY["customers_rfm"].fn(spark, SF_SMOKE))
     assert "SinglePartition" not in plan, plan
     assert "ntile" not in plan, plan
@@ -494,7 +494,7 @@ def test_rfm_never_plans_ntile_or_single_partition(spark, monkeypatch):
     assert "Scan parquet" not in plan, plan
     # the gated driver path (round-14): scores become a local relation
     # — still no ntile, no SinglePartition, no parquet rescan
-    monkeypatch.setenv("SPARK_GRAFT_RFM_DRIVER_ROWS", "1000000")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATES", "on")
     plan_drv = formatted_plan(REGISTRY["customers_rfm"].fn(spark, SF_SMOKE))
     assert "SinglePartition" not in plan_drv, plan_drv
     assert "ntile" not in plan_drv, plan_drv

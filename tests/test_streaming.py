@@ -16,7 +16,11 @@ from realtime0523_spark.streaming.first_seen import streaming_first_seen
 from realtime0523_spark.streaming.order_wide import streaming_order_wide
 from realtime0523_spark.streaming.router import route_cdc, run_router_to_parquet
 from realtime0523_spark.streaming.runner import run_foreach_batch, run_to_memory
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer, upsert_parquet_dim
+from realtime0523_spark.streaming.sinks import (
+    idempotent_batch_writer,
+    latest_dim_version,
+    versioned_dim_upsert,
+)
 from realtime0523_spark.streaming.sources import cdc_json_stream, stream_table
 from tests.conftest import SF_SMOKE
 
@@ -588,14 +592,19 @@ def test_idempotent_batch_writer_commits_once(spark, tmp_path):
     assert first == again and len(again) == 1
 
 
-def test_upsert_parquet_dim_scd1(spark, tmp_path):
+def test_versioned_dim_upsert_scd1(spark, tmp_path):
     dim = str(tmp_path / "dim")
     b1 = spark.createDataFrame([("u1", "alice", 1), ("u2", "bob", 1)], "id string, name string, v int")
     b2 = spark.createDataFrame([("u1", "ALICE", 2), ("u3", "carol", 2)], "id string, name string, v int")
-    upsert_parquet_dim(spark, b1, dim, ["id"], "v")
-    upsert_parquet_dim(spark, b2, dim, ["id"], "v")
-    got = {r.id: r.name for r in spark.read.parquet(dim).collect()}
+    assert latest_dim_version(spark, dim) is None
+    versioned_dim_upsert(spark, b1, dim, ["id"], "v", commit_id=0)
+    versioned_dim_upsert(spark, b2, dim, ["id"], "v", commit_id=1)
+    got = {r.id: r.name for r in latest_dim_version(spark, dim).collect()}
     assert got == {"u1": "ALICE", "u2": "bob", "u3": "carol"}
+    # a replayed commit id is a no-op, whatever it carries
+    versioned_dim_upsert(spark, b1, dim, ["id"], "v", commit_id=1)
+    again = {r.id: r.name for r in latest_dim_version(spark, dim).collect()}
+    assert again == got
 
 
 def test_daily_idempotent_sink_replay_and_docid_overwrite(spark, tmp_path):
@@ -681,6 +690,63 @@ def test_streaming_dwd_cross_batch_first_order_flag(spark, tmp_path):
     )
     flags = {r.o_orderkey: r.if_first_order for r in out.collect()}
     assert flags == {100: 1, 101: 0, 102: 1, 103: 1, 104: 0}
+
+
+def test_streaming_dwd_write_back_failure_keeps_status_dim(
+    spark, tmp_path, monkeypatch
+):
+    """A write-back that fails at its rename must not lose the
+    user-status dim: the query fails, the restart replays the batch,
+    and a later order of a user first seen in an EARLIER batch still
+    arrives flagged 0."""
+    from realtime0523_spark.streaming.dwd import streaming_dwd_order
+
+    in_dir = str(tmp_path / "orders_in")
+    os.makedirs(in_dir)
+    base = 1_700_000_000
+    # batch 0: u1's first order; batch 1: u2's first order (its
+    # write-back fails once); batch 2: u1's second order
+    for rows in ([(100, 1, base)], [(101, 2, base + 100)], [(102, 1, base + 200)]):
+        spark.createDataFrame(
+            rows, "o_orderkey long, o_custkey long, o_dt_s long"
+        ).withColumn("o_orderdate", F.timestamp_seconds("o_dt_s")).drop(
+            "o_dt_s"
+        ).coalesce(1).write.mode("append").parquet(in_dir)
+        time.sleep(1.1)
+    customer = spark.createDataFrame(
+        [(1, "alice", 10), (2, "bob", 10)],
+        "c_custkey long, c_name string, c_nationkey long",
+    )
+    nation = spark.createDataFrame([(10, "FRANCE")], "n_nationkey long, n_name string")
+
+    def run():
+        stream = (
+            spark.readStream.schema(
+                "o_orderkey long, o_custkey long, o_orderdate timestamp"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+        return streaming_dwd_order(
+            spark, stream, customer, nation, work_dir=str(tmp_path / "dwd")
+        )
+
+    real_replace = os.replace
+    status_renames: list = []
+
+    def flaky_replace(src, dst):
+        if "user_status" in str(dst):
+            status_renames.append(dst)
+            if len(status_renames) == 2:  # batch 1's write-back
+                raise OSError("injected rename failure")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", flaky_replace)
+    with pytest.raises(Exception, match="injected rename failure"):
+        run()
+    monkeypatch.setattr(os, "replace", real_replace)
+    flags = {r.o_orderkey: r.if_first_order for r in run().collect()}
+    assert flags == {100: 1, 101: 1, 102: 0}
 
 
 def test_checkpoint_restart_no_reprocessing(spark, tmp_path):
@@ -2419,36 +2485,6 @@ def test_co_arrival_guard_scopes_key_log_to_checkpoint(spark, tmp_path):
     g3 = co_arrival_guard(spark, keys_dir, checkpoint_dir=ck3)
     with pytest.raises(RuntimeError, match="co-arrival contract violated"):
         g3(_keys_batch(spark, 100), 1)
-
-
-def test_co_arrival_guard_horizon_bounds_key_log(spark, tmp_path):
-    """Round-10 advice: horizon_batches bounds the key log's DATA
-    volume, not just its file count — compaction prunes keys whose
-    newest batch_id is more than H batches old (sound when H × cadence
-    exceeds the feed's join-tolerance + TTL: such keys can no longer
-    traverse the upstream watermarked join). Keys inside the horizon
-    still raise; pruned keys are accepted as new (the documented
-    trade)."""
-    from realtime0523_spark.streaming.allocation import co_arrival_guard
-    from realtime0523_spark.streaming.compaction import committed_relation
-
-    keys_dir = str(tmp_path / "keys")
-    guard = co_arrival_guard(
-        spark, keys_dir, compact_every=3, horizon_batches=2
-    )
-    for i in range(6):
-        guard(_keys_batch(spark, 100 + i), i)
-    # after the second compaction (new_wm=5, horizon 2): only keys
-    # from batches > 3 survive in the committed relation
-    live = committed_relation(
-        spark, keys_dir, keys_dir + "_base", keep_batch_id=True
-    )
-    assert sorted(r[0] for r in live.collect()) == [104, 105]
-    # a key inside the horizon still raises
-    with pytest.raises(RuntimeError, match="co-arrival contract violated"):
-        guard(_keys_batch(spark, 105), 6)
-    # a pruned key is accepted as new — the documented horizon trade
-    guard(_keys_batch(spark, 100), 6)
 
 
 def test_streaming_cells_long_horizon_flat_fold(spark, tmp_path):

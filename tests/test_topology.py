@@ -15,10 +15,8 @@ from pyspark.sql import functions as F
 
 from realtime0523_spark.functions.scalar import round2
 from realtime0523_spark.operators.allocation import allocate_order_amount
-from realtime0523_spark.streaming.topology import (
-    FiveLayerTopology,
-    latest_dim_version,
-)
+from realtime0523_spark.streaming.sinks import latest_dim_version
+from realtime0523_spark.streaming.topology import FiveLayerTopology
 
 TS0 = 1_750_000_000_000  # 2025-06-15, epoch ms — far from the epoch-0 watermark
 
@@ -161,10 +159,7 @@ def test_versioned_dim_upsert_heals_crash_between_rename_and_marker(
     and crash-looping the DIM stage."""
     import pyspark.sql.functions as SF
 
-    from realtime0523_spark.streaming.topology import (
-        latest_dim_version,
-        versioned_dim_upsert,
-    )
+    from realtime0523_spark.streaming.sinks import versioned_dim_upsert
 
     store = str(tmp_path / "dim")
     os.makedirs(store)
