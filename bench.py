@@ -84,9 +84,14 @@ def _release_query_state(spark) -> list[str]:
         try:
             step()
         except Exception as e:  # noqa: BLE001 - reported, never swallowed
-            first = (str(e).splitlines() or [""])[0][:120]
-            failed.append(f"{name}: {type(e).__name__}: {first}")
+            failed.append(f"{name}: {_error_line(e)}")
     return failed
+
+
+def _error_line(e: Exception) -> str:
+    """One sidecar line for a failed step: type and first message line."""
+    first = (str(e).splitlines() or [""])[0][:120]
+    return f"{type(e).__name__}: {first}"
 
 
 def _host_contention() -> dict[str, float]:
@@ -142,9 +147,10 @@ def _local_artifact_path() -> str:
     BENCH_r{N}.json artifact keeps only a 2000-char stdout tail, which
     truncated the first ~17 queries' timings in rounds 3-4; writing the
     complete line to the repo keeps per-query history self-sufficient.
-    Named after the round the driver will record next: one past the
-    highest committed BENCH_r{N}.json (falls back to BENCH_LOCAL.json
-    outside the repo layout)."""
+    Named after the round the driver will record next, one past the
+    highest committed BENCH_r{N}.json (BENCH_LOCAL.json outside the
+    repo layout). An existing sidecar is never overwritten: a repeat run
+    takes the first free `_run{K}` name after it."""
     import re
 
     root = os.path.dirname(os.path.abspath(__file__))
@@ -153,7 +159,11 @@ def _local_artifact_path() -> str:
         for f in os.listdir(root)
         if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
     ]
-    name = f"BENCH_LOCAL_r{max(rounds) + 1:02d}.json" if rounds else "BENCH_LOCAL.json"
+    stem = f"BENCH_LOCAL_r{max(rounds) + 1:02d}" if rounds else "BENCH_LOCAL"
+    name, k = f"{stem}.json", 0
+    while os.path.exists(os.path.join(root, name)):
+        k += 1
+        name = f"{stem}_run{k}.json"
     return os.path.join(root, name)
 
 
@@ -174,8 +184,8 @@ def _run_chunk(
     for name, spec in specs:
         try:
             _force(spec.fn(spark, "/root/testdata/sf0.001"))
-        except Exception:
-            pass
+        except Exception as e:  # noqa: BLE001 - reported, never swallowed
+            hygiene.append(f"warm-up {name}: {_error_line(e)}")
         hygiene += [f"after warm-up {name}: {h}" for h in _release_query_state(spark)]
     gates.drain()  # the warm-up's decisions are at sf0.001
     timings: dict[str, float] = {}
@@ -434,8 +444,9 @@ def main() -> None:
     try:
         with open(sidecar, "w") as fh:
             fh.write(full + "\n")
-    except OSError:
-        pass  # the stdout line is still the contract; the sidecar is best-effort
+    except OSError as e:
+        # the stdout line is still the contract; the sidecar is best-effort
+        print(f"bench: sidecar {sidecar} not written: {e}", file=sys.stderr)
     print(
         _stdout_line(
             total, timings, sf, os.path.basename(sidecar), contended, settled_load

@@ -1,35 +1,38 @@
-"""Compressed text-shard ingestion: gzip members as an opaque binary
-column, decompressed by an Arrow-batched `mapInPandas` kernel.
+"""Compressed text-shard ingestion: shards as an opaque binary column,
+decompressed by Arrow-batched `mapInPandas` kernels.
 
 The dominant wire format for web-scale LLM corpora (Common-Crawl
-WET/WARC, most JSONL dumps) is gzip. This module implements the REAL
-ingestion path with no external dependency: a full RFC 1952 member
-parser — magic/CM/FLG walk incl. the optional FEXTRA / FNAME /
-FCOMMENT / FHCRC header fields, raw-DEFLATE inflate via stdlib zlib,
-CRC32 + ISIZE trailer verification, and multi-member concatenation
-(wild .gz shards are routinely several members catenated; RFC 1952
-§2.2 requires readers to accept that) — plus a deterministic encoder
-for fixtures, and the Spark kernel `gzip_ingest_stats`.
+WET/WARC, most JSONL dumps) is gzip. This module parses it itself: a
+full RFC 1952 member parser — magic/CM/FLG walk incl. the optional
+FEXTRA / FNAME / FCOMMENT / FHCRC header fields, raw-DEFLATE inflate
+via stdlib zlib, CRC32 + ISIZE trailer verification, and multi-member
+concatenation (wild .gz shards are routinely several members
+catenated; RFC 1952 §2.2 requires readers to accept that) — plus a
+deterministic encoder for fixtures. On top sit the WARC record walk
+(ISO 28500), and zstd (RFC 8878) and LZ4 frames, which decode through
+the C codecs pyarrow bundles; pyarrow is already required by every
+`mapInPandas` kernel.
 
 Reference parity: realtime0523 has no compressed-shard path (its
 sources are Kafka/JDBC); this implements the training-data-pipeline
-ingestion surface the task brief specifies, against the public
-RFC 1952 spec only.
+ingestion surface the task brief specifies.
 
 Scale: mapInPandas streams Arrow batches through Python workers —
 per-partition decompression, no driver involvement, payloads never
 shuffle; at 100 TB this is the classic embarrassingly-parallel scan
-stage and the per-file gzip members bound memory to one shard each.
+stage and the per-file members bound memory to one shard each.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 _FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
@@ -146,6 +149,50 @@ def decode_gzip(payload: bytes) -> bytes:
     return bytes(out)
 
 
+def _attach_shards(
+    df: DataFrame,
+    build: Callable[[int, bytes], bytes],
+    id_col: str,
+    text_col: str,
+    media_col: str,
+) -> DataFrame:
+    """The testdata adapters' one Arrow kernel: `build(doc_id, raw)`
+    turns each row's UTF-8 text into its binary shard payload."""
+
+    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [
+                build(int(doc_id), (text or "").encode("utf-8"))
+                for doc_id, text in zip(pdf[id_col], pdf[text_col])
+            ]
+            yield pd.DataFrame(
+                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
+            )
+
+    return df.select(id_col, text_col).mapInPandas(
+        _build, schema=f"{id_col} long, {media_col} binary"
+    )
+
+
+_GZIP_HEADER_VARIANTS = (
+    {},
+    {"fname": b"shard.txt"},
+    {"fextra": b"\x01\x02meta"},
+    {"fcomment": b"fixture"},
+    {"fhcrc": True},
+)
+
+
+def _gzip_shard(doc_id: int, raw: bytes) -> bytes:
+    kw = _GZIP_HEADER_VARIANTS[doc_id % 5]
+    if len(raw) > 64:
+        mid = len(raw) // 2
+        return encode_gzip_member(raw[:mid], **kw) + encode_gzip_member(
+            raw[mid:]
+        )
+    return encode_gzip_member(raw, **kw)
+
+
 def attach_gzip_shards(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -158,55 +205,29 @@ def attach_gzip_shards(
     doc_id % 5 (plain / FNAME / FEXTRA / FCOMMENT / FHCRC) and texts
     past 64 bytes are split into TWO catenated members — the
     multi-member shape of real concatenated .gz shards."""
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                variant = int(doc_id) % 5
-                kw = [
-                    {},
-                    {"fname": b"shard.txt"},
-                    {"fextra": b"\x01\x02meta"},
-                    {"fcomment": b"fixture"},
-                    {"fhcrc": True},
-                ][variant]
-                if len(raw) > 64:
-                    mid = len(raw) // 2
-                    payload = encode_gzip_member(
-                        raw[:mid], **kw
-                    ) + encode_gzip_member(raw[mid:])
-                else:
-                    payload = encode_gzip_member(raw, **kw)
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _build, schema=f"{id_col} long, {media_col} binary"
-    )
+    return _attach_shards(df, _gzip_shard, id_col, text_col, media_col)
 
 
-GZIP_STATS_SCHEMA = "doc_id long, n_bytes bigint, byte_sum bigint"
+BYTE_STATS_SCHEMA = "doc_id long, n_bytes bigint, byte_sum bigint"
 
 
-def gzip_ingest_stats(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
+def _byte_stats(
+    df: DataFrame,
+    decode: Callable[[bytes], bytes],
+    id_col: str,
+    media_col: str,
 ) -> DataFrame:
-    """Decompress each shard and emit exact integer evidence of the
-    recovered bytes (length + byte-value sum) — what an ingestion
-    stage's checksum/accounting step records per shard. The match
-    against an oracle replaying the raw text proves header walk,
-    inflate, trailer verification and member concatenation byte for
-    byte. Map-only: one row out per shard, payloads never shuffle."""
+    """The ingest kernels' one Arrow kernel: decompress each shard with
+    `decode` and emit exact integer evidence of the recovered bytes
+    (length + byte-value sum), what an ingestion stage's
+    checksum/accounting step records per shard. Map-only: one row out
+    per shard, payloads never shuffle."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, n_bytes, sums = [], [], []
             for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                raw = decode_gzip(payload)
+                raw = decode(payload)
                 arr = np.frombuffer(raw, dtype=np.uint8)
                 ids.append(int(doc_id))
                 n_bytes.append(len(raw))
@@ -220,8 +241,17 @@ def gzip_ingest_stats(
             )
 
     return df.select(id_col, media_col).mapInPandas(
-        _stats, schema=GZIP_STATS_SCHEMA
+        _stats, schema=BYTE_STATS_SCHEMA
     )
+
+
+def gzip_ingest_stats(
+    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
+) -> DataFrame:
+    """Byte accounting of gzip shards. The match against an oracle
+    replaying the raw text proves header walk, inflate, trailer
+    verification and member concatenation byte for byte."""
+    return _byte_stats(df, decode_gzip, id_col, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -324,6 +354,20 @@ def parse_warc(stream: bytes) -> list[dict]:
     return records
 
 
+def _warc_shard(doc_id: int, raw: bytes) -> bytes:
+    rid = f"doc-{doc_id}"
+    uri = f"http://corpus.invalid/{doc_id}"
+    return (
+        encode_gzip_member(
+            encode_warc_record("warcinfo", b"robots: classic", rid + "-info")
+        )
+        + encode_gzip_member(
+            encode_warc_record("request", b"GET / HTTP/1.1", rid + "-req", uri)
+        )
+        + encode_gzip_member(encode_warc_record("response", raw, rid, uri))
+    )
+
+
 def attach_warc_shards(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -335,35 +379,7 @@ def attach_warc_shards(
     EACH compressed as its own gzip member and catenated, response
     payload = the row's UTF-8 text — so the SQL oracle can replay the
     extracted payload from hex(encode(text))."""
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                rid = f"doc-{int(doc_id)}"
-                uri = f"http://corpus.invalid/{int(doc_id)}"
-                shard = (
-                    encode_gzip_member(
-                        encode_warc_record("warcinfo", b"robots: classic",
-                                           rid + "-info")
-                    )
-                    + encode_gzip_member(
-                        encode_warc_record("request", b"GET / HTTP/1.1",
-                                           rid + "-req", uri)
-                    )
-                    + encode_gzip_member(
-                        encode_warc_record("response", raw, rid, uri)
-                    )
-                )
-                payloads.append(shard)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _build, schema=f"{id_col} long, {media_col} binary"
-    )
+    return _attach_shards(df, _warc_shard, id_col, text_col, media_col)
 
 
 WARC_STATS_SCHEMA = (
@@ -410,10 +426,76 @@ def warc_extract_stats(
 
 
 # ---------------------------------------------------------------------------
-# zstd (RFC 8878) — the post-2023 corpus wire format; full pure-Python
-# frame codec in llm/zstd.py (round-13, closing the round-12 verdict's
-# "What's missing" #4). Same adapter/kernel shape as gzip above.
+# zstd (RFC 8878) and LZ4 frames — the post-2023 corpus wire format and
+# the fast-tier one, decoded by the C codecs pyarrow bundles. A payload
+# is one or more catenated frames; both formats share the skippable
+# frame (magic 0x184D2A50-5F, 4-byte little-endian size, content) that
+# shard writers stash metadata in.
 # ---------------------------------------------------------------------------
+
+_FRAME_MAGIC = {"zstd": b"\x28\xb5\x2f\xfd", "lz4": b"\x04\x22\x4d\x18"}
+_LZ4_LEGACY_MAGIC = b"\x02\x21\x4c\x18"
+_SHARD_META = struct.pack("<II", 0x184D2A53, 10) + b"shard-meta"
+
+
+def _first_frame_magic(raw: bytes) -> tuple[int, bytes]:
+    """Offset and magic of the first frame that is not skippable; the
+    magic is empty when skippable frames fill (or overrun) the
+    payload."""
+    pos = 0
+    while (
+        pos + 8 <= len(raw)
+        and raw[pos + 1 : pos + 4] == b"\x2a\x4d\x18"
+        and 0x50 <= raw[pos] <= 0x5F
+    ):
+        pos += 8 + int.from_bytes(raw[pos + 4 : pos + 8], "little")
+    return pos, raw[pos : pos + 4]
+
+
+def decode_frames(payload: bytes, codec: str) -> bytes:
+    """Decompress a payload of catenated `codec` ("zstd" or "lz4")
+    frames with pyarrow's bundled codec; skippable frames are skipped.
+    A corrupt, truncated, empty or skippable-only payload raises
+    ValueError naming the codec, so a bad shard fails loudly instead of
+    feeding garbage downstream. The legacy LZ4 frame raises
+    NotImplementedError."""
+    raw = bytes(payload)
+    pos, magic = _first_frame_magic(raw)
+    if codec == "lz4" and magic == _LZ4_LEGACY_MAGIC:
+        raise NotImplementedError(
+            "lz4: legacy frame format (magic 0x184C2102) is not "
+            "supported — obsolete since lz4 r126; re-compress with the "
+            "modern frame format"
+        )
+    if magic != _FRAME_MAGIC[codec]:
+        raise ValueError(
+            f"{codec}: no {codec} frame at offset {pos} (found "
+            f"{magic!r}); the payload is empty, holds only skippable "
+            f"frames or is not {codec}"
+        )
+    try:
+        return pa.CompressedInputStream(pa.BufferReader(raw), codec).read()
+    except OSError as exc:
+        raise ValueError(f"{codec}: corrupt shard: {exc}") from exc
+
+
+def encode_frame(raw: bytes, codec: str) -> bytes:
+    """One `codec` frame holding `raw`, from pyarrow's bundled codec."""
+    sink = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(sink, codec) as out:
+        out.write(raw)
+    return sink.getvalue().to_pybytes()
+
+
+def _frame_shard(codec: str, doc_id: int, raw: bytes) -> bytes:
+    if doc_id % 2 == 0:
+        return encode_frame(raw, codec)
+    mid = len(raw) // 2
+    return (
+        _SHARD_META
+        + encode_frame(raw[:mid], codec)
+        + encode_frame(raw[mid:], codec)
+    )
 
 
 def attach_zstd_shards(
@@ -423,99 +505,21 @@ def attach_zstd_shards(
     media_col: str = "media",
 ) -> DataFrame:
     """Testdata adapter: compress each row's UTF-8 text into a zstd
-    payload the SQL oracle can replay from hex(encode(text)). The
-    frame variant cycles by doc_id % 6 so the corpus exercises every
-    decoder path: stored blocks, Huffman literals with direct and
-    FSE-compressed weights, predefined and custom FSE sequence tables,
-    4-stream literals with Treeless/Repeat second blocks, skippable +
-    multi-frame catenation, and the window-descriptor (non-single-
-    segment) header shape. All variants carry the XXH64 content
-    checksum except the multi-frame one's middle skippable frame."""
-    from realtime0523_spark.llm import zstd as ZS
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                variant = int(doc_id) % 6
-                if variant == 0:
-                    payload = ZS.encode_zstd_frame(raw, block_mode="raw")
-                elif variant == 1:
-                    payload = ZS.encode_zstd_frame(
-                        raw, lit_mode="huffman", weights_mode="direct",
-                        seq_mode="predefined",
-                    )
-                elif variant == 2:
-                    payload = ZS.encode_zstd_frame(
-                        raw, lit_mode="huffman", weights_mode="fse",
-                        seq_mode="fse",
-                    )
-                elif variant == 3:
-                    mid = len(raw) // 2
-                    payload = (
-                        ZS.encode_skippable_frame(b"shard-meta", 3)
-                        + ZS.encode_zstd_frame(
-                            raw[:mid], lit_mode="raw", seq_mode="predefined"
-                        )
-                        + ZS.encode_zstd_frame(raw[mid:], block_mode="raw")
-                    )
-                elif variant == 4:
-                    payload = ZS.encode_zstd_frame(
-                        raw, lit_mode="huffman", weights_mode="fse",
-                        seq_mode="fse", four_stream=True, split_blocks=True,
-                    )
-                else:
-                    payload = ZS.encode_zstd_frame(
-                        raw, single_segment=False,
-                    )
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _build, schema=f"{id_col} long, {media_col} binary"
+    payload the SQL oracle can replay from hex(encode(text)). Even
+    doc_ids get one frame; odd ones a skippable frame, then the text's
+    two halves as two catenated frames."""
+    return _attach_shards(
+        df, partial(_frame_shard, "zstd"), id_col, text_col, media_col
     )
 
 
 def zstd_ingest_stats(
     df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
 ) -> DataFrame:
-    """Decompress each zstd shard and emit exact integer evidence of
-    the recovered bytes (length + byte-value sum) — the same
-    accounting contract as gzip_ingest_stats, proving frame walk,
-    entropy decode, sequence execution and checksum verification byte
-    for byte against an oracle that replays the raw text. Map-only:
-    one row out per shard, payloads never shuffle."""
-    from realtime0523_spark.llm.zstd import decode_zstd
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_bytes, sums = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                raw = decode_zstd(payload)
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                ids.append(int(doc_id))
-                n_bytes.append(len(raw))
-                sums.append(int(arr.sum(dtype=np.int64)) if len(raw) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_bytes": pd.Series(n_bytes, dtype="int64"),
-                    "byte_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _stats, schema=GZIP_STATS_SCHEMA
+    """Byte accounting of zstd shards (see `_byte_stats`)."""
+    return _byte_stats(
+        df, partial(decode_frames, codec="zstd"), id_col, media_col
     )
-
-
-# ---------------------------------------------------------------------------
-# LZ4 frames — the fast-tier shard format; full pure-Python codec in
-# llm/lz4.py (round-13). Same adapter/kernel shape as gzip/zstd.
-# ---------------------------------------------------------------------------
 
 
 def attach_lz4_shards(
@@ -524,98 +528,37 @@ def attach_lz4_shards(
     text_col: str = "text",
     media_col: str = "media",
 ) -> DataFrame:
-    """Testdata adapter: compress each row's UTF-8 text into an LZ4
-    frame the SQL oracle can replay from hex(encode(text)). The frame
-    variant cycles by doc_id % 5: stored blocks, compressed blocks,
-    per-block checksums, no-content-size/no-checksum minimal headers,
-    and block-DEPENDENT flagging — every decoder path."""
-    from realtime0523_spark.llm import lz4 as L4
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                variant = int(doc_id) % 5
-                if variant == 0:
-                    payload = L4.encode_lz4_frame(raw, stored=True)
-                elif variant == 1:
-                    payload = L4.encode_lz4_frame(raw)
-                elif variant == 2:
-                    payload = L4.encode_lz4_frame(raw, block_checksum=True)
-                elif variant == 3:
-                    payload = L4.encode_lz4_frame(
-                        raw, content_checksum=False, content_size=False
-                    )
-                else:
-                    payload = L4.encode_lz4_frame(raw, block_indep=False)
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _build, schema=f"{id_col} long, {media_col} binary"
+    """Testdata adapter: the LZ4-frame twin of `attach_zstd_shards`,
+    with the same two shapes."""
+    return _attach_shards(
+        df, partial(_frame_shard, "lz4"), id_col, text_col, media_col
     )
 
 
 def lz4_ingest_stats(
     df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
 ) -> DataFrame:
-    """Decompress each LZ4 shard and emit the same exact byte
-    accounting as gzip_ingest_stats / zstd_ingest_stats. Map-only."""
-    from realtime0523_spark.llm.lz4 import decode_lz4
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_bytes, sums = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                raw = decode_lz4(payload)
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                ids.append(int(doc_id))
-                n_bytes.append(len(raw))
-                sums.append(int(arr.sum(dtype=np.int64)) if len(raw) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_bytes": pd.Series(n_bytes, dtype="int64"),
-                    "byte_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _stats, schema=GZIP_STATS_SCHEMA
+    """Byte accounting of LZ4-frame shards (see `_byte_stats`)."""
+    return _byte_stats(
+        df, partial(decode_frames, codec="lz4"), id_col, media_col
     )
 
 
 def decode_auto(payload: bytes) -> bytes:
-    """Magic-dispatched shard decompression: gzip (RFC 1952, our own
-    member parser), zstd (RFC 8878, our own frame codec — llm/zstd.py,
-    including skippable frames), LZ4 frames (our own codec —
-    llm/lz4.py; the obsolete legacy frame raises a named
-    NotImplementedError inside it), bzip2 and xz (stdlib bz2/lzma —
+    """Magic-dispatched shard decompression: gzip (RFC 1952,
+    `decode_gzip`), zstd and LZ4 frames after any leading skippable
+    frames (`decode_frames`), bzip2 and xz (stdlib bz2/lzma —
     Wikipedia dumps and many academic corpora ship as .bz2/.xz).
-    Every format a corpus shard realistically arrives in now decodes
-    natively; unrecognized magic is a corrupt/unknown shard and fails
+    Unrecognized magic is a corrupt or unknown shard and fails
     loudly."""
     raw = bytes(payload)
     if raw[:2] == b"\x1f\x8b":
         return decode_gzip(raw)
-    if raw[:4] == b"\x28\xb5\x2f\xfd" or (
-        len(raw) >= 4
-        and raw[1:4] == b"\x2a\x4d\x18"
-        and 0x50 <= raw[0] <= 0x5F
-    ):
-        # zstd magic, or a skippable frame (shared by zstd and lz4 —
-        # route to zstd, whose walker skips it; a following lz4 frame
-        # is a shard-writer error either way)
-        from realtime0523_spark.llm.zstd import decode_zstd
-
-        return decode_zstd(raw)
-    if raw[:4] in (b"\x04\x22\x4d\x18", b"\x02\x21\x4c\x18"):
-        from realtime0523_spark.llm.lz4 import decode_lz4
-
-        return decode_lz4(raw)
+    _, magic = _first_frame_magic(raw)
+    if magic == _FRAME_MAGIC["zstd"]:
+        return decode_frames(raw, "zstd")
+    if magic in (_FRAME_MAGIC["lz4"], _LZ4_LEGACY_MAGIC):
+        return decode_frames(raw, "lz4")
     if raw[:3] == b"BZh":
         import bz2
 
@@ -626,6 +569,6 @@ def decode_auto(payload: bytes) -> bytes:
         return lzma.decompress(raw)
     raise ValueError(
         f"shard decompression: unrecognized magic {raw[:4]!r} — gzip, "
-        f"zstd, lz4, bzip2 and xz decode natively; anything else is a "
-        f"corrupt or unsupported shard"
+        f"zstd, lz4, bzip2 and xz decode; anything else is a corrupt or "
+        f"unsupported shard"
     )

@@ -120,11 +120,10 @@ _PRIORITY: list[str] = [
     # window's spill note promised would lead this round — they hit
     # the 4-round SLA boundary at r13). 3 new queries this round
     # (growth rule: ≤ 12).
-    # Group 1 — ADDED this round (docs_zstd_ingest: the RFC 8878
-    # pure-Python zstd frame codec, llm/zstd.py; docs_lz4_ingest: the
-    # LZ4 frame codec, llm/lz4.py; media_decode_jpeg_lossless: the
-    # T.81 Annex-H SOF3 decoder, llm/multimodal.py — together closing
-    # the zstd/lz4/lossless-JPEG seams), or CHANGED:
+    # Group 1 — ADDED this round (docs_zstd_ingest and
+    # docs_lz4_ingest, zstd/LZ4 shard ingestion;
+    # media_decode_jpeg_lossless, the T.81 Annex-H SOF3 decoder in
+    # llm/multimodal.py), or CHANGED:
     # stream_brand_amount / stream_allocation_split (co-arrival
     # guard: legacy-log named error + >= prune boundary,
     # streaming/allocation.py), media_decode_jpeg_progressive

@@ -1642,21 +1642,26 @@ def q_media_decode_jpeg_lossless(
     )
 
 
+# The three compressed-shard ingest rows' oracle: each document's UTF-8
+# byte length and byte-value sum, replayed from hex(encode(text)).
+_SHARD_BYTES_ORACLE = """
+WITH m AS (SELECT doc_id, hex(encode(text)) AS hx,
+                  octet_length(encode(text)) AS nb
+           FROM documents),
+bysum AS (SELECT doc_id,
+                 coalesce(sum(CAST('0x' || substr(hx, 2 * i + 1, 2)
+                                   AS INT)), 0) AS bs
+          FROM m, LATERAL (SELECT unnest(range(0, nb)) AS i)
+          GROUP BY doc_id)
+SELECT m.doc_id, CAST(m.nb AS BIGINT) AS n_bytes,
+       CAST(coalesce(b.bs, 0) AS BIGINT) AS byte_sum
+FROM m LEFT JOIN bysum b USING (doc_id)
+"""
+
+
 @register(
     "docs_gzip_ingest",
-    """
-    WITH m AS (SELECT doc_id, hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS nb
-               FROM documents),
-    bysum AS (SELECT doc_id,
-                     coalesce(sum(CAST('0x' || substr(hx, 2 * i + 1, 2)
-                                       AS INT)), 0) AS bs
-              FROM m, LATERAL (SELECT unnest(range(0, nb)) AS i)
-              GROUP BY doc_id)
-    SELECT m.doc_id, CAST(m.nb AS BIGINT) AS n_bytes,
-           CAST(coalesce(b.bs, 0) AS BIGINT) AS byte_sum
-    FROM m LEFT JOIN bysum b USING (doc_id)
-    """,
+    _SHARD_BYTES_ORACLE,
     "REAL compressed-shard ingestion (round-11): each document "
     "becomes a gzip payload (RFC 1952 members — header variant "
     "cycles plain/FNAME/FEXTRA/FCOMMENT/FHCRC by doc_id%5, texts "
@@ -1681,38 +1686,19 @@ def q_docs_gzip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_zstd_ingest",
-    """
-    WITH m AS (SELECT doc_id, hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS nb
-               FROM documents),
-    bysum AS (SELECT doc_id,
-                     coalesce(sum(CAST('0x' || substr(hx, 2 * i + 1, 2)
-                                       AS INT)), 0) AS bs
-              FROM m, LATERAL (SELECT unnest(range(0, nb)) AS i)
-              GROUP BY doc_id)
-    SELECT m.doc_id, CAST(m.nb AS BIGINT) AS n_bytes,
-           CAST(coalesce(b.bs, 0) AS BIGINT) AS byte_sum
-    FROM m LEFT JOIN bysum b USING (doc_id)
-    """,
-    "REAL zstd (RFC 8878) shard ingestion (round-13, closing the "
-    "round-12 verdict's named seam): each document becomes a zstd "
-    "payload whose frame shape cycles by doc_id%6 — stored blocks, "
-    "Huffman literals (direct AND FSE-compressed weight descriptions), "
-    "predefined AND custom FSE sequence tables, 4-stream literals with "
-    "Treeless/Repeat second blocks, skippable+multi-frame catenation, "
-    "and the window-descriptor header — then decompressed by the full "
-    "pure-Python frame decoder (llm/zstd.py::decode_zstd — frame "
-    "header walk, FSE NCount parse + table build, canonical Huffman "
-    "with implied last weight, two-state interleaved weight decode, "
-    "the init-LL,OF,ML/update-LL,ML,OF sequence state order, 3-slot "
-    "repeat-offset history, overlapping-match execution, XXH64 "
-    "content-checksum verification with xxhash64 implemented "
-    "in-repo), then exact byte accounting per shard. The oracle "
-    "replays the raw text bytes from hex(encode(text)), so the match "
-    "proves the entire decompression path byte for byte. This is the "
-    "ingestion stage for the .zst corpora (post-2023 Common-Crawl "
-    "derivatives, HF datasets) a 2026 pretraining run actually reads: "
-    "map-only, embarrassingly parallel, payloads never shuffle.",
+    _SHARD_BYTES_ORACLE,
+    "zstd (RFC 8878) shard ingestion: each document becomes a zstd "
+    "payload — one frame for even doc_ids; for odd ones a skippable "
+    "metadata frame, then the text's two halves as two catenated "
+    "frames — decompressed by the zstd codec pyarrow bundles "
+    "(llm/shards.py::decode_frames, which turns every decode failure "
+    "and an empty or skippable-only payload into a ValueError), then "
+    "exact byte accounting (length + byte-value sum) per shard. The "
+    "oracle replays the raw text bytes from hex(encode(text)), so the "
+    "match proves frame walk and decompression byte for byte. This is "
+    "the ingestion stage for the .zst corpora (post-2023 Common-Crawl "
+    "derivatives, HF datasets) a pretraining run reads: map-only, "
+    "embarrassingly parallel, payloads never shuffle.",
 )
 def q_docs_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime0523_spark.llm import shards as SH
@@ -1723,32 +1709,13 @@ def q_docs_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_lz4_ingest",
-    """
-    WITH m AS (SELECT doc_id, hex(encode(text)) AS hx,
-                      octet_length(encode(text)) AS nb
-               FROM documents),
-    bysum AS (SELECT doc_id,
-                     coalesce(sum(CAST('0x' || substr(hx, 2 * i + 1, 2)
-                                       AS INT)), 0) AS bs
-              FROM m, LATERAL (SELECT unnest(range(0, nb)) AS i)
-              GROUP BY doc_id)
-    SELECT m.doc_id, CAST(m.nb AS BIGINT) AS n_bytes,
-           CAST(coalesce(b.bs, 0) AS BIGINT) AS byte_sum
-    FROM m LEFT JOIN bysum b USING (doc_id)
-    """,
-    "REAL LZ4-frame shard ingestion (round-13 — with docs_zstd_ingest "
-    "this closes the LAST codec seam; every wire format corpus shards "
-    "realistically arrive in now decodes natively): each document "
-    "becomes an LZ4 frame whose shape cycles by doc_id%5 — stored "
-    "blocks, greedy-matched compressed blocks, per-block xxh32 "
-    "checksums, minimal headers, block-dependent flagging — then "
-    "decompressed by the full pure-Python frame decoder "
-    "(llm/lz4.py::decode_lz4 — descriptor walk with the "
-    "xxh32-derived header-checksum byte, token/extension block "
-    "decode, overlapping matches, content checksum, skippable "
-    "frames; xxhash32 implemented in-repo), then exact byte "
-    "accounting per shard. The oracle replays the raw text bytes "
-    "from hex(encode(text)), proving the whole path byte for byte. "
+    _SHARD_BYTES_ORACLE,
+    "LZ4-frame shard ingestion, the fast-tier twin of "
+    "docs_zstd_ingest: the same two shard shapes (one frame; skippable "
+    "frame + two frames) built as LZ4 frames and decompressed by the "
+    "LZ4 frame codec pyarrow bundles (llm/shards.py::decode_frames; "
+    "the obsolete legacy frame raises a named NotImplementedError), "
+    "then exact byte accounting per shard against the same oracle. "
     "Map-only, embarrassingly parallel, payloads never shuffle.",
 )
 def q_docs_lz4_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1787,10 +1754,9 @@ def q_docs_lz4_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hex(encode(text)), proving decompression + record framing + "
     "type filtering byte for byte. This IS the first stage of a "
     "web-scale corpus build; map-only, one row per shard, payloads "
-    "never shuffle. bzip2/xz shards decode via the same module's "
-    "magic-dispatched decode_auto (stdlib) and zstd via the round-13 "
-    "in-repo frame codec (llm/zstd.py); lz4 raises the one remaining "
-    "named codec seam.",
+    "never shuffle. The same module's magic-dispatched decode_auto "
+    "also decodes zstd and LZ4 frames (pyarrow's codecs) and bzip2/xz "
+    "(stdlib).",
 )
 def q_docs_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime0523_spark.llm import shards as SH

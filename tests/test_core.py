@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from realtime0523_spark.core.catalog import TABLES, Catalog
@@ -227,6 +229,46 @@ def test_bench_host_factor_normalization_contract():
         "arrow_s": 1.0
     }
     assert bench._host_factor({"arrow_s": 0.0}) is None
+
+
+def test_bench_sidecar_never_overwrites(tmp_path, monkeypatch):
+    """The sidecar is named one past the highest BENCH_r{N}.json; when
+    that name is taken, the first free `_run{K}` name follows it."""
+    import bench
+
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._local_artifact_path() == str(tmp_path / "BENCH_LOCAL.json")
+    (tmp_path / "BENCH_r14.json").write_text("{}")
+    names = []
+    for _ in range(3):
+        path = bench._local_artifact_path()
+        names.append(os.path.basename(path))
+        open(path, "w").close()
+    assert names == [
+        "BENCH_LOCAL_r15.json",
+        "BENCH_LOCAL_r15_run1.json",
+        "BENCH_LOCAL_r15_run2.json",
+    ]
+
+
+def test_bench_chunk_reports_failed_warm_up(spark, monkeypatch):
+    """A query whose sf0.001 warm-up raises still gets measured, and the
+    failure lands in the chunk's hygiene failures, not in silence."""
+    from types import SimpleNamespace
+
+    import bench
+    from realtime0523_spark.core import session
+
+    def fn(spark_, sf_dir):
+        if sf_dir.endswith("sf0.001"):
+            raise RuntimeError("warm-up broke\nsecond line")
+        return spark_.range(3)
+
+    monkeypatch.setattr(session, "get_spark", lambda name: spark)
+    monkeypatch.setattr(bench, "REGISTRY", {"boom": SimpleNamespace(fn=fn)})
+    timings, _, hygiene, _ = bench._run_chunk(["boom"], "/no/such/sf")
+    assert set(timings) == {"boom"}
+    assert "warm-up boom: RuntimeError: warm-up broke" in hygiene
 
 
 def test_bench_release_reports_failed_hygiene_steps(spark):

@@ -75,6 +75,10 @@ def test_query_matches_oracle_gates_off(spark, con, name, monkeypatch):
         "media_decode_jpeg",
         "docs_gzip_ingest",
         "docs_warc_extract",
+        # doc ids 1-4 cover both zstd/LZ4 shard shapes (odd: skippable
+        # frame + two frames; even: one frame, incl. the empty doc 4)
+        "docs_zstd_ingest",
+        "docs_lz4_ingest",
     ],
 )
 def test_media_oracles_hold_on_non_ascii(spark, tmp_path, name):

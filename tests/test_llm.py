@@ -2541,9 +2541,9 @@ def test_warc_parse_roundtrip_and_validation():
     assert decode_auto(bz2.compress(b"wiki dump")) == b"wiki dump"
     assert decode_auto(lzma.compress(b"academic corpus")) == b"academic corpus"
     assert decode_auto(encode_gzip_member(b"cc shard")) == b"cc shard"
-    # zstd and lz4 magics now dispatch to the round-13 frame codecs
-    # (see test_zstd_decode_auto_dispatch / test_lz4_decode_auto);
-    # unrecognized magic fails loudly
+    # zstd and lz4 dispatch: test_zstd_decode_auto_dispatch /
+    # test_lz4_decode_auto_and_ingest_twin; unrecognized magic fails
+    # loudly
     with pytest.raises(ValueError, match="unrecognized magic"):
         decode_auto(b"\x00\x11\x22\x33 not-a-shard")
 
@@ -2916,186 +2916,238 @@ def test_jpeg_metadata_segments_are_skipped():
         assert (decode_jpeg(patched) == decode_jpeg(whole)).all()
 
 
-def test_zstd_roundtrip_all_frame_shapes():
-    """Round-13 zstd codec (RFC 8878, llm/zstd.py): every decoder path
-    round-trips — stored/RLE/compressed blocks, raw/RLE/Huffman
-    literals (direct and FSE-compressed weights, 1- and 4-stream),
-    predefined/custom/Repeat sequence tables, Treeless literals,
-    multi-block frames, window-descriptor headers, checksums."""
+def _skippable(content: bytes, nibble: int = 0) -> bytes:
+    import struct
+
+    return struct.pack("<II", 0x184D2A50 + nibble, len(content)) + content
+
+
+def _frame_texts() -> list[bytes]:
     import random
 
-    from realtime0523_spark.llm import zstd as Z
+    rng = random.Random(7)
+    return [
+        b"", b"a", "café — 東京の夜".encode("utf-8"),
+        b"hello world, hello world, hello world! " * 9,
+        bytes(rng.randrange(256) for _ in range(500)),
+        b"ab" * 4000,
+        bytes(rng.choices(bytes(range(32)), k=200_000)),  # multi-block
+    ]
 
-    random.seed(7)
-    texts = [
-        b"", b"a", b"hello world, hello world, hello world! " * 9,
-        bytes(random.randrange(256) for _ in range(500)),
-        (b"the quick brown fox jumps over the lazy dog. " * 40)[:1500],
-        b"a" * 39, b"ab" * 300,
-        bytes(random.choices(b"abcdefgh\n ", k=3000)),
-    ]
-    variants = [
-        dict(block_mode="raw", checksum=False),
-        dict(block_mode="raw", checksum=True),
-        dict(block_mode="rle", checksum=True),
-        dict(block_mode="compressed", lit_mode="raw", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="direct", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse", split_blocks=True),
-        dict(block_mode="compressed", lit_mode="huffman",
-             four_stream=True, seq_mode="predefined"),
-        dict(block_mode="compressed", single_segment=False, checksum=True),
-    ]
-    for t in texts:
-        for kw in variants:
-            assert Z.decode_zstd(Z.encode_zstd_frame(t, **kw)) == t
-    # multi-frame catenation with skippable frames interleaved
+
+def _assert_shapes_roundtrip(codec: str) -> None:
+    """Both testdata shard shapes (even doc_id: one frame; odd: a
+    skippable frame, then two frames) decode back to the text, through
+    decode_frames and through decode_auto."""
+    from realtime0523_spark.llm.shards import (
+        _frame_shard,
+        decode_auto,
+        decode_frames,
+    )
+
+    for t in _frame_texts():
+        for doc_id in (0, 1):
+            shard = _frame_shard(codec, doc_id, t)
+            assert decode_frames(shard, codec) == t
+            assert decode_auto(shard) == t
+
+
+def _assert_fuzz_roundtrip(codec: str, seed: int) -> None:
+    """Random texts cut into random frames, with random skippable
+    frames (any nibble, random content) in front of and between them,
+    decode to the text: the skippable walk and frame catenation hold."""
+    import random
+
+    from realtime0523_spark.llm.shards import decode_frames, encode_frame
+
+    rng = random.Random(seed)
+    for _ in range(60):
+        alpha = rng.choice([2, 8, 256])
+        t = bytes(rng.randrange(alpha) for _ in range(rng.randrange(3000)))
+        cuts = sorted(rng.randrange(len(t) + 1) for _ in range(rng.randrange(3)))
+        payload = b""
+        for lo, hi in zip([0, *cuts], [*cuts, len(t)]):
+            if rng.random() < 0.5:
+                payload += _skippable(rng.randbytes(rng.randrange(20)),
+                                      rng.randrange(16))
+            payload += encode_frame(t[lo:hi], codec)
+        assert decode_frames(payload, codec) == t
+
+
+def test_zstd_roundtrip_all_frame_shapes():
+    """zstd shards decode through pyarrow's bundled codec: both
+    adapter shapes for empty, one-byte, multibyte-UTF-8, compressible,
+    random and multi-block texts, and skippable frames interleaved
+    between catenated frames."""
+    from realtime0523_spark.llm.shards import decode_frames, encode_frame
+
+    _assert_shapes_roundtrip("zstd")
     blob = (
-        Z.encode_skippable_frame(b"meta")
-        + Z.encode_zstd_frame(b"part one|")
-        + Z.encode_skippable_frame(b"x" * 10, 5)
-        + Z.encode_zstd_frame(b"part two")
+        _skippable(b"meta")
+        + encode_frame(b"part one|", "zstd")
+        + _skippable(b"x" * 10, 5)
+        + encode_frame(b"part two", "zstd")
     )
-    assert Z.decode_zstd(blob) == b"part one|part two"
-    # cross-block match window: a frame split into blocks must let
-    # block 2's sequences reach back into block 1's output
-    rep = b"0123456789abcdef" * 40
-    frame = Z.encode_zstd_frame(
-        rep, lit_mode="huffman", weights_mode="fse", seq_mode="fse",
-        split_blocks=True,
-    )
-    assert Z.decode_zstd(frame) == rep
+    assert decode_frames(blob, "zstd") == b"part one|part two"
 
 
 def test_zstd_fuzz_roundtrip():
-    """Randomized alphabets/lengths through every encoder variant —
-    the encoder is deterministic, so any mismatch is a real codec
-    defect, not flake."""
-    import random
-
-    from realtime0523_spark.llm import zstd as Z
-
-    variants = [
-        dict(block_mode="raw"),
-        dict(block_mode="compressed", lit_mode="raw", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="direct", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse", split_blocks=True),
-        dict(block_mode="compressed", lit_mode="huffman",
-             four_stream=True, seq_mode="predefined"),
-    ]
-    random.seed(123)
-    for _ in range(120):
-        n = random.randrange(0, 3000)
-        alpha = random.choice([256, 64, 16, 4, 2])
-        t = bytes(random.randrange(alpha) for _ in range(n))
-        kw = random.choice(variants)
-        assert Z.decode_zstd(Z.encode_zstd_frame(t, **kw)) == t
+    _assert_fuzz_roundtrip("zstd", seed=123)
 
 
-def test_zstd_xxh64_known_vector_and_tails():
-    from realtime0523_spark.llm.zstd import xxh64
+def test_lz4_roundtrip_and_fuzz():
+    """LZ4 frames: both adapter shapes round-trip, and so do random
+    frame/skippable catenations."""
+    from realtime0523_spark.llm.shards import decode_frames, encode_frame
 
-    # the canonical published XXH64 empty-input value
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    # every tail path (32-stripe, 8-, 4-, 1-byte remainders) changes
-    # the digest — structural sanity of the tail walk
-    base = bytes(range(256))
-    seen = {xxh64(base[:n]) for n in (0, 1, 4, 8, 31, 32, 33, 44, 47, 64)}
-    assert len(seen) == 10
-    assert xxh64(b"abc") != xxh64(b"abd")
-    assert xxh64(b"abc", seed=1) != xxh64(b"abc")
+    _assert_shapes_roundtrip("lz4")
+    _assert_fuzz_roundtrip("lz4", seed=5)
+    blob = (
+        encode_frame(b"alpha|", "lz4")
+        + _skippable(b"meta")
+        + encode_frame(b"beta", "lz4")
+    )
+    assert decode_frames(blob, "lz4") == b"alpha|beta"
+
+
+# Checksummed frames from independent encoders, committed as bytes:
+# pyarrow's own encoders write no content checksum, so a flipped byte
+# in their output can decode silently. Each row: codec, frame hex,
+# offset of a payload byte, offsets of checksum bytes (LZ4 header
+# checksum, block checksum, content checksum). Every frame decodes
+# to _GOLDEN_TEXT.
+_GOLDEN_TEXT = b"golden shard, golden shard, golden shard!"
+_GOLDEN_FRAMES = [
+    # zstd, raw block, content checksum
+    ("zstd", "28b52ffd2429490100676f6c64656e2073686172642c20676f6c6465"
+             "6e2073686172642c20676f6c64656e2073686172642194497ee4",
+     9, (-1, -4)),
+    # zstd, Huffman literals (FSE-compressed weights), FSE sequence
+    # tables, content checksum
+    ("zstd", "28b52ffd24293d0100f2c0040ba1dfe837aad14b988f91f1d0704abd"
+             "3736a401a811fcf70710e60711fcfffd0101002094497ee4",
+     20, (-1, -4)),
+    # LZ4, block checksum, no content checksum
+    ("lz4", "04224d18784029000000000000002018000000ef676f6c64656e2073"
+            "686172642c200e00035068617264216239344200000000",
+     20, (14, -8, -5)),
+    # LZ4, content checksum
+    ("lz4", "04224d186c4029000000000000001618000000ef676f6c64656e2073"
+            "686172642c200e0003506861726421000000009b833949",
+     20, (14, -1, -4)),
+    # LZ4, block-dependent blocks, content checksum
+    ("lz4", "04224d184c402900000000000000b118000000ef676f6c64656e2073"
+            "686172642c200e0003506861726421000000009b833949",
+     20, (14, -1, -4)),
+    # LZ4, no content size, content checksum
+    ("lz4", "04224d186440a718000000ef676f6c64656e2073686172642c200e00"
+            "03506861726421000000009b833949",
+     12, (6, -1, -4)),
+]
+
+
+def test_golden_checksummed_frames_decode_and_catch_flips():
+    """Each committed checksummed frame decodes (also via decode_auto),
+    and flipping a payload byte or a checksum byte raises ValueError."""
+    from realtime0523_spark.llm.shards import decode_auto, decode_frames
+
+    for codec, hx, payload_at, checksum_at in _GOLDEN_FRAMES:
+        frame = bytes.fromhex(hx)
+        assert decode_frames(frame, codec) == _GOLDEN_TEXT
+        assert decode_auto(frame) == _GOLDEN_TEXT
+        for at in (payload_at, *checksum_at):
+            bad = bytearray(frame)
+            bad[at] ^= 0xFF
+            with pytest.raises(ValueError, match=codec):
+                decode_frames(bytes(bad), codec)
+
+
+def _assert_malformed_payloads_raise(codec: str) -> None:
+    """Payloads with no frame to decode, truncated frames, bad magic and
+    trailing garbage raise ValueError naming the codec."""
+    from realtime0523_spark.llm.shards import decode_frames, encode_frame
+
+    frame = encode_frame(b"hello frames hello frames", codec)
+    overrun = _skippable(b"meta")[:-2]  # declared size past the end
+    for payload in (
+        b"",
+        _skippable(b"meta"),
+        _skippable(b"meta") + _skippable(b"", 15),
+        overrun,
+        overrun + frame,
+        frame[:-3],
+        frame[:5],
+        b"\x00\x11\x22\x33" + bytes(20),
+        frame + b"\x01\x02\x03\x04\x05",
+    ):
+        with pytest.raises(ValueError, match=codec):
+            decode_frames(payload, codec)
 
 
 def test_zstd_validation_named_errors():
-    """Corrupt shards must fail loudly with named defects (the
-    decode_gzip contract)."""
+    """Corrupt zstd shards fail loudly as ValueError (the decode_gzip
+    contract): no frame, truncation, bad magic, trailing garbage, a
+    match reaching before the frame start, a dictionary-ID frame."""
+    from realtime0523_spark.llm.shards import decode_frames
+
+    _assert_malformed_payloads_raise("zstd")
+    # one sequence with offset 1000 in a 200-byte single-segment frame
+    before_start = bytes.fromhex("28b52ffd20c83d0000000100eb050104")
+    with pytest.raises(ValueError, match="zstd"):
+        decode_frames(before_start, "zstd")
+    # single-segment header with 1-byte dictionary ID 7, content size 0
+    with pytest.raises(ValueError, match="Dictionary"):
+        decode_frames(bytes.fromhex("28b52ffd210700"), "zstd")
+
+
+def test_lz4_validation_named_errors():
+    """Corrupt LZ4 shards fail loudly as ValueError; the legacy frame
+    keeps its named NotImplementedError. A dictionary-flagged frame
+    whose block is stored needs no dictionary and decodes."""
     import struct
 
-    import pytest as _pytest
+    from realtime0523_spark.llm.shards import decode_frames
 
-    from realtime0523_spark.llm import zstd as Z
-
-    with _pytest.raises(ValueError, match="empty payload"):
-        Z.decode_zstd(b"")
-    with _pytest.raises(ValueError, match="bad magic"):
-        Z.decode_zstd(b"\x00\x11\x22\x33" + bytes(20))
-    with _pytest.raises(ValueError, match="block header truncated"):
-        Z.decode_zstd(struct.pack("<IB", 0xFD2FB528, 0x20) + b"\x05")
-    # reserved block type (3)
-    frame = struct.pack("<IBB", 0xFD2FB528, 0x20, 1) + bytes([0x07, 0, 0, 65])
-    with _pytest.raises(ValueError, match="reserved block type"):
-        Z.decode_zstd(frame)
-    # content checksum mismatch: flip a stored byte
-    good = bytearray(Z.encode_zstd_frame(b"hello zstd world", block_mode="raw"))
-    good[-6] ^= 0xFF  # inside the raw block payload
-    with _pytest.raises(ValueError, match="checksum mismatch"):
-        Z.decode_zstd(bytes(good))
-    # frame content size vs regenerated length
-    bad_fcs = bytearray(Z.encode_zstd_frame(b"hello", checksum=False))
-    bad_fcs[5] = 9  # single-segment 1-byte FCS field
-    with _pytest.raises(ValueError, match="content size"):
-        Z.decode_zstd(bytes(bad_fcs))
-    # dictionary ID is the named seam
-    dict_frame = struct.pack("<IBBB", 0xFD2FB528, 0x21, 7, 0)
-    with _pytest.raises(NotImplementedError, match="dictionary"):
-        Z.decode_zstd(dict_frame)
-    # a match reaching before the frame start
-    lit = Z._build_literals_section(b"", "raw", "direct", {})
-    seq = Z._build_sequences_section([(0, 5, 1000)], "predefined", {})
-    body = lit + seq
-    frame = (
-        # FCS=200 so the block maximum admits the 7-byte body; the
-        # offset check fires during block decode, before the FCS check
-        struct.pack("<IBB", 0xFD2FB528, 0x20, 200)
-        + ((len(body) << 3) | (2 << 1) | 1).to_bytes(3, "little")
-        + bytes(body)
-    )
-    with _pytest.raises(ValueError, match="before the frame start"):
-        Z.decode_zstd(frame)
-    # skippable-only payload decodes to nothing — refuse, loudly
-    with _pytest.raises(ValueError, match="only skippable"):
-        Z.decode_zstd(Z.encode_skippable_frame(b"meta"))
-    # truncated skippable frame
-    with _pytest.raises(ValueError, match="skippable frame content"):
-        Z.decode_zstd(Z.encode_skippable_frame(b"meta")[:-2])
-    # treeless literals with no prior table in the frame
-    lit_tl = bytes([3 | (0 << 2) | (1 << 4), (1 & 0x3F) | (1 << 6), 0])
-    with _pytest.raises(ValueError, match="no previous"):
-        Z._decode_literals(lit_tl + b"\x01", {}, "block")
+    _assert_malformed_payloads_raise("lz4")
+    with pytest.raises(NotImplementedError, match="legacy frame"):
+        decode_frames(struct.pack("<I", 0x184C2102) + bytes(8), "lz4")
+    with pytest.raises(NotImplementedError, match="legacy frame"):
+        decode_frames(_skippable(b"m") + bytes.fromhex("02214c18"), "lz4")
+    # one literal 'A', then a match at offset 5 in a 1-byte window
+    past_window = bytes.fromhex("04224d18604082040000001041050000000000")
+    with pytest.raises(ValueError, match="lz4"):
+        decode_frames(past_window, "lz4")
+    # dictionary ID 42, one stored block b"abc"
+    dict_flagged = bytes.fromhex("04224d1861402a000000810300008061626300000000")
+    assert decode_frames(dict_flagged, "lz4") == b"abc"
 
 
 def test_zstd_decode_auto_dispatch():
-    """decode_auto recognizes zstd magic (and leading skippable
-    frames) alongside gzip/bz2/xz (lz4 dispatch is pinned by
-    test_lz4_decode_auto_and_ingest_twin)."""
-    import pytest as _pytest
+    """decode_auto recognizes zstd magic (also behind leading
+    skippable frames) alongside gzip/bz2/xz; lz4 dispatch is pinned by
+    test_lz4_decode_auto_and_ingest_twin."""
+    from realtime0523_spark.llm.shards import (
+        decode_auto,
+        encode_frame,
+        encode_gzip_member,
+    )
 
-    from realtime0523_spark.llm import zstd as Z
-    from realtime0523_spark.llm.shards import decode_auto, encode_gzip_member
-
-    assert decode_auto(Z.encode_zstd_frame(b"zstd payload")) == b"zstd payload"
+    assert decode_auto(encode_frame(b"zstd payload", "zstd")) == b"zstd payload"
     assert (
-        decode_auto(
-            Z.encode_skippable_frame(b"m") + Z.encode_zstd_frame(b"tail")
-        )
+        decode_auto(_skippable(b"m") + encode_frame(b"tail", "zstd"))
         == b"tail"
     )
     assert decode_auto(encode_gzip_member(b"gz payload")) == b"gz payload"
-    with _pytest.raises(ValueError, match="unrecognized magic"):
+    with pytest.raises(ValueError, match="unrecognized magic"):
         decode_auto(b"\x00\x11\x22\x33" + bytes(8))
+    with pytest.raises(ValueError, match="unrecognized magic"):
+        decode_auto(_skippable(b"only metadata"))
 
 
 def test_docs_zstd_ingest_matches_gzip_twin(spark):
     """The zstd ingest query recovers byte-identical accounting to the
     gzip twin on the same documents (both decode to the same raw
-    text), across all six frame variants."""
+    text), across both shard shapes."""
     from realtime0523_spark.plans import REGISTRY
 
     got = REGISTRY["docs_zstd_ingest"].fn(spark, SF_SMOKE).collect()
@@ -3103,166 +3155,24 @@ def test_docs_zstd_ingest_matches_gzip_twin(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
-def test_lz4_roundtrip_and_fuzz():
-    """Round-13 LZ4 frame codec (llm/lz4.py): stored/compressed
-    blocks, per-block checksums, minimal headers, dependent-block
-    flagging, multi-block frames — all round-trip; deterministic
-    encoder, so failures are codec defects."""
-    import random
-
-    from realtime0523_spark.llm import lz4 as L
-
-    assert L.xxh32(b"") == 0x02CC5D05  # the canonical published vector
-    random.seed(11)
-    texts = [
-        b"", b"x", b"hello world, hello world, hello world! " * 9,
-        bytes(random.randrange(256) for _ in range(500)),
-        b"a" * 5000, b"ab" * 4000,
-        bytes(random.choices(b"abcdefgh ", k=3000)),
-        bytes(random.choices(bytes(range(32)), k=200_000)),  # multi-block
-    ]
-    variants = [
-        dict(stored=True),
-        dict(),
-        dict(block_checksum=True),
-        dict(content_checksum=False, content_size=False),
-        dict(block_indep=False, block_max_code=5),
-        dict(block_max_code=7),
-    ]
-    for t in texts:
-        for kw in variants:
-            assert L.decode_lz4(L.encode_lz4_frame(t, **kw)) == t
-    random.seed(5)
-    for _ in range(150):
-        n = random.randrange(0, 4000)
-        alpha = random.choice([256, 64, 8, 2])
-        t = bytes(random.randrange(alpha) for _ in range(n))
-        kw = random.choice(variants)
-        assert L.decode_lz4(L.encode_lz4_frame(t, **kw)) == t
-    # skippable + multi-frame catenation
-    blob = (
-        L.encode_lz4_frame(b"alpha|")
-        + struct_skippable(b"meta")
-        + L.encode_lz4_frame(b"beta")
-    )
-    assert L.decode_lz4(blob) == b"alpha|beta"
-
-
-def struct_skippable(content: bytes) -> bytes:
-    import struct
-
-    return struct.pack("<II", 0x184D2A50, len(content)) + content
-
-
-def test_lz4_validation_named_errors():
-    import struct
-
-    import pytest as _pytest
-
-    from realtime0523_spark.llm import lz4 as L
-
-    with _pytest.raises(ValueError, match="empty payload"):
-        L.decode_lz4(b"")
-    with _pytest.raises(ValueError, match="bad magic"):
-        L.decode_lz4(b"\x00\x11\x22\x33" + bytes(8))
-    with _pytest.raises(NotImplementedError, match="legacy frame"):
-        L.decode_lz4(struct.pack("<I", 0x184C2102) + bytes(8))
-    # header checksum byte
-    good = bytearray(L.encode_lz4_frame(b"hello lz4 world"))
-    good[6] ^= 0xFF  # the HC byte (magic 4 + FLG/BD 2)
-    with _pytest.raises(ValueError, match="header checksum"):
-        L.decode_lz4(bytes(good))
-    # content checksum: flip a byte INSIDE the stored block (the last
-    # 8 frame bytes are EndMark + checksum)
-    good = bytearray(L.encode_lz4_frame(b"hello lz4 world hello lz4"))
-    good[-12] ^= 0xFF
-    with _pytest.raises(ValueError, match="checksum mismatch"):
-        L.decode_lz4(bytes(good))
-    # dictionary ID refusal
-    flg = (0b01 << 6) | 0x20 | 0x01
-    desc = bytes([flg, 4 << 4]) + struct.pack("<I", 42)
-    hdr = (
-        struct.pack("<I", 0x184D2204)
-        + desc
-        + bytes([(L.xxh32(desc) >> 8) & 0xFF])
-    )
-    with _pytest.raises(NotImplementedError, match="dictionary"):
-        L.decode_lz4(hdr)
-    # offset reaching before the window
-    bad_block = bytes([0x10, ord("A"), 0x05, 0x00])  # 1 lit, off 5, ml 4
-    frame = (
-        struct.pack("<I", 0x184D2204)
-        + bytes([0b01 << 6 | 0x20, 4 << 4])
-    )
-    frame += bytes([(L.xxh32(frame[4:]) >> 8) & 0xFF])
-    frame += struct.pack("<I", len(bad_block)) + bad_block
-    frame += struct.pack("<I", 0)
-    with _pytest.raises(ValueError, match="before the window"):
-        L.decode_lz4(frame)
-
-
 def test_lz4_decode_auto_and_ingest_twin(spark):
-    """decode_auto dispatches modern LZ4 frames (and the legacy magic
-    to its named refusal), and the docs_lz4_ingest query recovers
-    byte-identical accounting to the gzip twin."""
-    import pytest as _pytest
-
-    from realtime0523_spark.llm import lz4 as L
-    from realtime0523_spark.llm.shards import decode_auto
+    """decode_auto dispatches modern LZ4 frames, also behind a
+    skippable frame (and the legacy magic to its named refusal), and
+    the docs_lz4_ingest query recovers byte-identical accounting to
+    the gzip twin."""
+    from realtime0523_spark.llm.shards import decode_auto, encode_frame
     from realtime0523_spark.plans import REGISTRY
 
-    assert decode_auto(L.encode_lz4_frame(b"lz4 shard")) == b"lz4 shard"
-    with _pytest.raises(NotImplementedError, match="legacy frame"):
+    assert decode_auto(encode_frame(b"lz4 shard", "lz4")) == b"lz4 shard"
+    assert (
+        decode_auto(_skippable(b"m") + encode_frame(b"lz4 tail", "lz4"))
+        == b"lz4 tail"
+    )
+    with pytest.raises(NotImplementedError, match="legacy frame"):
         decode_auto(b"\x02\x21\x4c\x18" + bytes(8))
     got = REGISTRY["docs_lz4_ingest"].fn(spark, SF_SMOKE).collect()
     want = REGISTRY["docs_gzip_ingest"].fn(spark, SF_SMOKE).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-
-def test_zstd_decoder_only_paths():
-    """Paths a compliant foreign encoder can emit that our fixture
-    encoder's default shapes don't: RLE literals (all size formats),
-    raw-literal size formats, and the 2-byte Number_of_Sequences
-    header form (>= 128 sequences in one block)."""
-    import random
-
-    from realtime0523_spark.llm import zstd as Z
-
-    # RLE + raw literal section round-trips through the section codec
-    for rs in (1, 5, 31, 32, 300, 4095, 4096, 60000):
-        sec = Z._build_literals_section(b"q" * rs, "rle", "direct", {})
-        lits, used = Z._decode_literals(sec, {}, "t")
-        assert lits == b"q" * rs and used == len(sec)
-        raw = bytes(random.Random(rs).randbytes(rs))
-        sec = Z._build_literals_section(raw, "raw", "direct", {})
-        lits, used = Z._decode_literals(sec, {}, "t")
-        assert lits == raw and used == len(sec)
-    # >=128 sequences in one block: 2-byte n_seq header form
-    rng = random.Random(99)
-    pieces = [rng.randbytes(8) for _ in range(40)]
-    t = b"".join(rng.choice(pieces) for _ in range(1200))
-    for kw in (
-        dict(lit_mode="raw", seq_mode="predefined"),
-        dict(lit_mode="huffman", weights_mode="fse", seq_mode="fse"),
-    ):
-        frame = Z.encode_zstd_frame(t, **kw)
-        assert Z.decode_zstd(frame) == t
-    # count the sequences the encoder actually emitted to pin the
-    # header form exercised
-    seqs, _ = Z._lz77(t)
-    assert len(seqs) >= 128, len(seqs)
-    # and the header codec itself round-trips all three forms
-    for n in (0, 1, 127, 128, 300, 32511, 32512, 50000):
-        blob = bytearray()
-        if n < 128:
-            blob.append(n)
-        elif n <= 0x7EFF:
-            blob += bytes([128 + (n >> 8), n & 0xFF])
-        else:
-            v = n - 0x7F00
-            blob += bytes([255, v & 0xFF, (v >> 8) & 0xFF])
-        got, _ = Z._sequences_header(bytes(blob) + b"\x00", 0, "t")
-        assert got == n, (n, got)
 
 
 # ----------------------------------------------------------------------
@@ -3395,23 +3305,6 @@ def test_media_decode_jpeg_lossless_matches_png_twin(spark):
     assert sorted(map(tuple, jls.collect())) == sorted(
         map(tuple, png.collect())
     )
-
-
-def test_lz4_xxh32_known_vectors():
-    """Pin xxh32 against the published reference vectors (the lz4
-    frame format's header/block/content checksums all derive from
-    it): empty input 0x02CC5D05, 'a' 0x550D7456, 'abc' 0x32D153FF,
-    plus seed sensitivity and a >16-byte input that exercises the
-    4-lane stripe path."""
-    from realtime0523_spark.llm.lz4 import xxh32
-
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"a") == 0x550D7456
-    assert xxh32(b"abc") == 0x32D153FF
-    assert xxh32(b"abc", seed=1) != xxh32(b"abc")
-    long = bytes(range(256))
-    assert xxh32(long) == xxh32(bytes(long))  # determinism
-    assert xxh32(long[:16]) != xxh32(long[:17])
 
 
 def test_jpeg_lossless_out_of_range_reconstruction_raises():

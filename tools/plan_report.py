@@ -359,15 +359,14 @@ AUDITED: dict[str, str] = {
         "stage, shard-parallel by construction"
     ),
     "docs_lz4_ingest": (
-        "map-only: LZ4-frame fixture kernel (5 frame shapes) -> "
-        "token/extension block decode + xxh32 verification + byte "
-        "accounting in one Arrow kernel; zero exchanges, one row out "
-        "per shard — the fast-tier twin of the gzip/zstd scans"
+        "map-only: LZ4-frame fixture kernel (2 shard shapes) -> "
+        "pyarrow's LZ4 frame decode + byte accounting in one Arrow "
+        "kernel; zero exchanges, one row out per shard — the "
+        "fast-tier twin of the gzip/zstd scans"
     ),
     "docs_zstd_ingest": (
-        "map-only: zstd frame fixture kernel (6 frame shapes) -> "
-        "full RFC 8878 decode (FSE/Huffman entropy, sequences, "
-        "XXH64 checksum) + byte accounting in one Arrow kernel; "
+        "map-only: zstd frame fixture kernel (2 shard shapes) -> "
+        "pyarrow's zstd decode + byte accounting in one Arrow kernel; "
         "zero exchanges, one row out per shard — same "
         "embarrassingly-parallel ingestion scan as the gzip twin, "
         "for the .zst corpora modern dumps actually ship"

@@ -161,9 +161,9 @@ PROBES = [
     "docs_warc_extract",   # .warc.gz two-layer parse, map-only (r11)
     "stream_warc_ingest",  # streaming shard parse + |langs|-row running agg (r11)
     "media_decode_jpeg_progressive",  # SOF2 multi-scan decode, map-only (r12)
-    "docs_zstd_ingest",    # RFC8878 FSE/Huffman decode, map-only (r13)
+    "docs_zstd_ingest",    # zstd frame decode (pyarrow), map-only
     "media_decode_jpeg_lossless",  # T.81 Annex-H SOF3 decode, map-only (r13)
-    "docs_lz4_ingest",     # LZ4 frame token decode, map-only (r13)
+    "docs_lz4_ingest",     # LZ4 frame decode (pyarrow), map-only
 ]
 
 # Library paths without their own registry entry, probed as callables:
