@@ -435,7 +435,8 @@ def warc_extract_stats(
 
 _FRAME_MAGIC = {"zstd": b"\x28\xb5\x2f\xfd", "lz4": b"\x04\x22\x4d\x18"}
 _LZ4_LEGACY_MAGIC = b"\x02\x21\x4c\x18"
-_SHARD_META = struct.pack("<II", 0x184D2A53, 10) + b"shard-meta"
+_META = b"shard-meta"
+_SHARD_META = struct.pack("<II", 0x184D2A53, len(_META)) + _META
 
 
 def _first_frame_magic(raw: bytes) -> tuple[int, bytes]:
