@@ -23,6 +23,12 @@ from pyspark.sql import functions as F
 
 from realtime0523_spark.functions.scalar import round2
 
+# The F1 detail order: a deterministic total order within an order
+# group. l_linenumber is NOT unique per order in the lineitem data, so
+# tiebreakers are required, and the order decides which detail takes
+# the remainder — every allocation caller and oracle must share it.
+DETAIL_ORDER = ["l_linenumber", "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"]
+
 
 def allocate_order_amount(
     details: DataFrame,

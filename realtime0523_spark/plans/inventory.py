@@ -27,7 +27,7 @@ from realtime0523_spark.functions.scalar import (
     round2,
     status_decode,
 )
-from realtime0523_spark.operators.allocation import allocate_order_amount
+from realtime0523_spark.operators.allocation import DETAIL_ORDER, allocate_order_amount
 from realtime0523_spark.operators.dedup import (
     dedup_first_by_key,
     distinct_daily_users,
@@ -212,11 +212,9 @@ def _r2(x: str) -> str:
     return f"floor(({x}) * 100 + 0.5) / 100"
 
 
-# Deterministic total order within an order group: l_linenumber is NOT
-# unique per order in the driver data, so tiebreakers are required for
-# the allocation/running-sum semantics to be well-defined.
-_DETAIL_ORDER = ["l_linenumber", "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"]
-_DETAIL_ORDER_SQL = ", ".join(_DETAIL_ORDER)
+# The F1 detail order (operators.allocation.DETAIL_ORDER) as an SQL
+# ORDER BY list, so the oracles rank details the way the engine does.
+_DETAIL_ORDER_SQL = ", ".join(DETAIL_ORDER)
 
 
 # ----------------------------------------------------------------------
@@ -373,7 +371,7 @@ def q_first_order_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Catalog(spark, sf_dir).table("lineitem")
     out = running_sum(
-        li, "l_orderkey", _DETAIL_ORDER, "l_extendedprice", "__run"
+        li, "l_orderkey", DETAIL_ORDER, "l_extendedprice", "__run"
     )
     return out.select(
         "l_orderkey", "l_linenumber", round2(F.col("__run")).alias("running_amount")
@@ -536,7 +534,7 @@ def q_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = allocate_order_amount(
         joined,
         order_key="l_orderkey",
-        detail_order_by=_DETAIL_ORDER,
+        detail_order_by=DETAIL_ORDER,
         weight="l_extendedprice",
         order_total="o_totalprice",
     )
@@ -589,7 +587,7 @@ def q_stream_allocation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "o_detail_count", F.count(F.lit(1)).over(by_order).cast("int")
         )
-        .withColumn("__rn", F.row_number().over(by_order.orderBy(*_DETAIL_ORDER)))
+        .withColumn("__rn", F.row_number().over(by_order.orderBy(*DETAIL_ORDER)))
         .withColumn(
             "__chunk", F.expr(f"((__rn - 1) * {n_chunks}) div o_detail_count")
         )
@@ -644,7 +642,7 @@ def q_stream_allocation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(feed)
     )
     out = run_to_memory(
-        streaming_allocation_split(src, _DETAIL_ORDER), output_mode="update"
+        streaming_allocation_split(src, DETAIL_ORDER), output_mode="update"
     )
     return detach_and_cleanup(out, work)
 
@@ -673,7 +671,7 @@ def q_brand_amount(spark: SparkSession, sf_dir: str) -> DataFrame:
     alloc = allocate_order_amount(
         joined,
         order_key="l_orderkey",
-        detail_order_by=_DETAIL_ORDER,
+        detail_order_by=DETAIL_ORDER,
         weight="l_extendedprice",
         order_total="o_totalprice",
     )
@@ -1178,13 +1176,6 @@ def q_stream_brand_amount(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_dir=f"{work}/partials",
             checkpoint_dir=f"{work}/ckpt",
             no_data_batches=False,  # inner join, drain-and-stop
-            # event-time horizon on the co-arrival guard's key log
-            # (round-12): join tolerance (50 s) + state TTL (100 s) —
-            # keys last seen further back can't traverse the
-            # watermarked join again, so the at-rest log stays
-            # horizon-bounded instead of O(total distinct orders)
-            guard_ts_col="l_commit_ts",
-            guard_horizon_ms=150_000,
         ),
         work,
     )

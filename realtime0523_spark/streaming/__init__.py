@@ -1,6 +1,6 @@
 from realtime0523_spark.streaming.sources import stream_table, cdc_json_stream, CDC_ENVELOPE
 from realtime0523_spark.streaming.runner import run_to_memory
-from realtime0523_spark.streaming.router import route_cdc, run_router_to_parquet
+from realtime0523_spark.streaming.router import route_cdc
 from realtime0523_spark.streaming.dau import streaming_dau
 from realtime0523_spark.streaming.order_wide import streaming_order_wide
 from realtime0523_spark.streaming.first_seen import streaming_first_seen
@@ -12,7 +12,6 @@ __all__ = [
     "CDC_ENVELOPE",
     "run_to_memory",
     "route_cdc",
-    "run_router_to_parquet",
     "streaming_dau",
     "streaming_order_wide",
     "streaming_first_seen",

@@ -77,6 +77,9 @@ from realtime0523_spark.streaming.bucketed_state import apply_bucketed
 # The reference's Redis TTL on the :ori/:split accumulators
 # (scala/…/dws/OrderWiderApp.scala:189,191).
 STATE_TTL_MS = 100_000
+# The co-arrival guard's event-time horizon: the DWS join tolerance
+# (50 s, OrderWiderApp's window span) plus the allocation TTL.
+GUARD_HORIZON_MS = 50_000 + STATE_TTL_MS
 
 _OUT_SCHEMA = (
     "l_orderkey long, l_linenumber int, l_partkey long, "
@@ -338,11 +341,8 @@ def streaming_allocation_split(
 def co_arrival_guard(
     spark,
     keys_dir: str,
-    key_col: str = "l_orderkey",
     compact_every: int = 32,
     checkpoint_dir: str | None = None,
-    horizon_ms: int | None = None,
-    ts_col: str | None = None,
 ):
     """Runtime enforcement of the PER-BATCH allocation's co-arrival
     contract (the alternative to this module's running-sum state): the
@@ -361,20 +361,18 @@ def co_arrival_guard(
     always-on stage would otherwise re-read every batch's key file on
     every batch, O(batches²) I/O over the run.
 
-    GROWTH: with no horizon the base
-    retains every distinct key for the run's lifetime, so the per-batch
-    semi-join grows O(total distinct orders) — exact forever, but NOT
-    synopsis-sized on an unbounded run. The EVENT-TIME horizon
-    (`horizon_ms=H`, requires `ts_col`) bounds it: each committed key
-    carries its batch's max event time; at compaction, keys whose
-    last-seen event time is more than H ms behind the log's newest
-    event time are pruned. Sound when H ≥ the upstream join tolerance
-    + state TTL: a detail for an order last seen that far back in
-    EVENT time can no longer traverse the watermarked DWS join (it
-    would be dropped and FAIL the loud watermark-drop check there), so
-    the guard can never legally be asked about it again. Pruning
-    compares event time to event time, so it is immune to
-    trigger-cadence drift and replay wall-clock skew.
+    GROWTH is bounded by an EVENT-TIME horizon, `GUARD_HORIZON_MS`:
+    each committed key carries its batch's max `l_commit_ts`; at
+    compaction, keys whose last-seen event time is more than the
+    horizon behind the log's newest event time are pruned. Sound
+    because the horizon is the upstream join tolerance + state TTL: a
+    detail for an order last seen that far back in EVENT time can no
+    longer traverse the watermarked DWS join (it would be dropped and
+    FAIL the loud watermark-drop check there), so the guard can never
+    legally be asked about it again. Pruning compares event time to
+    event time, so it is immune to trigger-cadence drift and replay
+    wall-clock skew, and the at-rest log stays O(orders inside the
+    horizon), never O(total distinct orders).
 
     RUN SCOPING: the log is keyed by batch_id, and
     batch ids RESTART at 0 with a fresh checkpoint — so reusing an
@@ -387,18 +385,10 @@ def co_arrival_guard(
     continue the same sequence.
 
     Returns ``check(keys_df, batch_id)`` for use inside foreachBatch;
-    `keys_df` is the batch's distinct key column — with `horizon_ms`
-    set it must instead be the batch's (key, ts_col) projection (not
+    `keys_df` is the batch's (l_orderkey, l_commit_ts) projection (not
     necessarily distinct; the guard folds per-key max event time)."""
     import os
     import shutil
-
-    if horizon_ms is not None and ts_col is None:
-        raise ValueError(
-            "co_arrival_guard: horizon_ms requires ts_col — the "
-            "event-time horizon prunes by each key's last-seen event "
-            "time, so the batch key sets must carry one"
-        )
 
     from realtime0523_spark.streaming.compaction import (
         base_watermark,
@@ -428,69 +418,52 @@ def co_arrival_guard(
         shutil.rmtree(keys_dir, ignore_errors=True)
         shutil.rmtree(base_dir, ignore_errors=True)
         has_log = False
-    if horizon_ms is not None and has_log:
-        # live-checkpoint restart KEEPS the log — but a legacy log
-        # written by a run without an event-time horizon has no
-        # __ts_ms column, and the first check()'s unionByName would
-        # then fail as an opaque AnalysisException mid-stream.
-        # Detect it at construction and raise a
-        # named config error instead: the guard cannot backfill
-        # last-seen event times it never recorded.
-        wm0 = base_watermark(base_dir)
-        pieces = []
-        if wm0 >= 0:
-            pieces.append(
-                spark.read.parquet(os.path.join(base_dir, f"v_{wm0:09d}"))
-            )
-        if [i for i in partial_ids(keys_dir) if i > wm0]:
-            pieces.append(spark.read.parquet(keys_dir))
-        if any("__ts_ms" not in p.columns for p in pieces):
+    if has_log:
+        # a live-checkpoint restart KEEPS the log; one written by an
+        # older build has no last-seen event times, and the first
+        # check()'s union would fail opaquely mid-stream
+        wm = base_watermark(base_dir)
+        stored = [os.path.join(base_dir, f"v_{wm:09d}")] if wm >= 0 else []
+        if any(i > wm for i in partial_ids(keys_dir)):
+            stored.append(keys_dir)
+        if any("__ts_ms" not in spark.read.parquet(p).columns for p in stored):
             raise ValueError(
-                f"co_arrival_guard: horizon_ms={horizon_ms} but the "
-                f"existing key log at {keys_dir!r} was written by a "
-                f"run without an event-time horizon (no __ts_ms "
-                f"column). Restart without horizon_ms to keep the "
-                f"legacy log, or delete the key log "
-                f"({keys_dir!r} and {base_dir!r}) to start recording "
-                f"event times from this run forward."
+                f"co_arrival_guard: the key log at {keys_dir!r} has no "
+                f"__ts_ms column (written without event times, which the "
+                f"horizon prune needs). Delete {keys_dir!r} and "
+                f"{base_dir!r} to start a fresh log."
             )
 
     def _fold(df: "DataFrame") -> "DataFrame":
         # per-key MAX batch_id: replays of a compacted-away batch
         # stay exempt because the check below still sees their
         # batch_id
-        aggs = [F.max("batch_id").alias("batch_id")]
-        if horizon_ms is not None:
-            aggs.append(F.max("__ts_ms").alias("__ts_ms"))
-        out = df.groupBy(key_col).agg(*aggs)
-        if horizon_ms is not None:
-            # the log's newest event time: one scalar reduce over
-            # the relation being folded (compaction cadence only,
-            # never per batch). Pruning against it is conservative
-            # under non-monotonic event time — a stale max prunes
-            # LESS, never a key that could still legally reappear.
-            newest = df.agg(F.max("__ts_ms")).collect()[0][0]
-            if newest is not None:
-                # >= : a key EXACTLY horizon_ms behind the newest
-                # event time survives the prune. The soundness
-                # claim is "H ≥ tolerance + TTL", and Spark keeps
-                # rows exactly at the watermark — so the boundary
-                # key is the last one the upstream join could
-                # still legally emit a detail for (pinned by the
-                # boundary test).
-                out = out.filter(F.col("__ts_ms") >= newest - horizon_ms)
+        out = df.groupBy("l_orderkey").agg(
+            F.max("batch_id").alias("batch_id"),
+            F.max("__ts_ms").alias("__ts_ms"),
+        )
+        # the log's newest event time: one scalar reduce over the
+        # relation being folded (compaction cadence only, never per
+        # batch). Pruning against it is conservative under
+        # non-monotonic event time — a stale max prunes LESS, never a
+        # key that could still legally reappear.
+        newest = df.agg(F.max("__ts_ms")).collect()[0][0]
+        if newest is not None:
+            # >= : a key EXACTLY the horizon behind the newest event
+            # time survives the prune. Spark keeps rows exactly at the
+            # watermark, so the boundary key is the last one the
+            # upstream join could still legally emit a detail for
+            # (pinned by the boundary test).
+            out = out.filter(F.col("__ts_ms") >= newest - GUARD_HORIZON_MS)
         return out
 
     def check(keys: "DataFrame", batch_id: int) -> None:
         os.makedirs(keys_dir, exist_ok=True)
-        if horizon_ms is not None:
-            # per-key max event time, epoch ms — the provenance the
-            # event-time prune reads at compaction
-            keys = keys.groupBy(key_col).agg(
-                F.unix_millis(
-                    F.max(F.col(ts_col)).cast("timestamp")
-                ).alias("__ts_ms")
-            )
+        # per-key max event time, epoch ms — the provenance the
+        # event-time prune reads at compaction
+        keys = keys.groupBy("l_orderkey").agg(
+            F.unix_millis(F.max("l_commit_ts").cast("timestamp")).alias("__ts_ms")
+        )
         committed = committed_relation(
             spark, keys_dir, base_dir, keep_batch_id=True
         )
@@ -498,7 +471,7 @@ def co_arrival_guard(
             prior = committed.filter(F.col("batch_id") < batch_id)
             dupes = [
                 r[0]
-                for r in keys.join(prior, key_col, "semi").limit(5).collect()
+                for r in keys.join(prior, "l_orderkey", "semi").limit(5).collect()
             ]
             if dupes:
                 raise RuntimeError(

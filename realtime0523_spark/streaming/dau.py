@@ -3,15 +3,17 @@
 Reference: scala/…/app/Dau.scala:104-123 — Redis `SADD <dt>dau mid`
 with a 24 h TTL; first insertion wins; downstream counts the set.
 
-Ours: event-time watermark + `dropDuplicatesWithinWatermark` on
-(dt, mid). The watermark IS the TTL (T4): a key's dedup state is
-evicted once the watermark passes its event time + the TTL, bounding
-state exactly like the Redis `expire` — but driven by event time, not
-wall clock, so replays are correct. (Plain `dropDuplicates` on a
-subset WITHOUT the event-time column never evicts — Spark only applies
-watermark eviction to dedup state when the time column is among the
-keys — so the TTL claim would be false and state would grow one entry
-per (day, device) forever; the round-10 review caught this.)
+Ours: the first-sighting dedup (streaming/dedup.streaming_dedup) on
+(dt, mid) with a 24 h event-time TTL, shared by the registered query
+and the live topology's DAU stage. The watermark IS the TTL (T4): a
+key's dedup state is evicted once the watermark passes its event time
++ 24 h, bounding state exactly like the Redis `expire` — but driven by
+event time, not wall clock, so replays are correct. At-most-once per
+(dt, mid) holds because the TTL is the day bucket's width: by the time
+a key's state evicts, every same-day event is below the watermark and
+drops as late, so a post-TTL revisit is dropped, never re-counted (a
+shorter TTL would let an evicted key's later same-day event re-emit
+and double-count the user).
 """
 
 from __future__ import annotations
@@ -19,49 +21,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from realtime0523_spark.streaming.dedup import streaming_dedup
 
-_TTL_UNITS_SECONDS = {
-    "second": 1, "seconds": 1, "minute": 60, "minutes": 60,
-    "hour": 3600, "hours": 3600, "day": 86400, "days": 86400,
-    "week": 604800, "weeks": 604800,
-}
+
+def dau_members(events: DataFrame, ts_col: str, user_col: str) -> DataFrame:
+    """Each day's first sighting of each device: one (dt, mid, ts_col)
+    row per daily active device, emitted once (append output)."""
+    day = events.select(
+        F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("dt"),
+        F.col(user_col).alias("mid"),
+        F.col(ts_col),
+    )
+    return streaming_dedup(day, ["dt", "mid"], ts_col, "24 hours")
 
 
 def streaming_dau(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    state_ttl: str = "24 hours",
+    events: DataFrame, ts_col: str = "ts", user_col: str = "user_id"
 ) -> DataFrame:
     """Per-day distinct-user counts over a stream. Output mode:
-    complete (per-dt counts updated as batches arrive).
-
-    `state_ttl` must be ≥ 24 hours (validated): at-most-once per
-    (dt, mid) holds because by the time a key's dedup state evicts,
-    every same-day event is below the watermark and drops as late —
-    a TTL shorter than the day bucket would let an evicted key's
-    later same-day event re-emit and DOUBLE-COUNT the user (round-10
-    review finding)."""
-    parts = state_ttl.split()
-    if (
-        len(parts) != 2
-        or not parts[0].lstrip("-").isdigit()
-        or parts[1].lower() not in _TTL_UNITS_SECONDS
-        or int(parts[0]) * _TTL_UNITS_SECONDS[parts[1].lower()] < 86400
-    ):
-        raise ValueError(
-            f"streaming_dau: state_ttl {state_ttl!r} must be a "
-            f"'<n> <unit>' interval of at least 24 hours — a shorter "
-            f"TTL breaks the at-most-once-per-(dt, mid) invariant "
-            f"(an evicted key's later same-day event would re-count)"
-        )
-    deduped = (
-        events.withWatermark(ts_col, state_ttl)
-        .select(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("dt"),
-            F.col(user_col).alias("mid"),
-            F.col(ts_col),
-        )
-        .dropDuplicatesWithinWatermark(["dt", "mid"])
+    complete (per-dt counts updated as batches arrive)."""
+    return dau_members(events, ts_col, user_col).groupBy("dt").agg(
+        F.count(F.lit(1)).alias("dau")
     )
-    return deduped.groupBy("dt").agg(F.count(F.lit(1)).alias("dau"))

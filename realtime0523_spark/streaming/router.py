@@ -6,8 +6,9 @@ on any op), then produce to topic `"ods_" + table`.
 
 Our shape: one declarative filter + a `topic` column. The Kafka sink
 routes on the `topic` column natively (built-in fan-out — no
-per-record producer loop); the parquet variant partitions by topic,
-which at 100 TB is a partitioned-table write with per-topic pruning.
+per-record producer loop); the topology's ODS stage writes the routed
+rows partitioned by topic, which at 100 TB is a partitioned-table
+write with per-topic pruning.
 """
 
 from __future__ import annotations
@@ -45,24 +46,3 @@ def route_cdc(envelope: DataFrame) -> DataFrame:
         "topic", F.concat(F.lit("ods_"), F.col("table"))
     )
 
-
-def run_router_to_parquet(
-    envelope_stream: DataFrame, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Fan out the routed stream to per-topic parquet partitions (the
-    Kafka-less stand-in for the per-topic producer at
-    KafkaToODS_M.scala:65-67; partitionBy gives one directory per
-    topic, prunable downstream)."""
-    routed = route_cdc(envelope_stream).select(
-        "topic", "table", "type", F.to_json(F.col("data")).alias("value"), "ts"
-    )
-    q = (
-        routed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("topic")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()

@@ -53,8 +53,8 @@ span) keeps every pair while bounding state, across ANY batch
 boundary placement. Monotonically non-decreasing feed `ts` (what a CDC
 log delivers) keeps late-arriving waves inside the watermark horizon.
 
-ALLOCATION MODES (round-10: the co-arrival contract is now both
-GUARDED and ESCAPABLE):
+ALLOCATION MODES (the co-arrival contract is both GUARDED and
+ESCAPABLE):
 
 - Default (``split_arrival=False``): the F1 exact-sum allocation at
   ADS normalizes by the weight sum of the order's details PRESENT IN
@@ -65,11 +65,13 @@ GUARDED and ESCAPABLE):
   visible). This is the reference's own data contract — an order
   and its details are written in one DB transaction and arrive as one
   CDC batch (the same co-arrival assumption OrderWiderApp's 50 s
-  window join + Redis allocation encode). The contract is now a
-  RUNTIME GUARD, not just a docstring: the ADS stage commits each
-  batch's order-key set (synopsis-sized) and RAISES when an order key
+  window join + Redis allocation encode). The contract is a RUNTIME
+  GUARD, not just a docstring: the ADS stage commits each batch's
+  order-key set (synopsis-sized) and RAISES when an order key
   reappears in a later batch — a violating feed fails loudly instead
-  of silently double-counting o_totalprice.
+  of silently double-counting o_totalprice. The stage runs the same
+  per-batch step as the registered `streaming_brand_amount` query
+  (streaming/ads.guarded_brand_partial).
 - ``split_arrival=True``: the ADS stage runs the reference's Redis
   running-sum design instead (streaming/allocation.py —
   applyInPandasWithState, 100 s event-time TTL,
@@ -81,13 +83,14 @@ GUARDED and ESCAPABLE):
   o_detail_count), exactly as the reference's order_info carries
   original_total_amount.
 
-DAU STAGE (round-10): the reference runs Dau concurrently with the
-warehouse apps on a FASTER 3 s trigger against the start-log topic
+DAU STAGE: the reference runs Dau concurrently with the warehouse apps
+on a FASTER 3 s trigger against the start-log topic
 (scala/…/app/Dau.scala:42, local[4] Seconds(3)); the topology runs it
 as a sixth concurrent stage over its own `in_start` directory feed —
-watermarked (dt, mid) dropDuplicates (D1; the Redis SADD+TTL analog,
-streaming/dau.py) with each batch's NEW members committed
-idempotently, at 3/5 of the warehouse cadence.
+the registered query's (dt, mid) first-sighting dedup
+(streaming/dau.dau_members; D1, the Redis SADD+TTL analog) with each
+batch's NEW members committed idempotently, at 3/5 of the warehouse
+cadence.
 """
 
 from __future__ import annotations
@@ -98,11 +101,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime0523_spark.functions.scalar import round2
-from realtime0523_spark.operators.allocation import allocate_order_amount
+from realtime0523_spark.operators.allocation import DETAIL_ORDER
+from realtime0523_spark.streaming.ads import (
+    brand_partial,
+    fold_brand_partials,
+    guarded_brand_partial,
+)
 from realtime0523_spark.streaming.compaction import (
     committed_relation,
     maybe_compact,
 )
+from realtime0523_spark.streaming.dau import dau_members
 from realtime0523_spark.streaming.router import route_cdc
 from realtime0523_spark.streaming.runner import _stream_shuffle, watermark_drops
 from realtime0523_spark.streaming.sinks import (
@@ -145,14 +154,6 @@ DWS_WIDE_SCHEMA_SPLIT = (
     DWS_WIDE_SCHEMA + ", o_weight_total double, o_detail_count int"
 )
 START_LOG_SCHEMA = "mid string, ts long"
-
-_DETAIL_ORDER = [
-    "l_linenumber",
-    "l_partkey",
-    "l_suppkey",
-    "l_extendedprice",
-    "l_quantity",
-]
 
 
 def _row_parts(data_dir: str) -> list[str]:
@@ -510,7 +511,7 @@ class FiveLayerTopology:
         )
         # l_commit_ts rides on the DWS topic in BOTH modes: split mode
         # feeds it to the running-sum allocation's watermark, per-batch
-        # mode to the co-arrival guard's event-time horizon (round-12)
+        # mode to the co-arrival guard's event-time horizon
         wide = streaming_order_wide(
             o, d,
             order_ts="o_commit_ts",
@@ -535,16 +536,9 @@ class FiveLayerTopology:
             )
         return dim
 
-    # ---- partials compaction (round-11): the fold each family's
-    # reader applies is distributive (a sum per brand; a set union of
-    # member cells), so base ∪ fresh re-folded equals folding all
-    # history — the shared-protocol legality condition ---------------
-
-    @staticmethod
-    def _ads_fold(df: DataFrame) -> DataFrame:
-        from realtime0523_spark.streaming.ads import fold_brand_partials
-
-        return fold_brand_partials(df)
+    # ---- partials compaction: the fold each family's reader applies
+    # is distributive (a sum per brand; a set union of member cells),
+    # so base ∪ fresh re-folded equals folding all history ------------
 
     @staticmethod
     def _dau_fold(df: DataFrame) -> DataFrame:
@@ -554,27 +548,11 @@ class FiveLayerTopology:
         # gc_grace: ads_result()/dau_result() may run CONCURRENTLY with
         # a live stage's compaction — one superseded generation is kept
         # so an in-flight reader's resolved snapshot stays scannable
-        # (round-11 review; see compaction.compact_to_base)
+        # (see compaction.compact_to_base)
         maybe_compact(
             self.spark, partial_dir, base_dir, fold, self.compact_every,
             gc_grace=True,
         )
-
-    def _commit_brand_partial(
-        self, alloc: DataFrame, batch_id: int, commit
-    ) -> None:
-        brand = F.broadcast(
-            self._require_dim().select(
-                F.col("p_partkey").alias("l_partkey"), "p_brand"
-            )
-        )
-        partial = (
-            alloc.join(brand, "l_partkey", "left")
-            .groupBy("p_brand")
-            .agg(F.sum("final_detail_amount").alias("partial_amount"))
-        )
-        commit(partial, batch_id)
-        self._maybe_compact(self.ads_dir, self.ads_base_dir, self._ads_fold)
 
     def _start_ads(self):
         """ADS brand revenue (F1+J5+K5; ads/TradeMarkAmountApp.scala):
@@ -582,8 +560,9 @@ class FiveLayerTopology:
         reference's per-batch dim read), partial sums committed
         idempotently. Two allocation modes (module docstring):
 
-        - default: per-batch exact-sum allocation, REQUIRING the
-          co-arrival contract — now enforced at runtime: each batch's
+        - default: the registered query's per-batch step
+          (ads.guarded_brand_partial) — exact-sum allocation REQUIRING
+          the co-arrival contract, enforced at runtime: each batch's
           order-key set is committed (synopsis-sized, idempotent) and
           a key reappearing in a later batch RAISES, because the
           per-batch allocation would absorb the full o_totalprice in
@@ -591,8 +570,13 @@ class FiveLayerTopology:
         - split_arrival: the reference's cross-batch running-sum
           state (streaming/allocation.py, bucketed keyed state) allocates
           each detail as it arrives — split feeds are CORRECT, no
-          co-arrival needed."""
+          co-arrival needed — and only the brand sum
+          (ads.brand_partial) follows."""
         commit = idempotent_batch_writer(self.ads_dir)
+
+        def commit_partial(partial: DataFrame, batch_id: int) -> None:
+            commit(partial, batch_id)
+            self._maybe_compact(self.ads_dir, self.ads_base_dir, fold_brand_partials)
 
         if self.split_arrival:
             from realtime0523_spark.streaming.allocation import (
@@ -606,7 +590,7 @@ class FiveLayerTopology:
             # bucket count raises BucketStateMismatch instead of
             # re-keying in-flight orders
             alloc_stream = streaming_allocation_split(
-                src, _DETAIL_ORDER, ts_col="l_commit_ts"
+                src, DETAIL_ORDER, ts_col="l_commit_ts"
             )
 
             def process_split(batch_df: DataFrame, batch_id: int) -> None:
@@ -616,7 +600,9 @@ class FiveLayerTopology:
                 try:
                     if batch_df.isEmpty():
                         return
-                    self._commit_brand_partial(batch_df, batch_id, commit)
+                    commit_partial(
+                        brand_partial(batch_df, self._require_dim()), batch_id
+                    )
                 finally:
                     batch_df.unpersist()
 
@@ -625,76 +611,42 @@ class FiveLayerTopology:
             )
 
         src = self.spark.readStream.text(self.dws_dir)
-        # CO-ARRIVAL GUARD (round-9 advice): the per-batch allocation
-        # silently double-counts a split order, so a reappearing order
-        # key is a loud contract failure (shared helper — the
-        # registered streaming ADS query enforces the same contract).
         from realtime0523_spark.streaming.allocation import co_arrival_guard
 
         guard = co_arrival_guard(
             self.spark,
             self.ads_keys_dir,
             checkpoint_dir=os.path.join(self.root, "ckpt", "ads"),
-            # event-time horizon (round-12): join tolerance (50 s) +
-            # allocation state TTL (100 s) — a key last seen further
-            # back in event time can't traverse the DWS watermarked
-            # join again, so its log record is safely pruned at
-            # compaction and the always-on key log stays
-            # horizon-bounded instead of O(total distinct orders)
-            horizon_ms=150_000,
-            ts_col="l_commit_ts",
         )
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
             rows = topic_batch(self.spark, batch_df, DWS_WIDE_SCHEMA)
             if rows is None:
                 return
-            guard(rows.select("l_orderkey", "l_commit_ts"), batch_id)
-            alloc = allocate_order_amount(
-                rows,
-                order_key="l_orderkey",
-                detail_order_by=_DETAIL_ORDER,
-                weight="l_extendedprice",
-                order_total="o_totalprice",
+            commit_partial(
+                guarded_brand_partial(rows, batch_id, guard, self._require_dim()),
+                batch_id,
             )
-            self._commit_brand_partial(alloc, batch_id, commit)
 
         return self._foreach_batch_query("ads", src, process)
 
     def _start_dau(self):
         """Sixth concurrent stage — the reference's Dau app at its
         faster cadence (scala/…/app/Dau.scala:42 Seconds(3);
-        :104-123 Redis SADD + 24 h TTL): watermarked (dt, mid)
-        dropDuplicates over the start-log feed, each batch's NEW
-        members committed idempotently. The final count is a groupBy
-        over committed members — associative, so batch boundaries,
-        replays, and the mid-run restart cannot change it."""
-        src = (
+        :104-123 Redis SADD + 24 h TTL): the registered query's
+        (dt, mid) first sighting (dau.dau_members) over the start-log
+        feed, each batch's NEW members committed idempotently. The
+        final count is a groupBy over committed members — associative,
+        so batch boundaries, replays, and the mid-run restart cannot
+        change it."""
+        events = (
             self.spark.readStream.schema(START_LOG_SCHEMA)
             .json(self.in_start_dir)
             .select(
                 F.col("mid"), F.timestamp_millis(F.col("ts")).alias("event_ts")
             )
-            .withWatermark("event_ts", "24 hours")
-            .select(
-                F.date_format("event_ts", "yyyy-MM-dd").alias("dt"),
-                "mid",
-                "event_ts",
-            )
-            # WithinWatermark, not plain dropDuplicates: a subset
-            # without the event-time column never evicts its state
-            # (the 24 h TTL claim would be false and the always-on
-            # stage would grow unboundedly — round-10 review finding).
-            # At-most-once per (dt, mid) still holds because the
-            # watermark delay equals the TTL: by the time a key's
-            # state evicts (watermark > first_ts + 24 h), every
-            # same-day event is below the watermark and drops as late
-            # — post-TTL revisits are silently dropped, never
-            # re-counted (requires TTL ≥ the day bucket width, which
-            # streaming_dau validates)
-            .dropDuplicatesWithinWatermark(["dt", "mid"])
-            .select("dt", "mid")
         )
+        src = dau_members(events, "event_ts", "mid").select("dt", "mid")
         commit = idempotent_batch_writer(self.dau_dir)
 
         def process(batch_df: DataFrame, batch_id: int) -> None:

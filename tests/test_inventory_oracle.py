@@ -34,10 +34,18 @@ def test_query_matches_oracle(spark, con, name):
     _assert_matches_oracle(spark, con, name)
 
 
-# the fast tier's oracle smoke: the streaming keyed-state queries and
-# the batch allocation they must agree with
+# the fast tier's oracle smoke: the streaming keyed-state queries, the
+# batch allocation they must agree with, and the registered ADS and DAU
+# queries, which run the live topology's per-batch code
 @pytest.mark.parametrize(
-    "name", ["allocation", "stream_allocation_split", "stream_first_seen"]
+    "name",
+    [
+        "allocation",
+        "stream_allocation_split",
+        "stream_first_seen",
+        "stream_brand_amount",
+        "stream_dau",
+    ],
 )
 def test_query_matches_oracle_smoke(spark, con, name):
     _assert_matches_oracle(spark, con, name)

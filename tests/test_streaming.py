@@ -14,14 +14,14 @@ from realtime0523_spark.core.catalog import Catalog
 from realtime0523_spark.streaming.dau import streaming_dau
 from realtime0523_spark.streaming.first_seen import streaming_first_seen
 from realtime0523_spark.streaming.order_wide import streaming_order_wide
-from realtime0523_spark.streaming.router import route_cdc, run_router_to_parquet
+from realtime0523_spark.streaming.router import route_cdc
 from realtime0523_spark.streaming.runner import run_foreach_batch, run_to_memory
 from realtime0523_spark.streaming.sinks import (
     idempotent_batch_writer,
     latest_dim_version,
     versioned_dim_upsert,
 )
-from realtime0523_spark.streaming.sources import cdc_json_stream, stream_table
+from realtime0523_spark.streaming.sources import CDC_ENVELOPE, stream_table
 from tests.conftest import SF_SMOKE
 
 
@@ -151,9 +151,9 @@ CDC_ROWS = [
 def test_cdc_router_predicate_and_fanout(spark, tmp_path):
     in_dir = tmp_path / "cdc_in"
     _write_cdc_batch(str(in_dir / "b0.json"), CDC_ROWS)
-    out_dir, ckpt = str(tmp_path / "ods"), str(tmp_path / "ckpt")
-    run_router_to_parquet(cdc_json_stream(spark, str(in_dir)), out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
+    got = route_cdc(spark.read.schema(CDC_ENVELOPE).json(str(in_dir))).select(
+        "topic", F.to_json(F.col("data")).alias("value")
+    )
     topics = {r.topic: r.n for r in got.groupBy("topic").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert topics == {
         "ods_order_info": 1,
@@ -2199,25 +2199,28 @@ def test_stream_allocation_split_restart_resumes_state(
 
 
 def test_streaming_brand_amount_guard_refuses_split_feed(spark, tmp_path):
-    """The registered streaming ADS path (streaming_brand_amount) now
+    """The registered streaming ADS path (streaming_brand_amount)
     enforces the co-arrival contract at runtime: an order whose detail
     rows land in two micro-batches must RAISE (the per-batch allocation
     would double-count o_totalprice), naming the split-arrival
     alternative."""
+    import datetime
     import time as _time
 
     from realtime0523_spark.streaming.ads import streaming_brand_amount
 
     wide_schema = (
         "l_orderkey long, l_linenumber int, l_partkey long, l_suppkey long, "
-        "l_quantity double, l_extendedprice double, o_totalprice double"
+        "l_quantity double, l_extendedprice double, o_totalprice double, "
+        "l_commit_ts timestamp"
     )
     feed = str(tmp_path / "wide")
     os.makedirs(feed)
     t0 = _time.time()
+    ts = datetime.datetime(2025, 6, 15)
     waves = [
-        [(1, 1, 10, 100, 1.0, 30.0, 100.0)],
-        [(1, 2, 11, 101, 1.0, 70.0, 100.0)],  # same order, later batch
+        [(1, 1, 10, 100, 1.0, 30.0, 100.0, ts)],
+        [(1, 2, 11, 101, 1.0, 70.0, 100.0, ts)],  # same order, later batch
     ]
     for j, rows in enumerate(waves):
         tmp = str(tmp_path / f"_t{j}")
@@ -2250,17 +2253,17 @@ def test_co_arrival_guard_compacts_key_log_and_stays_replay_exempt(
 ):
     """The guard's key log must stay BOUNDED (base snapshot + at most
     compact_every fresh files — an always-on stage re-reading every
-    batch's key file forever is the O(batches²) accretion the round-10
-    review flagged), keep raising on a key from a compacted-away
-    batch, and stay exempt on a replay of the latest batch even after
-    its keys were folded into the base."""
+    batch's key file forever is an O(batches²) accretion), keep
+    raising on a key from a compacted-away batch, and stay exempt on a
+    replay of the latest batch even after its keys were folded into
+    the base."""
     from realtime0523_spark.streaming.allocation import co_arrival_guard
 
     keys_dir = str(tmp_path / "keys")
     guard = co_arrival_guard(spark, keys_dir, compact_every=2)
 
     def batch(*ks):
-        return spark.createDataFrame([(k,) for k in ks], "l_orderkey long")
+        return _keys_batch(spark, *ks)
 
     for i in range(6):
         guard(batch(100 + i), i)
@@ -2460,12 +2463,18 @@ def test_stream_allocation_split_rejects_subsecond_ttl(spark):
 
 
 def _keys_batch(spark, *ks):
-    return spark.createDataFrame([(k,) for k in ks], "l_orderkey long")
+    """A guard input: the order keys, all at one event time (the guard
+    prunes only keys a horizon older than the newest)."""
+    import datetime
+
+    ts = datetime.datetime(2025, 6, 15)
+    return spark.createDataFrame(
+        [(k, ts) for k in ks], "l_orderkey long, l_commit_ts timestamp"
+    )
 
 
 def test_co_arrival_guard_scopes_key_log_to_checkpoint(spark, tmp_path):
-    """Round-10 advice: batch ids restart at 0 with a fresh checkpoint,
-    so a key log left by a prior run would falsely flag legitimately
+    """Batch ids restart at 0 with a fresh checkpoint, so a key log left by a prior run would falsely flag legitimately
     new batches. The guard RESETS the log when the checkpoint has no
     committed offsets, and KEEPS it when offsets exist (a live restart
     whose batch ids continue the same sequence)."""
@@ -2822,9 +2831,9 @@ def test_bucketed_state_codec_refuses_other_version_and_bucket_count():
 
 
 def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):
-    """Round-11 verdict item #3: the guard's at-rest key log must stay
-    bounded by an EVENT-TIME horizon over a long run — keys whose
-    last-seen event time fell more than horizon_ms behind the log's
+    """The guard's at-rest key log must stay bounded by its EVENT-TIME
+    horizon (GUARD_HORIZON_MS, 150 s) over a long run — keys whose
+    last-seen event time fell more than the horizon behind the log's
     newest event time are pruned at compaction (they can no longer
     traverse the upstream watermarked join, so the guard can never
     legally be asked about them again). Flat-fold shape mirrors the
@@ -2834,23 +2843,24 @@ def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):
     horizon."""
     import datetime
 
-    from realtime0523_spark.streaming.allocation import co_arrival_guard
+    from realtime0523_spark.streaming.allocation import (
+        GUARD_HORIZON_MS,
+        co_arrival_guard,
+    )
 
     keys_dir = str(tmp_path / "keys_ev")
-    compact_every, horizon_ms, step_s = 4, 10_000, 5
-    guard = co_arrival_guard(
-        spark, keys_dir, compact_every=compact_every,
-        horizon_ms=horizon_ms, ts_col="ts",
-    )
+    compact_every, step_s = 4, 75
+    assert GUARD_HORIZON_MS == 150_000
+    guard = co_arrival_guard(spark, keys_dir, compact_every=compact_every)
     t0 = datetime.datetime(2025, 6, 15)
 
     def batch(k, sec):
         return spark.createDataFrame(
             [(k, t0 + datetime.timedelta(seconds=sec))],
-            "l_orderkey long, ts timestamp",
+            "l_orderkey long, l_commit_ts timestamp",
         )
 
-    n = 30  # long horizon: one distinct key per batch, 5 s apart
+    n = 30  # long horizon: one distinct key per batch, 75 s apart
     for i in range(n):
         guard(batch(100 + i, step_s * i), i)
     # flat fold, structurally: one live base, < compact_every fresh
@@ -2859,11 +2869,11 @@ def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):
     assert len(bases) == 1
     partials = [d for d in os.listdir(keys_dir) if d.startswith("batch_id=")]
     assert len(partials) < compact_every
-    # horizon-bounded: the base holds only keys seen within horizon_ms
-    # of its newest folded event time (10 s / 5 s-steps = ~2 keys),
+    # horizon-bounded: the base holds only keys seen within the horizon
+    # of its newest folded event time (150 s / 75 s-steps = ~2 keys),
     # never the 30 distinct keys of the run
     base_rows = spark.read.parquet(os.path.join(base, bases[0])).collect()
-    assert len(base_rows) <= horizon_ms // (step_s * 1000) + 1, base_rows
+    assert len(base_rows) <= GUARD_HORIZON_MS // (step_s * 1000) + 1, base_rows
     # false-raise semantics inside the horizon: the newest key raises
     with pytest.raises(RuntimeError, match="co-arrival contract violated"):
         guard(batch(100 + n - 1, step_s * n), n)
@@ -2872,21 +2882,13 @@ def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):
     guard(batch(100, step_s * n), n)
 
 
-def test_co_arrival_guard_horizon_ms_requires_ts_col(spark, tmp_path):
-    from realtime0523_spark.streaming.allocation import co_arrival_guard
-
-    with pytest.raises(ValueError, match="ts_col"):
-        co_arrival_guard(spark, str(tmp_path / "k"), horizon_ms=1000)
-
-
 def test_co_arrival_guard_horizon_never_prunes_early_on_backward_time(
     spark, tmp_path, state_provider
 ):
-    """Round-12 verdict item #6a: event time goes BACKWARD across
-    batches (a late replay wave). The prune compares each key's
-    last-seen event time to the LOG's max event time — a max can only
-    grow, so a backward wave can never advance it, and keys within
-    horizon_ms of the true newest must survive compaction and still
+    """Event time goes BACKWARD across batches (a late replay wave).
+    The prune compares each key's last-seen event time to the LOG's
+    max event time — a max can only grow, so a backward wave can never
+    advance it, and keys within the 150 s horizon of the true newest must survive compaction and still
     raise. (The guard's log is parquet + foreachBatch, not a state
     store, but the contract must hold regardless of the session's
     configured provider — hence the parametrization.)"""
@@ -2895,37 +2897,34 @@ def test_co_arrival_guard_horizon_never_prunes_early_on_backward_time(
     from realtime0523_spark.streaming.allocation import co_arrival_guard
 
     keys_dir = str(tmp_path / "keys_back")
-    guard = co_arrival_guard(
-        spark, keys_dir, compact_every=3, horizon_ms=10_000, ts_col="ts"
-    )
+    guard = co_arrival_guard(spark, keys_dir, compact_every=3)
     t0 = datetime.datetime(2025, 6, 15)
 
     def batch(k, ms):
         return spark.createDataFrame(
             [(k, t0 + datetime.timedelta(milliseconds=ms))],
-            "l_orderkey long, ts timestamp",
+            "l_orderkey long, l_commit_ts timestamp",
         )
 
-    guard(batch(1, 100_000), 0)  # the newest event time the log sees
-    guard(batch(2, 50_000), 1)  # 50 s BACKWARD (late replay)
-    guard(batch(3, 95_000), 2)  # backward too; triggers compaction
-    # compaction folded with newest = 100 s: keys 1 (100 s) and
-    # 3 (95 s) are inside the 10 s horizon and MUST survive — a
+    guard(batch(1, 1_500_000), 0)  # the newest event time the log sees
+    guard(batch(2, 750_000), 1)  # 750 s BACKWARD (late replay)
+    guard(batch(3, 1_425_000), 2)  # backward too; triggers compaction
+    # compaction folded with newest = 1500 s: keys 1 (1500 s) and
+    # 3 (1425 s) are inside the 150 s horizon and MUST survive — a
     # backward wave must never lower the reference point and prune
     # them early
     for key in (1, 3):
         with pytest.raises(RuntimeError, match="co-arrival contract"):
-            guard(batch(key, 40_000), 3)
-    # key 2 (50 s behind the newest) is legally pruned → accepted
-    guard(batch(2, 60_000), 3)
+            guard(batch(key, 600_000), 3)
+    # key 2 (750 s behind the newest) is legally pruned → accepted
+    guard(batch(2, 900_000), 3)
 
 
 def test_co_arrival_guard_horizon_boundary_key_survives(
     spark, tmp_path, state_provider
 ):
-    """Round-12 verdict item #6b: a key whose last-seen event time is
-    EXACTLY horizon_ms behind the log's newest survives the prune
-    (>=). Spark keeps rows exactly at the watermark, so with
+    """A key whose last-seen event time is EXACTLY the horizon
+    (150 s) behind the log's newest survives the prune (>=). Spark keeps rows exactly at the watermark, so with
     H = tolerance + TTL the boundary key is the last one the upstream
     join could still legally emit a detail for; pruning it would be
     an off-by-one unsoundness. One millisecond older is pruned."""
@@ -2934,37 +2933,32 @@ def test_co_arrival_guard_horizon_boundary_key_survives(
     from realtime0523_spark.streaming.allocation import co_arrival_guard
 
     keys_dir = str(tmp_path / "keys_bound")
-    guard = co_arrival_guard(
-        spark, keys_dir, compact_every=3, horizon_ms=10_000, ts_col="ts"
-    )
+    guard = co_arrival_guard(spark, keys_dir, compact_every=3)
     t0 = datetime.datetime(2025, 6, 15)
 
     def batch(k, ms):
         return spark.createDataFrame(
             [(k, t0 + datetime.timedelta(milliseconds=ms))],
-            "l_orderkey long, ts timestamp",
+            "l_orderkey long, l_commit_ts timestamp",
         )
 
-    guard(batch(1, 10_000), 0)  # exactly newest - horizon_ms
-    guard(batch(2, 9_999), 1)  # 1 ms past the boundary
-    guard(batch(3, 20_000), 2)  # newest; triggers compaction
+    guard(batch(1, 150_000), 0)  # exactly newest - horizon
+    guard(batch(2, 149_999), 1)  # 1 ms past the boundary
+    guard(batch(3, 300_000), 2)  # newest; triggers compaction
     # boundary key KEPT: re-arrival still raises
     with pytest.raises(RuntimeError, match="co-arrival contract"):
-        guard(batch(1, 21_000), 3)
+        guard(batch(1, 315_000), 3)
     # 1 ms older than the boundary: pruned, accepted as new
-    guard(batch(2, 21_000), 3)
+    guard(batch(2, 315_000), 3)
 
 
 def test_co_arrival_guard_rejects_legacy_log_without_event_times(
     spark, tmp_path
 ):
-    """Round-12 ADVICE: enabling horizon_ms over a key log a prior
-    run wrote WITHOUT it (live-checkpoint restart keeps the log, and
-    the legacy rows have no __ts_ms column) must fail at construction
-    with a NAMED config error — not as an opaque AnalysisException at
-    the first mid-stream check."""
-    import os
-
+    """A key log an older build wrote without event times (no __ts_ms
+    column), kept by a live-checkpoint restart, must fail at
+    construction with a NAMED error — not as an opaque
+    AnalysisException at the first mid-stream check."""
     from realtime0523_spark.streaming.allocation import co_arrival_guard
 
     keys_dir = str(tmp_path / "keys_legacy")
@@ -2973,14 +2967,10 @@ def test_co_arrival_guard_rejects_legacy_log_without_event_times(
     # KEEPS the log instead of resetting it
     os.makedirs(os.path.join(ckpt, "offsets"))
     open(os.path.join(ckpt, "offsets", "0"), "w").close()
-    legacy = co_arrival_guard(spark, keys_dir, checkpoint_dir=ckpt)
-    legacy(spark.createDataFrame([(1,)], "l_orderkey long"), 0)
+    # the legacy layout: batch 0's keys, l_orderkey only
+    spark.createDataFrame([(1,)], "l_orderkey long").write.parquet(
+        os.path.join(keys_dir, "batch_id=0")
+    )
+    assert spark.read.parquet(keys_dir).columns == ["l_orderkey", "batch_id"]
     with pytest.raises(ValueError, match="no __ts_ms"):
-        co_arrival_guard(
-            spark, keys_dir, checkpoint_dir=ckpt,
-            horizon_ms=10_000, ts_col="ts",
-        )
-    # without the horizon the legacy log remains fully usable
-    g = co_arrival_guard(spark, keys_dir, checkpoint_dir=ckpt)
-    with pytest.raises(RuntimeError, match="co-arrival contract"):
-        g(spark.createDataFrame([(1,)], "l_orderkey long"), 1)
+        co_arrival_guard(spark, keys_dir, checkpoint_dir=ckpt)

@@ -10,11 +10,14 @@ and compares values exactly. Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

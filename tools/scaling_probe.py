@@ -14,7 +14,7 @@ copies BY CONSTRUCTION, which is a fixture artifact, not an engine
 property — offsetting avoids it while keeping realistic value
 distributions).
 
-Usage: PYTHONPATH=/root/repo python tools/scaling_probe.py [--gen]
+Usage: python tools/scaling_probe.py [--gen]
 """
 
 from __future__ import annotations
@@ -22,6 +22,8 @@ from __future__ import annotations
 import os
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPLICAS = 10
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sf1")
@@ -203,8 +205,6 @@ _ALLOC_SCHEMA = (
     "l_quantity double, l_extendedprice double, o_totalprice double, "
     "o_weight_total double, o_detail_count int, l_commit_ts timestamp"
 )
-_ALLOC_ORDER = ["l_linenumber", "l_partkey", "l_suppkey",
-                "l_extendedprice", "l_quantity"]
 
 
 def _write_alloc_feed(spark, work: str, n_orders: int, n_chunks: int = 3) -> str:
@@ -267,6 +267,7 @@ def alloc_constant_batch_section(spark) -> list[str]:
     import shutil
     import tempfile
 
+    from realtime0523_spark.operators.allocation import DETAIL_ORDER
     from realtime0523_spark.streaming.allocation import streaming_allocation_split
     from realtime0523_spark.streaming.runner import run_to_memory
 
@@ -292,7 +293,7 @@ def alloc_constant_batch_section(spark) -> list[str]:
                 )
                 t0 = time.time()
                 out = run_to_memory(
-                    streaming_allocation_split(src, _ALLOC_ORDER),
+                    streaming_allocation_split(src, DETAIL_ORDER),
                     output_mode="update",
                 )
                 n = out.count()
