@@ -2686,11 +2686,8 @@ def q_stream_trending_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    from realtime0523_spark.streaming.runner import run_foreach_batch
-    from realtime0523_spark.streaming.sinks import (
-        detach_and_cleanup,
-        idempotent_batch_writer,
-    )
+    from realtime0523_spark.streaming.cells import drain_partials
+    from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     ev = Catalog(spark, sf_dir).table("events")
@@ -2706,23 +2703,15 @@ def q_stream_trending_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.unix_micros("ts")
     ).cast("double")
     weight = F.pow(F.lit(0.5), age_us / F.lit(DECAY_HALF_LIFE_S * 1e6))
-    stream = stream_table(spark, sf_dir, "events")
     out_dir = tempfile.mkdtemp(prefix="stream_trending_")
-    sink = idempotent_batch_writer(out_dir)
-
-    def fold(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        sink(
-            batch_df.groupBy("event_type").agg(
+    totals = (
+        drain_partials(
+            stream_table(spark, sf_dir, "events"),
+            lambda b: b.groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n"), F.sum(weight).alias("w")
             ),
-            batch_id,
+            out_dir,
         )
-
-    run_foreach_batch(stream, fold, output_mode="append")
-    totals = (
-        spark.read.parquet(out_dir)
         .groupBy("event_type")
         .agg(
             F.sum("n").cast("long").alias("n_events"),
@@ -2761,6 +2750,8 @@ def q_stream_trending_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "advance under both state-store providers.",
 )
 def q_stream_trending_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
     from pyspark.sql import Window as W
 
     from realtime0523_spark.streaming.decayed import (
@@ -2776,13 +2767,15 @@ def q_stream_trending_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
             [],
             "event_type string, n_events long, decayed_count double, rk int",
         )
-    out_dir = run_decayed_partials(
+    out_dir = tempfile.mkdtemp(prefix="stream_decayed_")
+    parts = run_decayed_partials(
         stream_table(spark, sf_dir, "events"),
         "event_type",
         "ts",
         DECAY_HALF_LIFE_S,
+        out_dir,
     )
-    totals = decayed_totals(spark, out_dir, "event_type", DECAY_HALF_LIFE_S)
+    totals = decayed_totals(parts, "event_type", DECAY_HALF_LIFE_S)
     return detach_and_cleanup(
         totals.select(
             "event_type",
@@ -3085,7 +3078,6 @@ def q_stream_cdc_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stream_cdc_retract_")
     return detach_and_cleanup(
         streaming_retract_aggregate(
-            spark,
             changelog,
             ["o_orderpriority"],
             out_dir=f"{work}/partials",
@@ -3220,7 +3212,6 @@ def q_stream_cdc_retract_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stream_cdc_join_")
     return detach_and_cleanup(
         streaming_retract_join(
-            spark,
             orders,
             custs,
             ["custkey"],
@@ -3489,7 +3480,6 @@ def q_stream_segment_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stream_kmv_")
     return detach_and_cleanup(
         streaming_kmv_overlap(
-            spark,
             events,
             "event_type",
             "user_id",
@@ -3705,7 +3695,6 @@ def q_stream_customers_record_linkage(
     work = tempfile.mkdtemp(prefix="stream_linkage_")
     return detach_and_cleanup(
         streaming_record_linkage(
-            spark,
             base,
             feed,
             out_dir=f"{work}/links",
@@ -3810,7 +3799,6 @@ def q_stream_event_value_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame
     work = tempfile.mkdtemp(prefix="stream_ddsketch_")
     return detach_and_cleanup(
         streaming_dd_quantiles(
-            spark,
             ev,
             "event_type",
             "value",
@@ -4122,7 +4110,6 @@ def q_stream_events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stream_trend_")
     return detach_and_cleanup(
         streaming_trend_slope(
-            spark,
             ev,
             "event_type",
             x,
@@ -4729,7 +4716,6 @@ def q_stream_events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stream_cusum_")
     return detach_and_cleanup(
         streaming_cusum(
-            spark,
             ev,
             out_dir=f"{work}/partials",
             checkpoint_dir=f"{work}/ckpt",
@@ -4979,7 +4965,7 @@ def _rfm_report(scores: DataFrame) -> DataFrame:
 def q_stream_customers_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from realtime0523_spark.streaming.cells import streaming_cells
+    from realtime0523_spark.streaming.cells import drain_partials, sum_fold
     from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
@@ -5007,23 +4993,14 @@ def q_stream_customers_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _rfm_report(_rfm_scores_from_metrics(metrics))
 
-    return detach_and_cleanup(
-        streaming_cells(
-            spark,
-            orders,
-            cell_fn,
-            key_cols=["ck", "d"],
-            sum_cols=["freq", "mon"],
-            finish_fn=finish,
-            out_dir=f"{work}/partials",
-            checkpoint_dir=f"{work}/ckpt",
-            empty_schema=(
-                "r_score long, f_score long, m_score long, segment string, "
-                "n_customers long, total_cents long"
-            ),
-        ),
-        work,
+    cells = drain_partials(
+        orders,
+        cell_fn,
+        f"{work}/partials",
+        fold=sum_fold(["ck", "d"], ["freq", "mon"]),
+        checkpoint_dir=f"{work}/ckpt",
     )
+    return detach_and_cleanup(finish(cells), work)
 
 
 RFM_MIGRATION_CUTOFF = "2000-12-31 23:59:59"
@@ -5206,29 +5183,20 @@ def q_stream_events_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from realtime0523_spark.operators.stattests import ks_2sample
-    from realtime0523_spark.streaming.cells import streaming_cells
+    from realtime0523_spark.streaming.cells import drain_partials, sum_fold
     from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     ev = stream_table(spark, sf_dir, "events")
     work = tempfile.mkdtemp(prefix="stream_ks_")
-    return detach_and_cleanup(
-        streaming_cells(
-            spark,
-            ev,
-            _ks_cells,
-            key_cols=["key", "v"],
-            sum_cols=["c1", "c2"],
-            finish_fn=ks_2sample,
-            out_dir=f"{work}/partials",
-            checkpoint_dir=f"{work}/ckpt",
-            empty_schema=(
-                "key string, n_a long, n_b long, ks_num long, "
-                "ks_d double, ks_crit double, drifted boolean"
-            ),
-        ),
-        work,
+    cells = drain_partials(
+        ev,
+        _ks_cells,
+        f"{work}/partials",
+        fold=sum_fold(["key", "v"], ["c1", "c2"]),
+        checkpoint_dir=f"{work}/ckpt",
     )
+    return detach_and_cleanup(ks_2sample(cells), work)
 
 
 @register(
@@ -5248,39 +5216,31 @@ def q_stream_events_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         chi2_cells,
         chi2_from_cells,
     )
-    from realtime0523_spark.streaming.cells import streaming_cells
+    from realtime0523_spark.streaming.cells import drain_partials, sum_fold
     from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     ev = stream_table(spark, sf_dir, "events")
     work = tempfile.mkdtemp(prefix="stream_chi2_")
-    return detach_and_cleanup(
-        streaming_cells(
-            spark,
-            ev,
-            lambda b: chi2_cells(
-                b.select("event_type", F.hour("ts").cast("long").alias("hr")),
-                "event_type",
-                "hr",
-            ),
-            key_cols=["a", "b"],
-            sum_cols=["o"],
-            finish_fn=chi2_from_cells,
-            out_dir=f"{work}/partials",
-            checkpoint_dir=f"{work}/ckpt",
-            empty_schema=(
-                "n_rows long, dof long, chi2 double, cramers_v double"
-            ),
+    cells = drain_partials(
+        ev,
+        lambda b: chi2_cells(
+            b.select("event_type", F.hour("ts").cast("long").alias("hr")),
+            "event_type",
+            "hr",
         ),
-        work,
+        f"{work}/partials",
+        fold=sum_fold(["a", "b"], ["o"]),
+        checkpoint_dir=f"{work}/ckpt",
     )
+    return detach_and_cleanup(chi2_from_cells(cells), work)
 
 
 @register(
     "stream_events_rolling_dau",
     _ROLLING_DAU_ORACLE,
     "Streaming twin of events_rolling_dau: presence cells merge by "
-    "SET UNION (the distinct_cells mode of streaming/cells.py — "
+    "SET UNION (a distinct fold through streaming/cells.py — "
     "commit each batch's distinct (user, day) cells, re-distinct at "
     "read; re-delivery and overlap are absorbed by idempotence of "
     "union, the docs-novelty discipline), then the SAME "
@@ -5291,29 +5251,22 @@ def q_stream_events_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_events_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from realtime0523_spark.streaming.cells import streaming_cells
+    from realtime0523_spark.streaming.cells import drain_partials
     from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     ev = stream_table(spark, sf_dir, "events")
     work = tempfile.mkdtemp(prefix="stream_rdau_")
-    return detach_and_cleanup(
-        streaming_cells(
-            spark,
-            ev,
-            lambda b: b.select(
-                "user_id", F.col("ts").cast("date").alias("d")
-            ).distinct(),
-            key_cols=["user_id", "d"],
-            sum_cols=[],
-            finish_fn=_rolling_dau_from_cells,
-            out_dir=f"{work}/partials",
-            checkpoint_dir=f"{work}/ckpt",
-            empty_schema="day date, dau long, rolling_7d_dau long",
-            distinct_cells=True,
-        ),
-        work,
+    cells = drain_partials(
+        ev,
+        lambda b: b.select(
+            "user_id", F.col("ts").cast("date").alias("d")
+        ).distinct(),
+        f"{work}/partials",
+        fold=lambda df: df.distinct(),
+        checkpoint_dir=f"{work}/ckpt",
     )
+    return detach_and_cleanup(_rolling_dau_from_cells(cells), work)
 
 
 JEFFREYS_ALERT = 0.25

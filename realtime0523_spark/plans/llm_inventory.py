@@ -2165,8 +2165,8 @@ def q_docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from realtime0523_spark.streaming.runner import run_foreach_batch
-    from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+    from realtime0523_spark.streaming.cells import drain_partials
+    from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     docs = Catalog(spark, sf_dir).table("documents")
@@ -2178,31 +2178,19 @@ def q_stream_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % EVAL_MOD != 0
     )
     out_dir = tempfile.mkdtemp(prefix="stream_bloom_")
-    sink = idempotent_batch_writer(out_dir)
 
-    def screen(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        res = P.bloom_contamination(batch_df, ev, bits_df=bset).select(
+    def screen(batch_df: DataFrame) -> DataFrame:
+        return P.bloom_contamination(batch_df, ev, bits_df=bset).select(
             "doc_id",
             "n_shingles",
             "n_flagged",
             r9(F.col("flag_ratio")).alias("flag_ratio"),
         )
-        sink(res, batch_id)
 
     try:
-        run_foreach_batch(stream, screen, output_mode="append")
+        return detach_and_cleanup(drain_partials(stream, screen, out_dir), out_dir)
     finally:
         bset.unpersist()
-    from realtime0523_spark.streaming.sinks import detach_and_cleanup
-
-    return detach_and_cleanup(
-        spark.read.parquet(out_dir).select(
-            "doc_id", "n_shingles", "n_flagged", "flag_ratio"
-        ),
-        out_dir,
-    )
 
 
 @register(
@@ -3239,8 +3227,8 @@ def q_docs_chunk_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from realtime0523_spark.streaming.runner import run_foreach_batch
-    from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+    from realtime0523_spark.streaming.cells import drain_partials
+    from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     emb = Catalog(spark, sf_dir).table("embeddings")
@@ -3249,23 +3237,13 @@ def q_stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
 
     out_dir = tempfile.mkdtemp(prefix="stream_ann_lookup_")
-    sink = idempotent_batch_writer(out_dir)
 
-    def serve(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        res = S.ann_topk_lsh(
+    def serve(batch_df: DataFrame) -> DataFrame:
+        return S.ann_topk_lsh(
             emb, batch_df, dims=EMB_DIMS, k=TOPK_K, score_transform=r9
         ).select("qid", "vec_id", "score", "rk")
-        sink(res, batch_id)
 
-    run_foreach_batch(qstream, serve, output_mode="append")
-    from realtime0523_spark.streaming.sinks import detach_and_cleanup
-
-    return detach_and_cleanup(
-        spark.read.parquet(out_dir).select("qid", "vec_id", "score", "rk"),
-        out_dir,
-    )
+    return detach_and_cleanup(drain_partials(qstream, serve, out_dir), out_dir)
 
 
 SPARSE_QUERIES = 5
@@ -4428,11 +4406,8 @@ def q_docs_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_docs_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from realtime0523_spark.streaming.runner import run_foreach_batch
-    from realtime0523_spark.streaming.sinks import (
-        detach_and_cleanup,
-        idempotent_batch_writer,
-    )
+    from realtime0523_spark.streaming.cells import drain_partials
+    from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     docs = Catalog(spark, sf_dir).table("documents")
@@ -4443,27 +4418,17 @@ def q_stream_docs_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") >= INCR_CORPUS_SPLIT
     )
     out_dir = tempfile.mkdtemp(prefix="stream_novelty_")
-    sink = idempotent_batch_writer(out_dir)
 
-    def probe(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        res = D.minhash_novelty(
+    def probe(batch_df: DataFrame) -> DataFrame:
+        return D.minhash_novelty(
             batch_df, buckets, sigs, threshold=MINHASH_EST_THRESHOLD
-        )
-        sink(res, batch_id)
+        ).select("doc_id", "match_doc_id", "est_sim", "is_novel")
 
     try:
-        run_foreach_batch(stream, probe, output_mode="append")
+        return detach_and_cleanup(drain_partials(stream, probe, out_dir), out_dir)
     finally:
         buckets.unpersist()
         sigs.unpersist()
-    return detach_and_cleanup(
-        spark.read.parquet(out_dir).select(
-            "doc_id", "match_doc_id", "est_sim", "is_novel"
-        ),
-        out_dir,
-    )
 
 
 DRIFT_SPLIT = 250  # doc_id < split = snapshot A; rest = snapshot B
@@ -4583,11 +4548,8 @@ def q_emb_rp_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_domain_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from realtime0523_spark.streaming.runner import run_foreach_batch
-    from realtime0523_spark.streaming.sinks import (
-        detach_and_cleanup,
-        idempotent_batch_writer,
-    )
+    from realtime0523_spark.streaming.cells import drain_partials, sum_fold
+    from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     docs = Catalog(spark, sf_dir).table("documents")
@@ -4597,27 +4559,17 @@ def q_stream_domain_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") >= DRIFT_SPLIT
     )
-    out_dir = tempfile.mkdtemp(prefix="stream_drift_")
-    sink = idempotent_batch_writer(out_dir)
-
-    def fold(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        sink(P.domain_bucket_counts(batch_df), batch_id)
-
+    work = tempfile.mkdtemp(prefix="stream_drift_")
     try:
-        run_foreach_batch(stream, fold, output_mode="append")
-        incoming = (
-            spark.read.parquet(out_dir)
-            .groupBy("domain", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
+        incoming = drain_partials(
+            stream,
+            P.domain_bucket_counts,
+            f"{work}/partials",
+            fold=sum_fold(["domain", "bucket"], ["cnt"]),
         )
-        out = detach_and_cleanup(
-            P.drift_from_counts(ref_counts, incoming), out_dir
-        )
+        return detach_and_cleanup(P.drift_from_counts(ref_counts, incoming), work)
     finally:
         ref_counts.unpersist()
-    return out
 
 
 @register(
@@ -4967,11 +4919,8 @@ def q_stream_purchase_attribution(
     import tempfile
 
     from realtime0523_spark.operators.allocation import attribute_linear
-    from realtime0523_spark.streaming.runner import run_foreach_batch
-    from realtime0523_spark.streaming.sinks import (
-        detach_and_cleanup,
-        idempotent_batch_writer,
-    )
+    from realtime0523_spark.streaming.cells import drain_partials
+    from realtime0523_spark.streaming.sinks import detach_and_cleanup
     from realtime0523_spark.streaming.sources import stream_table
 
     ev = Catalog(spark, sf_dir).table("events")
@@ -4984,33 +4933,23 @@ def q_stream_purchase_attribution(
         F.col("event_type") == "purchase"
     )
     out_dir = tempfile.mkdtemp(prefix="stream_attrib_")
-    sink = idempotent_batch_writer(out_dir)
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
 
-    def credit(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
+    def credit(batch_df: DataFrame) -> DataFrame:
         conv = batch_df.select(
             "user_id",
             F.col("event_id").alias("conv_id"),
             F.unix_micros("ts").alias("conv_ts_us"),
             cents.alias("value_cents"),
         )
-        sink(
-            attribute_linear(conv, touches, "user_id", _ATTRIB_WINDOW_US),
-            batch_id,
-        )
+        return attribute_linear(
+            conv, touches, "user_id", _ATTRIB_WINDOW_US
+        ).select("conv_id", "touch_id", "n_touches", "credit_cents")
 
     try:
-        run_foreach_batch(stream, credit, output_mode="append")
+        return detach_and_cleanup(drain_partials(stream, credit, out_dir), out_dir)
     finally:
         touches.unpersist()
-    return detach_and_cleanup(
-        spark.read.parquet(out_dir).select(
-            "conv_id", "touch_id", "n_touches", "credit_cents"
-        ),
-        out_dir,
-    )
 
 
 @register(

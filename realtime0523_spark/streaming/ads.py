@@ -131,7 +131,7 @@ def streaming_brand_amount(
             commit(guarded_brand_partial(batch_df, batch_id, guard, part_dim), batch_id)
         finally:
             batch_df.unpersist()
-        maybe_compact(spark, out_dir, base_dir, fold_brand_partials, 32)
+        maybe_compact(spark, out_dir, base_dir, fold_brand_partials)
 
     run_foreach_batch(
         wide_stream,

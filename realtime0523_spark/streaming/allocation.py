@@ -341,7 +341,6 @@ def streaming_allocation_split(
 def co_arrival_guard(
     spark,
     keys_dir: str,
-    compact_every: int = 32,
     checkpoint_dir: str | None = None,
 ):
     """Runtime enforcement of the PER-BATCH allocation's co-arrival
@@ -355,9 +354,10 @@ def co_arrival_guard(
     compacted base) carries its committing batch_id and the check reads
     only batch_id < current.
 
-    The key log COMPACTS on a cadence (same base-snapshot protocol as
-    the ANN partials: fold everything into one `(key, max batch_id)`
-    base, marker-committed, stragglers excluded by watermark) — an
+    The key log COMPACTS every `compaction.COMPACT_EVERY` batches (same
+    base-snapshot protocol as the ANN partials: fold everything into
+    one `(key, max batch_id)` base, marker-committed, stragglers
+    excluded by watermark) — an
     always-on stage would otherwise re-read every batch's key file on
     every batch, O(batches²) I/O over the run.
 
@@ -393,7 +393,7 @@ def co_arrival_guard(
     from realtime0523_spark.streaming.compaction import (
         base_watermark,
         committed_relation,
-        compact_to_base,
+        maybe_compact,
         partial_ids,
     )
     from realtime0523_spark.streaming.sinks import idempotent_batch_writer
@@ -484,9 +484,6 @@ def co_arrival_guard(
                     f"(streaming_allocation_split / split_arrival=True)."
                 )
         commit(keys, batch_id)
-        wm = base_watermark(base_dir)
-        fresh = [i for i in partial_ids(keys_dir) if i > wm]
-        if len(fresh) >= compact_every:
-            compact_to_base(spark, keys_dir, base_dir, _fold, keep_batch_id=True)
+        maybe_compact(spark, keys_dir, base_dir, _fold, keep_batch_id=True)
 
     return check

@@ -1,47 +1,45 @@
-"""The additive-synopsis streaming pattern, generalized.
+"""The partial-commit drain: every "commit a partial per batch, then
+fold" stream twin runs through `drain_partials`.
 
-Every monitor in the stattests family reduces the corpus to a small
-cell table whose values MERGE by plain addition (or, for distinct
-cells, by set union — addition over 0/1 presence after a distinct):
+Each twin reduces its input to a partial relation that MERGES across
+any slicing of the stream: additive cells (chi-square, KS, CUSUM, OLS
+sums, DDSketch buckets, signed CDC deltas, linkage counts), set-union
+presence cells (rolling DAU), mergeable sketches (KMV), anchored
+decayed sums, or per-row results whose union is the answer (the
+ingest screens). Each micro-batch commits its partial, idempotent by
+batchId (the K5 discipline), and the reader merges the committed
+partials before running the IDENTICAL finisher the batch query runs.
+Batch boundaries, replays and late events cannot change a merge, so
+the drained stream equals the batch oracle bit-for-bit.
 
-- chi-square: (a, b) -> count
-- KS: (key, value) -> (count_half1, count_half2)
-- CUSUM: (key, hour) -> cents        (streaming/changepoint.py)
-- rolling DAU: distinct (user, day) presence cells
+The drain keeps three rules, the same for every twin:
 
-So every one of them gets a streaming twin from the SAME machinery:
-each micro-batch commits its partial cells (map-side combined,
-idempotent by batchId — the K5 discipline), and the reader folds the
-committed partials into the exact at-rest synopsis before running the
-IDENTICAL finisher the batch query runs. Batch boundaries, replays,
-and late events cannot change a sum (or a set union), so the drained
-stream equals the batch oracle bit-for-bit — the strongest equality a
-stream can state, with per-batch state zero and at-rest state
-synopsis-sized.
-
-This module is that machinery once: `streaming_cells` drains a stream
-through per-batch cell commits and hands the folded synopsis to a
-finisher. The CUSUM twin predates it (streaming/changepoint.py) and
-keeps its specialized form; new additive twins should come through
-here.
-
-COMPACTION (round-11): an always-on monitor that reports per batch
-would otherwise re-read EVERY committed partial file on every report —
-O(batches²) I/O over an unbounded run, the same failure mode the
-co-arrival guard documents. The cell fold is distributive (sums and
-set unions), so every `compact_every` batches the partials fold into
-one base snapshot via the shared marker-committed protocol
-(streaming/compaction.py) and readers see base ∪ fresh — per-report
-cost is bounded by 1 + compact_every files whatever the horizon
-(long-horizon test: tests/test_streaming.py::
-test_streaming_cells_long_horizon_flat_fold).
+- COMMIT: a batch's only action is the commit of `partial_fn(batch)`
+  through `sinks.idempotent_batch_writer` — no emptiness job and no
+  persist. An empty batch commits an empty partial, which every merge
+  absorbs.
+- COMPACTION: with a `fold` (a merge mapping partials to partials of
+  the same schema), every `compaction.COMPACT_EVERY` fresh partials
+  fold into one base snapshot through the shared marker-committed
+  protocol (streaming/compaction.py), and the reader sees base ∪
+  fresh, folded. An always-on monitor then reads at most
+  1 + COMPACT_EVERY files per report whatever the horizon, not
+  O(batches) (pinned by a 100-micro-batch long-horizon test in
+  tests/test_streaming.py). Without a fold the
+  drain returns the union of the committed partials: per-row twins,
+  whose output grows with their input, would rewrite all their rows
+  at every compaction.
+- EMPTY RESULT: when no batch committed, the result is `partial_fn`
+  (then `fold`) applied to an empty frame of the stream's schema, so
+  the empty result comes from the same code as a non-empty one and
+  its schema cannot drift.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from realtime0523_spark.streaming.compaction import (
@@ -52,53 +50,43 @@ from realtime0523_spark.streaming.runner import run_foreach_batch
 from realtime0523_spark.streaming.sinks import idempotent_batch_writer
 
 
-def streaming_cells(
-    spark: SparkSession,
-    stream: DataFrame,
-    cell_fn: Callable[[DataFrame], DataFrame],
-    key_cols: list[str],
-    sum_cols: list[str],
-    finish_fn: Callable[[DataFrame], DataFrame],
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-    empty_schema: str | None = None,
-    distinct_cells: bool = False,
-    compact_every: int = 32,
-) -> DataFrame:
-    """Drain `stream` through per-batch commits of `cell_fn(batch)`
-    partial cells, fold them by summing `sum_cols` per `key_cols`
-    (or by distinct over `key_cols` when `distinct_cells` — presence
-    cells merge by union), and return `finish_fn(folded_synopsis)`.
-
-    `cell_fn` must be the SAME corpus-to-cells collapse the batch
-    query uses, and `finish_fn` the same synopsis-to-answer finisher —
-    the equality argument is additivity plus shared code, nothing
-    else.
-
-    Every `compact_every` fresh partials the committed files fold into
-    one base snapshot (shared protocol, streaming/compaction.py), so
-    the per-report read cost stays flat over an unbounded run. The
-    fold is the SAME sum/distinct merge the reader applies — base ∪
-    fresh re-folded equals folding all history (distributivity), and
-    replays stay no-ops because the idempotent writer's committed
-    batch dirs below the watermark are GC'd only after the base holds
-    their contribution.
-    """
-    commit = idempotent_batch_writer(out_dir)
-    base_dir = out_dir.rstrip("/") + "_base"
+def sum_fold(
+    key_cols: list[str], sum_cols: list[str]
+) -> Callable[[DataFrame], DataFrame]:
+    """Distributive exact-long fold for integral cells: sum `sum_cols`
+    per `key_cols`. Applied to base ∪ fresh it equals folding all
+    history at once, so it is both a compaction fold and the reader's
+    merge."""
 
     def fold(df: DataFrame) -> DataFrame:
-        if distinct_cells:
-            return df.select(*key_cols).distinct()
         return df.groupBy(*key_cols).agg(
             *[F.sum(c).cast("long").alias(c) for c in sum_cols]
         )
 
+    return fold
+
+
+def drain_partials(
+    stream: DataFrame,
+    partial_fn: Callable[[DataFrame], DataFrame],
+    out_dir: str,
+    fold: Callable[[DataFrame], DataFrame] | None = None,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Drain `stream` through per-batch commits of `partial_fn(batch)`
+    into `out_dir` and return the merged partials as a batch
+    DataFrame: `fold(base ∪ fresh)` with a fold (compacted into
+    `<out_dir>_base` on the shared cadence), the union of the
+    committed partials without one. See the module docstring for the
+    commit, compaction and empty-result rules."""
+    spark = stream.sparkSession
+    commit = idempotent_batch_writer(out_dir)
+    base_dir = out_dir.rstrip("/") + "_base"
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit(cell_fn(batch_df), batch_id)
-        maybe_compact(spark, out_dir, base_dir, fold, compact_every)
+        commit(partial_fn(batch_df), batch_id)
+        if fold is not None:
+            maybe_compact(spark, out_dir, base_dir, fold)
 
     run_foreach_batch(
         stream,
@@ -108,10 +96,6 @@ def streaming_cells(
         no_data_batches=False,
     )
     parts = committed_relation(spark, out_dir, base_dir)
-    if parts is None:  # no batches arrived
-        if empty_schema is None:
-            raise ValueError(
-                "streaming_cells: empty stream and no empty_schema"
-            )
-        return spark.createDataFrame([], empty_schema)
-    return finish_fn(fold(parts))
+    if parts is None:  # no batch committed
+        parts = partial_fn(spark.createDataFrame([], stream.schema))
+    return parts if fold is None else fold(parts)

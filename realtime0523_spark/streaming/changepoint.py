@@ -27,13 +27,10 @@ cell table, and the CUSUM windows only ever run on that synopsis.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from realtime0523_spark.streaming.runner import run_foreach_batch
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+from realtime0523_spark.streaming.cells import drain_partials
 
 
 def hourly_cents_partials(df: DataFrame) -> DataFrame:
@@ -58,7 +55,6 @@ def fold_hourly_partials(partials: DataFrame) -> DataFrame:
 
 
 def streaming_cusum(
-    spark: SparkSession,
     stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str | None = None,
@@ -67,27 +63,12 @@ def streaming_cusum(
     return the per-type CUSUM alarm report as a batch DataFrame."""
     from realtime0523_spark.operators.stattests import cusum_summary
 
-    commit = idempotent_batch_writer(out_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit(hourly_cents_partials(batch_df), batch_id)
-
-    run_foreach_batch(
-        stream,
-        process,
-        checkpoint_dir=checkpoint_dir,
-        output_mode="append",
-        no_data_batches=False,
-    )
-    if not os.path.exists(out_dir):  # no batches arrived
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_points long, max_cusum_up long, "
-            "max_cusum_dn long, n_alarms_up long, n_alarms_dn long, "
-            "first_alarm_hr timestamp",
-        )
     return cusum_summary(
-        fold_hourly_partials(spark.read.parquet(out_dir).drop("batch_id"))
+        drain_partials(
+            stream,
+            hourly_cents_partials,
+            out_dir,
+            fold=fold_hourly_partials,
+            checkpoint_dir=checkpoint_dir,
+        )
     )

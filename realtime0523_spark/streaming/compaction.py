@@ -1,7 +1,8 @@
 """Base-snapshot compaction for idempotent batch-partial logs — the
 shared crash-safe protocol behind every "fold a growing pile of
-per-batch partial files into one snapshot" need (the streaming IVF
-quantizer partials, the co-arrival guard's key log).
+per-batch partial files into one snapshot" need (the drained partial
+logs of streaming/cells.py, the topology's ADS and DAU partials, the
+streaming IVF quantizer partials, the co-arrival guard's key log).
 
 Layout contract:
 - `partial_dir` holds `batch_id=N` directories written by
@@ -33,6 +34,13 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# fresh partials above the base watermark that trigger a compaction:
+# every always-on partial log (drained twins, the topology's ADS/DAU
+# families, the monitor, the co-arrival guard's key log) reads at most
+# 1 + COMPACT_EVERY files per report. Read at call time by
+# `maybe_compact`, so tests can shorten it.
+COMPACT_EVERY = 32
 
 
 def base_watermark(base_dir: str) -> int:
@@ -100,7 +108,7 @@ def compact_to_base(
     rename-vs-marker window. Returns the number of fresh partials
     folded (0 = nothing to do).
 
-    READER CONCURRENCY (round-11 review): with the default
+    READER CONCURRENCY: with the default
     `gc_grace=False`, the GC immediately deletes the files the new
     snapshot supersedes — safe ONLY when every reader is serialized
     with the compactor (the usual shape: the fold and the report run
@@ -164,16 +172,15 @@ def maybe_compact(
     partial_dir: str,
     base_dir: str,
     fold,
-    every: int,
     keep_batch_id: bool = False,
     gc_grace: bool = False,
 ) -> bool:
-    """The shared compaction cadence gate (round-11 review: one
-    definition instead of five copies): fold when at least `every`
-    fresh partials sit above the base watermark. Returns True when a
-    compaction ran."""
+    """The shared compaction cadence gate, one definition for every
+    partial log: fold when at least `COMPACT_EVERY` fresh partials sit
+    above the base watermark. Returns True when a compaction ran."""
     wm = base_watermark(base_dir)
-    if len([i for i in partial_ids(partial_dir) if i > wm]) < every:
+    fresh = [i for i in partial_ids(partial_dir) if i > wm]
+    if len(fresh) < COMPACT_EVERY:
         return False
     compact_to_base(
         spark, partial_dir, base_dir, fold,

@@ -35,13 +35,10 @@ expression, so the driver oracle row stays exact.
 
 from __future__ import annotations
 
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from realtime0523_spark.streaming.runner import run_foreach_batch
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+from realtime0523_spark.streaming.cells import drain_partials
 
 
 def run_decayed_partials(
@@ -49,19 +46,17 @@ def run_decayed_partials(
     key_col: str,
     ts_col: str,
     half_life_s: int,
-    out_dir: str | None = None,
-) -> str:
-    """Drain `stream`, folding per-batch decayed partials
-    (key, n, w, anchor_us) into an idempotent parquet sink; returns
-    the sink dir. Each batch's anchor is its own max event time, so
-    in-batch weights never underflow however long the stream runs."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="stream_decayed_")
-    sink = idempotent_batch_writer(out_dir)
+    out_dir: str,
+) -> DataFrame:
+    """Drain `stream` through per-batch decayed partials
+    (key, n, w, anchor_us) committed to `out_dir`; returns the
+    committed partials. Each batch's anchor is its own max event time,
+    so in-batch weights never underflow however long the stream runs.
+    No compaction fold: rescaling to a newer anchor is not a
+    schema-preserving merge of the partials."""
     hl_us = F.lit(half_life_s * 1e6)
 
-    def fold(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         anchor_us = (
             batch_df.agg(F.max(F.unix_micros(F.col(ts_col)))).first()[0]
         )
@@ -69,27 +64,23 @@ def run_decayed_partials(
             "double"
         )
         weight = F.pow(F.lit(0.5), age_us / hl_us)
-        sink(
-            batch_df.groupBy(key_col).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(weight).alias("w"),
-                F.lit(anchor_us).alias("anchor_us"),
-            ),
-            batch_id,
+        return batch_df.groupBy(key_col).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(weight).alias("w"),
+            # typed even when an empty batch has no anchor
+            F.lit(anchor_us).cast("long").alias("anchor_us"),
         )
 
-    run_foreach_batch(stream, fold, output_mode="append")
-    return out_dir
+    return drain_partials(stream, partial, out_dir)
 
 
 def decayed_totals(
-    spark: SparkSession, out_dir: str, key_col: str, half_life_s: int
+    parts: DataFrame, key_col: str, half_life_s: int
 ) -> DataFrame:
     """Fold drained partials to (key, n_events, decayed_count):
     every partial rescales to the NEWEST anchor by the anchor-shift
     identity, then sums. |keys × batches| rows of arithmetic — the
     events are never re-read."""
-    parts = spark.read.parquet(out_dir)
     hl_us = F.lit(half_life_s * 1e6)
     final = parts.agg(F.max("anchor_us")).first()[0]
     shift = F.pow(

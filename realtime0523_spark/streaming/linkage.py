@@ -14,18 +14,15 @@ boundaries cannot change the answer.
 
 At 100 TB: per-batch cost is the batch's block-join fan-out (blocking
 keeps it ∝ batch size, never |base|·batch); the at-rest state is
-|batches|·|nations| partial rows."""
+one compacted |nations|-row base plus at most COMPACT_EVERY partials."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from realtime0523_spark.operators.linkage import LINK_THRESHOLD, link_candidates
-from realtime0523_spark.streaming.runner import run_foreach_batch
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+from realtime0523_spark.streaming.cells import drain_partials, sum_fold
 
 
 def _link_partials(base: DataFrame, batch: DataFrame, threshold: int) -> DataFrame:
@@ -51,7 +48,6 @@ def _link_partials(base: DataFrame, batch: DataFrame, threshold: int) -> DataFra
 
 
 def streaming_record_linkage(
-    spark: SparkSession,
     base: DataFrame,
     feed_stream: DataFrame,
     out_dir: str,
@@ -61,30 +57,10 @@ def streaming_record_linkage(
     """Drain the dirty feed through per-batch blocked matching against
     the static `base`, committing per-nation partial counts; return
     the folded per-nation report as a batch DataFrame."""
-
-    commit = idempotent_batch_writer(out_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit(_link_partials(base, batch_df, threshold), batch_id)
-
-    run_foreach_batch(
+    return drain_partials(
         feed_stream,
-        process,
+        lambda b: _link_partials(base, b, threshold),
+        out_dir,
+        fold=sum_fold(["nationkey"], ["n_candidates", "n_links", "n_true_links"]),
         checkpoint_dir=checkpoint_dir,
-        output_mode="append",
-        no_data_batches=False,
-    )
-    if not os.path.exists(out_dir):  # no batches arrived
-        return spark.createDataFrame(
-            [],
-            "nationkey int, n_candidates long, n_links long, "
-            "n_true_links long",
-        )
-    partials = spark.read.parquet(out_dir).drop("batch_id")
-    return partials.groupBy("nationkey").agg(
-        F.sum("n_candidates").alias("n_candidates"),
-        F.sum("n_links").alias("n_links"),
-        F.sum("n_true_links").alias("n_true_links"),
     )

@@ -25,11 +25,11 @@ At 100 TB / unbounded horizons: per-batch state is zero (all four
 collapses are stateless partial aggs inside the batch); the commit per
 batch is |types|·(1 + |batch-hours| + NDV(cents) + buckets) rows; the
 report is always one metadata-sized fold away — and stays that way on
-an always-on run because every `compact_every` batches each family's
+an always-on run because every `COMPACT_EVERY` batches each family's
 partials fold into one base snapshot (shared marker-committed
 protocol, streaming/compaction.py; all four folds are distributive
 exact-integer merges), bounding the per-report read to 1 +
-compact_every files per family instead of O(batches).
+COMPACT_EVERY files per family instead of O(batches).
 """
 
 from __future__ import annotations
@@ -47,37 +47,29 @@ from realtime0523_spark.operators.stattests import (
     value_drift_cells,
     value_drift_from_cells,
 )
+from realtime0523_spark.streaming.cells import sum_fold
 from realtime0523_spark.streaming.changepoint import (
     fold_hourly_partials,
     hourly_cents_partials,
 )
 from realtime0523_spark.streaming.compaction import (
     committed_relation,
+    compact_to_base,
     maybe_compact,
 )
-from realtime0523_spark.streaming.regression import finish_trend, trend_partials
+from realtime0523_spark.streaming.regression import (
+    TREND_FOLD,
+    finish_trend,
+    trend_partials,
+)
 from realtime0523_spark.streaming.runner import run_foreach_batch
 from realtime0523_spark.streaming.sinks import idempotent_batch_writer
 
-
-def _sum_fold(key_cols: list[str], sum_cols: list[str]):
-    """Distributive exact-long fold for one cell family — the same
-    merge the reader applies, so base ∪ fresh re-folded equals
-    folding all history at once."""
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(
-            *[F.sum(c).cast("long").alias(c) for c in sum_cols]
-        )
-
-    return fold
-
-
 _FOLDS = {
-    "trend": _sum_fold(["grp"], ["n", "sx", "sy", "sxy", "sxx"]),
+    "trend": TREND_FOLD,
     "cusum": fold_hourly_partials,
-    "ks": _sum_fold(["key", "v"], ["c1", "c2"]),
-    "drift": _sum_fold(["domain", "bucket"], ["cnt_a", "cnt_b"]),
+    "ks": sum_fold(["key", "v"], ["c1", "c2"]),
+    "drift": sum_fold(["domain", "bucket"], ["cnt_a", "cnt_b"]),
 }
 
 
@@ -89,13 +81,12 @@ def streaming_monitor_report(
     jeffreys_alert: float,
     trend_epoch: str = "2024-01-01",
     checkpoint_dir: str | None = None,
-    compact_every: int = 32,
 ) -> DataFrame:
     """Drain the event stream through single-scan four-family cell
     commits, then return the composed per-type monitor report as a
     batch DataFrame (bit-identical to the batch query on the same
     data). Each family's partials compact into a base snapshot every
-    `compact_every` batches — flat per-report read cost over an
+    `COMPACT_EVERY` batches — flat per-report read cost over an
     always-on run."""
     dirs = {n: os.path.join(work_dir, n) for n in ("trend", "cusum", "ks", "drift")}
     base_dirs = {n: d + "_base" for n, d in dirs.items()}
@@ -118,12 +109,9 @@ def streaming_monitor_report(
             batch_df.unpersist()
         # all four families commit in lockstep, so one family's fresh
         # count decides the compaction cadence for all of them
-        if maybe_compact(
-            spark, dirs["trend"], base_dirs["trend"], _FOLDS["trend"],
-            compact_every,
-        ):
+        if maybe_compact(spark, dirs["trend"], base_dirs["trend"], _FOLDS["trend"]):
             for n in ("cusum", "ks", "drift"):
-                maybe_compact(spark, dirs[n], base_dirs[n], _FOLDS[n], 1)
+                compact_to_base(spark, dirs[n], base_dirs[n], _FOLDS[n])
 
     run_foreach_batch(
         stream,
@@ -143,26 +131,8 @@ def streaming_monitor_report(
             "ks_d double, ks_drifted boolean, jeffreys double, n_alerts long",
         )
 
-    def read(name: str) -> DataFrame:
-        return reads[name]
-
-    trend = finish_trend(read("trend"))
-    cusum = cusum_summary(fold_hourly_partials(read("cusum")))
-    ks = ks_2sample(
-        read("ks")
-        .groupBy("key", "v")
-        .agg(
-            F.sum("c1").cast("long").alias("c1"),
-            F.sum("c2").cast("long").alias("c2"),
-        )
-    )
-    drift = value_drift_from_cells(
-        read("drift")
-        .groupBy("domain", "bucket")
-        .agg(
-            F.sum("cnt_a").cast("long").alias("cnt_a"),
-            F.sum("cnt_b").cast("long").alias("cnt_b"),
-        ),
-        n_drift_buckets,
-    )
+    trend = finish_trend(reads["trend"])
+    cusum = cusum_summary(_FOLDS["cusum"](reads["cusum"]))
+    ks = ks_2sample(_FOLDS["ks"](reads["ks"]))
+    drift = value_drift_from_cells(_FOLDS["drift"](reads["drift"]), n_drift_buckets)
     return compose_monitor_report(trend, cusum, ks, drift, jeffreys_alert)

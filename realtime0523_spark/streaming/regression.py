@@ -16,13 +16,13 @@ slope a metric monitor actually wants."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime0523_spark.streaming.runner import run_foreach_batch
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+from realtime0523_spark.streaming.cells import drain_partials, sum_fold
+
+# the five OLS sums per group: the compaction fold of the partials
+TREND_FOLD = sum_fold(["grp"], ["n", "sx", "sy", "sxy", "sxx"])
 
 
 def trend_partials(
@@ -64,7 +64,6 @@ def finish_trend(partials: DataFrame, group_col_out: str = "event_type") -> Data
 
 
 def streaming_trend_slope(
-    spark: SparkSession,
     stream: DataFrame,
     group_col: str,
     x: Column,
@@ -73,26 +72,14 @@ def streaming_trend_slope(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Drain `stream` through per-batch OLS partial-sum commits, then
-    return the finished per-group trend as a batch DataFrame."""
-
-    commit = idempotent_batch_writer(out_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit(trend_partials(batch_df, group_col, x, y), batch_id)
-
-    run_foreach_batch(
-        stream,
-        process,
-        checkpoint_dir=checkpoint_dir,
-        output_mode="append",
-        no_data_batches=False,
-    )
-    if not os.path.exists(out_dir):  # no batches arrived
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_rows long, slope_per_day double, "
-            "intercept double",
+    return the finished per-group trend as a batch DataFrame. `x` and
+    `y` must be integral, so the five sums stay exact longs."""
+    return finish_trend(
+        drain_partials(
+            stream,
+            lambda b: trend_partials(b, group_col, x, y),
+            out_dir,
+            fold=TREND_FOLD,
+            checkpoint_dir=checkpoint_dir,
         )
-    return finish_trend(spark.read.parquet(out_dir).drop("batch_id"))
+    )

@@ -18,13 +18,12 @@ At 100 TB: per-batch state is zero (the delta map is stateless); the
 commit is |groups| rows regardless of input rate; the rollup reads
 only committed partials.
 
-BACKFILL / REPLAY DELIVERY CONTRACT (round-8 verdict item, property-
-tested): for ANY split of a well-formed changelog into a prefix drained
-by one incarnation of the query and a remainder drained by a restarted
-incarnation from the same checkpoint — including splits that land
-MID-KEY (a row's insert in the prefix, its update/delete in the
-remainder) — the final state aggregate equals the batch answer over
-the whole changelog. Three properties compose to guarantee it:
+BACKFILL / REPLAY DELIVERY CONTRACT (property-tested): for ANY split
+of a well-formed changelog into a prefix drained by one incarnation
+of the query and a remainder drained by a restarted incarnation from
+the same checkpoint — including splits that land MID-KEY (a row's
+insert in the prefix, its update/delete in the remainder) — the final
+state aggregate equals the batch answer over the whole changelog. Three properties compose to guarantee it:
   1. signed-delta partials are commutative and associative, so WHERE
      batch boundaries fall cannot change the fold;
   2. commits are idempotent by batchId, so a batch replayed after a
@@ -39,27 +38,39 @@ tests/test_streaming.py::test_retract_backfill_any_split_*.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from realtime0523_spark.operators.retraction import (
     finish_retract_aggregate,
     finish_retract_join,
     retract_partials,
 )
-from realtime0523_spark.streaming.runner import run_foreach_batch
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+from realtime0523_spark.streaming.cells import drain_partials, sum_fold
 
 
-def _group_schema(stream: DataFrame, cols: list[str]) -> list[str]:
-    """DDL fragments for `cols` with the stream's actual types — the
-    empty-result fallback must match the non-empty path's schema."""
-    return [f"{c} {stream.schema[c].dataType.simpleString()}" for c in cols]
+def _drain_signed(
+    stream: DataFrame,
+    keys: list[str],
+    op_col: str,
+    new_col: str,
+    old_col: str,
+    out_dir: str,
+    checkpoint_dir: str | None,
+) -> DataFrame:
+    """Per-batch signed partial sums of `stream` per `keys`, drained
+    and folded: (keys..., delta_cents, delta_rows)."""
+    return drain_partials(
+        stream,
+        lambda b: retract_partials(
+            b, keys, op_col=op_col, new_col=new_col, old_col=old_col
+        ),
+        out_dir,
+        fold=sum_fold(keys, ["delta_cents", "delta_rows"]),
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def streaming_retract_aggregate(
-    spark: SparkSession,
     changelog_stream: DataFrame,
     group_cols: list[str],
     out_dir: str,
@@ -71,41 +82,14 @@ def streaming_retract_aggregate(
     """Drain `changelog_stream` through per-batch signed partial sums
     with exactly-once commits, then return the final per-group state
     aggregate as a batch DataFrame."""
-
-    commit = idempotent_batch_writer(out_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit(
-            retract_partials(
-                batch_df, group_cols, op_col=op_col, new_col=new_col, old_col=old_col
-            ),
-            batch_id,
-        )
-
-    run_foreach_batch(
-        changelog_stream,
-        process,
-        checkpoint_dir=checkpoint_dir,
-        output_mode="append",
-        no_data_batches=False,
+    partials = _drain_signed(
+        changelog_stream, group_cols, op_col, new_col, old_col,
+        out_dir, checkpoint_dir,
     )
-    if not os.path.exists(out_dir):  # no batches arrived
-        # group cols keep their INPUT types (round-8 advice: a
-        # hardcoded `string` gave the no-batches path a different
-        # schema from the non-empty path for non-string keys,
-        # breaking downstream unions only in that corner).
-        schema = ", ".join(_group_schema(changelog_stream, group_cols))
-        return spark.createDataFrame(
-            [], f"{schema}, net_amount double, net_rows long"
-        )
-    partials = spark.read.parquet(out_dir).drop("batch_id")
     return finish_retract_aggregate(partials, group_cols)
 
 
 def streaming_retract_join(
-    spark: SparkSession,
     fact_stream: DataFrame,
     dim_stream: DataFrame,
     key_cols: list[str],
@@ -126,43 +110,12 @@ def streaming_retract_join(
     commutative and associative across sides, batches, and replays,
     so drain order cannot change the answer (the batch oracle's full
     latest-state join is the equality check)."""
-
-    def drain(stream: DataFrame, keys: list[str], vals, out: str, ck: str) -> None:
-        commit = idempotent_batch_writer(out)
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            commit(
-                retract_partials(
-                    batch_df, keys, op_col=op_col, new_col=vals[0], old_col=vals[1]
-                ),
-                batch_id,
-            )
-
-        run_foreach_batch(
-            stream,
-            process,
-            checkpoint_dir=ck,
-            output_mode="append",
-            no_data_batches=False,
-        )
-
-    drain(
-        fact_stream, list(key_cols), fact_value_cols,
+    fp = _drain_signed(
+        fact_stream, list(key_cols), op_col, *fact_value_cols,
         fact_dir, f"{checkpoint_root}/fact",
     )
-    drain(
-        dim_stream, list(key_cols) + list(group_cols), dim_value_cols,
+    dp = _drain_signed(
+        dim_stream, list(key_cols) + list(group_cols), op_col, *dim_value_cols,
         dim_dir, f"{checkpoint_root}/dim",
     )
-    if not (os.path.exists(fact_dir) and os.path.exists(dim_dir)):
-        # group cols live on the DIM changelog; inherit its types.
-        schema = ", ".join(_group_schema(dim_stream, group_cols))
-        return spark.createDataFrame(
-            [],
-            f"{schema}, n_pairs long, fact_amount double, dim_amount double",
-        )
-    fp = spark.read.parquet(fact_dir).drop("batch_id")
-    dp = spark.read.parquet(dim_dir).drop("batch_id")
     return finish_retract_join(fp, dp, key_cols, group_cols)

@@ -13,21 +13,19 @@ idempotent, commutative, and associative (it is set-union followed by
 k-min), so batch boundaries, replays, and late events cannot change
 the sketch — the drained result equals the batch oracle exactly.
 
-At 100 TB: per-batch work is batch-sized; the at-rest state is
-|batches|·|segments|·k rows of synopsis (compactable by the same
-merge at any time); the overlap report reads only synopses.
+At 100 TB: per-batch work is batch-sized; the at-rest state is one
+compacted sketch plus at most COMPACT_EVERY partial sketches of
+|segments|·k rows each (the same merge compacts them); the overlap
+report reads only synopses.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from realtime0523_spark.operators.kmv import KMV_K, kmv_overlap, kmv_sketch
-from realtime0523_spark.streaming.runner import run_foreach_batch
-from realtime0523_spark.streaming.sinks import idempotent_batch_writer
+from realtime0523_spark.streaming.cells import drain_partials, sum_fold
 
 
 def merge_kmv_partials(partials: DataFrame, k: int = KMV_K) -> DataFrame:
@@ -43,7 +41,6 @@ def merge_kmv_partials(partials: DataFrame, k: int = KMV_K) -> DataFrame:
 
 
 def streaming_kmv_overlap(
-    spark: SparkSession,
     stream: DataFrame,
     segment_col: str,
     key_col: str,
@@ -54,33 +51,17 @@ def streaming_kmv_overlap(
     """Drain `stream` through per-batch KMV partials with
     exactly-once commits, then fold the committed partials and return
     the all-pairs overlap report as a batch DataFrame."""
-
-    commit = idempotent_batch_writer(out_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit(kmv_sketch(batch_df, segment_col, key_col, k=k), batch_id)
-
-    run_foreach_batch(
+    merged = drain_partials(
         stream,
-        process,
+        lambda b: kmv_sketch(b, segment_col, key_col, k=k),
+        out_dir,
+        fold=lambda p: merge_kmv_partials(p, k=k),
         checkpoint_dir=checkpoint_dir,
-        output_mode="append",
-        no_data_batches=False,
     )
-    if not os.path.exists(out_dir):  # no batches arrived
-        return spark.createDataFrame(
-            [],
-            "seg_a string, seg_b string, ku long, union_est double, "
-            "jaccard_est double, inter_est double",
-        )
-    partials = spark.read.parquet(out_dir).drop("batch_id")
-    return kmv_overlap(merge_kmv_partials(partials, k=k), k=k)
+    return kmv_overlap(merged, k=k)
 
 
 def streaming_dd_quantiles(
-    spark: SparkSession,
     stream: DataFrame,
     group_col: str,
     value_col: str,
@@ -97,23 +78,11 @@ def streaming_dd_quantiles(
     quantiles from the synopsis alone."""
     from realtime0523_spark.operators.ddsketch import dd_quantiles, dd_sketch
 
-    commit = idempotent_batch_writer(out_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        commit(dd_sketch(batch_df, group_col, value_col), batch_id)
-
-    run_foreach_batch(
+    sketch = drain_partials(
         stream,
-        process,
+        lambda b: dd_sketch(b, group_col, value_col),
+        out_dir,
+        fold=sum_fold(["grp", "bucket"], ["n"]),
         checkpoint_dir=checkpoint_dir,
-        output_mode="append",
-        no_data_batches=False,
     )
-    if not os.path.exists(out_dir):  # no batches arrived
-        return spark.createDataFrame(
-            [], "grp string, quantile string, n_rows long, est_value double"
-        )
-    partials = spark.read.parquet(out_dir).drop("batch_id")
-    return dd_quantiles(partials, quantiles)
+    return dd_quantiles(sketch, quantiles)

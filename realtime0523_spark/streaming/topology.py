@@ -349,17 +349,11 @@ class FiveLayerTopology:
         root: str,
         trigger_seconds: float = TRIGGER_SECONDS,
         split_arrival: bool = False,
-        compact_every: int = 32,
     ) -> None:
         self.spark = spark
         self.root = root
         self.trigger = trigger_seconds
         self.split_arrival = split_arrival
-        # ADS/DAU partials fold into a base snapshot on this cadence
-        # (shared protocol, streaming/compaction.py) — an always-on
-        # topology would otherwise re-read every committed partial per
-        # report, O(batches²) I/O over an unbounded run
-        self.compact_every = compact_every
         self.in_dir = os.path.join(root, "in")
         self.in_start_dir = os.path.join(root, "in_start")  # start-log topic
         self.ods_dirs = {
@@ -545,14 +539,15 @@ class FiveLayerTopology:
         return df.select("dt", "mid").distinct()
 
     def _maybe_compact(self, partial_dir: str, base_dir: str, fold) -> None:
+        # ADS/DAU partials fold into a base snapshot every COMPACT_EVERY
+        # batches (shared protocol, streaming/compaction.py) — an
+        # always-on topology would otherwise re-read every committed
+        # partial per report, O(batches²) I/O over an unbounded run.
         # gc_grace: ads_result()/dau_result() may run CONCURRENTLY with
         # a live stage's compaction — one superseded generation is kept
         # so an in-flight reader's resolved snapshot stays scannable
         # (see compaction.compact_to_base)
-        maybe_compact(
-            self.spark, partial_dir, base_dir, fold, self.compact_every,
-            gc_grace=True,
-        )
+        maybe_compact(self.spark, partial_dir, base_dir, fold, gc_grace=True)
 
     def _start_ads(self):
         """ADS brand revenue (F1+J5+K5; ads/TradeMarkAmountApp.scala):
@@ -752,7 +747,7 @@ class FiveLayerTopology:
         """Final brand totals: re-aggregation of the committed partials
         (associative — batch boundaries can't change it). Reads base ∪
         fresh via the compaction protocol, so the per-report cost is
-        bounded by 1 + compact_every files whatever the horizon."""
+        bounded by 1 + COMPACT_EVERY files whatever the horizon."""
         partials = committed_relation(self.spark, self.ads_dir, self.ads_base_dir)
         if partials is None:
             return self.spark.createDataFrame([], "p_brand string, amount double")

@@ -35,8 +35,9 @@ def test_query_matches_oracle(spark, con, name):
 
 
 # the fast tier's oracle smoke: the streaming keyed-state queries, the
-# batch allocation they must agree with, and the registered ADS and DAU
-# queries, which run the live topology's per-batch code
+# batch allocation they must agree with, the registered ADS and DAU
+# queries, which run the live topology's per-batch code, and one
+# partial drain per fold kind (distinct, non-sum, none, decayed)
 @pytest.mark.parametrize(
     "name",
     [
@@ -45,6 +46,10 @@ def test_query_matches_oracle(spark, con, name):
         "stream_first_seen",
         "stream_brand_amount",
         "stream_dau",
+        "stream_events_rolling_dau",
+        "stream_segment_overlap_kmv",
+        "stream_purchase_attribution",
+        "stream_trending_anchored",
     ],
 )
 def test_query_matches_oracle_smoke(spark, con, name):

@@ -3,6 +3,7 @@ sinks; replay, late-data, and restart semantics."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import time
@@ -1052,10 +1053,11 @@ def test_decayed_anchor_advance_matches_batch(spark, state_provider, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    out_dir = run_decayed_partials(stream, "k", "ts", hl, str(tmp_path / "sink"))
+    out_dir = str(tmp_path / "sink")
+    parts = run_decayed_partials(stream, "k", "ts", hl, out_dir)
     got = {
         r.k: (r.n_events, r.decayed_count)
-        for r in decayed_totals(spark, out_dir, "k", hl).collect()
+        for r in decayed_totals(parts, "k", hl).collect()
     }
 
     # the partial sink must hold three distinct anchors, and every
@@ -1271,7 +1273,6 @@ def test_stream_retract_agg_multi_batch_equals_state_recompute(spark, tmp_path):
         .parquet(in_dir)
     )
     out = streaming_retract_aggregate(
-        spark,
         stream,
         ["grp"],
         out_dir=str(tmp_path / "cl_out"),
@@ -1306,7 +1307,7 @@ def test_stream_customers_rfm_multibatch_equals_batch(spark, tmp_path):
         _rfm_scores_from_metrics,
         q_stream_customers_rfm,
     )
-    from realtime0523_spark.streaming.cells import streaming_cells
+    from realtime0523_spark.streaming.cells import drain_partials, sum_fold
 
     stream = (
         spark.readStream.schema(orders.schema)
@@ -1333,12 +1334,11 @@ def test_stream_customers_rfm_multibatch_equals_batch(spark, tmp_path):
         )
         return _rfm_report(_rfm_scores_from_metrics(metrics))
 
-    got = streaming_cells(
-        spark, stream, cell_fn,
-        key_cols=["ck", "d"], sum_cols=["freq", "mon"], finish_fn=finish,
-        out_dir=str(tmp_path / "rfm_cells"),
+    got = finish(drain_partials(
+        stream, cell_fn, str(tmp_path / "rfm_cells"),
+        fold=sum_fold(["ck", "d"], ["freq", "mon"]),
         checkpoint_dir=str(tmp_path / "rfm_ckpt"),
-    )
+    ))
     committed = [d for d in os.listdir(str(tmp_path / "rfm_cells"))
                  if d.startswith("batch_id=")]
     assert len(committed) == 3
@@ -1560,7 +1560,7 @@ def test_retract_backfill_any_split_converges(
     def run():
         stream = spark.readStream.schema(_CL_SCHEMA).parquet(in_dir)
         return streaming_retract_aggregate(
-            spark, stream, ["grp"],
+            stream, ["grp"],
             out_dir=os.path.join(root, "out"),
             checkpoint_dir=os.path.join(root, "ckpt"),
         )
@@ -1611,7 +1611,6 @@ def test_retract_backfill_any_split_converges_join(
 
     def run():
         return streaming_retract_join(
-            spark,
             spark.readStream.schema(f_schema).parquet(f_in),
             spark.readStream.schema(d_schema).parquet(d_in),
             key_cols=["k"],
@@ -1648,30 +1647,162 @@ def test_retract_backfill_any_split_converges_join(
     assert got == expected, (f_split, d_split, got, expected)
 
 
-def test_stream_retract_empty_stream_keeps_input_key_types(spark, tmp_path):
-    """Round-8 advice: the no-batches fallback hardcoded every group
-    column as string, so an int-keyed changelog got a different schema
-    in the empty case than the non-empty one. The fallback must now
-    inherit the input types."""
+_EV_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+_EV_ROW = (1, datetime.datetime(2024, 1, 3, 10), 1, "a", 10.0, "{}")
+_INT_KEY_CL_SCHEMA = "grp bigint, op string, price_new double, price_old double"
+_LINK_SCHEMA = (
+    "rec_key long, name string, nationkey int, acctbal double, "
+    "mktsegment string"
+)
+
+
+def _twin_cusum(spark, feed, out):
+    from realtime0523_spark.streaming.changepoint import streaming_cusum
+
+    return streaming_cusum(
+        feed(_EV_SCHEMA, [_EV_ROW]), f"{out}/p", checkpoint_dir=f"{out}/ck"
+    )
+
+
+def _twin_trend(spark, feed, out):
+    from realtime0523_spark.streaming.regression import streaming_trend_slope
+
+    x = F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")).cast("long")
+    y = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    return streaming_trend_slope(
+        feed(_EV_SCHEMA, [_EV_ROW]), "event_type", x, y, f"{out}/p",
+        checkpoint_dir=f"{out}/ck",
+    )
+
+
+def _twin_kmv(spark, feed, out):
+    from realtime0523_spark.streaming.synopsis import streaming_kmv_overlap
+
+    return streaming_kmv_overlap(
+        feed("seg string, uid long", [("a", 1), ("b", 1)]), "seg", "uid",
+        f"{out}/p", checkpoint_dir=f"{out}/ck", k=8,
+    )
+
+
+def _twin_dd(spark, feed, out):
+    from realtime0523_spark.streaming.synopsis import streaming_dd_quantiles
+
+    return streaming_dd_quantiles(
+        feed(_EV_SCHEMA, [_EV_ROW]), "event_type", "value", [("p50", 1, 2)],
+        f"{out}/p", checkpoint_dir=f"{out}/ck",
+    )
+
+
+def _twin_linkage(spark, feed, out):
+    from realtime0523_spark.streaming.linkage import streaming_record_linkage
+
+    base = spark.createDataFrame(
+        [(1, "Customer#000000001", 1, 5.0, "AUTO")], _LINK_SCHEMA
+    )
+    return streaming_record_linkage(
+        base, feed(_LINK_SCHEMA, [(1, "CUST 000000001", 1, 5.0, "AUTO")]),
+        f"{out}/p", checkpoint_dir=f"{out}/ck",
+    )
+
+
+def _twin_decayed(spark, feed, out):
+    from realtime0523_spark.streaming.decayed import (
+        decayed_totals,
+        run_decayed_partials,
+    )
+
+    rows = [("a", datetime.datetime(2024, 1, 3, 10))]
+    parts = run_decayed_partials(
+        feed("k string, ts timestamp", rows), "k", "ts", 3600, f"{out}/p"
+    )
+    return decayed_totals(parts, "k", 3600)
+
+
+def _twin_retract_agg(spark, feed, out):
     from realtime0523_spark.streaming.retraction import (
         streaming_retract_aggregate,
     )
 
-    schema = "grp bigint, op string, price_new double, price_old double"
-    in_dir = str(tmp_path / "empty_in")
-    os.makedirs(in_dir)
-    # a schema'd but file-less directory: the stream starts and drains
-    # zero batches, which is exactly the fallback path
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    out = streaming_retract_aggregate(
-        spark,
-        stream,
+    return streaming_retract_aggregate(
+        feed(_INT_KEY_CL_SCHEMA, [(7, "insert", 1.25, None)]),
         ["grp"],
-        out_dir=str(tmp_path / "empty_out"),
-        checkpoint_dir=str(tmp_path / "empty_ckpt"),
+        f"{out}/p",
+        checkpoint_dir=f"{out}/ck",
     )
-    assert out.schema["grp"].dataType.simpleString() == "bigint"
-    assert out.count() == 0
+
+
+def _twin_retract_join(spark, feed, out):
+    from realtime0523_spark.streaming.retraction import streaming_retract_join
+
+    d_schema = "grp bigint, attr int, op string, price_new double, price_old double"
+    return streaming_retract_join(
+        feed(_INT_KEY_CL_SCHEMA, [(7, "insert", 1.25, None)]),
+        feed(d_schema, [(7, 3, "insert", 2.5, None)]),
+        key_cols=["grp"], group_cols=["attr"], fact_dir=f"{out}/f",
+        dim_dir=f"{out}/d", checkpoint_root=f"{out}/ck",
+    )
+
+
+def _twin_cells_dau(spark, feed, out):
+    from realtime0523_spark.plans.inventory import _rolling_dau_from_cells
+    from realtime0523_spark.streaming.cells import drain_partials
+
+    cells = drain_partials(
+        feed(_EV_SCHEMA, [_EV_ROW]),
+        lambda b: b.select(
+            "user_id", F.col("ts").cast("date").alias("d")
+        ).distinct(),
+        f"{out}/p",
+        fold=lambda df: df.distinct(),
+        checkpoint_dir=f"{out}/ck",
+    )
+    return _rolling_dau_from_cells(cells)
+
+
+_STREAM_TWINS = {
+    "cells_dau": _twin_cells_dau,
+    "cusum": _twin_cusum,
+    "trend": _twin_trend,
+    "kmv": _twin_kmv,
+    "dd": _twin_dd,
+    "linkage": _twin_linkage,
+    "decayed": _twin_decayed,
+    "retract_agg": _twin_retract_agg,
+    "retract_join": _twin_retract_join,
+}
+
+
+@pytest.mark.parametrize("twin", sorted(_STREAM_TWINS))
+def test_stream_twin_empty_result_matches_nonempty(spark, tmp_path, twin):
+    """Every drained twin derives its no-batches result from the same
+    partial function and finisher as a non-empty drain, so a stream
+    over a schema'd but file-less directory (zero batches) must return
+    zero rows in EXACTLY the schema a one-file drain returns — key
+    types included (a hand-written fallback once typed an int key as
+    string)."""
+
+    def drain(tag, with_rows):
+        dirs = iter(range(10))
+
+        def feed(schema, rows):
+            in_dir = str(tmp_path / f"{tag}_in{next(dirs)}")
+            os.makedirs(in_dir)
+            if with_rows:
+                spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                    "append"
+                ).parquet(in_dir)
+            return spark.readStream.schema(schema).parquet(in_dir)
+
+        return _STREAM_TWINS[twin](spark, feed, str(tmp_path / tag))
+
+    empty = drain("empty", False)
+    full = drain("full", True)
+    assert empty.schema.simpleString() == full.schema.simpleString()
+    assert empty.count() == 0
+    assert full.count() > 0
 
 
 def test_stream_kmv_multi_batch_equals_single_pass(spark, tmp_path):
@@ -1704,7 +1835,6 @@ def test_stream_kmv_multi_batch_equals_single_pass(spark, tmp_path):
         .parquet(in_dir)
     )
     got = streaming_kmv_overlap(
-        spark,
         stream,
         "seg",
         "uid",
@@ -1767,7 +1897,7 @@ def test_stream_cusum_split_hour_equals_batch(spark, tmp_path):
         .parquet(in_dir)
     )
     got = streaming_cusum(
-        spark, stream, out_dir=str(tmp_path / "out"),
+        stream, out_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     ).collect()[0]
 
@@ -1793,7 +1923,7 @@ def test_streaming_cells_additive_and_distinct_modes(spark, tmp_path):
         _ks_cells,
         _rolling_dau_from_cells,
     )
-    from realtime0523_spark.streaming.cells import streaming_cells
+    from realtime0523_spark.streaming.cells import drain_partials, sum_fold
 
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     in_dir = str(tmp_path / "in")
@@ -1826,11 +1956,11 @@ def test_streaming_cells_additive_and_distinct_modes(spark, tmp_path):
             .parquet(in_dir)
         )
 
-    got_ks = streaming_cells(
-        spark, stream(), _ks_cells, ["key", "v"], ["c1", "c2"],
-        ks_2sample, str(tmp_path / "ks_out"),
+    got_ks = ks_2sample(drain_partials(
+        stream(), _ks_cells, str(tmp_path / "ks_out"),
+        fold=sum_fold(["key", "v"], ["c1", "c2"]),
         checkpoint_dir=str(tmp_path / "ks_ckpt"),
-    ).collect()
+    )).collect()
     want_ks = ks_2sample(_ks_cells(spark.read.parquet(in_dir))).collect()
     assert [r.asDict() for r in got_ks] == [r.asDict() for r in want_ks]
     # the split cell really folded: type a, 1000 cents → c1=2 (batch 1
@@ -1844,12 +1974,11 @@ def test_streaming_cells_additive_and_distinct_modes(spark, tmp_path):
             "user_id", F.col("ts").cast("date").alias("d")
         ).distinct()
 
-    got_dau = streaming_cells(
-        spark, stream(), dau_cells, ["user_id", "d"], [],
-        _rolling_dau_from_cells, str(tmp_path / "dau_out"),
+    got_dau = _rolling_dau_from_cells(drain_partials(
+        stream(), dau_cells, str(tmp_path / "dau_out"),
+        fold=lambda df: df.distinct(),
         checkpoint_dir=str(tmp_path / "dau_ckpt"),
-        distinct_cells=True,
-    ).orderBy("day").collect()
+    )).orderBy("day").collect()
     want_dau = _rolling_dau_from_cells(
         dau_cells(spark.read.parquet(in_dir))
     ).orderBy("day").collect()
@@ -2249,25 +2378,27 @@ def test_streaming_brand_amount_guard_refuses_split_feed(spark, tmp_path):
 
 
 def test_co_arrival_guard_compacts_key_log_and_stays_replay_exempt(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """The guard's key log must stay BOUNDED (base snapshot + at most
-    compact_every fresh files — an always-on stage re-reading every
+    COMPACT_EVERY fresh files — an always-on stage re-reading every
     batch's key file forever is an O(batches²) accretion), keep
     raising on a key from a compacted-away batch, and stay exempt on a
     replay of the latest batch even after its keys were folded into
     the base."""
+    from realtime0523_spark.streaming import compaction
     from realtime0523_spark.streaming.allocation import co_arrival_guard
 
+    monkeypatch.setattr(compaction, "COMPACT_EVERY", 2)
     keys_dir = str(tmp_path / "keys")
-    guard = co_arrival_guard(spark, keys_dir, compact_every=2)
+    guard = co_arrival_guard(spark, keys_dir)
 
     def batch(*ks):
         return _keys_batch(spark, *ks)
 
     for i in range(6):
         guard(batch(100 + i), i)
-    # bounded: everything folded into one base, < compact_every fresh
+    # bounded: everything folded into one base, < COMPACT_EVERY fresh
     partials = [d for d in os.listdir(keys_dir) if d.startswith("batch_id=")]
     assert len(partials) < 2
     base = keys_dir + "_base"
@@ -2496,23 +2627,25 @@ def test_co_arrival_guard_scopes_key_log_to_checkpoint(spark, tmp_path):
         g3(_keys_batch(spark, 100), 1)
 
 
-def test_streaming_cells_long_horizon_flat_fold(spark, tmp_path):
+def test_streaming_cells_long_horizon_flat_fold(spark, tmp_path, monkeypatch):
     """Round-10 verdict item #1: 100+ micro-batches through the
     additive-cells machinery with a 10-batch compaction cadence. The
     at-rest partials must stay BOUNDED (exactly one base snapshot +
-    fewer than compact_every fresh files — never the 100 files an
+    fewer than COMPACT_EVERY fresh files — never the 100 files an
     uncompacted always-on monitor accretes, the O(batches²) fold), and
     the drained result must still equal the batch fold."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from realtime0523_spark.streaming.cells import streaming_cells
+    from realtime0523_spark.streaming import compaction
+    from realtime0523_spark.streaming.cells import drain_partials, sum_fold
     from realtime0523_spark.streaming.compaction import (
         base_watermark,
         partial_ids,
     )
 
     n_batches, compact_every = 100, 10
+    monkeypatch.setattr(compaction, "COMPACT_EVERY", compact_every)
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
     t0 = time.time()
@@ -2537,16 +2670,12 @@ def test_streaming_cells_long_horizon_flat_fold(spark, tmp_path):
         )
 
     out_dir = str(tmp_path / "cells")
-    got = streaming_cells(
-        spark,
+    got = drain_partials(
         src,
         cell_fn,
-        key_cols=["k"],
-        sum_cols=["cnt", "s"],
-        finish_fn=lambda d: d,
-        out_dir=out_dir,
+        out_dir,
+        fold=sum_fold(["k"], ["cnt", "s"]),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        compact_every=compact_every,
     )
     got_rows = sorted(map(tuple, got.collect()))
     # flat fold cost, structurally: one base, < compact_every fresh
@@ -2830,19 +2959,22 @@ def test_bucketed_state_codec_refuses_other_version_and_bucket_count():
         decode_state(blob, 8, dtypes)
 
 
-def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):
+def test_co_arrival_guard_event_time_horizon_bounds_key_log(
+    spark, tmp_path, monkeypatch
+):
     """The guard's at-rest key log must stay bounded by its EVENT-TIME
     horizon (GUARD_HORIZON_MS, 150 s) over a long run — keys whose
     last-seen event time fell more than the horizon behind the log's
     newest event time are pruned at compaction (they can no longer
     traverse the upstream watermarked join, so the guard can never
     legally be asked about them again). Flat-fold shape mirrors the
-    cells long-horizon test: one base snapshot, < compact_every fresh
+    cells long-horizon test: one base snapshot, < COMPACT_EVERY fresh
     partials, base row count bounded by the horizon — never O(total
     distinct keys). False-raise semantics unchanged inside the
     horizon."""
     import datetime
 
+    from realtime0523_spark.streaming import compaction
     from realtime0523_spark.streaming.allocation import (
         GUARD_HORIZON_MS,
         co_arrival_guard,
@@ -2851,7 +2983,8 @@ def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):
     keys_dir = str(tmp_path / "keys_ev")
     compact_every, step_s = 4, 75
     assert GUARD_HORIZON_MS == 150_000
-    guard = co_arrival_guard(spark, keys_dir, compact_every=compact_every)
+    monkeypatch.setattr(compaction, "COMPACT_EVERY", compact_every)
+    guard = co_arrival_guard(spark, keys_dir)
     t0 = datetime.datetime(2025, 6, 15)
 
     def batch(k, sec):
@@ -2883,7 +3016,7 @@ def test_co_arrival_guard_event_time_horizon_bounds_key_log(spark, tmp_path):
 
 
 def test_co_arrival_guard_horizon_never_prunes_early_on_backward_time(
-    spark, tmp_path, state_provider
+    spark, tmp_path, state_provider, monkeypatch
 ):
     """Event time goes BACKWARD across batches (a late replay wave).
     The prune compares each key's last-seen event time to the LOG's
@@ -2894,10 +3027,12 @@ def test_co_arrival_guard_horizon_never_prunes_early_on_backward_time(
     configured provider — hence the parametrization.)"""
     import datetime
 
+    from realtime0523_spark.streaming import compaction
     from realtime0523_spark.streaming.allocation import co_arrival_guard
 
+    monkeypatch.setattr(compaction, "COMPACT_EVERY", 3)
     keys_dir = str(tmp_path / "keys_back")
-    guard = co_arrival_guard(spark, keys_dir, compact_every=3)
+    guard = co_arrival_guard(spark, keys_dir)
     t0 = datetime.datetime(2025, 6, 15)
 
     def batch(k, ms):
@@ -2921,7 +3056,7 @@ def test_co_arrival_guard_horizon_never_prunes_early_on_backward_time(
 
 
 def test_co_arrival_guard_horizon_boundary_key_survives(
-    spark, tmp_path, state_provider
+    spark, tmp_path, state_provider, monkeypatch
 ):
     """A key whose last-seen event time is EXACTLY the horizon
     (150 s) behind the log's newest survives the prune (>=). Spark keeps rows exactly at the watermark, so with
@@ -2930,10 +3065,12 @@ def test_co_arrival_guard_horizon_boundary_key_survives(
     an off-by-one unsoundness. One millisecond older is pruned."""
     import datetime
 
+    from realtime0523_spark.streaming import compaction
     from realtime0523_spark.streaming.allocation import co_arrival_guard
 
+    monkeypatch.setattr(compaction, "COMPACT_EVERY", 3)
     keys_dir = str(tmp_path / "keys_bound")
-    guard = co_arrival_guard(spark, keys_dir, compact_every=3)
+    guard = co_arrival_guard(spark, keys_dir)
     t0 = datetime.datetime(2025, 6, 15)
 
     def batch(k, ms):

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from realtime0523_spark.functions.scalar import round2
 from realtime0523_spark.operators.allocation import allocate_order_amount
+from realtime0523_spark.streaming import compaction
 from realtime0523_spark.streaming.sinks import latest_dim_version
 from realtime0523_spark.streaming.topology import FiveLayerTopology
 
@@ -177,14 +178,13 @@ def test_versioned_dim_upsert_heals_crash_between_rename_and_marker(
 
 
 def test_five_layer_topology_live_with_midrun_restart(
-    spark, provider_and_trigger, tmp_path
+    spark, provider_and_trigger, tmp_path, monkeypatch
 ):
     _provider, trigger = provider_and_trigger
-    # compact_every=2 exercises the round-11 ADS/DAU partials
-    # compaction inside the live topology (production default is 32)
-    topo = FiveLayerTopology(
-        spark, str(tmp_path / "topo"), trigger_seconds=trigger, compact_every=2
-    )
+    # a cadence of 2 exercises the ADS/DAU partials compaction inside
+    # the live topology (production cadence is 32)
+    monkeypatch.setattr(compaction, "COMPACT_EVERY", 2)
+    topo = FiveLayerTopology(spark, str(tmp_path / "topo"), trigger_seconds=trigger)
     topo.start()
     try:
         # ---- wave 0: dim bootstrap + router junk -----------------------

@@ -3,7 +3,7 @@ inventory queries — the shapes that matter at 100 TB, extracted from
 `.explain("formatted")` and summarized (join strategies, exchanges,
 aggregate pairs, scans with pushed filters).
 
-Usage: PYTHONPATH=/root/repo python tools/plan_report.py [sf_dir]
+Usage: python tools/plan_report.py [sf_dir]
 Streaming queries are skipped (building their frame executes the
 stream; their shapes are asserted in tests/test_streaming.py).
 """
@@ -11,9 +11,12 @@ stream; their shapes are asserted in tests/test_streaming.py).
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # queries whose plans carry the scale story, with the one-line argument
 AUDITED: dict[str, str] = {
