@@ -18,6 +18,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the package's parent directory: Python workers import the package
+# from here whatever directory the driver was started in
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
 
 def get_spark(
     app_name: str = "realtime0523_spark",
@@ -49,6 +55,7 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

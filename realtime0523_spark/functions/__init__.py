@@ -1,5 +1,6 @@
 from realtime0523_spark.functions.scalar import (
     round2,
+    round9,
     ROUND2_SQL,
     derive_date_hour_from_ts,
     derive_date_hour_from_string,
@@ -10,6 +11,7 @@ from realtime0523_spark.functions.scalar import (
 
 __all__ = [
     "round2",
+    "round9",
     "ROUND2_SQL",
     "derive_date_hour_from_ts",
     "derive_date_hour_from_string",

@@ -27,6 +27,17 @@ def round2(col: Column | str) -> Column:
     return F.floor(c * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
 
 
+def round9(col: Column | str) -> Column:
+    """9-decimal half-up rounding, floor(x*1e9 + 0.5)/1e9 — the one
+    quantization every non-money double output takes, written as the
+    same IEEE double ops as the oracle's SQL twin so the two engines
+    agree bit for bit (it also absorbs summation-order differences of
+    a few ulps). Rounding an already rounded value returns it
+    unchanged."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
+
+
 def derive_date_hour_from_ts(ts: Column | str) -> tuple[Column, Column]:
     """Epoch/timestamp → (dt 'yyyy-MM-dd', hr 'HH').
 

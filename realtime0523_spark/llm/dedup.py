@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from realtime0523_spark.functions.scalar import round9
 from realtime0523_spark.llm.text import tokens
 
 # --- portable hashing constants (shared with the SQL oracle) ----------
@@ -928,9 +929,4 @@ def ppjoin_pairs(
     jac = F.col("inter").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("inter")
     ).cast("double")
-    # file convention: floor-based 9-dp rounding, mirrored in the oracle
-    return keep.select(
-        "doc_a",
-        "doc_b",
-        (F.floor(jac * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)).alias("jaccard"),
-    )
+    return keep.select("doc_a", "doc_b", round9(jac).alias("jaccard"))

@@ -46,15 +46,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from realtime0523_spark.functions.scalar import round9
 from realtime0523_spark.llm.dedup import md5_int32
 from realtime0523_spark.llm.text import tokens
 
 DSIR_BUCKETS = 1024
 DSIR_SALT = "dsir-v1"
-
-
-def _r9(c: Column) -> Column:
-    return F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
 
 
 def _ngram_terms(text_col: Column) -> Column:
@@ -119,7 +116,7 @@ def bucket_log_probs(
         .select("bucket", F.coalesce(F.col("n"), F.lit(0)).alias("n"))
         .select(
             "bucket",
-            _r9(
+            round9(
                 F.log(
                     (F.col("n") + F.lit(1)).cast("double")
                     / (n_total + F.lit(n_buckets)).cast("double")
@@ -182,7 +179,7 @@ def gumbel_key(id_col: Column, salt: str = DSIR_SALT) -> Column:
         md5_int32(F.concat_ws(":", id_col.cast("string"), F.lit(salt))).cast("double")
         + F.lit(0.5)
     ) / F.lit(4294967296.0)
-    return _r9(-F.log(-F.log(u)))
+    return round9(-F.log(-F.log(u)))
 
 
 def dsir_sample(
@@ -206,8 +203,10 @@ def dsir_sample(
     w = dsir_logweights(raw, target, id_col, text_col, n_buckets)
     keyed = w.select(
         id_col,
-        _r9(F.col("logw")).alias("logw"),
-        _r9(_r9(F.col("logw")) + gumbel_key(F.col(id_col), salt)).alias("sel_key"),
+        round9(F.col("logw")).alias("logw"),
+        round9(round9(F.col("logw")) + gumbel_key(F.col(id_col), salt)).alias(
+            "sel_key"
+        ),
     )
     top = keyed.orderBy(F.desc("sel_key"), F.col(id_col)).limit(k)
     return top.withColumn(

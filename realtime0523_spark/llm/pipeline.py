@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from realtime0523_spark.functions.scalar import round9
 from realtime0523_spark.llm.dedup import md5_int32
 from realtime0523_spark.llm.text import (
     quality_features,
@@ -449,13 +450,6 @@ def token_budget_sample(
     )
 
 
-def _r9(c: Column) -> Column:
-    """floor(x*1e9+0.5)/1e9 — the 9dp quantization every float output
-    in the inventory uses; membership decisions below compare these
-    quantized values so both engines decide identically."""
-    return F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-
-
 def domain_quality_filter(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -528,13 +522,15 @@ def domain_quality_filter(
             "source_median",
             F.expr("percentile(quality_score, 0.5)").over(W.partitionBy(domain_col)),
         )
+    # membership compares the 9-dp-rounded values, so both engines
+    # decide identically
     return scored.filter(
-        _r9(F.col("quality_score")) >= _r9(F.col("source_median"))
+        round9(F.col("quality_score")) >= round9(F.col("source_median"))
     ).select(
         id_col,
         domain_col,
-        _r9(F.col("quality_score")).alias("quality_score"),
-        _r9(F.col("source_median")).alias("source_median"),
+        round9(F.col("quality_score")).alias("quality_score"),
+        round9(F.col("source_median")).alias("source_median"),
     )
 
 
@@ -600,9 +596,7 @@ def lm_bigram_logprob(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            (F.floor(F.avg(logp) * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)).alias(
-                "avg_logp"
-            ),
+            round9(F.avg(logp)).alias("avg_logp"),
         )
     )
 
@@ -683,9 +677,7 @@ def kn_bigram_logprob(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            (F.floor(F.avg(logp) * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)).alias(
-                "avg_logp_kn"
-            ),
+            round9(F.avg(logp)).alias("avg_logp_kn"),
         )
     )
 
@@ -743,7 +735,7 @@ def domain_mix_temperature(
     total = F.sum("n_tokens").over(W.partitionBy())
     p = F.col("n_tokens").cast("double") / total.cast("double")
     shared = agg.withColumn("p", p).withColumn(
-        "p_alpha", _r9(F.pow(F.col("p"), F.lit(alpha)))
+        "p_alpha", round9(F.pow(F.col("p"), F.lit(alpha)))
     )
     z = F.sum("p_alpha").over(W.partitionBy())
     q = F.col("p_alpha") / z
@@ -751,9 +743,9 @@ def domain_mix_temperature(
         domain_col,
         "n_docs",
         "n_tokens",
-        _r9(F.col("p")).alias("token_share"),
-        _r9(q).alias("mix_weight"),
-        _r9(q / F.col("p")).alias("sample_factor"),
+        round9(F.col("p")).alias("token_share"),
+        round9(q).alias("mix_weight"),
+        round9(q / F.col("p")).alias("sample_factor"),
     )
 
 
@@ -920,7 +912,6 @@ def drift_from_counts(
 ) -> DataFrame:
     """The KL core of `corpus_drift`, over two prebuilt
     (domain, bucket, cnt) profiles — see corpus_drift for semantics."""
-    from realtime0523_spark.llm.dsir import _r9
 
     B = n_buckets or _drift_buckets()
     ta = ca.groupBy("domain").agg(F.sum("cnt").alias("t_a"))
@@ -949,7 +940,7 @@ def drift_from_counts(
     )
     pa = (F.col("n_a") + 1).cast("double") / (F.col("t_a") + B).cast("double")
     pb = (F.col("n_b") + 1).cast("double") / (F.col("t_b") + B).cast("double")
-    ln_a, ln_b = _r9(F.log(pa)), _r9(F.log(pb))
+    ln_a, ln_b = round9(F.log(pa)), round9(F.log(pb))
     return (
         g.select(
             "domain",
@@ -962,8 +953,8 @@ def drift_from_counts(
         .agg(
             F.max("t_a").cast("long").alias("n_terms_a"),
             F.max("t_b").cast("long").alias("n_terms_b"),
-            _r9(F.sum("__kab")).alias("kl_ab"),
-            _r9(F.sum("__kba")).alias("kl_ba"),
+            round9(F.sum("__kab")).alias("kl_ab"),
+            round9(F.sum("__kba")).alias("kl_ba"),
         )
     )
 

@@ -12,6 +12,12 @@ query outputs are rounded to 9 dp on both sides, which absorbs the
 summation-order difference between numpy's pairwise sums and the
 oracle's sequential fold (≤ 1 ulp on 64-dim dots).
 
+One ranking rule holds for every search operator: `score` is rounded
+half-up at 9 dp (functions.scalar.round9) and each query keeps its top
+k by (score desc, ids asc), ranked 1..k in `rk` (_rank_topk). Shortlist
+indexes (PQ, IVFADC, SQ, random projection) re-rank through the one
+fetch-pair-score tail, cross_rerank_topk.
+
 Scale: brute force is O(n·q) dot products with per-batch partial
 top-k — fine for a broadcast query set; the LSH path buckets vectors
 by hyperplane sign bits (linear scan) and only scores within buckets.
@@ -26,8 +32,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from realtime0523_spark.functions.scalar import round9
 from realtime0523_spark.llm.text import tokens
 from realtime0523_spark.operators.windows import topk_per_group
+
+
+def _rank_topk(
+    scored: DataFrame, query_id_col: str, id_cols: list[str], k: int
+) -> DataFrame:
+    """The final rank step of every search operator: round `score` to
+    9 dp, then keep each query's top k by (score desc, ids asc)."""
+    return topk_per_group(
+        scored.withColumn("score", round9("score")),
+        query_id_col,
+        [F.desc("score"), *[F.col(c) for c in id_cols]],
+        k,
+        rank_col="rk",
+    )
 
 
 def _mat(series: pd.Series) -> np.ndarray:
@@ -49,28 +70,14 @@ def cosine_pudf(a: Column, b: Column) -> Column:
     return _cos(a, b)
 
 
-# Kept for small/one-off expressions and tests; hot paths use the
-# numpy kernels above.
+# Column-expression dot product for lsh_bucket's one-off projections;
+# hot paths use the numpy kernels above.
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def cosine_topk(
@@ -81,7 +88,6 @@ def cosine_topk(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
     label_col: str | None = None,
     query_label_col: str | None = None,
 ) -> DataFrame:
@@ -96,17 +102,12 @@ def cosine_topk(
     contract); the corpus streams through one mapInPandas pass that
     scores a whole Arrow batch against ALL queries in a single
     (batch × dims) @ (dims × nq) matmul and keeps only each query's
-    per-batch top-k (top-k is distributive, so batch-local pruning is
-    exact). The final window rank then sees ≤ k·nq rows per batch
-    instead of n·q scored rows — the corpus is scanned once, nothing
-    big ever shuffles.
-
-    `score_transform` (Column→Column, e.g. round-to-9dp for oracle
-    parity) is applied to the ranking key of the FINAL rank only; the
-    batch-local prune then keeps every row whose raw score is within
-    1e-9 of the k-th score (adaptive margin), so a transform-induced
-    tie at the cutoff cannot drop a row the final rounded rank would
-    keep — regardless of how many raw-distinct scores round together."""
+    per-batch top-k. The kernel ranks by the 9-dp-rounded score
+    (_r9_np, bit-identical to round9), the same total order as the
+    final rank, so batch-local pruning is exact: top-k is
+    distributive. The final window rank then sees ≤ k·nq rows per
+    batch instead of n·q scored rows — the corpus is scanned once,
+    nothing big ever shuffles."""
     if (label_col is None) != (query_label_col is None):
         raise ValueError("label_col and query_label_col must be set together")
     qcols = [query_id_col, query_vec_col] + (
@@ -132,9 +133,10 @@ def cosine_topk(
             ids = pdf[id_col].to_numpy()
             labels = pdf[label_col].to_numpy() if label_col else None
             mat = _mat(pdf[vec_col])
-            scores = (mat @ qmat.T) / (
-                np.linalg.norm(mat, axis=1)[:, None] * qnorm[None, :]
-            )  # (n, nq)
+            scores = _r9_np(
+                (mat @ qmat.T)
+                / (np.linalg.norm(mat, axis=1)[:, None] * qnorm[None, :])
+            )  # (n, nq), rounded as the final rank rounds
             parts = []
             for j, qid in enumerate(qids):
                 s = scores[:, j]
@@ -146,17 +148,7 @@ def cosine_topk(
                     continue
                 # order by (score desc, id asc) — same total order as the
                 # final rank, so ties at the k-cutoff prune identically
-                ranked = cand_idx[np.lexsort((ids[cand_idx], -s[cand_idx]))]
-                if score_transform is None or len(ranked) <= k:
-                    top = ranked[:k]
-                else:
-                    # adaptive margin: any row whose raw score is within
-                    # 1e-9 of the k-th could outrank it after rounding
-                    kth = s[ranked[k - 1]]
-                    n_keep = int(
-                        np.searchsorted(-s[ranked], -(kth - 1e-9), side="right")
-                    )
-                    top = ranked[: max(k, n_keep)]
+                top = cand_idx[np.lexsort((ids[cand_idx], -s[cand_idx]))][:k]
                 parts.append(
                     pd.DataFrame(
                         {
@@ -170,11 +162,7 @@ def cosine_topk(
                 yield pd.concat(parts, ignore_index=True)
 
     scored = corpus.select(*scan_cols).mapInPandas(score_batches, out_schema)
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
-    )
+    return _rank_topk(scored, query_id_col, [id_col], k)
 
 
 def hard_negative_topk(
@@ -187,7 +175,6 @@ def hard_negative_topk(
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
     query_label_col: str = "qlabel",
-    score_transform=None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training (the in-batch-
     negatives upgrade of DPR, Karpukhin et al. EMNLP 2020 §3.2, and
@@ -209,7 +196,6 @@ def hard_negative_topk(
         vec_col=vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        score_transform=score_transform,
         label_col=label_col,
         query_label_col=query_label_col,
     )
@@ -254,7 +240,7 @@ def lsh_bucket(vec: Column, dims: int, bits: int = LSH_BITS, table: int = 0) -> 
         plane = F.array(
             *[F.lit(_plane_component(table * bits + i, d)) for d in range(dims)]
         )
-        proj = F.floor(_dot(vec, plane) * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
+        proj = round9(_dot(vec, plane))
         total = total + F.when(proj > 0, F.lit(1 << i).cast("bigint")).otherwise(F.lit(0))
     return total
 
@@ -269,8 +255,8 @@ def _lsh_table_entries(
     All `tables*bits` projections are one Arrow-batched numpy matmul
     (a Pandas UDF): higher-order array functions are interpreted
     per-element in Spark, and profiling showed the 32-plane fold
-    dominating the ANN path. Since round 4 the index carries an EXACT
-    SQL oracle, so bucket membership must be engine-independent: the
+    dominating the ANN path. The index carries an EXACT SQL oracle,
+    so bucket membership must be engine-independent: the
     sign decision runs on the 9dp-quantized projection (numpy pairwise
     sums vs a SQL sequential fold differ by ≤1 ulp on 64-dim dots,
     which quantization absorbs — same discipline as the score
@@ -312,7 +298,6 @@ def ann_topk_lsh(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
     probe_hamming: int = 0,
 ) -> DataFrame:
     """Multi-table sign-LSH approximate top-k.
@@ -332,12 +317,7 @@ def ann_topk_lsh(
     (tiny, broadcast) query-side entries multiply by bits+1. The
     deterministic all-single-flips probe set keeps the index
     SQL-replayable (the paper's margin-ordered probing is a
-    cost-ordering of the same set).
-
-    `score_transform` (e.g. round-to-9dp) is applied BEFORE the final
-    rank so an SQL twin that rounds-then-ranks orders identically; the
-    full candidate set is ranked (no batch-local prune), so no margin
-    logic is needed here."""
+    cost-ordering of the same set)."""
     if probe_hamming not in (0, 1):
         raise ValueError(
             f"probe_hamming supports 0 (exact bucket) or 1 (all "
@@ -379,11 +359,7 @@ def ann_topk_lsh(
         F.col(id_col),
         cosine_pudf(F.col(vec_col), F.col(query_vec_col)).alias("score"),
     )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
-    )
+    return _rank_topk(scored, query_id_col, [id_col], k)
 
 
 # --- IVF (inverted-file ANN over spherical k-means cells) ------------
@@ -467,7 +443,6 @@ def ann_topk_ivf(
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
     centroids: np.ndarray | None = None,
-    score_transform=None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are bucketed into their
     nearest k-means cell (one map-only pass, centroids in the UDF
@@ -496,7 +471,6 @@ def ann_topk_ivf(
         vec_col=vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        score_transform=score_transform,
     )
 
 
@@ -532,7 +506,6 @@ def ivf_query_cells(
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
     cell_col: str = "__cell",
-    score_transform=None,
 ) -> DataFrame:
     """Serve top-k from a STORED (id, vector, cell) index — the probe
     join + exact re-rank half of ann_topk_ivf, split out so an
@@ -560,11 +533,7 @@ def ivf_query_cells(
         F.col(id_col),
         cosine_pudf(F.col(vec_col), F.col(query_vec_col)).alias("score"),
     )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
-    )
+    return _rank_topk(scored, query_id_col, [id_col], k)
 
 
 # Knuth multiplicative-hash constant; dim weights in [1, 2) derived
@@ -613,7 +582,6 @@ def cross_rerank_topk(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """Second-stage re-rank — the cross-encoder slot of a two-stage
     retrieval stack (retrieve cheaply with ANN, re-score the short
@@ -626,7 +594,9 @@ def cross_rerank_topk(
     on top, and every surviving pair is scored ONCE by `scorer` in
     Arrow batches. `scorer(vec, query_vec) -> Column` defaults to the
     deterministic interaction scorer above, keeping the whole stack
-    oracle-replayable end-to-end (emb_ann_rerank).
+    oracle-replayable end-to-end (emb_ann_rerank). The shortlist
+    indexes (PQ, IVFADC, SQ, random projection) end here too, with
+    `scorer=cosine_pudf`: their exact re-rank is this same tail.
 
     Scale shape: two broadcast joins + one map-only Arrow scoring pass
     over |queries|·k_retrieve rows; the only shuffle is the final
@@ -642,11 +612,7 @@ def cross_rerank_topk(
     scored = paired.select(
         F.col(query_id_col), F.col(id_col), score.alias("score")
     )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
-    )
+    return _rank_topk(scored, query_id_col, [id_col], k)
 
 
 def label_centroids(
@@ -745,8 +711,9 @@ def embedding_dedup_pairs(
     )
     # round-then-threshold (half-up at 9 dp), matching the SQL oracle's
     # semantics exactly at the boundary; cos_sim stays raw in the output
-    rounded = F.floor(F.col("cos_sim") * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    return scored.filter(rounded >= threshold)
+    # round-then-threshold, the oracle's semantics at the boundary;
+    # cos_sim stays raw in the output
+    return scored.filter(round9("cos_sim") >= threshold)
 
 
 # --- Product quantization (PQ-ADC shortlist + exact re-rank) ----------
@@ -987,7 +954,6 @@ def ann_topk_opq(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """OPQ-ADC top-k: rotate corpus and queries by the learned R
     (map-only Arrow pass each), then run the standard PQ-ADC scan +
@@ -1010,7 +976,6 @@ def ann_topk_opq(
         vec_col=vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        score_transform=score_transform,
     )
 
 
@@ -1028,7 +993,6 @@ def ann_topk_ivfopq(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """IVF-OPQ — the full FAISS `OPQm,IVFn,PQm` recipe and the last
     rung of the ANN family: the learned orthonormal rotation (OPQ)
@@ -1067,7 +1031,6 @@ def ann_topk_ivfopq(
         vec_col=vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        score_transform=score_transform,
     )
 
 
@@ -1130,7 +1093,6 @@ def ann_topk_pq(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """PQ-ADC approximate top-k: encode the corpus to M codes per
     vector, scan the codes once scoring every vector against each
@@ -1198,19 +1160,16 @@ def ann_topk_pq(
         rank_col="__rn",
     ).select(query_id_col, id_col)
 
-    fetched = corpus.select(id_col, vec_col).join(F.broadcast(shortlist), id_col)
-    paired = fetched.join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col
-    )
-    scored = paired.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine_pudf(F.col(vec_col), F.col(query_vec_col)).alias("score"),
-    )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
+    return cross_rerank_topk(
+        corpus,
+        queries,
+        shortlist,
+        k=k,
+        scorer=cosine_pudf,
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
 
 
@@ -1228,7 +1187,6 @@ def ann_topk_ivfpq(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """IVFADC — the combined coarse-quantizer + product-quantizer index
     (Jégou et al. TPAMI 2011 §V, the architecture behind FAISS
@@ -1274,7 +1232,6 @@ def ann_topk_ivfpq(
         vec_col=vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        score_transform=score_transform,
     )
 
 
@@ -1318,7 +1275,6 @@ def ivfpq_query_index(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """Serve IVFADC top-k from a STORED (id, __cell, __code) index —
     the probe-join + ADC + exact-rerank half of ann_topk_ivfpq, split
@@ -1376,19 +1332,16 @@ def ivfpq_query_index(
         rank_col="__rn",
     ).select(query_id_col, id_col)
 
-    fetched = corpus.select(id_col, vec_col).join(F.broadcast(shortlist), id_col)
-    paired = fetched.join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col
-    )
-    scored = paired.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine_pudf(F.col(vec_col), F.col(query_vec_col)).alias("score"),
-    )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
+    return cross_rerank_topk(
+        corpus,
+        queries,
+        shortlist,
+        k=k,
+        scorer=cosine_pudf,
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
 
 
@@ -1462,7 +1415,6 @@ def ann_topk_sq(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """Scalar-quantization ANN (the faiss IndexScalarQuantizer /
     QT_8bit recipe): scan the 4×-compressed coded corpus scoring each
@@ -1532,19 +1484,16 @@ def ann_topk_sq(
         rank_col="__rn",
     ).select(query_id_col, id_col)
 
-    fetched = corpus.select(id_col, vec_col).join(F.broadcast(shortlist), id_col)
-    paired = fetched.join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col
-    )
-    scored = paired.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine_pudf(F.col(vec_col), F.col(query_vec_col)).alias("score"),
-    )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
+    return cross_rerank_topk(
+        corpus,
+        queries,
+        shortlist,
+        k=k,
+        scorer=cosine_pudf,
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
 
 
@@ -1614,7 +1563,6 @@ def ann_topk_rp(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    score_transform=None,
 ) -> DataFrame:
     """Random-projection ANN: score the JL sketch (out_dims ≪ dims)
     with the exact one-pass top-k machinery to build a per-query
@@ -1636,10 +1584,6 @@ def ann_topk_rp(
     pq_ = rp_project(
         queries, in_dims, out_dims, query_id_col, query_vec_col, out_col="rp"
     )
-    # the sketch-shortlist rank is ALWAYS quantized at the fixed 9 dp
-    # the SQL twin replays — the caller's score_transform shapes final
-    # scores only (re-rank below); a non-monotone or shifting transform
-    # must never change shortlist MEMBERSHIP
     shortlist = cosine_topk(
         pc,
         pq_,
@@ -1648,23 +1592,18 @@ def ann_topk_rp(
         vec_col="rp",
         query_id_col=query_id_col,
         query_vec_col="rp",
-        score_transform=lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5))
-        / F.lit(1e9),
     ).select(query_id_col, id_col)
 
-    fetched = corpus.select(id_col, vec_col).join(F.broadcast(shortlist), id_col)
-    paired = fetched.join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col
-    )
-    scored = paired.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine_pudf(F.col(vec_col), F.col(query_vec_col)).alias("score"),
-    )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored, query_id_col, [F.desc("score"), F.col(id_col)], k, rank_col="rk"
+    return cross_rerank_topk(
+        corpus,
+        queries,
+        shortlist,
+        k=k,
+        scorer=cosine_pudf,
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
 
 
@@ -1684,7 +1623,6 @@ def bm25_search_topk(
     query_id_col: str = "qid",
     text_col: str = "text",
     query_text_col: str = "qtext",
-    score_transform=None,
 ) -> DataFrame:
     """Okapi BM25 top-k retrieval (Robertson & Zaragoza, "The
     Probabilistic Relevance Framework: BM25 and Beyond", FnTIR 2009) —
@@ -1702,8 +1640,8 @@ def bm25_search_topk(
     is the one non-rational op — both engines' libm agree far below
     1e-9), every other per-row scalar is the same fixed expression
     tree in both engines, and only the per-(q,d) SUM is
-    order-dependent — handled by the caller's score_transform rounding
-    like every other retrieval path.
+    order-dependent — absorbed by the final rank's 9-dp rounding like
+    every other retrieval path.
 
     Scale shape: postings/doc-lengths/df are each ONE partial-agg'd
     groupBy over the exploded corpus; N+avgdl aggregate to a single
@@ -1753,17 +1691,12 @@ def bm25_search_topk(
     # the (small) query-term set before it goes anywhere
     idf_q = df_t.join(F.broadcast(qterms.select("term").distinct()), "term").select(
         "term",
-        (
-            F.floor(
-                F.log(
-                    (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5))
-                    + F.lit(1.0)
-                )
-                * F.lit(1e9)
-                + F.lit(0.5)
+        round9(
+            F.log(
+                (F.lit(n_docs) - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+                + F.lit(1.0)
             )
-            / F.lit(1e9)
         ).alias("idf"),
     )
     cand = (
@@ -1782,15 +1715,7 @@ def bm25_search_topk(
         )
     )
     scored = cand.groupBy(query_id_col, id_col).agg(F.sum(contrib).alias("score"))
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored,
-        query_id_col,
-        [F.desc("score"), F.col(id_col)],
-        k,
-        rank_col="rk",
-    )
+    return _rank_topk(scored, query_id_col, [id_col], k)
 
 
 # --- sparse retrieval over hashed features (inverted-index search) ----
@@ -1802,7 +1727,6 @@ def sparse_search_topk(
     k: int = 3,
     corpus_id_cols: list[str] | None = None,
     query_id_col: str = "qid",
-    score_transform=None,
 ) -> DataFrame:
     """Lexical top-k search: sparse dot product between L2-normalized
     feature-hash vectors (llm.text.hashed_features), computed as an
@@ -1828,15 +1752,7 @@ def sparse_search_topk(
     scored = j.groupBy(query_id_col, *cid).agg(
         F.sum(F.col("weight") * F.col("__qw")).alias("score")
     )
-    if score_transform is not None:
-        scored = scored.withColumn("score", score_transform(F.col("score")))
-    return topk_per_group(
-        scored,
-        query_id_col,
-        [F.desc("score")] + [F.col(c) for c in cid],
-        k,
-        rank_col="rk",
-    )
+    return _rank_topk(scored, query_id_col, cid, k)
 
 
 # --- MMR diversified re-rank (Carbonell & Goldstein, SIGIR 1998) ------
@@ -1882,8 +1798,8 @@ def mmr_topk(
     by definition; MMR over an unbounded candidate set is not this
     operator. The |queries| cap below makes the contract loud instead
     of an eventual driver OOM. Output id columns inherit the exact
-    input column types (round-8 advice: the schema was hardcoded
-    `long`, breaking string-id corpora at createDataFrame)."""
+    input column types (a hardcoded `long` schema would break
+    string-id corpora at createDataFrame)."""
     # bounded guard: count only up to the threshold + 1 (a full count
     # of an expensive queries plan would itself be an extra Spark job)
     max_q = 1_000_000 // max(retrieve, 1)
@@ -1895,7 +1811,6 @@ def mmr_topk(
             "MMR is a re-rank-tier operator over a bounded shortlist; "
             "split the query set or lower `retrieve`."
         )
-    r9c = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)  # noqa: E731
     shortlist = cosine_topk(
         corpus,
         queries,
@@ -1904,7 +1819,6 @@ def mmr_topk(
         vec_col=vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        score_transform=r9c,
     ).select(query_id_col, id_col, F.col("score").alias("rel"))
     rows = shortlist.collect()
     by_q: dict = {}

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from realtime0523_spark.functions.scalar import round2  # noqa: F401  (re-export convenience)
+from realtime0523_spark.functions.scalar import round9
 
 # Whitespace tokenization — the lowest-common-denominator tokenizer.
 TOKEN_PATTERN = r"\s+"
@@ -472,9 +473,7 @@ def model_quality_score(
         / (F.col("n_tokens") * F.lit(float(mod)))
         - F.lit(4.0)
     )
-    score = F.floor(
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-x))) * F.lit(1e9) + F.lit(0.5)
-    ) / F.lit(1e9)
+    score = round9(F.lit(1.0) / (F.lit(1.0) + F.exp(-x)))
     return agg.select(
         id_col,
         "n_tokens",

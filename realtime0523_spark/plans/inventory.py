@@ -25,6 +25,7 @@ from realtime0523_spark.core.catalog import Catalog
 from realtime0523_spark.functions.scalar import (
     bucket_label,
     round2,
+    round9,
     status_decode,
 )
 from realtime0523_spark.operators.allocation import DETAIL_ORDER, allocate_order_amount
@@ -1757,12 +1758,11 @@ _R9 = "floor(({x}) * 1000000000 + 0.5) / 1000000000"
 def q_event_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Catalog(spark, sf_dir).table("events")
     k = F.get_json_object("props", "$.k").cast("double")
-    r9c = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)  # noqa: E731
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        r9c(F.stddev_samp("value")).alias("sd_value"),
-        r9c(F.covar_samp(F.col("value"), k)).alias("covar_vk"),
-        r9c(F.corr(F.col("value"), k)).alias("corr_vk"),
+        round9(F.stddev_samp("value")).alias("sd_value"),
+        round9(F.covar_samp(F.col("value"), k)).alias("covar_vk"),
+        round9(F.corr(F.col("value"), k)).alias("corr_vk"),
     )
 
 
@@ -1791,12 +1791,11 @@ def q_stream_event_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = stream_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("double")
-    r9c = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)  # noqa: E731
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        r9c(F.stddev_samp("value")).alias("sd_value"),
-        r9c(F.covar_samp(F.col("value"), k)).alias("covar_vk"),
-        r9c(F.corr(F.col("value"), k)).alias("corr_vk"),
+        round9(F.stddev_samp("value")).alias("sd_value"),
+        round9(F.covar_samp(F.col("value"), k)).alias("covar_vk"),
+        round9(F.corr(F.col("value"), k)).alias("corr_vk"),
     )
     return run_to_memory(agg, output_mode="complete")
 
@@ -2964,30 +2963,34 @@ def q_parts_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # match proves the signed-delta algebra equals state maintenance.
 
 
-def _orders_changelog(orders: DataFrame) -> DataFrame:
-    """Deterministic CDC changelog derived from orders in ONE scan
-    (array-of-events + explode — no 3-way self-union): every order
-    inserts; o_orderkey % 7 == 3 later gets a +10%% price-correction
-    update; o_orderkey % 11 == 5 is cancelled, the delete carrying the
-    then-current price the way a real CDC delete carries the old row.
+def _simple_changelog(
+    src: DataFrame,
+    keep_cols: list[str],
+    value_col: str,
+    upd: Column,
+    dele: Column,
+    upd_value: Column,
+) -> DataFrame:
+    """Deterministic CDC changelog derived from `src` in ONE scan
+    (array-of-events + explode — no 3-way self-union): every row
+    inserts `value_col`; rows matching `upd` later get a correction
+    to `upd_value`; rows matching `dele` are deleted carrying the
+    then-current value, the way a real CDC delete carries the old row.
     Stateless — applies to the batch table and the CDC stream alike."""
-    upd = F.col("o_orderkey") % 7 == 3
-    dele = F.col("o_orderkey") % 11 == 5
-    upd_price = round2(F.col("o_totalprice") * 1.1)
-    cur_price = F.when(upd, upd_price).otherwise(F.col("o_totalprice"))
+    cur = F.when(upd, upd_value).otherwise(F.col(value_col))
     null_d = F.lit(None).cast("double")
     events = F.array(
         F.struct(
             F.lit("insert").alias("op"),
-            F.col("o_totalprice").alias("price_new"),
+            F.col(value_col).alias("price_new"),
             null_d.alias("price_old"),
         ),
         F.when(
             upd,
             F.struct(
                 F.lit("update").alias("op"),
-                upd_price.alias("price_new"),
-                F.col("o_totalprice").alias("price_old"),
+                upd_value.alias("price_new"),
+                F.col(value_col).alias("price_old"),
             ),
         ),
         F.when(
@@ -2995,22 +2998,26 @@ def _orders_changelog(orders: DataFrame) -> DataFrame:
             F.struct(
                 F.lit("delete").alias("op"),
                 null_d.alias("price_new"),
-                cur_price.alias("price_old"),
+                cur.alias("price_old"),
             ),
         ),
     )
-    return orders.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderpriority",
+    return src.select(
+        *keep_cols,
         F.explode(F.filter(events, lambda x: x.isNotNull())).alias("ev"),
-    ).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderpriority",
-        "ev.op",
-        "ev.price_new",
-        "ev.price_old",
+    ).select(*keep_cols, "ev.op", "ev.price_new", "ev.price_old")
+
+
+def _orders_changelog(orders: DataFrame) -> DataFrame:
+    """Orders changelog: o_orderkey % 7 == 3 later gets a +10% price
+    correction; o_orderkey % 11 == 5 is cancelled."""
+    return _simple_changelog(
+        orders,
+        ["o_orderkey", "o_custkey", "o_orderpriority"],
+        "o_totalprice",
+        upd=F.col("o_orderkey") % 7 == 3,
+        dele=F.col("o_orderkey") % 11 == 5,
+        upd_value=round2(F.col("o_totalprice") * 1.1),
     )
 
 
@@ -3088,46 +3095,22 @@ def q_stream_cdc_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _customers_changelog(customer: DataFrame) -> DataFrame:
-    """Deterministic dim-side CDC changelog derived from customer in
-    one scan (same array-of-events shape as `_orders_changelog`):
-    every customer inserts with their balance; c_custkey % 5 == 2
-    later gets a +50.00 balance-correction update; c_custkey % 13 == 7
-    closes their account, the delete carrying the then-current
-    balance. `c_nationkey` rides as the immutable per-key attribute
-    the join rollup groups on."""
-    upd = F.col("c_custkey") % 5 == 2
-    dele = F.col("c_custkey") % 13 == 7
-    upd_bal = round2(F.col("c_acctbal") + 50.0)
-    cur_bal = F.when(upd, upd_bal).otherwise(F.col("c_acctbal"))
-    null_d = F.lit(None).cast("double")
-    events = F.array(
-        F.struct(
-            F.lit("insert").alias("op"),
-            F.col("c_acctbal").alias("price_new"),
-            null_d.alias("price_old"),
+    """Dim-side customer changelog: every customer inserts with their
+    balance; c_custkey % 5 == 2 later gets a +50.00 balance correction;
+    c_custkey % 13 == 7 closes their account. `nationkey` rides as the
+    immutable per-key attribute the join rollup groups on."""
+    return _simple_changelog(
+        customer.select(
+            F.col("c_custkey").alias("custkey"),
+            F.col("c_nationkey").alias("nationkey"),
+            "c_acctbal",
         ),
-        F.when(
-            upd,
-            F.struct(
-                F.lit("update").alias("op"),
-                upd_bal.alias("price_new"),
-                F.col("c_acctbal").alias("price_old"),
-            ),
-        ),
-        F.when(
-            dele,
-            F.struct(
-                F.lit("delete").alias("op"),
-                null_d.alias("price_new"),
-                cur_bal.alias("price_old"),
-            ),
-        ),
+        ["custkey", "nationkey"],
+        "c_acctbal",
+        upd=F.col("custkey") % 5 == 2,
+        dele=F.col("custkey") % 13 == 7,
+        upd_value=round2(F.col("c_acctbal") + 50.0),
     )
-    return customer.select(
-        F.col("c_custkey").alias("custkey"),
-        F.col("c_nationkey").alias("nationkey"),
-        F.explode(F.filter(events, lambda x: x.isNotNull())).alias("ev"),
-    ).select("custkey", "nationkey", "ev.op", "ev.price_new", "ev.price_old")
 
 
 _RETRACT_JOIN_ORACLE = """
@@ -3222,49 +3205,6 @@ def q_stream_cdc_retract_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         work,
     )
-
-
-def _simple_changelog(
-    src: DataFrame,
-    keep_cols: list[str],
-    value_col: str,
-    upd: Column,
-    dele: Column,
-    upd_value: Column,
-) -> DataFrame:
-    """Shared array-of-events CDC derivation (one scan, like
-    `_orders_changelog`): every row inserts `value_col`; rows matching
-    `upd` later get a correction to `upd_value`; rows matching `dele`
-    are deleted carrying the then-current value."""
-    cur = F.when(upd, upd_value).otherwise(F.col(value_col))
-    null_d = F.lit(None).cast("double")
-    events = F.array(
-        F.struct(
-            F.lit("insert").alias("op"),
-            F.col(value_col).alias("price_new"),
-            null_d.alias("price_old"),
-        ),
-        F.when(
-            upd,
-            F.struct(
-                F.lit("update").alias("op"),
-                upd_value.alias("price_new"),
-                F.col(value_col).alias("price_old"),
-            ),
-        ),
-        F.when(
-            dele,
-            F.struct(
-                F.lit("delete").alias("op"),
-                null_d.alias("price_new"),
-                cur.alias("price_old"),
-            ),
-        ),
-    )
-    return src.select(
-        *keep_cols,
-        F.explode(F.filter(events, lambda x: x.isNotNull())).alias("ev"),
-    ).select(*keep_cols, "ev.op", "ev.price_new", "ev.price_old")
 
 
 _RETRACT_JOIN3_ORACLE = """
@@ -3943,7 +3883,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src",
         "dst",
         F.col("n_trans").cast("long").alias("n_trans"),
-        (F.floor(p * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)).alias("p_trans"),
+        round9(p).alias("p_trans"),
     )
 
 

@@ -5,7 +5,8 @@ paired with an exact DuckDB oracle.
 Oracle-parity ground rules (shared with the operator code):
 - hashes: md5 hex (identical builtins), ints from hex prefixes,
 - integer arithmetic < 2^53 only,
-- float outputs rounded floor(x*1e9+0.5)/1e9 in BOTH engines,
+- float outputs rounded floor(x*1e9+0.5)/1e9 in BOTH engines
+  (functions.scalar.round9 on the Spark side),
 - identical regexes valid in Java regex and RE2.
 
 The SQL twins are generated from the SAME constants the Spark
@@ -18,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime0523_spark.core.catalog import Catalog
+from realtime0523_spark.functions.scalar import round9
 from realtime0523_spark.llm import dedup as D
 from realtime0523_spark.llm import multimodal as M
 from realtime0523_spark.llm import similarity as S
@@ -36,10 +38,6 @@ EMB_DIMS = 64
 
 def _r9(x: str) -> str:
     return f"floor(({x}) * 1000000000 + 0.5) / 1000000000"
-
-
-def r9(col):
-    return F.floor(col * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
 
 
 # Shared SQL fragments -------------------------------------------------
@@ -455,7 +453,7 @@ def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < TOPK_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    out = S.cosine_topk(emb, queries, k=TOPK_K, score_transform=r9)
+    out = S.cosine_topk(emb, queries, k=TOPK_K)
     return out.select("qid", "vec_id", "score", "rk")
 
 
@@ -484,7 +482,7 @@ def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_emb_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir).table("embeddings")
     out = S.embedding_dedup_pairs(emb, EMB_DEDUP_THRESHOLD)
-    return out.select("blk", "id_a", "id_b", r9(F.col("cos_sim")).alias("cos_sim")).filter(
+    return out.select("blk", "id_a", "id_b", round9("cos_sim").alias("cos_sim")).filter(
         F.col("cos_sim") >= EMB_DEDUP_THRESHOLD
     )
 
@@ -633,7 +631,7 @@ def _ann_queries(spark: SparkSession, sf_dir: str):
 def q_emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries = _ann_queries(spark, sf_dir)
     return S.ann_topk_lsh(
-        emb, queries, dims=EMB_DIMS, k=TOPK_K, score_transform=r9
+        emb, queries, dims=EMB_DIMS, k=TOPK_K
     ).select("qid", "vec_id", "score", "rk")
 
 
@@ -658,7 +656,6 @@ def q_emb_ann_lsh_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         dims=EMB_DIMS,
         k=TOPK_K,
-        score_transform=r9,
         probe_hamming=1,
     ).select("qid", "vec_id", "score", "rk")
 
@@ -685,7 +682,6 @@ def q_emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=IVF_NPROBE,
         k=TOPK_K,
         centroids=cent,
-        score_transform=r9,
     ).select("qid", "vec_id", "score", "rk")
 
 
@@ -740,10 +736,10 @@ RERANK_RETRIEVE = 20  # stage-1 short-list size per query
 def q_emb_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries = _ann_queries(spark, sf_dir)
     cand = S.ann_topk_lsh(
-        emb, queries, dims=EMB_DIMS, k=RERANK_RETRIEVE, score_transform=r9
+        emb, queries, dims=EMB_DIMS, k=RERANK_RETRIEVE
     ).select("qid", "vec_id")
     return S.cross_rerank_topk(
-        emb, queries, cand, k=TOPK_K, score_transform=r9
+        emb, queries, cand, k=TOPK_K
     ).select("qid", "vec_id", "score", "rk")
 
 
@@ -1081,9 +1077,7 @@ def q_emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_exact = pool.submit(
             lambda: ckpt(
-                S.cosine_topk(
-                    emb, queries, k=TOPK_K, score_transform=r9
-                ).select("qid", "vec_id")
+                S.cosine_topk(emb, queries, k=TOPK_K).select("qid", "vec_id")
             )[0]
         )
         f_cents = pool.submit(lambda: S.label_centroids(emb))
@@ -1091,26 +1085,20 @@ def q_emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         f_cb_tr = pool.submit(lambda: S.pq_train_codebooks(emb))
         exact = f_exact.result()
         cents, cb, cb_tr = f_cents.result(), f_cb.result(), f_cb_tr.result()
-    lsh = S.ann_topk_lsh(
-        emb, queries, dims=EMB_DIMS, k=TOPK_K, score_transform=r9
-    ).select("qid", "vec_id")
+    lsh = S.ann_topk_lsh(emb, queries, dims=EMB_DIMS, k=TOPK_K).select("qid", "vec_id")
     ivf = S.ann_topk_ivf(
         emb,
         queries,
         nprobe=IVF_NPROBE,
         k=TOPK_K,
         centroids=cents,
-        score_transform=r9,
     ).select("qid", "vec_id")
-    pq = S.ann_topk_pq(
-        emb, queries, codebooks=cb, k=TOPK_K, score_transform=r9
-    ).select("qid", "vec_id")
+    pq = S.ann_topk_pq(emb, queries, codebooks=cb, k=TOPK_K).select("qid", "vec_id")
     pq_trained = S.ann_topk_pq(
         emb,
         queries,
         codebooks=cb_tr,
         k=TOPK_K,
-        score_transform=r9,
     ).select("qid", "vec_id")
     ivfpq = S.ann_topk_ivfpq(
         emb,
@@ -1119,20 +1107,16 @@ def q_emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         codebooks=cb,
         nprobe=IVF_NPROBE,
         k=TOPK_K,
-        score_transform=r9,
     ).select("qid", "vec_id")
-    sq = S.ann_topk_sq(emb, queries, k=TOPK_K, score_transform=r9).select(
+    sq = S.ann_topk_sq(emb, queries, k=TOPK_K).select(
         "qid", "vec_id"
     )
-    rp = S.ann_topk_rp(
-        emb, queries, in_dims=EMB_DIMS, k=TOPK_K, score_transform=r9
-    ).select("qid", "vec_id")
+    rp = S.ann_topk_rp(emb, queries, in_dims=EMB_DIMS, k=TOPK_K).select("qid", "vec_id")
     lsh_mp = S.ann_topk_lsh(
         emb,
         queries,
         dims=EMB_DIMS,
         k=TOPK_K,
-        score_transform=r9,
         probe_hamming=1,
     ).select("qid", "vec_id")
 
@@ -1183,7 +1167,7 @@ def q_emb_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries = _ann_queries(spark, sf_dir)
     cb = S.pq_codebooks(emb)
     return S.ann_topk_pq(
-        emb, queries, codebooks=cb, k=TOPK_K, score_transform=r9
+        emb, queries, codebooks=cb, k=TOPK_K
     ).select("qid", "vec_id", "score", "rk")
 
 
@@ -1227,7 +1211,7 @@ def q_emb_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries = _ann_queries(spark, sf_dir)
     cb = S.pq_train_codebooks(emb)
     return S.ann_topk_pq(
-        emb, queries, codebooks=cb, k=TOPK_K, score_transform=r9
+        emb, queries, codebooks=cb, k=TOPK_K
     ).select("qid", "vec_id", "score", "rk")
 
 
@@ -1256,9 +1240,7 @@ def q_emb_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_emb_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries = _ann_queries(spark, sf_dir)
-    exact = S.cosine_topk(
-        emb, queries, k=TOPK_K, score_transform=r9
-    ).select("qid", "vec_id")
+    exact = S.cosine_topk(emb, queries, k=TOPK_K).select("qid", "vec_id")
     R, cb = S.opq_train(emb)
     opq = S.ann_topk_opq(emb, queries, R, cb, k=TOPK_K).select(
         "qid", "vec_id"
@@ -1320,9 +1302,7 @@ def q_emb_ann_ivfopq(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_exact = pool.submit(
             lambda: ckpt(
-                S.cosine_topk(
-                    emb, queries, k=TOPK_K, score_transform=r9
-                ).select("qid", "vec_id")
+                S.cosine_topk(emb, queries, k=TOPK_K).select("qid", "vec_id")
             )[0]
         )
         f_base = pool.submit(
@@ -1373,7 +1353,7 @@ def q_emb_ann_ivfopq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_emb_ann_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries = _ann_queries(spark, sf_dir)
-    return S.ann_topk_sq(emb, queries, k=TOPK_K, score_transform=r9).select(
+    return S.ann_topk_sq(emb, queries, k=TOPK_K).select(
         "qid", "vec_id", "score", "rk"
     )
 
@@ -2088,7 +2068,7 @@ def q_docs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_shingles",
         "n_contaminated",
-        r9(F.col("contamination_ratio")).alias("contamination_ratio"),
+        round9(F.col("contamination_ratio")).alias("contamination_ratio"),
     )
 
 
@@ -2144,7 +2124,7 @@ def q_docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_shingles",
         "n_flagged",
-        r9(F.col("flag_ratio")).alias("flag_ratio"),
+        round9(F.col("flag_ratio")).alias("flag_ratio"),
     )
 
 
@@ -2184,7 +2164,7 @@ def q_stream_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "n_shingles",
             "n_flagged",
-            r9(F.col("flag_ratio")).alias("flag_ratio"),
+            round9(F.col("flag_ratio")).alias("flag_ratio"),
         )
 
     try:
@@ -2382,7 +2362,7 @@ QUALITY_ACCURACY = 10_000
 def q_docs_quality_approx_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = Catalog(spark, sf_dir).table("documents")
     feats = X.quality_features("text")
-    scored = docs.select("source", r9(feats["quality_score"]).alias("q"))
+    scored = docs.select("source", round9(feats["quality_score"]).alias("q"))
     per = scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.expr(
@@ -2685,7 +2665,7 @@ def q_docs_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_docs",
         "n_tokens",
-        r9(F.col("token_share")).alias("token_share"),
+        round9(F.col("token_share")).alias("token_share"),
     )
 
 
@@ -2873,9 +2853,9 @@ def q_docs_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id",
         "n_lines",
-        r9(F.col("dup_line_frac")).alias("dup_line_frac"),
-        r9(F.col("top_2gram_char_frac")).alias("top_2gram_char_frac"),
-        r9(F.col("dup_3gram_char_frac")).alias("dup_3gram_char_frac"),
+        round9(F.col("dup_line_frac")).alias("dup_line_frac"),
+        round9(F.col("top_2gram_char_frac")).alias("top_2gram_char_frac"),
+        round9(F.col("dup_3gram_char_frac")).alias("dup_3gram_char_frac"),
         "passes_repetition_filter",
     )
 
@@ -2906,7 +2886,7 @@ def q_emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.select("label", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("label", "pos")
-        .agg(r9(F.avg(F.col("v").cast("double"))).alias("centroid"))
+        .agg(round9(F.avg(F.col("v").cast("double"))).alias("centroid"))
     )
 
 
@@ -3101,7 +3081,7 @@ def q_docs_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         X.bpe_ish_token_count("text").alias("n_bpe_tokens"),
         X.token_count("text").alias("n_ws_tokens"),
-        r9(
+        round9(
             F.length("text").cast("double")
             / X.bpe_ish_token_count("text").cast("double")
         ).alias("chars_per_bpe_token"),
@@ -3201,7 +3181,7 @@ def q_docs_chunk_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feats = X.hashed_features(chunks, ["doc_id", "chunk_id"], text_col="chunk_text")
     return feats.select(
-        "doc_id", "chunk_id", "bucket", r9(F.col("weight")).alias("weight")
+        "doc_id", "chunk_id", "bucket", round9(F.col("weight")).alias("weight")
     )
 
 
@@ -3240,7 +3220,7 @@ def q_stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def serve(batch_df: DataFrame) -> DataFrame:
         return S.ann_topk_lsh(
-            emb, batch_df, dims=EMB_DIMS, k=TOPK_K, score_transform=r9
+            emb, batch_df, dims=EMB_DIMS, k=TOPK_K
         ).select("qid", "vec_id", "score", "rk")
 
     return detach_and_cleanup(drain_partials(qstream, serve, out_dir), out_dir)
@@ -3317,7 +3297,7 @@ def q_docs_sparse_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     qf = X.hashed_features(
         docs.filter(F.col("doc_id") < SPARSE_QUERIES), ["doc_id"]
     ).withColumnRenamed("doc_id", "qid")
-    out = S.sparse_search_topk(cf, qf, k=SPARSE_K, score_transform=r9)
+    out = S.sparse_search_topk(cf, qf, k=SPARSE_K)
     return out.select("qid", "doc_id", "chunk_id", "score", "rk")
 
 
@@ -3377,7 +3357,7 @@ def q_docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = docs.filter(F.col("doc_id") < BM25_QUERIES).select(
         F.col("doc_id").alias("qid"), F.col("text").alias("qtext")
     )
-    out = S.bm25_search_topk(docs, queries, k=BM25_TOPK, score_transform=r9)
+    out = S.bm25_search_topk(docs, queries, k=BM25_TOPK)
     return out.select("qid", "doc_id", "score", "rk")
 
 
@@ -4105,7 +4085,7 @@ def q_docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = Catalog(spark, sf_dir).table("documents")
     target = docs.filter(F.col("lang") == "en")
     out = DS.dsir_logweights(docs, target)
-    return out.select("doc_id", "n_feats", r9(F.col("logw")).alias("logw"))
+    return out.select("doc_id", "n_feats", round9(F.col("logw")).alias("logw"))
 
 
 _DSIR_GUMBEL_SQL = _r9(
@@ -4256,7 +4236,6 @@ def q_emb_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         codebooks=S.pq_codebooks(emb),
         nprobe=IVF_NPROBE,
         k=TOPK_K,
-        score_transform=r9,
     ).select("qid", "vec_id", "score", "rk")
 
 
@@ -4298,7 +4277,7 @@ def q_emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         F.col("label").alias("qlabel"),
     )
-    return S.hard_negative_topk(emb, queries, k=TOPK_K, score_transform=r9).select(
+    return S.hard_negative_topk(emb, queries, k=TOPK_K).select(
         "qid", "vec_id", "score", "rk"
     )
 
@@ -4511,7 +4490,7 @@ def q_docs_domain_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_emb_ann_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries = _ann_queries(spark, sf_dir)
     return S.ann_topk_rp(
-        emb, queries, in_dims=EMB_DIMS, k=TOPK_K, score_transform=r9
+        emb, queries, in_dims=EMB_DIMS, k=TOPK_K
     ).select("qid", "vec_id", "score", "rk")
 
 
@@ -4531,7 +4510,7 @@ def q_emb_rp_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = S.rp_project(emb, in_dims=EMB_DIMS)
     return proj.select(
         "vec_id", F.posexplode("rp").alias("j", "y0")
-    ).select("vec_id", "j", r9(F.col("y0")).alias("y"))
+    ).select("vec_id", "j", round9(F.col("y0")).alias("y"))
 
 
 @register(
@@ -5503,7 +5482,7 @@ def q_stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _, queries = _ann_queries(spark, sf_dir)
     out = idx.query(
-        queries, nprobe=IVF_NPROBE, k=TOPK_K, score_transform=r9
+        queries, nprobe=IVF_NPROBE, k=TOPK_K
     ).select("qid", "vec_id", "score", "rk")
     return detach_and_cleanup(out, work)
 
@@ -5595,7 +5574,6 @@ def q_stream_ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=IVF_NPROBE,
         retrieve=S.PQ_RETRIEVE,
         k=TOPK_K,
-        score_transform=r9,
     ).select("qid", "vec_id", "score", "rk")
     return detach_and_cleanup(out, work)
 

@@ -1,5 +1,5 @@
 """Streaming incremental IVF index maintenance — the ANN family wired
-into the ingest pipeline (round-8 verdict optional capstone).
+into the ingest pipeline.
 
 The reference has no ANN surface; this is an LLM-data-pipeline
 operator. Public pattern: FAISS-style IVF serving under continuous
@@ -96,16 +96,6 @@ class StreamedIVFIndex:
     # the protocol itself lives in streaming/compaction.py and is
     # shared with the co-arrival guard's key log) ----
 
-    def _base_watermark(self) -> int:
-        from realtime0523_spark.streaming.compaction import base_watermark
-
-        return base_watermark(self.base_dir)
-
-    def _partial_ids(self) -> list[int]:
-        from realtime0523_spark.streaming.compaction import partial_ids
-
-        return partial_ids(self.cent_dir)
-
     def _cent_frames(self) -> DataFrame:
         """The committed quantizer-partials relation: the newest base
         snapshot (all history up to its watermark, pre-folded) plus
@@ -187,9 +177,6 @@ class StreamedIVFIndex:
     def centroids(self) -> np.ndarray:
         return self.quantizer_pair()[0]
 
-    def codebooks(self) -> np.ndarray:
-        return self.quantizer_pair()[1]
-
     def vectors(self) -> DataFrame:
         return self.spark.read.parquet(self.vec_dir).drop("batch_id")
 
@@ -227,7 +214,6 @@ class StreamedIVFIndex:
         k: int = 5,
         query_id_col: str = "qid",
         query_vec_col: str = "qv",
-        score_transform=None,
     ) -> DataFrame:
         """Serve top-k from the compacted index — the exact batch
         query path (llm/similarity.ivf_query_cells) over streamed
@@ -243,7 +229,6 @@ class StreamedIVFIndex:
             vec_col=self.vec_col,
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
-            score_transform=score_transform,
         )
 
     def query_adc(
@@ -255,7 +240,6 @@ class StreamedIVFIndex:
         k: int = 5,
         query_id_col: str = "qid",
         query_vec_col: str = "qv",
-        score_transform=None,
     ) -> DataFrame:
         """Serve IVFADC top-k (probe → compressed-code ADC → exact
         re-rank) from the compacted streamed index — the exact batch
@@ -276,7 +260,6 @@ class StreamedIVFIndex:
             vec_col=self.vec_col,
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
-            score_transform=score_transform,
         )
 
 
@@ -299,8 +282,8 @@ def streaming_ivf_index_append(
     vector nor double-add its centroid contribution (same contract as
     streaming/retraction.py, property-tested there).
 
-    UNIQUE-ID APPEND CONTRACT (explicit, load-bearing — round-9
-    advice): each vec_id must arrive EXACTLY ONCE across the stream's
+    UNIQUE-ID APPEND CONTRACT (explicit, load-bearing): each vec_id
+    must arrive EXACTLY ONCE across the stream's
     lifetime. The engine's checkpoint guarantees a replayed micro-
     batch is a no-op, but an upstream producer that re-emits an id in
     a NEW batch would duplicate log rows, double-count its quantizer

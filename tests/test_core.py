@@ -289,3 +289,30 @@ def test_bench_release_reports_failed_hygiene_steps(spark):
         "stop_state_stores", "gc",
     ]
     assert failed[0] == "clear_cache: RuntimeError: no catalog"
+
+
+def test_tool_runs_python_udfs_from_outside_repo_root(tmp_path):
+    """A tool started from another directory runs its Python UDFs: the
+    tools put the repo root on the driver's sys.path only, so the
+    workers find the package through get_spark's PYTHONPATH conf."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    res = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(repo, "tools", "check_oracle.py"),
+            SF_SMOKE,
+            "emb_cosine_topk",
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stdout[-2000:] + res.stderr[-3000:]
+    assert "emb_cosine_topk: ok" in res.stdout

@@ -7,6 +7,7 @@ from realtime0523_spark.functions.scalar import (
     derive_date_hour_from_string,
     gender_decode,
     round2,
+    round9,
 )
 
 
@@ -21,6 +22,39 @@ def test_round2_matches_java_math_round(spark):
     expect = [math.floor(x * 100 + 0.5) / 100 for x, _ in cases]
     assert got == expect
     assert got == [e for _, e in cases]
+
+
+def test_round9_matches_numpy_twin_and_is_idempotent(spark):
+    """round9 is bit-identical to the numpy kernels' 9-dp rounding
+    (similarity._r9_np) on the same double, and rounding an already
+    rounded score returns it unchanged — the two facts that let a
+    kernel prune on rounded scores before the final round9 rank."""
+    import numpy as np
+
+    from realtime0523_spark.llm.similarity import _r9_np
+
+    rng = np.random.RandomState(0)
+    xs = np.concatenate(
+        [
+            rng.uniform(-1.0, 1.0, 2000),
+            rng.uniform(-50.0, 50.0, 500),
+            [0.0, 1.0, -1.0, 0.1234567885, 0.1234567895, -0.5000000005],
+        ]
+    )
+    df = spark.createDataFrame([(float(x),) for x in xs], "x double")
+    got = [
+        (r.x, r.y, r.yy)
+        for r in df.select(
+            "x",
+            round9("x").alias("y"),
+            round9(round9("x")).alias("yy"),
+        ).collect()
+    ]
+    x = np.array([g[0] for g in got])
+    y = np.array([g[1] for g in got])
+    assert np.array_equal(y, _r9_np(x))
+    assert np.array_equal(np.array([g[2] for g in got]), y)
+    assert np.array_equal(_r9_np(y), y)
 
 
 def test_bucket_boundaries_land_in_middle(spark):

@@ -36,8 +36,9 @@ def test_query_matches_oracle(spark, con, name):
 
 # the fast tier's oracle smoke: the streaming keyed-state queries, the
 # batch allocation they must agree with, the registered ADS and DAU
-# queries, which run the live topology's per-batch code, and one
-# partial drain per fold kind (distinct, non-sum, none, decayed)
+# queries, which run the live topology's per-batch code, one partial
+# drain per fold kind (distinct, non-sum, none, decayed), and two
+# search rank tails (a shortlist re-rank and a non-vector rank)
 @pytest.mark.parametrize(
     "name",
     [
@@ -50,6 +51,8 @@ def test_query_matches_oracle(spark, con, name):
         "stream_segment_overlap_kmv",
         "stream_purchase_attribution",
         "stream_trending_anchored",
+        "emb_ann_rp",
+        "docs_bm25_search",
     ],
 )
 def test_query_matches_oracle_smoke(spark, con, name):

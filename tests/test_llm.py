@@ -114,6 +114,29 @@ def test_ann_lsh_recall_against_brute_force(spark):
     assert recall >= 0.3, recall
 
 
+def test_cosine_topk_breaks_rounded_ties_by_id_across_batches(spark):
+    """Scores rank rounded to 9 dp, ties by the smaller id: two corpus
+    vectors whose raw cosines differ by less than 1e-10 but round
+    equal, the larger raw cosine on the larger id, scored in different
+    Arrow batches — k=1 keeps the smaller id."""
+    import numpy as np
+
+    from realtime0523_spark.llm.similarity import _r9_np
+
+    c1, c2 = 0.6 + 2e-11, 0.6 + 5e-11
+    vecs = {1: [c1, float(np.sqrt(1 - c1 * c1))], 2: [c2, float(np.sqrt(1 - c2 * c2))]}
+    raw = {i: v[0] / np.linalg.norm(v) for i, v in vecs.items()}
+    assert 0 < raw[2] - raw[1] < 1e-10 and _r9_np(raw[1]) == _r9_np(raw[2])
+    corpus = spark.createDataFrame(
+        list(vecs.items()), "vec_id long, embedding array<double>"
+    ).repartitionByRange(2, "vec_id")
+    parts = corpus.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert parts == 2  # one row per partition, so one per Arrow batch
+    queries = spark.createDataFrame([(0, [1.0, 0.0])], "qid long, qv array<double>")
+    out = cosine_topk(corpus, queries, k=1).collect()
+    assert [(r.vec_id, r.score, r.rk) for r in out] == [(1, 0.6, 1)]
+
+
 def test_cross_rerank_reorders_and_stays_broadcast(spark):
     """The second retrieval stage must (a) actually change the ranking
     — a scorer monotone in the stage-1 metric is a no-op stage — and
@@ -1848,11 +1871,7 @@ def test_opq_rotation_orthonormal_and_recall_beats_trained_pq(spark):
 
     from realtime0523_spark.core.catalog import Catalog
     from realtime0523_spark.llm import similarity as S
-    from realtime0523_spark.plans.llm_inventory import (
-        TOPK_K,
-        TOPK_QUERIES,
-        r9,
-    )
+    from realtime0523_spark.plans.llm_inventory import TOPK_K, TOPK_QUERIES
     from tests.conftest import SF_SMOKE
 
     emb = Catalog(spark, SF_SMOKE).table("embeddings")
@@ -1861,9 +1880,7 @@ def test_opq_rotation_orthonormal_and_recall_beats_trained_pq(spark):
     )
     R, cb = S.opq_train(emb)
     assert np.allclose(R @ R.T, np.eye(R.shape[0]), atol=1e-9)
-    exact = S.cosine_topk(emb, queries, k=TOPK_K, score_transform=r9).select(
-        "qid", "vec_id"
-    )
+    exact = S.cosine_topk(emb, queries, k=TOPK_K).select("qid", "vec_id")
     opq = S.ann_topk_opq(emb, queries, R, cb, k=TOPK_K).select("qid", "vec_id")
     pqt = S.ann_topk_pq(
         emb, queries, codebooks=S.pq_train_codebooks(emb), k=TOPK_K

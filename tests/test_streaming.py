@@ -1413,6 +1413,7 @@ def test_streamed_ivf_index_multibatch_equals_batch_built(
     from realtime0523_spark.core.catalog import Catalog
     from realtime0523_spark.llm.similarity import ann_topk_ivf, label_centroids
     from realtime0523_spark.streaming.ann_index import streaming_ivf_index_append
+    from realtime0523_spark.streaming.compaction import partial_ids
 
     emb = Catalog(spark, SF_SMOKE).table("embeddings").select(
         "vec_id", "label", "embedding"
@@ -1451,7 +1452,7 @@ def test_streamed_ivf_index_multibatch_equals_batch_built(
     # snapshot, so the live relation is ≤ base + refresh_every partials
     n_labels = emb.select("label").distinct().count()
     assert idx._cent_frames().count() <= (1 + refresh_every) * n_labels * 64
-    assert len(idx._partial_ids()) < 3  # compaction consumed partials
+    assert len(partial_ids(idx.cent_dir)) < 3  # compaction consumed partials
 
     queries = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
@@ -2174,6 +2175,7 @@ def test_streamed_ivf_long_horizon_flat_fold_and_unique_ids(spark, tmp_path):
 
     from realtime0523_spark.llm.similarity import ann_topk_ivf, label_centroids
     from realtime0523_spark.streaming.ann_index import streaming_ivf_index_append
+    from realtime0523_spark.streaming.compaction import base_watermark, partial_ids
 
     n_batches, per_batch, dims = 100, 4, 8
     rows = [
@@ -2215,8 +2217,8 @@ def test_streamed_ivf_long_horizon_flat_fold_and_unique_ids(spark, tmp_path):
     # FLAT fold cost, structurally: at most refresh_every partial files
     # remain fresh and exactly one base snapshot holds the rest — a
     # refresh reads ≤ 1 + refresh_every files whatever the horizon
-    assert len(idx._partial_ids()) <= refresh_every
-    assert idx._base_watermark() >= 0
+    assert len(partial_ids(idx.cent_dir)) <= refresh_every
+    assert base_watermark(idx.base_dir) >= 0
     bases = [f for f in os.listdir(idx.base_dir) if f.startswith("v_")]
     assert len(bases) == 1  # superseded bases garbage-collected
     # drained-equals-batch still holds after 10 compactions
